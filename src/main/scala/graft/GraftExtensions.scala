@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Standard Spark plug-in point: build sessions with
   * `spark.sql.extensions=graft.GraftExtensions` and every ClickHouse
@@ -12,8 +14,17 @@ import org.apache.spark.sql.SparkSessionExtensions
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     graft.dialect.ChFunctions.injectInto(ext)
-    ext.injectOptimizerRule(_ => graft.plans.PartitionPruneFromDate)
-    ext.injectOptimizerRule(_ => graft.plans.SkipIndexPrune)
-    ext.injectOptimizerRule(_ => graft.plans.UInt64DistinctNarrow)
+    GraftExtensions.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
+}
+
+object GraftExtensions {
+  /** Every graft optimizer rule, in order. Extension-built sessions get
+    * them injected; `ChFunctions.register` appends them to a plain
+    * session's extra optimizations. */
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(
+    graft.plans.PartitionPruneFromDate,
+    graft.plans.SkipIndexPrune,
+    graft.plans.UInt64DistinctNarrow,
+    graft.plans.LocalSort)
 }

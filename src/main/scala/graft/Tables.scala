@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Parquet fixture loading + shared expression helpers.
   *
-  * Fixture layout per /root/repo/TESTDATA.md: one parquet file per table
-  * under the scale-factor dir passed to every query.
+  * Fixture layout per TESTDATA.md: one parquet file (or a Spark-written
+  * directory of part files) per table under the scale-factor dir passed
+  * to every query. Loading reads each schema from a parquet footer on
+  * the driver and runs no Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -25,15 +27,46 @@ object Tables {
     * QueryExecution), so no result or intermediate is ever served
     * across runs — this is the plan-level reuse the optimization-round
     * rules allow, distinct from the banned result caching. Keyed by
-    * session so a restarted session re-infers; fixtures are immutable
+    * session so a restarted session reloads; fixtures are immutable
     * within a session (tests that write their own parquet use fresh
-    * temp dirs). */
+    * temp dirs). The schema comes from [[footerSchema]]: inference
+    * would run one Spark job per table. */
   private val loadCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), DataFrame]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    loadCache.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      key => key._1.read.parquet(key._2))
+    loadCache.computeIfAbsent((spark, s"$dir/$name.parquet"), { key =>
+      val (s, path) = key
+      footerSchema(s, path).fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
+    })
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver
+    * with no job: the footer of the file, or of a directory's first part
+    * file (Spark's inference also reads one footer when not merging
+    * schemas). Spark's row-metadata JSON wins when present, else the
+    * parquet schema is converted under the session's settings
+    * (nanosAsLong, inferTimestampNTZ, …). None when there is no such
+    * file; the caller's plain read then raises Spark's own error. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file =
+      if (!fs.exists(root)) None
+      else if (fs.getFileStatus(root).isFile) Some(root)
+      else fs.listStatus(root).iterator.filter(_.isFile).map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .minByOption(_.getName)
+    file.map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      val footer = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(f, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
 
   /** `events.ts` has shipped in two fixture encodings: parquet
     * TIMESTAMP(NANOS) — which Spark reads only as a nanosecond long

@@ -1197,18 +1197,9 @@ object ChFunctions {
       }
       // dialect optimizer rules ride along with the function registry
       // (sessions built via GraftExtensions get them injected instead)
-      if (!spark.experimental.extraOptimizations
-            .contains(graft.plans.PartitionPruneFromDate))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.PartitionPruneFromDate
-      if (!spark.experimental.extraOptimizations
-            .contains(graft.plans.SkipIndexPrune))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.SkipIndexPrune
-      if (!spark.experimental.extraOptimizations
-            .contains(graft.plans.UInt64DistinctNarrow))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.UInt64DistinctNarrow
+      val extra = spark.experimental.extraOptimizations
+      spark.experimental.extraOptimizations =
+        extra ++ graft.GraftExtensions.optimizerRules.filterNot(extra.contains)
     }
   }
 

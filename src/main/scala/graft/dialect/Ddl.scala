@@ -3664,13 +3664,11 @@ object Engine {
       }
     })
 
-  /** `system.parts` must reflect the live catalog (the other system.*
-    * tables are handshake-time snapshots; parts change on every
-    * INSERT/mutation) — build it on demand and substitute a temp view. */
-  /** Substitute the system tables whose content must reflect LIVE
-    * catalog state (post-DDL): parts, databases, tables, columns. Each
-    * referenced name materializes a fresh temp view at query time; the
-    * static system.* views (one/functions/settings) pass through. */
+  /** Substitute every `system.*` table except `one` with a frame built
+    * at query time from driver-side state (catalog, query registry,
+    * part listings), so each probe sees post-DDL state and the catalog
+    * ones run no Spark job. Each referenced name materializes a fresh
+    * temp view; `system.one` passes through to its static view. */
   private def rewriteSystemParts(spark: SparkSession, sql: String): String = {
     val live: Seq[(String, () => DataFrame)] = Seq(
       "detached_parts" -> (() => Ddl.detachedPartsSnapshot(spark)),
@@ -4461,7 +4459,22 @@ object Engine {
       case "tsv" | "tabseparated" =>
         spark.read.option("sep", "\t").schema(target).csv(lines)
       case "csv" => spark.read.schema(target).csv(lines)
-      case "jsoneachrow" | "ndjson" => spark.read.schema(target).json(lines)
+      case "jsoneachrow" | "ndjson" =>
+        // ClickHouse (and graft's own export) quotes 64-bit integers and
+        // decimals; the JSON reader would load a quoted number as NULL.
+        // Read those fields as strings (a bare number reads as its text)
+        // and cast to the declared type.
+        import org.apache.spark.sql.functions.col
+        import org.apache.spark.sql.types._
+        def numeric(f: StructField) = f.dataType match {
+          case ByteType | ShortType | IntegerType | LongType | _: DecimalType => true
+          case _ => false
+        }
+        val asRead = StructType(target.fields.map(f =>
+          if (numeric(f)) f.copy(dataType = StringType) else f))
+        spark.read.schema(asRead).json(lines).select(target.fields.map(f =>
+          if (numeric(f)) col(f.name).cast(f.dataType).as(f.name) else col(f.name)
+        ).toIndexedSeq: _*)
       case f0 @ ("tsvwithnames" | "tsvwithnamesandtypes" |
                  "tabseparatedwithnames" | "tabseparatedwithnamesandtypes" |
                  "csvwithnames" | "csvwithnamesandtypes") =>

@@ -1259,8 +1259,17 @@ object Transpiler {
   }
 }
 
-/** Registers the fixture parquet tables as temp views so ClickHouse-
-  * dialect SQL can reference them by name. */
+/** Registers the dialect functions and the fixture parquet tables (as
+  * temp views) so ClickHouse-dialect SQL can reference them by name.
+  *
+  * Setup runs no Spark job: fixture schemas come from parquet footers
+  * read on the driver ([[graft.Tables.load]]), and the `system`
+  * database holds only the static views `one` and `settings`. Every
+  * other `system.*` table a client probes — databases, tables, columns,
+  * functions, parts, query_log, … — is built live from driver-side
+  * state for each statement that names it (`Engine.rewriteSystemParts`);
+  * readers that bypass the engine (plain `spark.sql`) do not see them.
+  */
 object ChContext {
   def setup(spark: SparkSession, dir: String): Unit = {
     ChFunctions.register(spark)
@@ -1281,29 +1290,29 @@ object ChContext {
     spark.conf.set(marker, dir)
   }
 
-  /** Live catalog frames behind system.databases/tables/columns —
-    * built on demand so post-DDL state is visible (Engine.query
-    * substitutes them like system.parts; the setup-time snapshots below
-    * only serve sessions that bypass the engine). Catalog metadata
-    * only — a handful of driver-side rows, not data. */
-  def databasesLive(spark: SparkSession): org.apache.spark.sql.DataFrame =
-    spark.catalog.listDatabases().select("name")
+  /** Live catalog frames behind system.databases/tables/columns, read
+    * from the session catalog on the driver: a handful of rows and no
+    * Spark job (`spark.catalog.listDatabases`/`listTables` each run a
+    * SHOW command as a job, 64-121 ms apiece on a 4-core machine).
+    * Built per statement, so post-DDL state is visible. */
+  def databasesLive(spark: SparkSession): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    spark.sessionState.catalog.listDatabases().toDF("name")
+  }
 
-  /** (database, table) across ALL databases — `SHOW TABLES` only sees
-    * the current one. Temp views list under database "" once. */
-  private def allTables(spark: SparkSession): Seq[(String, String)] = {
-    val dbs = spark.catalog.listDatabases().collect().map(_.name).toSeq
-    dbs.flatMap { db =>
-      spark.catalog.listTables(db).collect().toSeq.map { t =>
-        (Option(t.database).getOrElse(""), t.name)
-      }
-    }.distinct
+  /** Every table across ALL databases — `SHOW TABLES` only sees the
+    * current one. Temp views list under database "" once. */
+  private def allTables(spark: SparkSession)
+      : Seq[org.apache.spark.sql.catalyst.TableIdentifier] = {
+    val cat = spark.sessionState.catalog
+    cat.listDatabases().flatMap(cat.listTables).distinct
   }
 
   def tablesLive(spark: SparkSession): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    allTables(spark).map { case (db, t) =>
-      val norm = s"${if (db.isEmpty) "default" else db}.$t".toLowerCase
+    allTables(spark).map { ti =>
+      val db = ti.database.getOrElse("")
+      val norm = s"${if (db.isEmpty) "default" else db}.${ti.table}".toLowerCase
       val meta = Ddl.metaOf(norm)
       val engine = meta match {
         case Some(m) if m.engineSpec.nonEmpty =>
@@ -1318,77 +1327,46 @@ object ChContext {
         case Some(_) => "Memory"
         case None => "View" // temp views + foreign registrations
       }
-      (db, t, engine, meta.flatMap(_.tableComment).getOrElse(""))
+      (db, ti.table, engine, meta.flatMap(_.tableComment).getOrElse(""))
     }.toDF("database", "name", "engine", "comment")
   }
 
   /** Per-column catalog (ClickHouse system.columns shape the Play UI
-    * and DBeaver-style clients probe for completion). */
+    * and DBeaver-style clients probe for completion), from catalog
+    * metadata. A file-backed table reads every column as nullable, as
+    * `spark.table` does (only the top-level flag shows in the type
+    * name); views keep the schema they were created with. */
   def columnsLive(spark: SparkSession): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val colRows = allTables(spark).flatMap { case (db, t) =>
-      val full = if (db.isEmpty) s"`$t`" else s"`$db`.`$t`"
-      try spark.table(full).schema.fields.toSeq.zipWithIndex.map {
-        case (f, i) =>
-          (if (db.isEmpty) "default" else db, t, f.name,
-            graft.formats.ChTypeNames.fieldName(f), (i + 1).toLong)
-      } catch { case _: Throwable => Seq.empty }
+    import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+    import org.apache.spark.sql.catalyst.util.CharVarcharUtils
+    val cat = spark.sessionState.catalog
+    val colRows = allTables(spark).flatMap { ti =>
+      val db = ti.database.getOrElse("default")
+      try {
+        val meta = cat.getTempViewOrPermanentTableMetadata(ti)
+        val view = meta.tableType == CatalogTableType.VIEW
+        CharVarcharUtils.replaceCharVarcharWithStringInSchema(meta.schema)
+          .fields.toSeq.zipWithIndex.map { case (f, i) =>
+            val typ = graft.formats.ChTypeNames.fieldName(
+              if (view) f else f.copy(nullable = true))
+            (db, ti.table, f.name, typ, (i + 1).toLong)
+          }
+      } catch { case scala.util.control.NonFatal(_) => Seq.empty[(String, String, String, String, Long)] }
     }
     colRows.toDF("database", "table", "name", "type", "position")
   }
 
-  /** Minimal `system.*` surface ClickHouse clients probe (the Play UI
-    * reads server settings, reference index.html; SURVEY §7 scopes this
-    * to stubs). databases/tables are snapshots taken at setup time —
-    * enough for client handshake probes, not a live catalog. */
-  /** One snapshot write per JVM: the catalog is SHARED across sessions
-    * (sharedState) but file-listing caches are per-session, so a
-    * re-snapshot from session B (drop + delete files + rewrite) crashes
-    * session A's next read with FAILED_READ_FILE against the deleted
-    * part files. The engine substitutes LIVE frames for
-    * databases/tables/columns anyway — these parquet snapshots serve
-    * only engine-bypassing readers, for whom first-setup state is the
-    * documented contract. */
-  private val systemSnapshotsDone =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
+  /** The static part of the `system` database: `one` and `settings`
+    * (the engine answers `system.settings` live; this view serves
+    * readers that bypass it). Idempotent and job-free. */
   def setupSystemTables(spark: SparkSession): Unit = {
-    import spark.implicits._
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val cat = spark.sessionState.catalog
     spark.sql("CREATE DATABASE IF NOT EXISTS system")
-    if (!spark.catalog.tableExists("system.one"))
+    if (!cat.tableExists(TableIdentifier("one", Some("system"))))
       spark.sql("CREATE OR REPLACE VIEW system.one AS SELECT 0 AS dummy")
-    if (systemSnapshotsDone.getAndSet(true)) return
-    // snapshots materialize as tiny managed tables (persistent views
-    // cannot reference the temp catalog state they are built from);
-    // drop stale metadata AND leftover warehouse dirs from prior JVMs
-    // (the in-memory catalog forgets them, the location survives)
-    def snapshot(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS system.$name")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-        s"system.db/$name")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
-      df.write.mode("overwrite").saveAsTable(s"system.$name")
-      // a prior snapshot's file listing may be cached in plans that
-      // already referenced the table (another server session, a cached
-      // view) — stale entries throw FAILED_READ_FILE on the next read
-      spark.catalog.refreshTable(s"system.$name")
-    }
-    snapshot("databases", databasesLive(spark))
-    snapshot("tables", tablesLive(spark))
-    snapshot("columns", columnsLive(spark))
-    // function inventory (Play UI autocomplete: SELECT name FROM
-    // system.functions)
-    snapshot("functions", ChFunctions.functionInventory
-      .map { case (n, agg) => (n, if (agg) 1 else 0) }
-      .toDF("name", "is_aggregate"))
-    if (!spark.catalog.tableExists("system.settings"))
+    if (!cat.tableExists(TableIdentifier("settings", Some("system"))))
       spark.sql("""
         CREATE OR REPLACE VIEW system.settings AS
         SELECT * FROM VALUES

@@ -34,8 +34,19 @@ object ResultFormatter {
     sb.toString
   }
 
+  /** The rows of `df`, streamed: `toLocalIterator` pulls one partition
+    * at a time (one job each), except when the plan is a local scan —
+    * rows the driver already holds (catalog probes, constant SELECTs) —
+    * which are handed over with no job at all. */
+  def rowsOf(df: DataFrame): Iterator[Row] = df.queryExecution.executedPlan match {
+    case _: org.apache.spark.sql.execution.LocalTableScanExec => df.collect().iterator
+    case _ =>
+      import scala.jdk.CollectionConverters._
+      df.toLocalIterator().asScala
+  }
+
   /** Stream-render `df` into `out` in the named text format; returns
-    * the row count. Rows arrive via `toLocalIterator()` — the scale-
+    * the row count. Rows arrive via [[rowsOf]] — the scale-
     * safe result boundary (a 100 TB SELECT streams through, it does
     * not `collect()` onto the driver). */
   def write(df: DataFrame, format: String, out: Appendable): Long =
@@ -47,8 +58,7 @@ object ResultFormatter {
   def write(df: DataFrame, format: String, out: Appendable,
             totals: Option[Row]): Long = {
     val t0 = System.nanoTime()
-    import scala.jdk.CollectionConverters._
-    writeRows(df.schema, df.toLocalIterator().asScala, format, out,
+    writeRows(df.schema, rowsOf(df), format, out,
       () => (System.nanoTime() - t0) / 1e9, totals)
   }
 

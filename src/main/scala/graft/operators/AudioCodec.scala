@@ -80,22 +80,28 @@ object AudioCodec {
 
   /** Parse a WAV payload back to (sampleRate, PCM samples): strict
     * RIFF chunk walk (fmt must be PCM16 LE mono; unknown chunks are
-    * skipped with even padding, per spec). */
-  private def decodeWav(bytes: Array[Byte]): (Int, Array[Int]) = {
+    * skipped with even padding, per spec). A malformed payload —
+    * truncated, or a chunk size outside the bytes left — fails with an
+    * IllegalArgumentException. */
+  private[graft] def decodeWav(bytes: Array[Byte]): (Int, Array[Int]) = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     def fourCC(): String = {
       val b = new Array[Byte](4); bb.get(b); new String(b, "US-ASCII")
     }
-    require(fourCC() == "RIFF", "payload is not a RIFF file")
+    require(bytes.length >= 12 && fourCC() == "RIFF", "payload is not a RIFF file")
     bb.getInt // riff size
     require(fourCC() == "WAVE", "payload is not a WAVE file")
     var rate = -1
     var raw: Array[Byte] = null
     while ((raw == null || rate < 0) && bb.remaining() >= 8) {
       val id = fourCC(); val size = bb.getInt
+      // a negative size would walk the position backwards forever
+      require(0 <= size && size <= bb.remaining,
+        s"malformed WAV: chunk '$id' size $size exceeds the ${bb.remaining} bytes left")
       id match {
         case "fmt " =>
+          require(size >= 16, s"malformed WAV: fmt chunk size $size < 16")
           val audioFormat = bb.getShort; val channels = bb.getShort
           rate = bb.getInt
           bb.getInt; bb.getShort // byte rate, block align
@@ -106,7 +112,7 @@ object AudioCodec {
         case "data" =>
           raw = new Array[Byte](size); bb.get(raw)
         case _ => // skip unknown chunk (sizes pad to even per spec)
-          bb.position(bb.position() + size + (size & 1))
+          bb.position(math.min(bb.limit, bb.position() + size + (size & 1)))
       }
     }
     require(rate > 0 && raw != null, "WAV missing fmt or data chunk")

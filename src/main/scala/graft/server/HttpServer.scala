@@ -28,7 +28,9 @@ class HttpServer(spark: SparkSession, port: Int,
 
   ChFunctions.register(spark)
   private val server = JdkHttpServer.create(new InetSocketAddress(port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(8,
+    (r: Runnable) => new Thread(r, "graft-http-worker"))
+  server.setExecutor(pool)
 
   // "INSERT INTO t [(cols)] FORMAT <binary format>" — these bodies must
   // never round-trip through UTF-8
@@ -194,8 +196,9 @@ class HttpServer(spark: SparkSession, port: Int,
       ex.getResponseHeaders.set("X-ClickHouse-Format", fmt)
       ex.getResponseHeaders.set("X-ClickHouse-Timezone", "UTC")
       // Results stream to the socket chunked (length 0) through
-      // toLocalIterator — driver memory stays bounded by one partition
-      // regardless of result size. Parse/analysis errors were already
+      // ResultFormatter.rowsOf — driver memory stays bounded by one
+      // partition regardless of result size, and rows already on the
+      // driver go out with no job. Parse/analysis errors were already
       // raised above (Spark analyzes eagerly), so the 400 contract
       // holds; a mid-stream runtime failure truncates the body, the
       // same visible behavior as ClickHouse's own streamed HTTP.
@@ -249,16 +252,15 @@ class HttpServer(spark: SparkSession, port: Int,
           }
         } else {
           val os = body()
-          import scala.jdk.CollectionConverters._
           if (fmtLower == "arrow" || fmtLower == "arrowstream")
             graft.formats.ArrowCodec.write(os, df.schema,
-              df.toLocalIterator().asScala, file = fmtLower == "arrow")
+              ResultFormatter.rowsOf(df), file = fmtLower == "arrow")
           else if (fmtLower == "native")
             NativeCodec.writeBlocks(os, df.schema,
-              df.toLocalIterator().asScala, blockRows = 65536)
+              ResultFormatter.rowsOf(df), blockRows = 65536)
           else
             NativeCodec.writeRowBinary(os, df.schema,
-              df.toLocalIterator().asScala,
+              ResultFormatter.rowsOf(df),
               withNamesAndTypes = fmtLower == "rowbinarywithnamesandtypes")
           os.close()
         }
@@ -308,7 +310,13 @@ class HttpServer(spark: SparkSession, port: Int,
   }
 
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+  /** Closes the listener and ends the worker pool; its threads are not
+    * daemons, so a pool left running would keep the JVM alive. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+  }
   def boundPort: Int = server.getAddress.getPort
 }
 

@@ -244,7 +244,7 @@ class NativeServer(spark: SparkSession, port: Int,
         bare.trim.toUpperCase.startsWith("WITH")
       if (isSelect) {
         val t0 = System.nanoTime()
-        // Stream the result as bounded blocks through toLocalIterator —
+        // Stream the result as bounded blocks through rowsOf —
         // driver memory is one partition + one block, never the whole
         // result (the scale-safe boundary; a collect() here is the
         // 100 TB driver-OOM). A delta PROGRESS packet precedes each
@@ -263,10 +263,9 @@ class NativeServer(spark: SparkSession, port: Int,
           if (lz4Responses)
             out.write(ChCompression.compressFrame(BlockInfoBytes ++ bytes))
           else { writeBlockInfo(out); out.write(bytes) }
-        import scala.jdk.CollectionConverters._
         var nBlocks = 0L
         val nRows = NativeCodec.writeBlocks(out, df.schema,
-          df.toLocalIterator().asScala, blockRows,
+          graft.formats.ResultFormatter.rowsOf(df), blockRows,
           customSerFlag = serFlag,
           frame = { blockLen =>
             nBlocks += 1

@@ -177,6 +177,27 @@ class FormatsSpec extends AnyFunSuite {
     assert(out === "{\"number\":\"0\",\"s\":\"0\"}\n{\"number\":\"1\",\"s\":\"1\"}\n")
   }
 
+  test("JSONEachRow export imports back to equal rows (quoted 64-bit ints, decimals)") {
+    import graft.dialect.Engine
+    val cols = "(k Int32, b Int8, s16 Int16, i Int64, u UInt64, d Decimal(12, 2), " +
+      "f Float64, s String, n Nullable(Int64))"
+    Engine.execute(spark, "CREATE DATABASE IF NOT EXISTS graft_fmt")
+    for (t <- Seq("jsrc", "jdst")) {
+      Engine.execute(spark, s"DROP TABLE IF EXISTS graft_fmt.$t")
+      Engine.execute(spark, s"CREATE TABLE graft_fmt.$t $cols ENGINE=Memory")
+    }
+    Engine.execute(spark, """INSERT INTO graft_fmt.jsrc VALUES
+      (1, -128, 32767, 9007199254740993, 18446744073709551615, 1234567890.12, 0.5, 'a"b', NULL),
+      (2, 127, -32768, -9223372036854775808, 0, -0.01, -1e300, '', 42)""")
+    val rows = "SELECT * FROM graft_fmt.%s ORDER BY k"
+    val json = ResultFormatter.render(Engine.execute(spark, rows.format("jsrc")), "JSONEachRow")
+    assert(json.contains("\"i\":\"9007199254740993\""), json) // 64-bit ints travel quoted
+    Engine.execute(spark, s"INSERT INTO graft_fmt.jdst FORMAT JSONEachRow\n$json")
+    val src = Engine.execute(spark, rows.format("jsrc")).collect().toSeq
+    assert(src.length === 2)
+    assert(Engine.execute(spark, rows.format("jdst")).collect().toSeq === src)
+  }
+
   test("JSONCompactEachRow renders one array per line") {
     val out = ResultFormatter.render(
       q("SELECT number, toString(number) AS s FROM numbers(2) ORDER BY number"),

@@ -407,4 +407,20 @@ class HttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s2 = UserSessions.forKey(spark, "carol:pw", None)
     assert(s2.catalog.currentDatabase === db)
   }
+
+  test("stop() ends the worker pool: no worker thread outlives the server") {
+    import scala.jdk.CollectionConverters._
+    def workers = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName == "graft-http-worker").toSet
+    val before = workers
+    val s = new HttpServer(spark, 0)
+    s.start()
+    val r = client.send(HttpRequest.newBuilder(
+      URI.create(s"http://localhost:${s.boundPort}/?query=${enc("SELECT 1")}")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() === 200 && r.body() === "1\n")
+    assert((workers -- before).nonEmpty)
+    s.stop()
+    assert((workers -- before).isEmpty)
+  }
 }

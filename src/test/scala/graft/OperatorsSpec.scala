@@ -207,6 +207,33 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("AudioCodec.decodeWav fails fast with a clean error on malformed chunk sizes") {
+    import graft.operators.AudioCodec
+    def riff(chunks: (String, Int, Int)*): Array[Byte] = {
+      // (id, declared size, bytes actually present)
+      val body = chunks.map(_._3 + 8).sum
+      val bb = java.nio.ByteBuffer.allocate(12 + body)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.put("RIFF".getBytes("US-ASCII")).putInt(4 + body).put("WAVE".getBytes("US-ASCII"))
+      chunks.foreach { case (id, size, n) =>
+        bb.put(id.getBytes("US-ASCII")).putInt(size).put(new Array[Byte](n))
+      }
+      bb.array()
+    }
+    val malformed = Seq(
+      "negative chunk size" -> riff(("LIST", -8, 0), ("data", 4, 4)),
+      "chunk past the end" -> riff(("data", 1 << 20, 16)),
+      "short fmt chunk" -> riff(("fmt ", 2, 2), ("data", 4, 4)),
+      "truncated header" -> "RIFF".getBytes("US-ASCII"))
+    import scala.concurrent.{Await, Future, ExecutionContext}
+    import scala.concurrent.duration._
+    malformed.foreach { case (what, bytes) =>
+      val f = Future(AudioCodec.decodeWav(bytes))(ExecutionContext.global)
+      val e = intercept[IllegalArgumentException](Await.result(f, 10.seconds))
+      assert(e.getMessage.contains("WAV") || e.getMessage.contains("RIFF"), what)
+    }
+  }
+
   test("WithFill synthesizes default rows for missing grid points only") {
     val df = Seq((2L, "b", 10.0), (5L, "e", 20.0)).toDF("k", "s", "v")
     val out = graft.operators.WithFill(df, "k", 1L, 7L, 2L) // grid 1,3,5
