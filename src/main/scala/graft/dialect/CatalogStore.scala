@@ -151,13 +151,6 @@ object CatalogStore {
     } catch { case _: Throwable => () }
   }
 
-  /** Remove a table's meta file (DROP of a managed table deletes the
-    * whole directory anyway; this covers edge paths). */
-  def forgetFile(spark: SparkSession, name: String): Unit =
-    try tableLocation(spark, name.replace("`", ""))
-      .foreach(l => java.nio.file.Files.deleteIfExists(l.resolve(MetaFile)))
-    catch { case _: Throwable => () }
-
   // ---- dictionaries / materialized views (central files) ----
 
   private def catalogDir(spark: SparkSession): java.nio.file.Path =

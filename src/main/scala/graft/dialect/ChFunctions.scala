@@ -201,15 +201,13 @@ object ChFunctions {
     // codegen'd merge-intersect count over sorted distinct long arrays
     // (similarity-verify hot path — see SortedLongIntersect)
     "sortedLongIntersect" -> (a => graft.functions.SortedLongIntersect(a(0), a(1))),
-    // codegen'd double-array dot product with zip_with/fold-identical
-    // semantics (similarity-search hot path — see VecDot)
+    // codegen'd double- or float-array dot product with
+    // zip_with/fold-identical semantics (similarity-search hot path and
+    // the near-dup scan's float32 pruning score — see VecDot)
     "vecDot" -> (a => graft.functions.VecDot(a(0), a(1))),
     // unscaled DECIMAL(20,0) mod 2^64 as a raw long (injective on the
     // UInt64 domain — see DecimalMod64 / plans.UInt64DistinctNarrow)
     "decimalMod64" -> (a => graft.functions.DecimalMod64(a.head)),
-    // float-array dot accumulated in double (pruning score for the
-    // two-phase exact near-dup scan — see VecDotF)
-    "vecDotF" -> (a => graft.functions.VecDotF(a(0), a(1))),
 
     // integer hashes: the published ClickHouse algorithms (Hash.h),
     // codegen'd — see graft.functions.IntHash provenance note

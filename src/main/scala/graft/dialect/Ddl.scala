@@ -4144,7 +4144,7 @@ object Engine {
           scala.util.Try(Projections.maybeRewrite(df))
             .toOption.flatten
             .orElse(scala.util.Try(
-              graft.operators.LateMaterialize.maybeRewrite(df))
+              graft.operators.LateMaterialize.rewrite(df))
               .toOption.flatten)
             .getOrElse(df)
         }
@@ -4233,12 +4233,6 @@ object Engine {
     }
   }
 
-  /** True when `format` names a binary INSERT payload format (the
-    * HTTP server must not decode such bodies as UTF-8). */
-  def isBinaryInsertFormat(format: String): Boolean =
-    Set("rowbinary", "rowbinarywithnamesandtypes", "native",
-      "parquet", "orc", "arrow", "arrowstream")(format.toLowerCase)
-
   /** INSERT target structure: the named columns, or every INSERTABLE
     * column (physical minus the derived `_part` partition key minus
     * MATERIALIZED columns). The single home for this rule — HTTP
@@ -4280,8 +4274,6 @@ object Engine {
   private def binaryInsert(spark: SparkSession, table: String,
                            cols: Option[Seq[String]], format: String,
                            payload: Array[Byte]): DataFrame = {
-    import org.apache.spark.sql.types._
-    val full = spark.table(table).schema
     val target = targetSchema(spark, table, cols)
     val announced = target.fields.toSeq
       .map(f => f.name -> graft.formats.ChTypeNames.fieldName(f))
@@ -4294,20 +4286,19 @@ object Engine {
         graft.formats.NativeCodec.decodeRowBinary(payload,
           withNamesAndTypes = false, announced)
     }
-    insertDecodedRows(spark, table, cols, names, raw)
+    insertDecodedRows(spark, table, target, names, raw)
   }
 
   /** Land already-decoded (names, row values) into `table` through the
-    * aligned append path — shared by the HTTP binary formats and the
-    * native TCP streaming INSERT (sample-block exchange). Header names
-    * win; values coerce to the declared column types. */
+    * aligned append path — shared by the HTTP binary formats, Arrow and
+    * the native TCP streaming INSERT (sample-block exchange). `target`
+    * is the [[targetSchema]] the caller resolved; header names win and
+    * values coerce to the declared column types. */
   private[graft] def insertDecodedRows(spark: SparkSession, table: String,
-                                       cols: Option[Seq[String]],
+                                       target: org.apache.spark.sql.types.StructType,
                                        names: Seq[String],
                                        raw: Seq[Seq[Any]]): DataFrame = {
     import org.apache.spark.sql.types._
-    val full = spark.table(table).schema
-    val target = targetSchema(spark, table, cols)
     val fields = names.map(n => target(target.fieldIndex(n)))
     val rows = raw.map { vs =>
       org.apache.spark.sql.Row.fromSeq(
@@ -4328,8 +4319,6 @@ object Engine {
   private def arrowInsert(spark: SparkSession, table: String,
                           cols: Option[Seq[String]], file: Boolean,
                           payload: Array[Byte]): DataFrame = {
-    import org.apache.spark.sql.types._
-    val full = spark.table(table).schema
     val target = targetSchema(spark, table, cols)
     val (names0, raw) = graft.formats.ArrowCodec.decode(payload, file)
     // a headerless client can't exist for Arrow (the schema is in the
@@ -4337,16 +4326,7 @@ object Engine {
     // the announced column list when none match the target
     val names = if (names0.exists(n => target.fieldNames.contains(n))) names0
       else target.fieldNames.toSeq.take(names0.length)
-    val fields = names.map(n => target(target.fieldIndex(n)))
-    val rows = raw.map { vs =>
-      org.apache.spark.sql.Row.fromSeq(
-        vs.zip(fields).map { case (v, f) => coerce(v, f.dataType) })
-    }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq),
-      StructType(fields.toIndexedSeq))
-    Ddl.appendAligned(spark, table, Ddl.fillInsertable(spark, table, df))
-    spark.emptyDataFrame
+    insertDecodedRows(spark, table, target, names, raw)
   }
 
   /** INSERT ... FORMAT Parquet|ORC: the payload is one complete

@@ -279,7 +279,7 @@ object Projections {
   }
 
   /** Kill switch (bench A/B, incident response): `false` falls back to
-    * base-table scans everywhere, like LateMaterialize.enabled. */
+    * base-table scans everywhere. */
   @volatile var enabled = true
 
   /** SQL entry: analyze, then plan-rewrite (None -> caller runs as-is).

@@ -128,7 +128,7 @@ object CosineKnn {
       // pairs meet exactly once in whichever order the blocks fell
       .filter(col("pi") =!= col("pj") || col("ia") < col("ib"))
       .filter(col("ia") =!= col("ib"))
-      .filter(expr("vecDotF(fa, fb)") >= threshold - 1e-3)
+      .filter(expr("vecDot(fa, fb)") >= threshold - 1e-3)
       .select(col("ia"), col("ib"))
     val sets = u.select(col("id"), col("u"))
     cands

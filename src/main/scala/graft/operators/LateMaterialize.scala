@@ -51,13 +51,6 @@ object LateMaterialize {
   private val MinProjCols = 16
   private val MaxKeyCols = 10
 
-  /** Operational kill switch for the whole rewrite (every planner
-    * feature that changes execution shape needs one): set env
-    * SPARK_GRAFT_DISABLE_LATEMAT=1 before launch, or flip the var at
-    * runtime. Also how the bench A/Bs two-phase vs single-pass. */
-  @volatile var enabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_DISABLE_LATEMAT").contains("1")
-
   /** SQL-text entry (the dialect layer): analyze, then plan-rewrite.
     * None when the shape or the economics don't fit (caller runs the
     * text as-is, and an unparsable query surfaces its real error from
@@ -65,16 +58,12 @@ object LateMaterialize {
   def maybeRun(spark: SparkSession, sql: String): Option[DataFrame] =
     scala.util.Try(spark.sql(sql)).toOption.flatMap(rewrite)
 
-  /** Already-analyzed entry (the dialect hot path): the caller owns the
-    * single spark.sql analysis; this only plan-matches. */
-  def maybeRewrite(df: DataFrame): Option[DataFrame] =
-    if (!enabled) None else rewrite(df)
-
-  /** Plan-matching entry for any DataFrame-built top-k: returns the
-    * two-phase equivalent, or None when the plan isn't the guarded
+  /** Plan-matching entry for any DataFrame-built top-k, and the dialect
+    * hot path (the caller owns the single spark.sql analysis): returns
+    * the two-phase equivalent, or None when the plan isn't the guarded
     * Limit/Sort/Filter/relation shape. */
   def rewrite(df: DataFrame): Option[DataFrame] = {
-    if (!enabled || df.isStreaming) return None
+    if (df.isStreaming) return None
     val spark = df.sparkSession
     val plan = df.queryExecution.analyzed
 

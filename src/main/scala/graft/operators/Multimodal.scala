@@ -171,11 +171,6 @@ object Multimodal {
       }
   }
 
-  /** Frame-sampling view of [[transformMedia]]. */
-  def frameSample(withPayload: DataFrame, stride: Int): DataFrame =
-    transformMedia(withPayload, stride, 16)
-      .select("doc_id", "n_frames", "frame_px_sum")
-
   /** Resize view of [[transformMedia]]. */
   def resize(withPayload: DataFrame, box: Int): DataFrame =
     transformMedia(withPayload, 1, box)

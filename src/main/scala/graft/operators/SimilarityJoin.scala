@@ -22,6 +22,9 @@ import graft.functions.TextFns
   */
 object SimilarityJoin {
 
+  /** Estimated gram-set bytes up to which the verify joins broadcast. */
+  private val BroadcastVerifyBytes = 200L << 20
+
   /** (block, a, b, jac) for pairs in the same block with char-n-gram
     * Jaccard >= threshold. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
@@ -127,14 +130,11 @@ object SimilarityJoin {
     // shuffles of the candidate stream (measured: 27 s of l4's 34 s).
     // Restore the decision AQE lost with measured numbers: rows and
     // mean gram count are two O(1)-ish jobs on the checkpoint; when
-    // the estimated size fits the (configurable) bound, broadcast —
+    // the estimated size fits the bound, broadcast —
     // the guide's "explicit broadcast when you know a side is small".
     // A 100 TB corpus blows the bound and falls back to the shuffle
     // join, which is the correct plan at that scale.
     val sets = base.select(col("id"), col("hs"))
-    val bcBound = docs.sparkSession.conf
-      .get("spark.graft.simjoin.broadcastVerifyBytes", (200L << 20).toString)
-      .toLong
     val estBytes = {
       val stats = base.select(count(lit(1)), avg(size(col("hs")))).head
       val rows = stats.getLong(0)
@@ -143,7 +143,7 @@ object SimilarityJoin {
     }
     def side(tag: String) = {
       val s = sets.select(col("id").as(tag), col("hs").as(s"h$tag"))
-      if (estBytes <= bcBound) broadcast(s) else s
+      if (estBytes <= BroadcastVerifyBytes) broadcast(s) else s
     }
     candsWide
       .join(side("a"), "a")

@@ -496,9 +496,8 @@ object HttpServer {
   * registers the fixture tables as views, serves the ClickHouse HTTP
   * API. */
 object ServeMain {
-  def main(args: Array[String]): Unit = {
-    val port = args.headOption.map(_.toInt).getOrElse(8123)
-    val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.001")
+  /** The served engine's session, shared with [[NativeServeMain]]. */
+  private[server] def session(): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
       .config("spark.sql.shuffle.partitions", "8")
@@ -510,6 +509,13 @@ object ServeMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val port = args.headOption.map(_.toInt).getOrElse(8123)
+    val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.001")
+    val spark = session()
     graft.dialect.ChContext.setup(spark, dir)
     val srv = new HttpServer(spark, port, Some(dir))
     srv.start()

@@ -429,7 +429,7 @@ class NativeServer(spark: SparkSession, port: Int,
     def flush(): Unit = {
       val collected = rows.result()
       if (collected.nonEmpty)
-        Engine.insertDecodedRows(session, bare, cols, names, collected)
+        Engine.insertDecodedRows(session, bare, target, names, collected)
       rows = Vector.newBuilder[Seq[Any]]
       buffered = 0
     }
@@ -591,17 +591,7 @@ object NativeServeMain {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(9000)
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.sql.codegen.maxFields", "200")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ServeMain.session()
     graft.dialect.ChContext.setup(spark, dir)
     val srv = new NativeServer(spark, port, Some(dir))
     srv.start()

@@ -53,6 +53,30 @@ class CodegenFnsSpec extends AnyFunSuite {
       if (!r.isNullAt(0))
         assert(r.getDouble(0).isNaN === r.getDouble(1).isNaN, r)
     }
+    // ARRAY<FLOAT> inputs: products on the widened doubles, summed in
+    // double; null elements and length mismatches -> null
+    val floats = Seq(
+      (Seq(1.1f, -2.2f, 3.3f), Seq(0.5f, 4.0f, -1.25f)),
+      (Seq(0.1f, 0.2f, 0.3f, 0.4f, 0.5f), Seq(0.9f, 0.8f, 0.7f, 0.6f, 0.5f)),
+      (Seq[Float](), Seq[Float]()),
+      (Seq(1.0f, 2.0f), Seq(1.0f))).toDF("a", "b")
+      .union(spark.sql("SELECT array(CAST(1 AS FLOAT), NULL) AS a, " +
+        "array(CAST(2 AS FLOAT), CAST(3 AS FLOAT)) AS b"))
+      .selectExpr("vecDot(a, b) AS fused",
+        """aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
+           cast(0 AS DOUBLE), (acc, x) -> acc + x) AS reference""")
+    val fr = floats.collect()
+    assert(fr.count(_.isNullAt(0)) === 2, fr.mkString(","))
+    fr.foreach { r =>
+      assert(r.isNullAt(0) === r.isNullAt(1), r)
+      if (!r.isNullAt(0))
+        assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ===
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r)
+    }
+    // mixed element types are refused at analysis
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Seq((Seq(1.0), Seq(1.0f))).toDF("a", "b").selectExpr("vecDot(a, b)").collect()
+    }
   }
 
   test("decimalMod64 is injective on the UInt64 domain, incl. >= 2^63") {
