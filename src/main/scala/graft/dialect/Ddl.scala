@@ -226,7 +226,7 @@ object Ddl {
     * an INSERT ... SELECT fnState(...) lands without conversion. */
   private def aggStateType(cn: String, spec: String): String = {
     import org.apache.spark.sql.types._
-    val parts = splitTopLevel(spec).map(_.trim)
+    val parts = SqlScan(spec).split(',').map(_.trim)
     val fn = parts.head.toLowerCase
     def inner = Transpiler.mapTypeNames(parts(1))
     fn match {
@@ -268,7 +268,7 @@ object Ddl {
     val keyCols = (if (df.columns.contains("_part")) Seq("_part") else Nil) ++
       keys.filter(df.columns.contains) // expression keys fall back to min
     def specOf(c: String) = aggCols.find(_._1.equalsIgnoreCase(c))
-      .map(p => splitTopLevel(p._2).head.trim.toLowerCase)
+      .map(p => SqlScan(p._2).split(',').head.trim.toLowerCase)
     val aggs = df.columns.filterNot(keyCols.contains).toSeq.map { c =>
       val dt = df.schema(c).dataType
       specOf(c) match {
@@ -297,7 +297,7 @@ object Ddl {
     * `RECOMPRESS` TTL actions are refused loudly rather than silently
     * mis-applied. */
   private[dialect] def parseTtlSpec(t: String): Option[String] = {
-    val parts = splitTopLevel(t).map(_.trim).filter(_.nonEmpty)
+    val parts = SqlScan(t).split(',').map(_.trim).filter(_.nonEmpty)
     val rest = parts.filterNot(p => // movement clauses: accepted no-ops
       "(?is)\\bTO\\s+(DISK|VOLUME)\\s".r.findFirstIn(p).isDefined)
     rest.find(p =>
@@ -311,32 +311,6 @@ object Ddl {
       case _ => throw new IllegalArgumentException(
         s"multiple DELETE TTL expressions in one table TTL: $t")
     }
-  }
-
-  /** Index of a depth-0, outside-string, identifier-bounded `kw` in
-    * `s`, or -1 — Enum8('DEFAULT' = 1) and Decimal(10,2) never match. */
-  private def topLevelKeyword(s: String, kw: String): Int = {
-    var depth = 0; var q = false; var i = 0
-    def isIdent(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (q) {
-        if (c == '\\') i += 1
-        else if (c == '\'') q = false
-      } else c match {
-        case '\'' => q = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case _ =>
-          if (depth == 0 && i + kw.length <= s.length &&
-              s.regionMatches(true, i, kw, 0, kw.length) &&
-              (i == 0 || !isIdent(s.charAt(i - 1))) &&
-              (i + kw.length == s.length || !isIdent(s.charAt(i + kw.length))))
-            return i
-      }
-      i += 1
-    }
-    -1
   }
 
   /** The `ENGINE = ...` tail of a statement, verbatim (the clone form's
@@ -367,14 +341,15 @@ object Ddl {
     * semantics. Column-level TTL is refused loudly rather than
     * mis-parsed as part of the type. */
   private def splitColDefault(cn: String, ct: String): ColTail = {
-    if (topLevelKeyword(ct, "TTL") >= 0) throw new IllegalArgumentException(
+    val sc = SqlScan(ct)
+    if (sc.keyword("TTL") >= 0) throw new IllegalArgumentException(
       s"column-level TTL is not supported (column $cn); " +
         "use a table-level TTL clause for row expiry")
     // every modifier start, in text order; each segment runs to the
     // next modifier (expressions never contain these words at depth 0)
     val marks =
       Seq("DEFAULT", "MATERIALIZED", "ALIAS", "EPHEMERAL", "COMMENT", "CODEC")
-        .map(k => k -> topLevelKeyword(ct, k)).filter(_._2 >= 0).sortBy(_._2)
+        .map(k => k -> sc.keyword(k)).filter(_._2 >= 0).sortBy(_._2)
     val tpe = marks.headOption.map(m => ct.substring(0, m._2).trim)
       .getOrElse(ct.trim)
     if (tpe.isEmpty) throw new IllegalArgumentException(
@@ -705,60 +680,19 @@ object Ddl {
     * scan (keywords match only at nesting depth 0, so ORDER BY keys may
     * nest calls arbitrarily — `cityHash64(toString(x))` works; the old
     * regexes stopped at one level). Returns keyword → clause body. */
-  private val suffixKeywords = Seq(
-    "PARTITION BY", "ORDER BY", "SAMPLE BY", "PRIMARY KEY", "TTL",
-    "SETTINGS", "COMMENT")
+  private val suffixKeywordRe =
+    ("(?i)(?<![\\w`])(PARTITION\\s+BY|ORDER\\s+BY|SAMPLE\\s+BY|PRIMARY\\s+KEY|" +
+      "TTL|SETTINGS|COMMENT)(?![\\w`])").r
   private[graft] def suffixClauses(rest: String): Map[String, String] = {
-    // keyword match at i, whitespace-flexible between words; '_' and '`'
-    // count as identifier chars (\b semantics) so a column named
+    // '_' counts as an identifier char, so a column named
     // `user_settings` never false-matches SETTINGS
-    def identChar(c: Char): Boolean =
-      Character.isLetterOrDigit(c) || c == '_' || c == '`'
-    def matchKw(i: Int, kw: String): Int = { // -1 or end index
-      var pos = i
-      val words = kw.split(" ")
-      var w = 0
-      while (w < words.length) {
-        val word = words(w)
-        if (!rest.regionMatches(true, pos, word, 0, word.length)) return -1
-        // word boundaries on both sides
-        if (pos > 0 && identChar(rest.charAt(pos - 1))) return -1
-        val after = pos + word.length
-        if (after < rest.length && identChar(rest.charAt(after))
-            && w == words.length - 1) return -1
-        pos = after
-        if (w < words.length - 1) {
-          if (pos >= rest.length || !rest.charAt(pos).isWhitespace) return -1
-          while (pos < rest.length && rest.charAt(pos).isWhitespace) pos += 1
-        }
-        w += 1
-      }
-      pos
-    }
-    var i = 0
-    var depth = 0
-    var inStr = false
-    val hits = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
-    while (i < rest.length) {
-      val c = rest.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else c match {
-        case '\'' => inStr = true; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case _ if depth == 0 =>
-          val hit = suffixKeywords.iterator
-            .map(kw => kw -> matchKw(i, kw)).find(_._2 >= 0)
-          hit match {
-            case Some((kw, end)) => hits += ((kw, i, end)); i = end
-            case None => i += 1
-          }
-        case _ => i += 1
-      }
-    }
-    hits.toSeq.zipWithIndex.map { case ((kw, _, end), k) =>
-      val until = if (k + 1 < hits.length) hits(k + 1)._2 else rest.length
-      kw -> rest.substring(end, until).trim
+    val sc = SqlScan(rest)
+    val hits = sc.codeMatches(suffixKeywordRe).filter(m => sc.depth(m.start) == 0)
+      .toSeq
+    hits.zipWithIndex.map { case (m, k) =>
+      val until = if (k + 1 < hits.length) hits(k + 1).start else rest.length
+      m.group(1).toUpperCase.split("\\s+").mkString(" ") ->
+        rest.substring(m.end, until).trim
     }.toMap
   }
 
@@ -818,23 +752,12 @@ object Ddl {
     * SYSTEM RELOAD pull model). */
   private def createDictionary(spark: SparkSession, ifNot: Boolean,
                                name: String, tail: String): DataFrame = {
-    // find the column list's matching close paren (quote/paren aware)
-    var depth = 1; var i = 0; var inStr = false
-    while (i < tail.length && depth > 0) {
-      val c = tail.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    if (depth != 0) throw new IllegalArgumentException(
+    // the column list's closing paren (`tail` starts inside it)
+    val close = SqlScan("(" + tail).closing(0)
+    if (close < 0) throw new IllegalArgumentException(
       s"CREATE DICTIONARY $name: unbalanced column list")
-    val colsStr = tail.substring(0, i - 1)
-    val rest = tail.substring(i)
+    val colsStr = tail.substring(0, close - 1)
+    val rest = tail.substring(close)
     val pk = "(?is)PRIMARY\\s+KEY\\s+(.+?)(?=\\bSOURCE\\b|\\bLAYOUT\\b|\\bLIFETIME\\b|\\bSETTINGS\\b|$)".r
       .findFirstMatchIn(rest).map(_.group(1).trim)
       .getOrElse(throw new IllegalArgumentException(
@@ -866,7 +789,7 @@ object Ddl {
     val rangeCols = range.toSeq.flatMap(r => Seq(r._1, r._2))
       .map(_.toLowerCase).toSet
     val colRe = "(?is)^\\s*([\\w`]+)\\s+(.+?)(?:\\s+DEFAULT\\s+(.+))?\\s*$".r
-    val attrs = splitTopLevel(colsStr).map(_.trim).filter(_.nonEmpty)
+    val attrs = SqlScan(colsStr).split(',').map(_.trim).filter(_.nonEmpty)
       .flatMap {
         case colRe(n, t, d) =>
           val cn = n.replace("`", "")
@@ -909,7 +832,7 @@ object Ddl {
   // Only the head is regex-matched; the assignment list / IN PARTITION
   // / WHERE split happens on depth-0-outside-string scans in the
   // handler — a string literal containing the words "in partition" or
-  // "where" must not split the statement (topLevelKeyword is the
+  // "where" must not split the statement (SqlScan.keyword is the
   // string-aware locator the optional-regex-group form lacked).
   private val alterUpdateRe =
     "(?is)^\\s*ALTER\\s+TABLE\\s+([\\w`.]+)\\s+UPDATE\\s+(.+)$".r
@@ -1272,7 +1195,7 @@ object Ddl {
         // `SET k = v[, ...]` — session-scoped; per-query SETTINGS win.
         // Unknown names accepted+ignored (the reference passes them
         // through to chdb the same way)
-        val kv = splitTopLevel(assignments).flatMap { a =>
+        val kv = SqlScan(assignments).split(',').flatMap { a =>
           val i = a.indexOf('=')
           if (i < 0) None
           else Some(a.substring(0, i).trim.toLowerCase ->
@@ -1302,10 +1225,9 @@ object Ddl {
           // under their bare name — matching the per-credential
           // session model.
           val bare = name.substring(name.lastIndexOf('.') + 1).replace("`", "")
-          val df = spark.sql(Transpiler.transpile(body))
-          if (Option(ifNot).isDefined &&
-              spark.catalog.tableExists(bare)) df
-          else { df.createOrReplaceTempView(bare); df }
+          if (!(Option(ifNot).isDefined && spark.catalog.tableExists(bare)))
+            spark.sql(Transpiler.transpile(body)).createOrReplaceTempView(bare)
+          spark.emptyDataFrame
         }
       case createCloneRe(ifNot, newName, srcName)
           if !srcName.replace("`", "").matches("(?i)(select|with)") =>
@@ -1346,7 +1268,7 @@ object Ddl {
         // through the same MergeTree insert layout
         val df = Engine.execute(spark, selKw + selRest)
         if (Option(ifNot).isDefined &&
-            spark.catalog.tableExists(name.replace("`", ""))) df
+            spark.catalog.tableExists(name.replace("`", ""))) spark.emptyDataFrame
         else {
           // bare type names (no Nullable(...) wrapper): the created
           // parquet columns are nullable regardless, like every other
@@ -1387,7 +1309,7 @@ object Ddl {
       case alterUpdateRe(name, updateTail) =>
         // ALTER TABLE t UPDATE a = expr, b = expr [IN PARTITION p] WHERE cond
         val rest = updateTail.trim
-        val wherePos = topLevelKeyword(rest, "WHERE")
+        val wherePos = SqlScan(rest).keyword("WHERE")
         if (wherePos < 0) throw new IllegalArgumentException(
           s"ALTER TABLE UPDATE needs a WHERE clause: $rest")
         val cond = rest.substring(wherePos + "WHERE".length).trim
@@ -1396,7 +1318,7 @@ object Ddl {
         // outside-string PARTITION token directly preceded by IN (an
         // assignment's `x IN (...)` has `(` there, a string literal
         // never reaches the scan)
-        val pPos = topLevelKeyword(head, "PARTITION")
+        val pPos = SqlScan(head).keyword("PARTITION")
         val partClause: Option[(Int, String)] =
           if (pPos <= 0) None
           else "(?is)\\bIN\\s*$".r.findFirstMatchIn(head.substring(0, pPos))
@@ -1408,7 +1330,7 @@ object Ddl {
         val assignments = partClause.map(c => head.substring(0, c._1).trim)
           .getOrElse(head)
         val inPart: String = partClause.map(_._2).orNull
-        val sets = splitTopLevel(assignments).map { a =>
+        val sets = SqlScan(assignments).split(',').map { a =>
           val Array(c, e) = a.split("=", 2)
           c.trim.replace("`", "") -> Transpiler.transpile(e.trim)
         }
@@ -1795,7 +1717,7 @@ object Ddl {
       case renameTableRe(pairs) =>
         // RENAME TABLE a TO b[, c TO d]: catalog rename (a metadata-only
         // move for managed tables); the MergeTree layout follows the key
-        splitTopLevel(pairs).foreach { p =>
+        SqlScan(pairs).split(',').foreach { p =>
           val pm = "(?is)^\\s*([\\w`.]+)\\s+TO\\s+([\\w`.]+)\\s*$".r
             .findFirstMatchIn(p).getOrElse(throw new IllegalArgumentException(
               s"bad RENAME TABLE clause: $p"))
@@ -1863,7 +1785,7 @@ object Ddl {
         if (dedupM.isDefined) {
           val byCols = dedupM.get.group(1) match {
             case null => Nil
-            case cs => splitTopLevel(cs).map(_.trim.replace("`", ""))
+            case cs => SqlScan(cs).split(',').map(_.trim.replace("`", ""))
               .filter(_.nonEmpty)
           }
           mutateScoped { df =>
@@ -2770,7 +2692,7 @@ object Ddl {
       else engine0
     val engineArgs =
       if (replicated)
-        splitTopLevel(engineArgs0).map(_.trim)
+        SqlScan(engineArgs0).split(',').map(_.trim)
           .filterNot(a => a.startsWith("'") || a.isEmpty).mkString(", ")
       else engineArgs0
     // ENGINE=Distributed(cluster, db, table[, sharding_key]): single
@@ -2778,7 +2700,7 @@ object Ddl {
     // cluster()/remote() table functions). Reads go through a session
     // view; INSERTs redirect to the underlying table (see insert()).
     if (engine.equalsIgnoreCase("distributed")) {
-      val parts = splitTopLevel(engineArgs).map(
+      val parts = SqlScan(engineArgs).split(',').map(
         _.trim.stripPrefix("'").stripSuffix("'").replace("`", ""))
       if (parts.length < 3) throw new IllegalArgumentException(
         s"ENGINE=Distributed needs (cluster, db, table), got: $engineArgs")
@@ -2838,9 +2760,9 @@ object Ddl {
     val orderCols = clauses.get("ORDER BY")
       .map { inner0 =>
         val inner = if (inner0.startsWith("(") && inner0.endsWith(")") &&
-          Transpiler.matchingParen(inner0, 0) == inner0.length - 1)
+          SqlScan(inner0).closing(0) == inner0.length - 1)
           inner0.substring(1, inner0.length - 1) else inner0
-        splitTopLevel(inner).map(_.trim).filter(_.nonEmpty)
+        SqlScan(inner).split(',').map(_.trim).filter(_.nonEmpty)
       }
       .getOrElse(Nil)
     val sampleBy = clauses.get("SAMPLE BY")
@@ -2859,7 +2781,7 @@ object Ddl {
     val inlineIndexRe =
       ("(?is)^INDEX\\s+([\\w`]+)\\s+(.+?)\\s+TYPE\\s+" +
         "(\\w+(?:\\s*\\([^)]*\\))?)(?:\\s+GRANULARITY\\s+(\\d+))?$").r
-    val (indexDefs, colOnlyDefs) = splitTopLevel(colDefs)
+    val (indexDefs, colOnlyDefs) = SqlScan(colDefs).split(',')
       .partition(d => "(?is)^\\s*INDEX\\s".r.findFirstIn(d).isDefined)
     val colDefaults = Seq.newBuilder[(String, String)]
     val colComments = Seq.newBuilder[(String, String)]
@@ -2904,7 +2826,7 @@ object Ddl {
         // dotted physical names; queries keep writing `col.field`
         // (rewritten to one backticked identifier by the transpiler)
         val inner = ct.substring(ct.indexOf('(') + 1, ct.lastIndexOf(')'))
-        val fields = splitTopLevel(inner).map { f0 =>
+        val fields = SqlScan(inner).split(',').map { f0 =>
           val f = f0.trim
           val fsp = f.indexOf(' ')
           (f.substring(0, fsp).trim, f.substring(fsp + 1).trim)
@@ -3353,23 +3275,6 @@ object Ddl {
     if (bare.contains(".")) bare
     else s"${spark.catalog.currentDatabase}.$bare"
   }
-
-  /** Split column definitions on commas outside parens (Decimal(10,2),
-    * Nested(...)). */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var start = 0
-    s.zipWithIndex.foreach { case (c, i) =>
-      c match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
 }
 
 /** Statement router: the single entry point servers/clients call with
@@ -3578,7 +3483,7 @@ object Engine {
         return insertWithData(spark, m.group(1), cols, m.group(4), m.group(5))
       case None => ()
     }
-    val statements = splitStatements(rawSql)
+    val statements = SqlScan(rawSql).split(';').map(_.trim).filter(_.nonEmpty)
     statements.map { st0 =>
       val st = graft.sources.UrlTableFunction.rewrite(spark, st0)
       if (Ddl.isDdl(st)) Ddl.execute(spark, st)
@@ -3823,28 +3728,6 @@ object Engine {
 
   private val viewCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Split a condition on depth-0 `AND` (parens guard nested booleans). */
-  private def splitAnd(cond: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var start = 0; var i = 0
-    def isIdent(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    while (i < cond.length) {
-      cond.charAt(i) match {
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case c if depth == 0 && (c == 'A' || c == 'a') &&
-            i + 3 <= cond.length &&
-            cond.substring(i, i + 3).equalsIgnoreCase("AND") &&
-            (i == 0 || !isIdent(cond.charAt(i - 1))) &&
-            (i + 3 == cond.length || !isIdent(cond.charAt(i + 3))) =>
-          out += cond.substring(start, i); start = i + 3; i += 3
-        case _ => i += 1
-      }
-    }
-    out += cond.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
   /** `alias.col` → col (plain identifiers only). */
   private def stripQual(e: String, alias: String): Option[String] = {
     val re = ("^`?" + java.util.regex.Pattern.quote(alias) +
@@ -3860,21 +3743,23 @@ object Engine {
     * Spark's parser cannot take. */
   private def flattenFromSubqueries(spark: SparkSession, sql0: String): String = {
     var s = sql0
+    var sc = SqlScan(s)
     var from = 0
     var guard = 0
     val re = "(?is)\\b(FROM|JOIN)\\s*\\(".r
     while (guard < 32) {
       guard += 1
-      val m = re.findFirstMatchIn(s.substring(from)).getOrElse(return s)
-      val open = from + m.end - 1
-      val close = Transpiler.matchingParen(s, open)
+      val m = sc.codeMatches(re, from).nextOption().getOrElse(return s)
+      val open = m.end - 1
+      val close = sc.closing(open)
       if (close < 0) return s
       val inner = s.substring(open + 1, close)
       if ("(?is)^\\s*SELECT\\b".r.findFirstIn(inner).isDefined) {
         val view = "__graft_subq_" + viewCounter.incrementAndGet()
         query(spark, inner).createOrReplaceTempView(view)
-        s = s.substring(0, from + m.start) + m.group(1) + " " + view +
+        s = s.substring(0, m.start) + m.group(1) + " " + view +
           s.substring(close + 1)
+        sc = SqlScan(s)
         from = 0
       } else from = close
     }
@@ -3910,7 +3795,7 @@ object Engine {
       val ralias = Option(m.group(3))
         .getOrElse(rtbl.substring(rtbl.lastIndexOf('.') + 1))
       val cond = m.group(4)
-      val keys = splitAnd(cond).flatMap { c =>
+      val keys = SqlScan(cond).splitKeyword("AND").map(_.trim).filter(_.nonEmpty).flatMap { c =>
         c.split("=") match {
           case Array(a, b) =>
             stripQual(a, ralias).orElse(stripQual(b, ralias))
@@ -3967,7 +3852,7 @@ object Engine {
       val cond = m.group(6)
       var pairs = Seq.empty[(String, String)]
       var tsSpec: Option[(String, String, Boolean)] = None // (lts, rts, forward)
-      splitAnd(cond).foreach { c =>
+      SqlScan(cond).splitKeyword("AND").map(_.trim).filter(_.nonEmpty).foreach { c =>
         val ineq = "(?s)^(.+?)(>=|<=)(.+)$".r.findFirstMatchIn(c)
         ineq match {
           case Some(im) =>
@@ -4184,23 +4069,6 @@ object Engine {
         outerLimit.foreach(m => out = out.limit(m))
         out
     }
-  }
-
-  private def splitStatements(sql: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var inStr = false; var start = 0
-    sql.zipWithIndex.foreach { case (c, i) =>
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ';' if depth == 0 => out += sql.substring(start, i); start = i + 1
-        case _ =>
-      }
-    }
-    out += sql.substring(start)
-    out.map(_.trim).filter(_.nonEmpty).toSeq
   }
 
   // "INSERT INTO t [(cols)] FORMAT <fmt>" with no inline data — the

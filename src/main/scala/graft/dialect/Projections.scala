@@ -109,20 +109,6 @@ object Projections {
     registry.put(newNorm.toLowerCase, renamed)
   }
 
-  /** Split on top-level commas (parens guard function-call commas). */
-  private def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var start = 0
-    for (i <- s.indices) s.charAt(i) match {
-      case '(' => depth += 1
-      case ')' => depth -= 1
-      case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-      case _ => ()
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
   private def storeName(table: String, proj: String): String = {
     val Array(db, t) = table.split("\\.", 2)
     s"$db.${t}__proj_$proj"
@@ -176,12 +162,13 @@ object Projections {
       if (ifNotExists) return
       throw new IllegalArgumentException(s"projection $name already exists on $table")
     }
-    val keys = splitTop(groupBy).map(_.trim.replace("`", ""))
+    val keys = SqlScan(groupBy).split(',').map(_.trim).filter(_.nonEmpty)
+      .map(_.replace("`", ""))
     val tableCols = spark.table(tbl).columns.map(_.toLowerCase).toSet
     require(keys.nonEmpty && keys.forall(k => tableCols(k.toLowerCase)),
       s"projection keys must be plain columns of $table: $groupBy")
     val aggRe = "(?i)^(count|sum|min|max|avg|uniq)\\s*\\(\\s*(\\*|[\\w`]*)\\s*\\)$".r
-    val aggs = splitTop(selectList).map(_.trim).flatMap {
+    val aggs = SqlScan(selectList).split(',').map(_.trim).filter(_.nonEmpty).flatMap {
       case item if keys.exists(_.equalsIgnoreCase(item.replace("`", ""))) => Nil
       case aggRe(fn, arg0) =>
         val arg = arg0.replace("`", "")

@@ -49,33 +49,14 @@ object SpecialEngines {
   // CREATE-time validation + canonical spec rendering
   // ---------------------------------------------------------------
 
-  private def splitArgs(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var inStr = false; var cur = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { cur.append(c); if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => cur.append(c); inStr = true
-        case '(' | '[' => depth += 1; cur.append(c)
-        case ')' | ']' => depth -= 1; cur.append(c)
-        case ',' if depth == 0 => out += cur.toString; cur = new StringBuilder
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Canonical engineSpec for the special engines, None for everything
     * else. Throws loudly on malformed arguments — a silently-degraded
     * Buffer or Join is the one wrong option. */
   private[dialect] def createSpec(spark: SparkSession, engine: String,
                                   engineArgs: String, name: String,
                                   colNames: Seq[String]): Option[String] = {
-    val args = splitArgs(engineArgs.replace("`", ""))
+    val args = SqlScan(engineArgs.replace("`", "")).split(',')
+      .map(_.trim).filter(_.nonEmpty)
     engine.toLowerCase match {
       case "null" | "set" =>
         if (args.nonEmpty) throw new IllegalArgumentException(
@@ -145,7 +126,8 @@ object SpecialEngines {
   private def argsOf(spec: String): Seq[String] = {
     val o = spec.indexOf('(')
     if (o < 0) Nil
-    else splitArgs(spec.substring(o + 1, spec.lastIndexOf(')')))
+    else SqlScan(spec).split(',', o + 1, spec.lastIndexOf(')'))
+      .map(_.trim).filter(_.nonEmpty)
   }
 
   private[dialect] def isNull(norm: String): Boolean =
@@ -443,48 +425,35 @@ object SpecialEngines {
     * column's type default (ClickHouse returns the type default on a
     * missing key; joinGetOrNull returns NULL). Catalyst decorrelates
     * the equality subquery into a plain left join — no per-row probe. */
-  private def rewriteJoinGet(spark: SparkSession, s0: String): String = {
-    var s = s0
-    val re = "(?i)\\bjoinGet(OrNull)?\\s*\\(".r
-    var m = re.findFirstMatchIn(s)
-    var guard = 0
-    while (m.isDefined && guard < 100) {
-      guard += 1
-      val mm = m.get
-      val close = Transpiler.matchingParen(s, mm.end - 1)
-      if (close < 0) m = None
-      else {
-        val orNull = mm.group(1) != null
-        val args = splitArgs(s.substring(mm.end, close))
-        if (args.length < 3) throw new IllegalArgumentException(
-          s"joinGet needs (table, value_column, key...), got: ${mm.matched}")
-        def unq(a: String) =
-          a.trim.stripPrefix("'").stripSuffix("'").replace("`", "")
-        val tref = unq(args.head)
-        val vcol = unq(args(1))
-        val norm = Ddl.normalizeName(spark, tref)
-        val js = joinOf(norm).getOrElse(throw new IllegalArgumentException(
-          s"joinGet: $tref is not an ENGINE=Join table"))
-        val keyExprs = args.drop(2)
-        if (keyExprs.length != js.keys.length)
-          throw new IllegalArgumentException(
-            s"joinGet: $tref has ${js.keys.length} key(s) " +
-              s"(${js.keys.mkString(", ")}), got ${keyExprs.length}")
-        val field = spark.table(norm).schema.fields
-          .find(_.name.equalsIgnoreCase(vcol))
-          .getOrElse(throw new IllegalArgumentException(
-            s"joinGet: $tref has no column $vcol"))
-        val cond = js.keys.zip(keyExprs)
-          .map { case (k, e) => s"`$k` = ($e)" }.mkString(" AND ")
-        val sub = s"(SELECT any(`${field.name}`) FROM $norm WHERE $cond)"
-        val repl =
-          if (orNull) sub
-          else s"coalesce($sub, ${typeDefaultLiteral(field.dataType)})"
-        s = s.substring(0, mm.start) + repl + s.substring(close + 1)
-        m = re.findFirstMatchIn(s)
-      }
+  private def rewriteJoinGet(spark: SparkSession, s: String): String = {
+    val sc = SqlScan(s)
+    sc.replaceCalls("(?i)\\bjoinGet(OrNull)?\\s*\\(".r) { (mm, close) =>
+      val orNull = mm.group(1) != null
+      val args = sc.split(',', mm.end, close).map(_.trim).filter(_.nonEmpty)
+      if (args.length < 3) throw new IllegalArgumentException(
+        s"joinGet needs (table, value_column, key...), got: ${mm.matched}")
+      def unq(a: String) =
+        a.trim.stripPrefix("'").stripSuffix("'").replace("`", "")
+      val tref = unq(args.head)
+      val vcol = unq(args(1))
+      val norm = Ddl.normalizeName(spark, tref)
+      val js = joinOf(norm).getOrElse(throw new IllegalArgumentException(
+        s"joinGet: $tref is not an ENGINE=Join table"))
+      val keyExprs = args.drop(2).map(rewriteJoinGet(spark, _))
+      if (keyExprs.length != js.keys.length)
+        throw new IllegalArgumentException(
+          s"joinGet: $tref has ${js.keys.length} key(s) " +
+            s"(${js.keys.mkString(", ")}), got ${keyExprs.length}")
+      val field = spark.table(norm).schema.fields
+        .find(_.name.equalsIgnoreCase(vcol))
+        .getOrElse(throw new IllegalArgumentException(
+          s"joinGet: $tref has no column $vcol"))
+      val cond = js.keys.zip(keyExprs)
+        .map { case (k, e) => s"`$k` = ($e)" }.mkString(" AND ")
+      val sub = s"(SELECT any(`${field.name}`) FROM $norm WHERE $cond)"
+      if (orNull) sub
+      else s"coalesce($sub, ${typeDefaultLiteral(field.dataType)})"
     }
-    s
   }
 
   private def typeDefaultLiteral(

@@ -1,6 +1,7 @@
 package graft.dialect
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.matching.Regex
 
 /** ClickHouse-SQL → Spark-SQL source transpiler (SURVEY.md §7 step 1).
   *
@@ -31,58 +32,6 @@ object Transpiler {
     }
 
 
-  /** Split a GROUP BY key list on depth-0 commas ("a, f(x, y), b"). */
-  private def splitTopLevelCommas(s: String): Seq[String] = {
-    val out = Vector.newBuilder[String]
-    var depth = 0; var start = 0
-    s.zipWithIndex.foreach { case (c, i) =>
-      c match {
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i).trim; start = i + 1
-        case _ => ()
-      }
-    }
-    out += s.substring(start).trim
-    out.result().filter(_.nonEmpty)
-  }
-
-  /** Structural map regex-only SQL surgery is blind to: paren depth
-    * before each char, plus whether the char sits inside a
-    * single-quoted literal. Handles both ClickHouse escape forms inside
-    * literals — backslash (`'O\'Brien'`) and doubling (`'O''Brien'`) —
-    * which a naive quote-toggle would invert, flipping every keyword
-    * match after the escape in/out of string state. */
-  private def depthMap(sql: String): (Array[Int], Array[Boolean]) = {
-    val depth = new Array[Int](sql.length + 1)
-    val inStr = new Array[Boolean](sql.length + 1)
-    var d = 0
-    var s = false
-    var i = 0
-    while (i < sql.length) {
-      depth(i) = d
-      inStr(i) = s
-      val c = sql.charAt(i)
-      if (s) c match {
-        case '\\' if i + 1 < sql.length => // escaped char: consume it
-          depth(i + 1) = d; inStr(i + 1) = true; i += 1
-        case '\'' if i + 1 < sql.length && sql.charAt(i + 1) == '\'' =>
-          depth(i + 1) = d; inStr(i + 1) = true; i += 1 // doubled quote
-        case '\'' => s = false
-        case _ => ()
-      }
-      else c match {
-        case '\'' => s = true
-        case '(' | '[' => d += 1
-        case ')' | ']' => d -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    depth(sql.length) = d
-    (depth, inStr)
-  }
-
   /** Every `GROUP BY <keys> WITH TOTALS` modifier in the statement:
     * (gbStart, keysStart, totStart, totEnd, depth). The owning GROUP BY
     * is the LAST one before the modifier at the SAME paren depth with no
@@ -91,15 +40,15 @@ object Transpiler {
     * CTE matches the keyword regex but has no owning GROUP BY, so it
     * yields no span. */
   private def totalsSpans(sql: String): Seq[(Int, Int, Int, Int, Int)] = {
-    val (depth, inStr) = depthMap(sql)
-    val gbs = "(?is)\\bGROUP\\s+BY\\b".r.findAllMatchIn(sql).toSeq
-      .filterNot(m => inStr(m.start))
-    "(?is)\\bWITH\\s+TOTALS\\b".r.findAllMatchIn(sql).toSeq
-      .filterNot(m => inStr(m.start))
+    val totalsRe = "(?is)\\bWITH\\s+TOTALS\\b".r
+    if (totalsRe.findFirstIn(sql).isEmpty) return Nil
+    val sc = SqlScan(sql)
+    val gbs = sc.codeMatches("(?is)\\bGROUP\\s+BY\\b".r).toSeq
+    sc.codeMatches(totalsRe).toSeq
       .flatMap { t =>
-        val d = depth(t.start)
-        gbs.filter(g => g.end <= t.start && depth(g.start) == d &&
-            (g.end until t.start).forall(i => depth(i) >= d))
+        val d = sc.depth(t.start)
+        gbs.filter(g => g.end <= t.start && sc.depth(g.start) == d &&
+            (g.end until t.start).forall(i => sc.depth(i) >= d))
           .lastOption.map(g => (g.start, g.end, t.start, t.end, d))
       }
   }
@@ -128,13 +77,12 @@ object Transpiler {
         // grouping(k) would re-reference raw columns the aggregate no
         // longer outputs
         val cond =
-          s"grouping_id() = ${(1L << splitTopLevelCommas(keys).length) - 1}"
+          s"grouping_id() = ${(1L << SqlScan(keys).split(',').count(_.trim.nonEmpty)) - 1}"
         val gs = s"GROUP BY GROUPING SETS (($keys), ())"
         val after = sql.substring(totEnd)
-        val (da, ia) = depthMap(after)
+        val sa = SqlScan(after)
         def firstDepth0(pat: String): Option[Int] =
-          pat.r.findAllMatchIn(after)
-            .find(m => da(m.start) == 0 && !ia(m.start)).map(_.start)
+          sa.codeMatches(pat.r).find(m => sa.depth(m.start) == 0).map(_.start)
         // the totals row ignores the outer ORDER BY/LIMIT (ClickHouse
         // computes totals over ALL rows regardless of LIMIT; and a Sort
         // above the HAVING can't re-resolve raw grouping columns anyway)
@@ -179,31 +127,12 @@ object Transpiler {
     r = "(?i)\\bDateTime64\\s*\\(\\s*\\d+\\s*(?:,\\s*'[^']*'\\s*)?\\)".r
       .replaceAllIn(r, "TIMESTAMP")
     r = r.replaceAll("\\bDate32\\b", "DATE")
-    r = stripCallLike(r, "Enum(?:8|16)?", _ => "STRING")
+    r = SqlScan(r).replaceCalls("(?i)\\bEnum(?:8|16)?\\s*\\(".r)((_, _) => "STRING")
     r = rewriteCompositeTypes(r)
     typeNames.foreach { case (ch, sp) => r = r.replaceAll(s"\\b$ch\\b", sp) }
     r = r.replaceAll("\\bUUID\\b", "STRING")
     r = r.replaceAll("\\bBool\\b", "BOOLEAN")
     r.replaceAll("\\bString\\b", "STRING")
-  }
-
-  /** Replace every `name(...)` (parens balanced, strings respected)
-    * with `emit(inner)`. Used for type forms whose argument list may
-    * contain nested parens or quoted literals (Enum values). */
-  private def stripCallLike(s0: String, name: String,
-                            emit: String => String): String = {
-    val re = s"(?i)\\b$name\\s*\\(".r
-    var s = s0
-    var m = re.findFirstMatchIn(s)
-    while (m.isDefined) {
-      val mm = m.get
-      val close = matchingParen(s, mm.end - 1)
-      if (close < 0) return s
-      s = s.substring(0, mm.start) + emit(s.substring(mm.end, close)) +
-        s.substring(close + 1)
-      m = re.findFirstMatchIn(s)
-    }
-    s
   }
 
   /** Structural Array(..)/Map(..)/Tuple(..)/Nullable(..) → Spark DDL
@@ -266,52 +195,23 @@ object Transpiler {
     * alias outside string literals becomes `(expr)`. */
   private def rewriteScalarWith(sql: String): String = {
     val m = "(?is)^(\\s*)WITH\\s+".r.findFirstMatchIn(sql).getOrElse(return sql)
-    // split the clause items at top level (quote/paren aware) and find
-    // where the WITH clause ends (the top-level SELECT keyword)
-    var i = m.end
-    var depth = 0
-    var inStr = false
-    val items = scala.collection.mutable.ArrayBuffer.empty[String]
-    var itemStart = i
-    var selectAt = -1
-    while (i < sql.length && selectAt < 0) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          items += sql.substring(itemStart, i); itemStart = i + 1
-        case 's' | 'S' if depth == 0 &&
-            sql.regionMatches(true, i, "SELECT", 0, 6) &&
-            (i == 0 || !Character.isLetterOrDigit(sql.charAt(i - 1))) &&
-            (i + 6 >= sql.length || !Character.isLetterOrDigit(sql.charAt(i + 6))) =>
-          selectAt = i
-        case _ => ()
-      }
-      i += 1
-    }
+    // the clause ends at the top-level SELECT; its items split at
+    // top-level commas
+    val sc = SqlScan(sql)
+    val selectAt = sc.keyword("SELECT", m.end)
     if (selectAt < 0) return sql // not a WITH ... SELECT; leave as-is
-    items += sql.substring(itemStart, selectAt)
+    val items = sc.split(',', m.end, selectAt)
     val cteRe = "(?is)^\\s*[\\w`]+\\s+AS\\s*\\(.*\\)\\s*$".r
     val scalarRe = "(?is)^\\s*(.*\\S)\\s+AS\\s+`?(\\w+)`?\\s*$".r
     val (ctes, scalars) = items.partition(it => cteRe.findFirstIn(it).isDefined)
     if (scalars.isEmpty) return sql
-    // substitute outside string literals only; guard like
-    // substituteSelectAliases: no qualified refs (t.k), no backticked
-    // occurrences, and never a function-call name (alias followed by '(')
-    def subst(in: String, alias: String, expr: String): String = {
-      val parts = in.split("'", -1)
-      parts.indices.foreach { k =>
-        if (k % 2 == 0)
-          parts(k) = parts(k).replaceAll(
-            "(?<![.\\w`])" + java.util.regex.Pattern.quote(alias) +
-              "\\b(?![`(])(?!\\s*\\()",
-            java.util.regex.Matcher.quoteReplacement(s"($expr)"))
-      }
-      parts.mkString("'")
-    }
+    // substitute in code only; guard like substituteSelectAliases: no
+    // qualified refs (t.k), no backticked occurrences, and never a
+    // function-call name (alias followed by '(')
+    def subst(in: String, alias: String, expr: String): String =
+      SqlScan(in).replaceInCode(("(?<![.\\w`])" +
+        java.util.regex.Pattern.quote(alias) + "\\b(?![`(])(?!\\s*\\()").r,
+        _ => s"($expr)")
     // earlier scalar aliases are visible in later scalar exprs
     val subs = scalars.foldLeft(Vector.empty[(String, String)]) { (acc, it) =>
       it match {
@@ -377,27 +277,19 @@ object Transpiler {
       "(SELECT id AS number FROM range(9223372036854775807))")
     s = "(?i)\\bcount\\s*\\(\\s*\\)".r.replaceAllIn(s, "count(*)")
     // parameterized aggregates fn(param)(arg) -> plain two-arg calls;
-    // the arg group is paren-matched so it may nest arbitrarily
-    def rewriteParameterized(sql0: String, chName: String,
+    // the arg group is bracket-matched so it may nest arbitrarily (and
+    // hold further calls of the same aggregate, rewritten first)
+    def rewriteParameterized(sql: String, chName: String,
                              emit: (String, String) => String): String = {
       // params: bare tokens or single-quoted strings — the strings may
       // contain parens (sequenceMatch('(?1).*(?2)')), so parens are
       // only excluded OUTSIDE quotes
       val re = s"(?i)\\b$chName\\s*\\(((?:[^()']|'[^']*')*)\\)\\s*\\(".r
-      var sql = sql0
-      var m = re.findFirstMatchIn(sql)
-      while (m.isDefined) {
-        val mm = m.get
-        val close = matchingParen(sql, mm.end - 1)
-        if (close < 0) m = None
-        else {
-          val arg = sql.substring(mm.end, close)
-          sql = sql.substring(0, mm.start) + emit(mm.group(1).trim, arg) +
-            sql.substring(close + 1)
-          m = re.findFirstMatchIn(sql)
-        }
+      if (re.findFirstIn(sql).isEmpty) sql
+      else SqlScan(sql).replaceCalls(re) { (m, close) =>
+        emit(m.group(1).trim,
+          rewriteParameterized(sql.substring(m.end, close), chName, emit))
       }
-      sql
     }
     // quantileExact family: ClickHouse's exact rule is nth_element at
     // 0-based index min(floor(p*n), n-1) of the sorted values
@@ -555,57 +447,44 @@ object Transpiler {
     val openRe = "(?is)\\bWINDOW\\s+(\\w+)\\s+AS\\s*\\(".r
     var s = sql0
     var guard = 0
-    var m = openRe.findFirstMatchIn(s)
-    while (m.isDefined && guard < 32) {
+    while (guard < 32) {
       guard += 1
-      val mm = m.get
+      if (openRe.findFirstIn(s).isEmpty) return s
+      val sc = SqlScan(s)
+      val mm = sc.codeMatches(openRe).nextOption().getOrElse(return s)
       var defs = List.empty[(String, String)]
-      var cursor = mm.start
+      val cursor = mm.start
       var name = mm.group(1)
       var open = mm.end - 1
-      var ok = true
       var end = cursor
       var continue = true
       while (continue) {
-        val close = matchingParen(s, open)
-        if (close < 0) { ok = false; continue = false }
-        else {
-          defs ::= (name -> s.substring(open + 1, close))
-          end = close + 1
-          // another comma-separated definition?
-          val more = "(?is)^\\s*,\\s*(\\w+)\\s+AS\\s*\\(".r
-            .findFirstMatchIn(s.substring(end))
-          more match {
-            case Some(n) =>
-              name = n.group(1); open = end + n.end - 1
-            case None => continue = false
-          }
+        val close = sc.closing(open)
+        if (close < 0) return s
+        defs ::= (name -> s.substring(open + 1, close))
+        end = close + 1
+        // another comma-separated definition?
+        "(?is)^\\s*,\\s*(\\w+)\\s+AS\\s*\\(".r
+          .findFirstMatchIn(s.substring(end)) match {
+          case Some(n) => name = n.group(1); open = end + n.end - 1
+          case None => continue = false
         }
       }
-      if (!ok) return s
       // Scope of these names is the enclosing SELECT block only: a
       // sibling scope (another UNION branch) may define the same window
       // name, so the OVER-substitution must not cross a same-depth set
       // operator or the enclosing parens.
-      // shared string-aware structural map (a paren-only local copy
-      // miscounted depth for quoted literals containing parens)
-      val (depthAt, inStrAt) = depthMap(s)
-      val myDepth = depthAt(cursor)
-      val scopeStart = "(?i)\\bSELECT\\b".r
-        .findAllMatchIn(s.substring(0, cursor))
-        .filter(x => depthAt(x.start) == myDepth && !inStrAt(x.start))
+      val myDepth = sc.depth(cursor)
+      def atMyDepth(x: Regex.Match) = sc.depth(x.start) == myDepth
+      val scopeStart = sc.codeMatches("(?i)\\bSELECT\\b".r)
+        .takeWhile(_.end <= cursor).filter(atMyDepth)
         .map(_.start).toList.lastOption.getOrElse(0)
-      var scopeEnd = s.length
-      var j = end
-      while (j < s.length && scopeEnd == s.length) {
-        if (s.charAt(j) == ')' && depthAt(j) == myDepth && !inStrAt(j))
-          scopeEnd = j
-        j += 1
-      }
-      "(?i)\\b(UNION|INTERSECT|EXCEPT)\\b".r
-        .findAllMatchIn(s.substring(end, scopeEnd))
-        .find(x => depthAt(end + x.start) == myDepth && !inStrAt(end + x.start))
-        .foreach(x => scopeEnd = end + x.start)
+      var scopeEnd = (end until s.length)
+        .find(j => s.charAt(j) == ')' && sc.depth(j) == myDepth && sc.isCode(j))
+        .getOrElse(s.length)
+      sc.codeMatches("(?i)\\b(UNION|INTERSECT|EXCEPT)\\b".r, end)
+        .takeWhile(_.end <= scopeEnd).find(atMyDepth)
+        .foreach(x => scopeEnd = x.start)
       val rest0 = s.substring(0, cursor) + s.substring(end)
       val segEnd = scopeEnd - (end - cursor)
       var seg = rest0.substring(scopeStart, segEnd)
@@ -614,35 +493,9 @@ object Transpiler {
           java.util.regex.Matcher.quoteReplacement(s"OVER ($spec)"))
       }
       s = rest0.substring(0, scopeStart) + seg + rest0.substring(segEnd)
-      m = openRe.findFirstMatchIn(s)
     }
     s
   }
-
-  /** First depth-0, outside-string occurrence of keyword `kw` (word-
-    * bounded, case-insensitive) at or after `from`; -1 if none. */
-  private def keywordAtDepth0(s: String, kw: String, from: Int = 0): Int = {
-    var depth = 0; var inStr = false; var i = from
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case _ if depth == 0 && s.regionMatches(true, i, kw, 0, kw.length) &&
-          (i == 0 || !isIdentChar(s.charAt(i - 1))) &&
-          (i + kw.length >= s.length || !isIdentChar(s.charAt(i + kw.length))) =>
-          return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def isIdentChar(c: Char): Boolean =
-    Character.isLetterOrDigit(c) || c == '_' || c == '`'
 
   /** `SELECT * REPLACE (expr AS col, ...)` (ClickHouse star modifier):
     * Spark has no REPLACE, so it becomes `* EXCEPT (cols...), expr AS
@@ -650,18 +503,16 @@ object Transpiler {
     * to the end of the star expansion (position-sensitive callers
     * should list columns explicitly). Composes with a following EXCEPT. */
   private def rewriteStarReplace(sql: String): String = {
-    val m = "(?i)\\*\\s+REPLACE\\s*\\(".r.findFirstMatchIn(sql)
-      .getOrElse(return sql)
-    val open = m.end - 1
-    val close = matchingParen(sql, open)
-    if (close < 0) return sql
-    val items = splitTopLevel(sql.substring(open + 1, close), ',').map(_.trim)
-    val names = items.flatMap(it =>
-      "(?is)\\s+AS\\s+`?(\\w+)`?\\s*$".r.findFirstMatchIn(it).map(_.group(1)))
-    if (names.length != items.length) return sql // not all `expr AS col`
-    val rebuilt = s"* EXCEPT (${names.mkString(", ")}), ${items.mkString(", ")}"
-    rewriteStarReplace(
-      sql.substring(0, m.start) + rebuilt + sql.substring(close + 1))
+    val re = "(?i)\\*\\s+REPLACE\\s*\\(".r
+    if (re.findFirstIn(sql).isEmpty) return sql
+    val sc = SqlScan(sql)
+    sc.replaceCalls(re) { (m, close) =>
+      val items = sc.split(',', m.end, close).map(_.trim)
+      val names = items.flatMap(it =>
+        "(?is)\\s+AS\\s+`?(\\w+)`?\\s*$".r.findFirstMatchIn(it).map(_.group(1)))
+      if (names.length != items.length) sql.substring(m.start, close + 1)
+      else s"* EXCEPT (${names.mkString(", ")}), ${items.mkString(", ")}"
+    }
   }
 
   /** `QUALIFY cond` — the post-window filter (ClickHouse, DuckDB,
@@ -676,39 +527,45 @@ object Transpiler {
     * aliases). Top-level statements only — a QUALIFY inside a subquery
     * fails loudly in the parser rather than silently mis-filtering. */
   private def rewriteQualify(s: String): String = {
-    val qIdx = keywordAtDepth0(s, "QUALIFY")
+    if ("(?i)\\bQUALIFY\\b".r.findFirstIn(s).isEmpty) return s
+    val sc = SqlScan(s)
+    val qIdx = sc.keyword("QUALIFY")
     if (qIdx < 0) return s
-    val selIdx = keywordAtDepth0(s, "SELECT")
+    val selIdx = sc.keyword("SELECT")
     if (selIdx < 0 || selIdx > qIdx) return s
     val listStart = selIdx + "SELECT".length
-    val fromIdx = keywordAtDepth0(s, "FROM", listStart)
+    val fromIdx = sc.keyword("FROM", listStart)
     if (fromIdx < 0 || fromIdx > qIdx) return s
     val selectList = s.substring(listStart, fromIdx).trim
     if (selectList.toUpperCase.startsWith("DISTINCT")) return s
     val mid = s.substring(fromIdx, qIdx) // FROM ... [WHERE/GROUP/HAVING]
-    var condEnd = s.length
-    for (kw <- Seq("ORDER", "LIMIT", "SETTINGS", "UNION", "INTO", "FORMAT")) {
-      val i = keywordAtDepth0(s, kw, qIdx + "QUALIFY".length)
-      if (i >= 0 && i < condEnd) condEnd = i
-    }
-    var cond = s.substring(qIdx + "QUALIFY".length, condEnd).trim
-    val tail = s.substring(condEnd)
+    val condFrom = qIdx + "QUALIFY".length
+    val condEnd = Seq("ORDER", "LIMIT", "SETTINGS", "UNION", "INTO", "FORMAT")
+      .map(sc.keyword(_, condFrom)).filter(_ >= 0).minOption.getOrElse(s.length)
     // inline computed select aliases the condition references
-    val aliasRe = "(?is)^(.*\\S)\\s+AS\\s+`?(\\w+)`?\\s*$".r
-    splitTopLevel(selectList, ',').map(_.trim).foreach { it =>
-      aliasRe.findFirstMatchIn(it).foreach { x =>
-        val (alias, expr) = (x.group(2), x.group(1).trim)
-        if (!expr.equalsIgnoreCase(alias))
-          cond = substOutsideStrings(cond,
-            "(?<![.\\w`])" + java.util.regex.Pattern.quote(alias) + "\\b(?!\\s*\\()",
-            java.util.regex.Matcher.quoteReplacement(s"($expr)"))
-      }
-    }
+    val cond = inlineAliases(s.substring(condFrom, condEnd).trim,
+      computedAliases(sc.split(',', listStart, fromIdx)))
+    val tail = s.substring(condEnd)
     s.substring(0, selIdx) +
       s"SELECT * EXCEPT (__q) FROM (SELECT $selectList, ($cond) AS __q " +
       s"$mid) __qualify WHERE __q" +
       (if (tail.nonEmpty) " " + tail else "")
   }
+
+  /** (alias, expr) of each computed `expr AS alias` select item. */
+  private def computedAliases(items: Seq[String]): Seq[(String, String)] =
+    items.flatMap { it =>
+      "(?is)^(.*\\S)\\s+AS\\s+`?(\\w+)`?\\s*$".r.findFirstMatchIn(it.trim)
+        .map(x => (x.group(2), x.group(1).trim))
+    }.filter { case (a, e) => !e.equalsIgnoreCase(a) }
+
+  /** `text` with every unqualified code reference to an alias (never a
+    * function-call name) inlined as `(expr)`, alias by alias. */
+  private def inlineAliases(text: String, pairs: Seq[(String, String)]): String =
+    pairs.foldLeft(text) { case (t, (alias, expr)) =>
+      SqlScan(t).replaceInCode(("(?<![.\\w`])" +
+        java.util.regex.Pattern.quote(alias) + "\\b(?!\\s*\\()").r, _ => s"($expr)")
+    }
 
   private val settingsRe =
     "(?is)\\bSETTINGS\\s+\\w+\\s*=\\s*[^,\\s]+(\\s*,\\s*\\w+\\s*=\\s*[^,\\s]+)*\\s*$".r
@@ -742,72 +599,17 @@ object Transpiler {
     val head = "(?is)^(\\s*SELECT\\s+(?:DISTINCT\\s+)?)".r
       .findFirstMatchIn(sql).getOrElse(return None)
     // top-level FROM ends the select list
-    val body = sql.substring(head.end)
-    var i = 0
-    var depth = 0
-    var inStr = false
-    var fromAt = -1
-    while (i < body.length && fromAt < 0) {
-      val c = body.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'f' | 'F' if depth == 0 &&
-            body.regionMatches(true, i, "FROM", 0, 4) &&
-            (i == 0 || !Character.isLetterOrDigit(body.charAt(i - 1))) &&
-            (i + 4 >= body.length || !Character.isLetterOrDigit(body.charAt(i + 4))) =>
-          fromAt = i
-        case _ => ()
-      }
-      i += 1
-    }
+    val sc = SqlScan(sql)
+    val fromAt = sc.keyword("FROM", head.end)
     if (fromAt < 0) return None
-    val selectList = body.substring(0, fromAt)
-    var tail = body.substring(fromAt)
-    val aliasRe = "(?is)^(.*\\S)\\s+AS\\s+`?(\\w+)`?\\s*$".r
-    val pairs = splitTopLevel(selectList, ',').map(_.trim).flatMap { it =>
-      aliasRe.findFirstMatchIn(it).map(x => (x.group(2), x.group(1).trim))
-    }.filter { case (a, e) => !e.equalsIgnoreCase(a) } // computed only
-    if (pairs.isEmpty) return None
-    pairs.foreach { case (alias, expr) =>
-      tail = substOutsideStrings(tail,
-        "(?<![.\\w`])" + java.util.regex.Pattern.quote(alias) + "\\b(?!\\s*\\()",
-        java.util.regex.Matcher.quoteReplacement(s"($expr)"))
-    }
-    Some(sql.substring(0, head.end) + selectList + tail)
+    val pairs = computedAliases(sc.split(',', head.end, fromAt))
+    if (pairs.isEmpty) None
+    else Some(sql.substring(0, fromAt) + inlineAliases(sql.substring(fromAt), pairs))
   }
 
   private val arrayJoinRe =
     ("(?is)\\b(LEFT\\s+)?ARRAY\\s+JOIN\\s+(.+?)" +
       "(?=\\s+(WHERE|PREWHERE|GROUP|ORDER|LIMIT|HAVING|SETTINGS|UNION)\\b|\\s*$)").r
-
-  /** Cut `s` at the first unbalanced ')' or depth-0 relational-JOIN
-    * keyword — the ARRAY JOIN clause ends there when it sits inside a
-    * subquery (`FROM (SELECT ... ARRAY JOIN a AS x) s`) or is followed
-    * by a table join. Returns (clause, untouched tail). */
-  private def splitClauseTail(s: String): (String, String) = {
-    val joinKw = "(?is)^(?:(?:INNER|LEFT|RIGHT|FULL|CROSS|SEMI|ANTI)\\s+)?JOIN\\b".r
-    var depth = 0; var inStr = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' =>
-          if (depth == 0) return (s.substring(0, i), s.substring(i))
-          depth -= 1
-        case _ if depth == 0 && c.isWhitespace &&
-          joinKw.findFirstIn(s.substring(i + 1)).isDefined =>
-          return (s.substring(0, i), s.substring(i))
-        case _ =>
-      }
-      i += 1
-    }
-    (s, "")
-  }
 
   /** ClickHouse `[LEFT] ARRAY JOIN e1 AS n1[, e2 AS n2 ...]`
     * (lateral flatten; the arrayJoin()-the-function form is handled by
@@ -818,40 +620,35 @@ object Transpiler {
     * named_structs built per index, so each alias becomes a generated
     * column with no reference rewriting. */
   private[dialect] def rewriteArrayJoin(sql: String): String = {
+    if (arrayJoinRe.findFirstIn(sql).isEmpty) return sql
     // loop (not replaceAllIn): bare items need reference qualification
     // in the surrounding text, outside the matched clause
     var out = sql
     var start = 0
-    var m = arrayJoinRe.findFirstMatchIn(out)
     var guard = 0
-    while (m.isDefined && guard < 16) {
+    var done = false
+    while (!done && guard < 16) {
       guard += 1
-      val (replaced, subs) = rewriteOneArrayJoin(m.get)
-      if (replaced == m.get.matched) { start = m.get.end; m = None }
-      else {
-        var before = out.substring(0, m.get.start)
-        var after = out.substring(m.get.start + m.get.matched.length)
-        subs.foreach { case (re, rep) =>
-          val qr = java.util.regex.Matcher.quoteReplacement(rep)
-          before = substOutsideStrings(before, re, qr)
-          after = substOutsideStrings(after, re, qr)
-        }
-        out = before + replaced + after
-        start = before.length + replaced.length
+      val sc = SqlScan(out)
+      sc.codeMatches(arrayJoinRe).nextOption()
+        .filter(_.start >= start) match { // don't re-visit what we produced
+        case None => done = true
+        case Some(m) =>
+          val (replaced, subs) = rewriteOneArrayJoin(sc, m)
+          if (replaced == m.matched) done = true
+          else {
+            var before = out.substring(0, m.start)
+            var after = out.substring(m.end)
+            subs.foreach { case (re, rep) =>
+              before = SqlScan(before).replaceInCode(re, rep)
+              after = SqlScan(after).replaceInCode(re, rep)
+            }
+            out = before + replaced + after
+            start = before.length + replaced.length
+          }
       }
-      m = arrayJoinRe.findFirstMatchIn(out)
-        .filter(_.start >= start) // don't re-visit what we produced
     }
     out
-  }
-
-  /** Regex-substitute outside single-quoted string literals. */
-  private def substOutsideStrings(in: String, re: String, rep: String): String = {
-    val parts = in.split("'", -1)
-    parts.indices.foreach { k =>
-      if (k % 2 == 0) parts(k) = parts(k).replaceAll(re, rep)
-    }
-    parts.mkString("'")
   }
 
   /** One ARRAY JOIN clause → (replacement text, reference
@@ -863,14 +660,25 @@ object Transpiler {
     *   - bare Nested prefix    — expands to the prefix's parallel
     *     `` `X.f` `` arrays (zip semantics, ClickHouse's own model);
     *     dotted refs qualify as `` graft_aj.`X.f` `` */
-  private def rewriteOneArrayJoin(m: scala.util.matching.Regex.Match)
-      : (String, Seq[(String, String)]) = {
+  private def rewriteOneArrayJoin(sc: SqlScan, m: Regex.Match)
+      : (String, Seq[(Regex, Regex.Match => String)]) = {
       val outer = m.group(1) != null
-      val (clause, tail) = splitClauseTail(m.group(2))
+      // the clause ends early at a bracket closing an enclosing group
+      // (`FROM (SELECT ... ARRAY JOIN a AS x) s`) or before a
+      // relational JOIN at its own depth
+      val (from, until) = (m.start(2), m.end(2))
+      val d = sc.depth(from)
+      val cut = ((from until until).find(i => sc.isCode(i) &&
+          sc.depth(i) == d && ")]".indexOf(sc.text.charAt(i)) >= 0) ++
+        sc.codeMatches(
+          "(?is)\\s(?:(?:INNER|LEFT|RIGHT|FULL|CROSS|SEMI|ANTI)\\s+)?JOIN\\b".r, from)
+          .takeWhile(_.start < until).find(j => sc.depth(j.start) == d)
+          .map(_.start)).minOption.getOrElse(until)
+      val tail = sc.text.substring(cut, until)
       val itemRe = "(?is)^(.+?)\\s+AS\\s+(\\w+)$".r
       val bareRe = "(?is)^`?(\\w+)`?$".r
-      val subs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      val items = splitTopLevel(clause.trim, ',').map(_.trim)
+      val subs = scala.collection.mutable.ArrayBuffer.empty[(Regex, Regex.Match => String)]
+      val items = sc.split(',', from, cut).map(_.trim)
         .map { it =>
           itemRe.findFirstMatchIn(it)
             .map(x => Seq((x.group(1), x.group(2))))
@@ -878,18 +686,20 @@ object Transpiler {
               val name = x.group(1)
               nestedColumns.get(name.toLowerCase) match {
                 case Some(fields) =>
+                  // a quoted identifier is not code: match the code
+                  // character before its opening backtick
                   fields.foreach { f =>
-                    subs += (("(?<!\\.)" +
-                      java.util.regex.Pattern.quote(s"`$name.$f`"),
-                      s"graft_aj.`$name.$f`"))
+                    subs += (("([^.])" +
+                      java.util.regex.Pattern.quote(s"`$name.$f`")).r,
+                      x => x.group(1) + s"graft_aj.`$name.$f`")
                   }
                   fields.map(f => (s"`$name.$f`", s"$name.$f"))
                 case None =>
                   // skip qualified refs (x.name), backticked spans, and
                   // alias definitions (AS name) — those declare, not use
                   subs += (("(?<![.\\w`])(?<!(?i:\\bAS)\\s{1,20})" +
-                    java.util.regex.Pattern.quote(name) + "\\b(?!\\s*`)",
-                    s"graft_aj.$name"))
+                    java.util.regex.Pattern.quote(name) + "\\b(?!\\s*`)").r,
+                    _ => s"graft_aj.$name")
                   Seq((name, name))
               }
             })
@@ -927,86 +737,24 @@ object Transpiler {
     * after an identifier/closing paren/bracket/string is a subscript
     * (`m['key']`, `arr[1]`) and is left alone. */
   private[dialect] def rewriteBracketArrays(s: String): String = {
+    if (s.indexOf('[') < 0) return s
+    val sc = SqlScan(s)
     val sb = new StringBuilder
     val stack = scala.collection.mutable.Stack[Boolean]() // true = converted
-    var inStr = false
-    var i = 0
-    while (i < s.length) {
+    for (i <- s.indices) {
       val c = s.charAt(i)
-      if (inStr) { sb.append(c); if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true; sb.append(c)
-        case '[' =>
-          // subscripts (`m['k']`, `arr[1]`) directly follow their base
-          // expression with no whitespace; array literals don't
-          val p = if (sb.nonEmpty) sb.charAt(sb.length - 1) else ' '
-          val subscript = p.isLetterOrDigit || p == '_' || p == ')' || p == ']' || p == '\''
-          stack.push(!subscript)
-          if (subscript) sb.append('[') else sb.append("array(")
-        case ']' =>
-          if (stack.nonEmpty && stack.pop()) sb.append(')') else sb.append(']')
-        case other => sb.append(other)
-      }
-      i += 1
+      if (!sc.isCode(i)) sb.append(c)
+      else if (c == '[') {
+        // subscripts (`m['k']`, `arr[1]`) directly follow their base
+        // expression with no whitespace; array literals don't
+        val p = if (i > 0) s.charAt(i - 1) else ' '
+        val subscript = p.isLetterOrDigit || "_)]'`\"".indexOf(p) >= 0
+        stack.push(!subscript)
+        sb.append(if (subscript) "[" else "array(")
+      } else if (c == ']') sb.append(if (stack.nonEmpty && stack.pop()) ")" else "]")
+      else sb.append(c)
     }
     sb.toString
-  }
-
-  /** Index of the `)`/`]` closing the opener at `open`; -1 if none. */
-  private[dialect] def matchingParen(s: String, open: Int): Int = {
-    var depth = 0; var inStr = false; var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Split at top-level (depth-0, outside strings) occurrences of `sep`. */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var inStr = false; var start = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case `sep` if depth == 0 => parts += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    parts += s.substring(start)
-    parts.toSeq
-  }
-
-  /** Start index of the last top-level ` AS ` inside a CAST body. */
-  private def lastTopLevelAs(s: String): Int = {
-    var depth = 0; var inStr = false; var i = 0; var last = -1
-    while (i < s.length - 3) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case _ =>
-          if (depth == 0 && c.isWhitespace &&
-            s.regionMatches(true, i + 1, "AS", 0, 2) &&
-            i + 3 < s.length && s.charAt(i + 3).isWhitespace) last = i
-      }
-      i += 1
-    }
-    last
   }
 
   /** Rewrite CAST targets: composite ClickHouse types become Spark DDL
@@ -1015,29 +763,27 @@ object Transpiler {
     * index.html:729) becomes `map_from_arrays(keys, values)` with an
     * element-wise map cast. */
   private[dialect] def rewriteCasts(sql: String): String = {
-    val m = "(?i)\\bCAST\\s*\\(".r.findFirstMatchIn(sql)
-    m match {
-      case None => sql
-      case Some(mm) =>
-        val open = mm.end - 1
-        val close = matchingParen(sql, open)
-        if (close < 0) return sql
-        val inner = rewriteCasts(sql.substring(open + 1, close))
-        val asIdx = lastTopLevelAs(inner)
-        val rebuilt =
-          if (asIdx < 0) s"CAST($inner)"
-          else {
-            val expr = inner.substring(0, asIdx).trim
-            val tpe = rewriteCompositeTypes(inner.substring(asIdx + 4).trim)
+    val castRe = "(?i)\\bCAST\\s*\\(".r
+    if (castRe.findFirstIn(sql).isEmpty) return sql
+    SqlScan(sql).replaceCalls(castRe) { (m, close) =>
+      val inner = rewriteCasts(sql.substring(m.end, close))
+      // the last top-level ` AS ` separates the value from the type
+      val isc = SqlScan(inner)
+      isc.codeMatches("(?i)\\s(?=AS\\s)".r).filter(x => isc.depth(x.start) == 0)
+        .map(_.start).toSeq.lastOption match {
+        case None => s"CAST($inner)"
+        case Some(asIdx) =>
+          val expr = inner.substring(0, asIdx).trim
+          val tpe = rewriteCompositeTypes(inner.substring(asIdx + 4).trim)
+          val parts =
             if (tpe.toUpperCase.startsWith("MAP<") &&
-                expr.startsWith("(") && expr.endsWith(")")) {
-              val parts = splitTopLevel(expr.substring(1, expr.length - 1), ',')
-              if (parts.length == 2)
-                s"CAST(map_from_arrays(${parts(0).trim}, ${parts(1).trim}) AS $tpe)"
-              else s"CAST($expr AS $tpe)"
-            } else s"CAST($expr AS $tpe)"
-          }
-        sql.substring(0, mm.start) + rebuilt + rewriteCasts(sql.substring(close + 1))
+                expr.startsWith("(") && expr.endsWith(")"))
+              SqlScan(expr).split(',', 1, expr.length - 1)
+            else Nil
+          if (parts.length == 2)
+            s"CAST(map_from_arrays(${parts(0).trim}, ${parts(1).trim}) AS $tpe)"
+          else s"CAST($expr AS $tpe)"
+      }
     }
   }
 
@@ -1102,16 +848,33 @@ object Transpiler {
 
   /** Rewrite every top-level `cond ? a : b` into if(...). The condition
     * gets a ClickHouse-truthiness wrap (`<> 0`) unless it already looks
-    * boolean (contains a comparison/logic operator at depth 0).
+    * boolean (contains a comparison/logic operator at depth 0). The
+    * condition starts after the nearest comma, enclosing bracket or
+    * clause keyword; the else branch ends at a comma, an unmatched
+    * closer or a clause keyword at the same depth.
     */
-  private[dialect] def rewriteTernaries(sql: String): String = {
-    val s = sql
-    val qm = findOutsideStrings(s, '?')
-    if (qm < 0) return s
-    val colon = findAtSameDepth(s, ':', from = qm + 1)
-    if (colon < 0) return s
-    val condStart = boundaryBefore(s, qm)
-    val elseEnd = boundaryAfter(s, colon + 1)
+  private[dialect] def rewriteTernaries(s: String): String = {
+    if (s.indexOf('?') < 0) return s
+    val sc = SqlScan(s)
+    val qm = sc.codeMatches("\\?".r).nextOption().getOrElse(return s).start
+    val d = sc.depth(qm)
+    // first code char of `chars` at the ternary's depth from `from`
+    def firstOf(chars: String, from: Int): Int = (from until s.length)
+      .find(i => sc.isCode(i) && sc.depth(i) == d && chars.indexOf(s.charAt(i)) >= 0)
+      .getOrElse(s.length)
+    val colon = firstOf(":)]", qm + 1)
+    if (colon == s.length || s.charAt(colon) != ':') return s
+    val exprStart = sc.exprStart(qm)
+    // after a clause keyword, skip its separating whitespace so the
+    // keyword keeps it (`SELECT if(`, never `SELECTif(`)
+    val condStart = sc.codeMatches(ternaryClauseKw, exprStart)
+      .takeWhile(_.end <= qm).filter(k => sc.depth(k.start) == d)
+      .map(_.end).toSeq.lastOption
+      .map(e => s.indexWhere(!_.isWhitespace, e))
+      .getOrElse(exprStart)
+    val elseEnd = math.min(firstOf(",)]", colon + 1),
+      sc.codeMatches(ternaryEndKw, colon + 1).find(k => sc.depth(k.start) == d)
+        .map(_.start).getOrElse(s.length))
     val cond = s.substring(condStart, qm).trim
     val thenB = s.substring(qm + 1, colon).trim
     val elseB = s.substring(colon + 1, elseEnd).trim
@@ -1121,90 +884,14 @@ object Transpiler {
     rewriteTernaries(rewritten)
   }
 
+  private val ternaryClauseKw =
+    "(?i)\\b(SELECT|WHERE|WHEN|THEN|ELSE|BY|HAVING|ON)\\b".r
+  private val ternaryEndKw =
+    "(?is)\\s+(AS|FROM|ORDER|GROUP|WHERE|LIMIT|HAVING|UNION|WHEN|THEN|ELSE|END)\\b".r
+
   private def looksBoolean(cond: String): Boolean =
     "(?i)(=|<|>|!=|<>|\\bLIKE\\b|\\bIN\\b|\\bAND\\b|\\bOR\\b|\\bNOT\\b|\\bIS\\b|\\bBETWEEN\\b|\\bEXISTS\\b)"
       .r.findFirstIn(cond).isDefined
-
-  /** Index of first `ch` outside string literals (any paren depth). */
-  private def findOutsideStrings(s: String, ch: Char, from: Int = 0): Int = {
-    var inStr = false; var i = from
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == ch) return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Index of first `ch` at the same paren depth as `from`, outside
-    * strings; -1 if the enclosing group closes first. */
-  private def findAtSameDepth(s: String, ch: Char, from: Int): Int = {
-    var depth = 0; var inStr = false; var i = from
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => if (depth == 0) return -1 else depth -= 1
-        case `ch` if depth == 0 => return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private val clauseKw =
-    Seq("SELECT", "WHERE", "WHEN", "THEN", "ELSE", "BY", "HAVING", "ON")
-
-  /** Start of the expression containing position `at`: after the last
-    * depth-0 comma / opening paren / clause keyword. */
-  private def boundaryBefore(s: String, at: Int): Int = {
-    var depth = 0; var inStr = false; var i = at - 1; var best = 0
-    while (i >= 0 && best == 0) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case ')' | ']' => depth += 1
-        case '(' | '[' => if (depth == 0) best = i + 1 else depth -= 1
-        case ',' if depth == 0 => best = i + 1
-        case _ =>
-      }
-      i -= 1
-    }
-    val prefix = s.substring(best, at)
-    val kwRe = ("(?is).*\\b(" + clauseKw.mkString("|") + ")\\b").r
-    kwRe.findFirstMatchIn(prefix) match {
-      case Some(m) => best + m.end
-      case None => best
-    }
-  }
-
-  /** End of the expression starting at `from`: first depth-0 comma,
-    * closing paren, or clause keyword (AS/FROM/ORDER/...). */
-  private def boundaryAfter(s: String, from: Int): Int = {
-    val endKw = "(?is)^\\s*(AS|FROM|ORDER|GROUP|WHERE|LIMIT|HAVING|UNION|WHEN|THEN|ELSE|END)\\b".r
-    var depth = 0; var inStr = false; var i = from
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => if (depth == 0) return i else depth -= 1
-        case ',' if depth == 0 => return i
-        case _ if depth == 0 && c.isWhitespace &&
-          endKw.findFirstIn(s.substring(i)).isDefined => return i
-        case _ =>
-      }
-      i += 1
-    }
-    s.length
-  }
 
   /** Run ClickHouse-dialect SQL on a session (fixture tables must
     * already be registered as views — see [[ChContext]]). */

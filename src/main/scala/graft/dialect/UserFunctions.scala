@@ -89,7 +89,10 @@ object UserFunctions {
   /** `(a, b) -> expr`, `x -> expr`, `() -> expr`. */
   private def parseLambda(name: String, s0: String): (Seq[String], String) = {
     val s = s0.trim
-    val arrow = topLevelArrow(s)
+    // the FIRST top-level `->` outside strings
+    val sc = SqlScan(s)
+    val arrow = sc.codeMatches("->".r).find(m => sc.depth(m.start) == 0)
+      .map(_.start).getOrElse(-1)
     if (arrow < 0) throw new IllegalArgumentException(
       s"CREATE FUNCTION $name: body must be a lambda `(args) -> expression`")
     val head = s.substring(0, arrow).trim
@@ -112,81 +115,6 @@ object UserFunctions {
     (params, body)
   }
 
-  /** index of the FIRST `->` at paren depth 0 outside strings, or -1 */
-  private def topLevelArrow(s: String): Int = {
-    val mask = stringMask(s)
-    var i = 0; var depth = 0
-    while (i < s.length - 1) {
-      if (!mask(i)) {
-        val c = s.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && c == '-' && s.charAt(i + 1) == '>') return i
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** true at positions inside (or delimiting) single-quoted strings.
-    * Handles both ClickHouse escape forms — backslash (`'O\'Brien'`)
-    * and doubling (`'O''Brien'`) — like Transpiler.depthMap; a naive
-    * quote-toggle would desync after `\'` and flip every position after
-    * it in/out of string state, letting macro expansion fire inside a
-    * literal (or skip a real call). */
-  private def stringMask(s: String): Array[Boolean] = {
-    val in = new Array[Boolean](s.length)
-    var i = 0; var q = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (q) {
-        in(i) = true
-        c match {
-          case '\\' if i + 1 < s.length =>
-            in(i + 1) = true; i += 1 // escaped char: consume it
-          case '\'' if i + 1 < s.length && s.charAt(i + 1) == '\'' =>
-            in(i + 1) = true; i += 1 // doubled quote
-          case '\'' => q = false
-          case _ => ()
-        }
-      } else if (c == '\'') { in(i) = true; q = true }
-      i += 1
-    }
-    in
-  }
-
-  private def matchingParen(s: String, open: Int, mask: Array[Boolean]): Int = {
-    var i = open; var depth = 0
-    while (i < s.length) {
-      if (!mask(i)) {
-        val c = s.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def splitTopLevelCommas(s: String): Seq[String] = {
-    val mask = stringMask(s)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var start = 0; var i = 0
-    while (i < s.length) {
-      if (!mask(i)) {
-        val c = s.charAt(i)
-        if (c == '(' || c == '[') depth += 1
-        else if (c == ')' || c == ']') depth -= 1
-        else if (c == ',' && depth == 0) {
-          out += s.substring(start, i); start = i + 1
-        }
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Substitute ALL parameters SIMULTANEOUSLY (identifier-boundary,
     * outside strings) with their parenthesized arguments — one pass over
     * the original body, never over substituted text. Sequential
@@ -204,18 +132,7 @@ object UserFunctions {
     val re = ("(?i)(?<![\\w`])(" +
       params.map(java.util.regex.Pattern.quote).mkString("|") +
       ")(?![\\w`])").r
-    val mask = stringMask(body)
-    val sb = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(body).foreach { m =>
-      if (!mask(m.start)) {
-        sb.append(body.substring(last, m.start))
-          .append('(').append(argFor(m.group(1).toLowerCase)).append(')')
-        last = m.end
-      }
-    }
-    sb.append(body.substring(last))
-    sb.toString
+    SqlScan(body).replaceInCode(re, m => "(" + argFor(m.group(1).toLowerCase) + ")")
   }
 
   /** Macro-expand every registered UDF call in `sql0`, to a fixpoint
@@ -246,33 +163,29 @@ object UserFunctions {
       registry.values.foreach { udf =>
         val re = ("(?i)(?<![\\w`.])" +
           java.util.regex.Pattern.quote(udf.name) + "\\s*\\(").r
+        // one scan per expansion: the text only changes there
+        var sc = SqlScan(sql)
         var searchFrom = 0
         var continue = true
         while (continue) {
-          val mask = stringMask(sql)
-          re.findFirstMatchIn(sql.substring(searchFrom)) match {
+          sc.codeMatches(re, searchFrom).nextOption() match {
             case None => continue = false
-            case Some(m0) =>
-              val start = searchFrom + m0.start
-              val openParen = searchFrom + m0.end - 1
-              if (mask(start)) searchFrom = start + 1
+            case Some(m) =>
+              val close = sc.closing(m.end - 1)
+              if (close < 0) continue = false
               else {
-                val close = matchingParen(sql, openParen, mask)
-                if (close < 0) { continue = false }
-                else {
-                  val args = splitTopLevelCommas(
-                    sql.substring(openParen + 1, close))
-                  if (args.length != udf.params.length)
-                    throw new IllegalArgumentException(
-                      s"function ${udf.name} expects ${udf.params.length} " +
-                        s"argument(s), got ${args.length}")
-                  val expanded = substParams(udf.body, udf.params, args)
-                  sql = sql.substring(0, start) + "(" + expanded + ")" +
-                    sql.substring(close + 1)
-                  bumpSubs()
-                  changed = true
-                  searchFrom = start
-                }
+                val args = sc.split(',', m.end, close).map(_.trim).filter(_.nonEmpty)
+                if (args.length != udf.params.length)
+                  throw new IllegalArgumentException(
+                    s"function ${udf.name} expects ${udf.params.length} " +
+                      s"argument(s), got ${args.length}")
+                val expanded = substParams(udf.body, udf.params, args)
+                sql = sql.substring(0, m.start) + "(" + expanded + ")" +
+                  sql.substring(close + 1)
+                bumpSubs()
+                changed = true
+                searchFrom = m.start
+                sc = SqlScan(sql)
               }
           }
         }

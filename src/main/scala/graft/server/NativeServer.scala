@@ -240,9 +240,9 @@ class NativeServer(spark: SparkSession, port: Int,
       val totalsBare: Option[String] = split.map(_._2)
       val bare = split.map(_._1).getOrElse(bare0)
       val df = Engine.execute(session, bare, authUser, Some(queryId))
-      val isSelect = bare.trim.toUpperCase.startsWith("SELECT") ||
-        bare.trim.toUpperCase.startsWith("WITH")
-      if (isSelect) {
+      // a statement that returns rows (SELECT, SHOW, DESCRIBE, EXISTS,
+      // EXPLAIN, …) has columns; DDL/DML answer with an empty frame
+      if (df.schema.nonEmpty) {
         val t0 = System.nanoTime()
         // Stream the result as bounded blocks through rowsOf —
         // driver memory is one partition + one block, never the whole

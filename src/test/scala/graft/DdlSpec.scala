@@ -31,6 +31,11 @@ class DdlSpec extends AnyFunSuite {
     val df = Engine.execute(spark, "USE graft_spec; SELECT x FROM u")
     assert(df.collect().head.getInt(0) === 42)
     Engine.execute(spark, "USE default")
+    // a `;` inside a literal or a comment ends no statement
+    assert(Engine.execute(spark, "SELECT 'a\\';b' AS s")
+      .collect().head.getString(0) === "a';b")
+    assert(Engine.execute(spark, "SELECT 1 AS x -- trailing; comment")
+      .collect().head.getInt(0) === 1)
   }
 
   test("MergeTree PARTITION BY prunes partitions in the scan plan") {
@@ -75,6 +80,15 @@ class DdlSpec extends AnyFunSuite {
     val vs = spark.table("graft_spec.mut").orderBy("id")
       .collect().map(_.getLong(1)).toSeq
     assert(vs === Seq(1L, 11L, 21L, 30L, 40L, 50L, 60L))
+    // a comma inside a string literal belongs to its assignment
+    Engine.execute(spark, "DROP TABLE IF EXISTS graft_spec.mut_s")
+    Engine.execute(spark,
+      "CREATE TABLE graft_spec.mut_s (id Int64, s String) ENGINE=Memory")
+    Engine.execute(spark, "INSERT INTO graft_spec.mut_s VALUES (1, 'x'), (2, 'y')")
+    Engine.execute(spark,
+      "ALTER TABLE graft_spec.mut_s UPDATE s = 'a,b' WHERE id = 1")
+    assert(spark.table("graft_spec.mut_s").orderBy("id").collect()
+      .map(_.getString(1)).toSeq === Seq("a,b", "y"))
     Engine.execute(spark, "OPTIMIZE TABLE graft_spec.mut FINAL") // compaction
     assert(spark.table("graft_spec.mut").count() === 7L)
   }
@@ -693,13 +707,15 @@ class DdlSpec extends AnyFunSuite {
       CREATE TABLE graft_spec.deco (
         id Int64 CODEC(Delta, ZSTD(3)),
         st String DEFAULT 'q' COMMENT 'state col' CODEC(LZ4),
-        note String COMMENT 'it''s free-form')
+        note String COMMENT 'it''s free-form',
+        memo String COMMENT 'hello, world')
       ENGINE=MergeTree() ORDER BY (id)
       COMMENT 'decorated table'""")
     val d = Engine.execute(spark, "DESCRIBE TABLE graft_spec.deco").collect()
       .map(r => r.getString(0) -> (r.getString(2), r.getString(3), r.getString(4))).toMap
     assert(d("st") == (("DEFAULT", "'q'", "state col")))
     assert(d("note")._3 == "it's free-form")
+    assert(d("memo")._3 == "hello, world")
     assert(d("id") == (("", "", "")))
     val stmt = Engine.execute(spark, "SHOW CREATE TABLE graft_spec.deco")
       .collect().head.getString(0)

@@ -35,6 +35,14 @@ class DefaultColumnsSpec extends AnyFunSuite {
       (2L, "new", 20L, null),
       (3L, "done", 30L, null),  // explicit status, defaulted score
       (4L, "x", 999L, "full"))) // full list: nothing defaulted
+    // a quoted default holding a comma
+    exec("DROP TABLE IF EXISTS graft_spec.defs_q")
+    exec("""
+      CREATE TABLE graft_spec.defs_q (id Int64, s String DEFAULT 'a,b')
+      ENGINE=MergeTree() ORDER BY (id)""")
+    exec("INSERT INTO graft_spec.defs_q (id) VALUES (1)")
+    assert(exec("SELECT s FROM graft_spec.defs_q").collect()
+      .map(_.getString(0)).toSeq == Seq("a,b"))
   }
 
   test("INSERT (cols) SELECT fills defaults the same way") {

@@ -166,7 +166,9 @@ class NativeServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       val nulls = if (nullable) Array.fill(nRows)(in.read() == 1) else Array.fill(nRows)(false)
       val vals = (0 until nRows).map { r =>
         val v = base match {
-          case "Int32" => P.readFixed(in, 4).getInt
+          case "UInt8" | "Int8" | "Bool" => in.read()
+          case "UInt16" | "Int16" => P.readFixed(in, 2).getShort
+          case "Int32" | "UInt32" => P.readFixed(in, 4).getInt
           case "Int64" | "UInt64" => P.readFixed(in, 8).getLong
           case "Float64" => P.readFixed(in, 8).getDouble
           case "String" => P.readStr(in)
@@ -491,6 +493,47 @@ class NativeServerSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(got === -1, "server did not drop the idle connection")
       } finally sock.close()
     } finally quick.stop()
+  }
+
+  test("every statement with a result streams it; DDL/DML answer END_OF_STREAM only") {
+    val (sock, in, out) = connect()
+    try {
+      hello(out); readServerHello(in)
+      Seq("SHOW TABLES", "DESCRIBE TABLE lineitem", "SHOW CREATE TABLE lineitem",
+          "EXISTS TABLE lineitem", "EXPLAIN SELECT 1", "(SELECT 1 AS x)",
+          "-- c\nSELECT 1 AS x", "/* c */ SELECT 1 AS x").foreach { q =>
+        sendQuery(out, q)
+        val (blocks, err) = readResponse(in)
+        assert(err.isEmpty, s"$q -> $err")
+        assert(blocks.nonEmpty && blocks.head.head._3.nonEmpty, q)
+      }
+      Seq("CREATE DATABASE IF NOT EXISTS graft_spec",
+          "DROP TABLE IF EXISTS graft_spec.nat_ddl",
+          "DROP TABLE IF EXISTS graft_spec.nat_ddl2",
+          "DROP TABLE IF EXISTS graft_spec.nat_ctas",
+          "CREATE TABLE graft_spec.nat_ddl (id Int64, s String) ENGINE=MergeTree() ORDER BY id",
+          "INSERT INTO graft_spec.nat_ddl VALUES (1, 'a'), (2, 'b')",
+          "ALTER TABLE graft_spec.nat_ddl UPDATE s = 'c' WHERE id = 1",
+          "ALTER TABLE graft_spec.nat_ddl DELETE WHERE id = 2",
+          "OPTIMIZE TABLE graft_spec.nat_ddl FINAL",
+          "RENAME TABLE graft_spec.nat_ddl TO graft_spec.nat_ddl2",
+          "CREATE VIEW nat_v AS SELECT id FROM graft_spec.nat_ddl2",
+          "CREATE VIEW IF NOT EXISTS nat_v AS SELECT 1 AS id",
+          "DROP VIEW nat_v",
+          "CREATE TABLE graft_spec.nat_ctas ENGINE=Memory AS SELECT 1 AS x",
+          "CREATE TABLE IF NOT EXISTS graft_spec.nat_ctas ENGINE=Memory AS SELECT 1 AS x",
+          "DROP TABLE graft_spec.nat_ctas",
+          "SET max_threads = 4",
+          "USE default",
+          "TRUNCATE TABLE graft_spec.nat_ddl2",
+          "DROP TABLE graft_spec.nat_ddl2").foreach { q =>
+        packetOrder.clear()
+        sendQuery(out, q)
+        val (_, err) = readResponse(in)
+        assert(err.isEmpty, s"$q -> $err")
+        assert(packetOrder.toSeq === Seq("END_OF_STREAM"), q)
+      }
+    } finally sock.close()
   }
 
   test("multiple queries on one connection; fixture table query") {

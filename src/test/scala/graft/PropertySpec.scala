@@ -257,4 +257,79 @@ class PropertySpec extends AnyFunSuite {
       assert(count === want, evs.mkString(","))
     }
   }
+
+  // ---- SqlScan vs the generator's own lexical truth ----
+
+  /** A generated SQL-ish text as pieces tagged code / not code:
+    * literals in both escape forms, quoted identifiers, both comment
+    * kinds, nested ()/[] groups, separators and the keyword AND. */
+  private type Piece = (String, Boolean)
+
+  private def quotedToken(q: Char): Gen[String] =
+    Gen.listOf(Gen.oneOf(Seq("a", ",", ";", "(", ")", "[", "]", " ", "AND",
+        "--", "/*", "*/", "\n", "'", "`", "\"").filter(_ != q.toString) ++
+      Seq("\\" + q, s"$q$q", "\\\\")))
+      .map(parts => q.toString + parts.mkString + q)
+
+  private val commentText =
+    Gen.listOf(Gen.oneOf("a", ",", ";", "(", "]", "'", "`", "AND", " ", "--"))
+      .map(_.mkString)
+
+  private def scanPieces(depth: Int): Gen[List[Piece]] = {
+    val leaf: Gen[List[Piece]] = Gen.frequency(
+      6 -> Gen.oneOf("a", "b1", "AND", "and", "x_and", " ", ",", ";", "1")
+        .map(w => List((w, true))),
+      3 -> Gen.oneOf('\'', '`', '"').flatMap(quotedToken).map(t => List((t, false))),
+      1 -> commentText.map(c => List(("--" + c, false), ("\n", true))),
+      1 -> Gen.zip(commentText, commentText, commentText)
+        .map { case (a, b, c) => List((s"/*$a/*$b*/$c*/", false)) })
+    val group: Gen[List[Piece]] =
+      Gen.oneOf(("(", ")"), ("[", "]")).flatMap { case (o, c) =>
+        Gen.lzy(scanPieces(depth + 1)).map(inner => ((o, true) :: inner) :+ ((c, true)))
+      }
+    Gen.choose(0, 8).flatMap(n => Gen.listOfN(n,
+      if (depth < 3) Gen.frequency(4 -> leaf, 1 -> group) else leaf))
+      .map(_.flatten)
+  }
+
+  test("SqlScan: splits, keywords and bracket matches respect the lexical truth") {
+    import graft.dialect.SqlScan
+    forAll(scanPieces(0)) { pieces =>
+      val text = pieces.map(_._1).mkString
+      val code = pieces.flatMap { case (t, c) => Seq.fill(t.length)(c) }.toArray
+      // brute-force depth before each char and the stack's bracket pairs
+      val depth = new Array[Int](text.length + 1)
+      val pair = Array.fill(text.length)(-1)
+      var stack = List.empty[Int]
+      text.indices.foreach { i =>
+        depth(i + 1) = depth(i)
+        if (code(i)) text.charAt(i) match {
+          case '(' | '[' => stack ::= i; depth(i + 1) += 1
+          case ')' | ']' => pair(stack.head) = i; stack = stack.tail; depth(i + 1) -= 1
+          case _ =>
+        }
+      }
+      val sc = SqlScan(text)
+      for (sep <- Seq(',', ';')) {
+        val parts = sc.split(sep)
+        assert(parts.mkString(sep.toString) === text, text)
+        val cuts = parts.init.scanLeft(-1)(_ + _.length + 1).tail
+        cuts.foreach { i =>
+          assert(code(i) && depth(i) == 0 && text.charAt(i) == sep, s"$i in $text")
+        }
+        assert(cuts.length === text.indices.count(i =>
+          code(i) && depth(i) == 0 && text.charAt(i) == sep), text)
+      }
+      def word(c: Char) = c.isLetterOrDigit || c == '_'
+      val andHits = Iterator.iterate(sc.keyword("AND"))(i => sc.keyword("AND", i + 3))
+        .takeWhile(_ >= 0).toSeq
+      val andTruth = (0 to text.length - 3).filter(i => code(i) && depth(i) == 0 &&
+        text.regionMatches(true, i, "AND", 0, 3) &&
+        (i == 0 || !word(text.charAt(i - 1))) &&
+        (i + 3 == text.length || !word(text.charAt(i + 3))))
+      assert(andHits === andTruth, text)
+      assert(sc.splitKeyword("AND").length === andTruth.length + 1, text)
+      text.indices.foreach(i => assert(sc.closing(i) === pair(i), s"$i in $text"))
+    }
+  }
 }

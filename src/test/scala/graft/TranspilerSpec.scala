@@ -22,12 +22,18 @@ class TranspilerSpec extends AnyFunSuite {
 
   test("numeric ternary gets the truthiness wrap") {
     val t = Transpiler.transpile("SELECT number % 2 ? number : NULL AS x FROM numbers(4)")
-    assert(t.contains("if((number % 2) <> 0, number, NULL) AS x"), t)
+    assert(t.startsWith("SELECT if((number % 2) <> 0, number, NULL) AS x"), t)
+    // right after a clause keyword, the keyword keeps its space
+    val w = Transpiler.transpile("SELECT number FROM numbers(4) WHERE number % 2 ? 1 : 0")
+    assert(w.endsWith(" WHERE if((number % 2) <> 0, 1, 0)"), w)
   }
 
   test("boolean ternary keeps its condition") {
     val t = Transpiler.transpile("SELECT a > 1 ? 'y' : 'n' AS x FROM t")
-    assert(t.contains("if(a > 1, 'y', 'n') AS x"), t)
+    assert(t.startsWith("SELECT if(a > 1, 'y', 'n') AS x"), t)
+    // a backslash-escaped quote inside a branch literal
+    val e = Transpiler.transpile("SELECT number > 1 ? 'it\\'s' : 'no' AS t FROM numbers(3)")
+    assert(e.startsWith("SELECT if(number > 1, 'it\\'s', 'no') AS t FROM"), e)
   }
 
   test("nested ternaries rewrite inside parens") {
@@ -78,6 +84,9 @@ class TranspilerSpec extends AnyFunSuite {
     val t = Transpiler.transpile("SELECT ['a', 'b'] AS arr, m['k'] AS v, arr[1] AS e")
     assert(t.contains("array('a', 'b')"))
     assert(t.contains("m['k']") && t.contains("arr[1]"))
+    // brackets and escaped quotes inside literals are text
+    assert(Transpiler.transpile("SELECT ['it\\'s', '['] AS a") ===
+      "SELECT array('it\\'s', '[') AS a")
   }
 
   test("tuple-of-arrays Map cast becomes map_from_arrays (index.html:729)") {
@@ -202,6 +211,9 @@ class TranspilerSpec extends AnyFunSuite {
     // an alias sharing a function's name doesn't clobber the call
     assert(Transpiler.transpile("WITH 3 AS abs SELECT abs(-1), abs AS v")
       .contains("abs(-1)"))
+    // a backslash-escaped quote in the scalar keeps the clause intact
+    assert(Transpiler.transpile("WITH 'it\\'s' AS p SELECT p AS v") ===
+      "SELECT ('it\\'s') AS v")
   }
 
   test("* REPLACE becomes EXCEPT + appended aliases; composes and recurses") {
