@@ -30,7 +30,9 @@ object Tables {
     * session so a restarted session reloads; fixtures are immutable
     * within a session (tests that write their own parquet use fresh
     * temp dirs). The schema comes from [[footerSchema]]: inference
-    * would run one Spark job per table. */
+    * would run one Spark job per table. A session that ends (a
+    * request-scoped or evicted per-user session of the servers) must
+    * [[forget]] its entries, or the memo keeps it alive. */
   private val loadCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), DataFrame]()
 
@@ -39,6 +41,12 @@ object Tables {
       val (s, path) = key
       footerSchema(s, path).fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
     })
+
+  /** Drop every memoized relation of `spark`. */
+  def forget(spark: SparkSession): Unit =
+    loadCache.keySet.removeIf(_._1 eq spark)
+
+  private[graft] def memoSize: Int = loadCache.size
 
   /** The schema `spark.read.parquet(path)` infers, read on the driver
     * with no job: the footer of the file, or of a directory's first part

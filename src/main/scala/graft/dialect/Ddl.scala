@@ -3391,7 +3391,10 @@ object Engine {
       ("Query", cQuery.get, "Number of queries started"),
       ("SelectQuery", cSelect.get, "Number of SELECT queries started"),
       ("InsertQuery", cInsert.get, "Number of INSERT queries started"),
-      ("FailedQuery", cFailed.get, "Number of failed queries"))
+      ("FailedQuery", cFailed.get, "Number of failed queries"),
+      ("CompileFunction",
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+        "Number of generated classes compiled"))
       .toDF("event", "value", "description")
   }
 

@@ -755,8 +755,9 @@ object LlmPipeline {
       // then vocabulary-sized aggregates OVER tf, and the broadcast
       // join shape — the skew-safe plan at 100 TB, where a window
       // partitioned by raw term would bottleneck on stop words — is
-      // unchanged. n_docs from tf is value-identical: split() never
-      // returns an empty array, so every document has >= 1 term row.
+      // unchanged. n_docs counts `documents`, as the DuckDB text does:
+      // a document with NULL text has no term row in tf, so a count
+      // over tf would be one short and shift every score.
       // fan=false (r16 DevAb l23fan, interleaved med): no-fan 0.78 s vs
       // spread 0.89 s vs bare-repartition 0.92 s — a plain tokenize
       // (no per-token digest) is too cheap to amortize redistributing
@@ -768,7 +769,8 @@ object LlmPipeline {
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
         .localCheckpoint(true)
       val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val n = tf.agg(countDistinct(col("doc_id")).as("n_docs"))
+      val n = Tables.load(s, dir, "documents")
+        .agg(countDistinct(col("doc_id")).as("n_docs"))
       val w = Window.partitionBy(col("doc_id"))
         .orderBy(col("tfidf").desc, col("term"))
       tf.join(broadcast(dfreq), "term").crossJoin(broadcast(n))

@@ -152,17 +152,20 @@ class HttpServer(spark: SparkSession, port: Int,
     // fully streamed (the finally below).
     val queryId = params.get("query_id")
       .filter(_.nonEmpty).getOrElse(java.util.UUID.randomUUID().toString)
+    var scoped: Option[SparkSession] = None
     try {
       // database= is request-scoped, like the reference's per-query
       // `USE db;` prefix (main.py:860-861). Mutating the shared
       // session's current database would race concurrent requests and
       // leak into later ones, so such requests run on a derived session:
       // same persistent catalog (DDL tables), own current-database and
-      // (re-registered, lazy) fixture views.
+      // (re-registered, lazy) fixture views. The session ends with the
+      // request (the finally below drops its memoized fixture relations).
       val session = params.get("database") match {
         case None => baseSession
         case Some(db) =>
           val s2 = baseSession.newSession()
+          scoped = Some(s2)
           ChFunctions.register(s2)
           fixtureDir.foreach(dir => graft.dialect.ChContext.setupViews(s2, dir))
           s2.catalog.setCurrentDatabase(db)
@@ -289,6 +292,7 @@ class HttpServer(spark: SparkSession, port: Int,
         catch { case _: Throwable => ex.close() }
     } finally {
       graft.dialect.Engine.finishQuery(queryId)
+      scoped.foreach(graft.Tables.forget)
     }
   }
 
@@ -349,7 +353,10 @@ object UserSessions {
         // session end: TEMPORARY tables die with it (ClickHouse
         // contract); the SparkSession itself shares the context and
         // needs no close
-        sessions.remove(key).foreach(graft.dialect.Ddl.dropTempTables)
+        sessions.remove(key).foreach { s =>
+          graft.dialect.Ddl.dropTempTables(s)
+          graft.Tables.forget(s)
+        }
         false
       }
     }
@@ -399,6 +406,7 @@ object UserSessions {
             .foreach(p => java.nio.file.Files.deleteIfExists(p))
         }
       } catch { case _: Throwable => () } // shutdown path: best-effort
+      graft.Tables.forget(s)
     }
     sessions.clear()
     lastAccess.clear()

@@ -346,6 +346,21 @@ class HttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fixture.statusCode() === 200 && fixture.body() === "25\n")
   }
 
+  test("database= requests and ended user sessions leave no fixture relations memoized") {
+    val before = Tables.memoSize
+    (1 to 50).foreach { _ =>
+      val r = get(s"/?query=${enc("SELECT count() FROM nation")}&database=default")
+      assert(r.statusCode() === 200 && r.body() === "25\n")
+    }
+    assert(Tables.memoSize === before)
+    import graft.server.UserSessions
+    // a per-user session over the fixture the suite's views came from
+    UserSessions.forKey(spark, "memo:pw", Some(spark.conf.get("graft.views.dir")))
+    assert(Tables.memoSize > before)
+    UserSessions.purgeAll()
+    assert(Tables.memoSize <= before)
+  }
+
   test("per-credential sessions isolate unqualified tables (main.py:140-173)") {
     def postAs(userPass: String, body: String): HttpResponse[String] = {
       val token = java.util.Base64.getEncoder.encodeToString(userPass.getBytes)

@@ -521,6 +521,20 @@ class OperatorsSpec extends AnyFunSuite {
     assert(perDoc <= 3)
   }
 
+  test("l23 counts a NULL-text document in n_docs, as its DuckDB text does") {
+    val dir = java.nio.file.Files.createTempDirectory("l23null").toString
+    Seq((0L, Some("a b")), (1L, Some("a c")), (2L, None: Option[String]))
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), col("text"), lit("en").as("lang"),
+        lit("src0").as("source"), length(col("text")).cast("long").as("n_chars"))
+      .write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("l23_tfidf_topterms")(spark, dir)
+      .as[(Long, String, Double, Int)].collect().toSeq
+    // n_docs = 3: ln(3/2) for the shared term, ln(3/1) for the others
+    assert(got === Seq((0L, "b", 1.098612, 1), (0L, "a", 0.405465, 2),
+      (1L, "c", 1.098612, 1), (1L, "a", 0.405465, 2)))
+  }
+
   test("LateMaterialize: two-phase top-k equals single-pass, pushes key filters") {
     import org.apache.spark.sql.functions.expr
     val base = spark.range(0, 5000).toDF("id")
