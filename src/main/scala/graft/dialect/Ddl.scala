@@ -3281,11 +3281,27 @@ object Ddl {
   * raw ClickHouse SQL (possibly `USE db; query` — the reference
   * prefixes the database selection the same way, main.py:860-861). */
 object Engine {
-  // "INSERT INTO t [(cols)] FORMAT TSV\n<data rows>" — the ClickHouse
-  // bulk-load shape every CLI/driver uses over HTTP. Matched BEFORE
-  // statement splitting (the payload may contain anything).
-  private val insertDataRe =
-    "(?is)^\\s*INSERT\\s+INTO\\s+([\\w`.]+)\\s*(\\(([^)]*)\\))?\\s*FORMAT\\s+(\\w+)\\s*\\n(.+)$".r
+  /** `INSERT INTO t [(cols)] [VALUES | FORMAT x]` through the end of
+    * its line: the header of every bulk write. With a FORMAT, its rows
+    * follow inline, fill the rest of an HTTP body, or are the whole
+    * body when the header came in the `query` param; they never pass
+    * through statement splitting. */
+  private val insertHeaderRe =
+    ("(?is)^\\s*INSERT\\s+INTO\\s+([\\w`.]+)\\s*(?:\\(([^)]*)\\))?\\s*" +
+      "(?:VALUES|FORMAT\\s+(\\w+))?[ \\t]*(?:\\r?\\n|$)").r
+
+  /** A parsed INSERT header; `statement` is its text. */
+  private[graft] final case class InsertHeader(statement: String, table: String,
+                                               cols: Option[Seq[String]],
+                                               format: Option[String])
+
+  /** The INSERT header `text` opens with, and the offset after it. */
+  private[graft] def insertHeader(text: String): Option[(InsertHeader, Int)] =
+    insertHeaderRe.findPrefixMatchOf(text).map { m =>
+      (InsertHeader(m.matched.trim, m.group(1),
+        Option(m.group(2)).map(_.split(",").map(_.trim.replace("`", "")).toSeq),
+        Option(m.group(3))), m.end)
+    }
 
   /** Bounded query log behind `system.query_log` (most-probed columns
     * of ClickHouse's table). Durations cover the synchronous part of
@@ -3443,24 +3459,40 @@ object Engine {
       case Some(m) => return killQuery(spark, m.group(1))
       case None => ()
     }
+    insertHeader(rawSql) match {
+      case Some((h, end)) if h.format.isDefined => insert(spark, h,
+        rawSql.substring(end).getBytes(java.nio.charset.StandardCharsets.UTF_8), user, queryId)
+      case _ => tracked(spark, rawSql, user, queryId)(executeInner(spark, rawSql))
+    }
+  }
+
+  /** Runs one statement under the query bookkeeping: query id and
+    * `graft-qid-*` job group, `system.processes`, `system.query_log`
+    * and the `system.events` counters. */
+  private[graft] def tracked(spark: SparkSession, sql: String, user: String,
+                             queryId: Option[String])(run: => DataFrame): DataFrame = {
     val t0 = System.currentTimeMillis()
-    val id = beginQuery(spark, queryId, rawSql, user)
+    val id = beginQuery(spark, queryId, sql, user)
     val isSelect = "(?is)^\\s*(SELECT|WITH|EXPLAIN)\\b".r
-      .findFirstIn(rawSql).isDefined
+      .findFirstIn(sql).isDefined
     cQuery.incrementAndGet()
     if (isSelect) cSelect.incrementAndGet()
-    if ("(?is)^\\s*INSERT\\b".r.findFirstIn(rawSql).isDefined)
+    if ("(?is)^\\s*INSERT\\b".r.findFirstIn(sql).isDefined)
       cInsert.incrementAndGet()
     try {
-      val out = executeInner(spark, rawSql)
+      ChFunctions.register(spark)
+      // lazy durable-catalog restore: first statement of a fresh JVM
+      // re-registers persisted tables/dictionaries/projections
+      CatalogStore.ensureRestored(spark)
+      val out = run
       // the log itself is queryable but never logs its own reads
-      if (!rawSql.toLowerCase.contains("system.query_log"))
-        record(LogEntry(t0, rawSql, System.currentTimeMillis() - t0,
+      if (!sql.toLowerCase.contains("system.query_log"))
+        record(LogEntry(t0, sql, System.currentTimeMillis() - t0,
           "QueryFinish", user))
       out
     } catch {
       case e: Throwable =>
-        record(LogEntry(t0, rawSql, System.currentTimeMillis() - t0,
+        record(LogEntry(t0, sql, System.currentTimeMillis() - t0,
           "ExceptionWhileProcessing", user))
         cFailed.incrementAndGet()
         finishQuery(id)
@@ -3475,17 +3507,6 @@ object Engine {
   }
 
   private def executeInner(spark: SparkSession, rawSql: String): DataFrame = {
-    ChFunctions.register(spark)
-    // lazy durable-catalog restore: first statement of a fresh JVM
-    // re-registers persisted tables/dictionaries/projections
-    CatalogStore.ensureRestored(spark)
-    insertDataRe.findFirstMatchIn(rawSql) match {
-      case Some(m) =>
-        val cols = Option(m.group(3))
-          .map(_.split(",").map(_.trim.replace("`", "")).toSeq)
-        return insertWithData(spark, m.group(1), cols, m.group(4), m.group(5))
-      case None => ()
-    }
     val statements = SqlScan(rawSql).split(';').map(_.trim).filter(_.nonEmpty)
     statements.map { st0 =>
       val st = graft.sources.UrlTableFunction.rewrite(spark, st0)
@@ -3495,17 +3516,19 @@ object Engine {
         outfileRe.findFirstMatchIn(noFmt) match {
           case Some(m) =>
             // `SELECT ... INTO OUTFILE 'f' [APPEND|TRUNCATE] [FORMAT x]`
-            // — render the result in the requested format (TSV default,
-            // matching the reference's default_format, main.py:853) and
-            // write it client-side; the rows still return. Like the
-            // reference, an existing file is refused unless APPEND or
-            // TRUNCATE is given.
+            // — the bytes HTTP would send (TSV default, main.py:853);
+            // the rows still return. Like the reference, an existing
+            // file is refused unless APPEND or TRUNCATE is given.
+            val fmtName = fmt.getOrElse("TSV")
+            val writer = graft.formats.Formats.write(fmtName)
             val df = query(spark, m.group(1))
             val p = java.nio.file.Paths.get(m.group(2))
-            if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
             import java.nio.file.StandardOpenOption._
             val opts = Option(m.group(3)).map(_.toUpperCase) match {
-              case Some("APPEND") => Seq(CREATE, APPEND)
+              case Some("APPEND") =>
+                if (!writer.appendable) throw new IllegalArgumentException(
+                  s"INTO OUTFILE ... FORMAT $fmtName supports TRUNCATE, not APPEND")
+                Seq(CREATE, APPEND)
               case Some("TRUNCATE") => Seq(CREATE, TRUNCATE_EXISTING)
               case _ =>
                 if (java.nio.file.Files.exists(p))
@@ -3513,30 +3536,13 @@ object Engine {
                     s"File ${m.group(2)} exists; use INTO OUTFILE ... APPEND or TRUNCATE")
                 Seq(CREATE_NEW)
             }
-            if (fmt.exists(_.equalsIgnoreCase("Parquet"))) {
-              // columnar export: executors write parquet directly (no
-              // driver serialization at all); like ClickHouse the
-              // target is ONE file, so the single part-file is moved
-              // into place from a scratch dir
-              if (Option(m.group(3)).exists(_.equalsIgnoreCase("APPEND")))
-                throw new IllegalArgumentException(
-                  "INTO OUTFILE ... FORMAT Parquet supports TRUNCATE, not APPEND")
-              val tmp = java.nio.file.Files
-                .createTempDirectory("graft_outfile").toString
-              df.coalesce(1).write.mode("overwrite").parquet(tmp)
-              val part = new java.io.File(tmp).listFiles()
-                .find(_.getName.endsWith(".parquet"))
-                .getOrElse(throw new IllegalStateException("no parquet part written"))
-              java.nio.file.Files.deleteIfExists(p)
-              java.nio.file.Files.move(part.toPath, p)
-            } else {
-              // stream rows to the file (toLocalIterator inside write) —
-              // an export never materializes on the driver
-              val w = java.nio.file.Files.newBufferedWriter(
-                p, java.nio.charset.StandardCharsets.UTF_8, opts: _*)
-              try graft.formats.ResultFormatter.write(df, fmt.getOrElse("TSV"), w)
-              finally w.close()
-            }
+            var os: java.io.OutputStream = null
+            try writer(df, () => {
+              if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
+              os = new java.io.BufferedOutputStream(
+                java.nio.file.Files.newOutputStream(p, opts: _*), 1 << 16)
+              os
+            }) finally if (os != null) os.close()
             df
           case None => query(spark, noFmt)
         }
@@ -4074,34 +4080,34 @@ object Engine {
     }
   }
 
-  // "INSERT INTO t [(cols)] FORMAT <fmt>" with no inline data — the
-  // header shape of a binary bulk write (payload arrives as bytes)
-  private val insertHeaderRe =
-    "(?is)^\\s*INSERT\\s+INTO\\s+([\\w`.]+)\\s*(\\(([^)]*)\\))?\\s*FORMAT\\s+(\\w+)\\s*$".r
-
-  /** Byte-payload INSERT — the bulk-write path a real clickhouse client
-    * drives (`INSERT ... FORMAT RowBinary` / `Native` with a binary
-    * body; reference passes any chdb input format through at
-    * main.py:190). Text formats route to the string parser. */
-  def executeInsertPayload(spark: SparkSession, header: String,
-                           payload: Array[Byte]): DataFrame = {
-    ChFunctions.register(spark)
-    val m = insertHeaderRe.findFirstMatchIn(header).getOrElse(
-      throw new IllegalArgumentException(s"bad INSERT header: $header"))
-    val table = m.group(1)
-    val cols = Option(m.group(3))
-      .map(_.split(",").map(_.trim.replace("`", "")).toSeq)
-    m.group(4).toLowerCase match {
-      case f @ ("rowbinary" | "rowbinarywithnamesandtypes" | "native") =>
-        binaryInsert(spark, table, cols, f, payload)
-      case f @ ("parquet" | "orc") =>
-        columnarFileInsert(spark, table, cols, f, payload)
-      case f @ ("arrow" | "arrowstream") =>
-        arrowInsert(spark, table, cols, f == "arrow", payload)
-      case _ =>
-        insertWithData(spark, table, cols, m.group(4),
-          new String(payload, java.nio.charset.StandardCharsets.UTF_8))
+  /** Lands an INSERT … FORMAT payload, whichever way it arrived, under
+    * the same bookkeeping as [[execute]]: the header is what
+    * `system.query_log` and `system.processes` show. Values rows are
+    * SQL literals and go through the SQL INSERT; every other format
+    * parses through [[graft.formats.Formats.read]]. */
+  private[graft] def insert(spark: SparkSession, h: InsertHeader, payload: Array[Byte],
+                            user: String, queryId: Option[String]): DataFrame =
+    tracked(spark, h.statement, user, queryId) {
+      val format = h.format.get
+      if (graft.formats.Formats.canonical(format) == "Values") {
+        // reconstruct the column list — dropping it bound VALUES tuples
+        // to the wrong columns when the client listed a subset
+        val colList = h.cols.map(cs => s"(${cs.mkString(", ")}) ").getOrElse("")
+        Ddl.insert(spark, s"INSERT INTO ${h.table} ${colList}VALUES " +
+          new String(payload, java.nio.charset.StandardCharsets.UTF_8).trim)
+      } else {
+        val target = targetSchema(spark, h.table, h.cols)
+        graft.formats.Formats.read(spark, format,
+          graft.formats.Formats.Payload(payload), Some(target))(land(spark, h.table, _))
+      }
     }
+
+  /** Appends `df` to `table`: unprovided columns fill with their
+    * declared DEFAULT (else NULL), matched case-insensitively, and the
+    * columns are emitted in table order. */
+  private[graft] def land(spark: SparkSession, table: String, df: DataFrame): DataFrame = {
+    Ddl.appendAligned(spark, table, Ddl.fillInsertable(spark, table, df))
+    spark.emptyDataFrame
   }
 
   /** INSERT target structure: the named columns, or every INSERTABLE
@@ -4140,252 +4146,5 @@ object Engine {
         })
       case None => StructType(Ddl.insertableFields(spark, table, full))
     }
-  }
-
-  private def binaryInsert(spark: SparkSession, table: String,
-                           cols: Option[Seq[String]], format: String,
-                           payload: Array[Byte]): DataFrame = {
-    val target = targetSchema(spark, table, cols)
-    val announced = target.fields.toSeq
-      .map(f => f.name -> graft.formats.ChTypeNames.fieldName(f))
-    val (names, raw) = format match {
-      case "native" => graft.formats.NativeCodec.decodeAll(payload)
-      case "rowbinarywithnamesandtypes" =>
-        graft.formats.NativeCodec.decodeRowBinary(payload,
-          withNamesAndTypes = true, announced)
-      case _ =>
-        graft.formats.NativeCodec.decodeRowBinary(payload,
-          withNamesAndTypes = false, announced)
-    }
-    insertDecodedRows(spark, table, target, names, raw)
-  }
-
-  /** Land already-decoded (names, row values) into `table` through the
-    * aligned append path — shared by the HTTP binary formats, Arrow and
-    * the native TCP streaming INSERT (sample-block exchange). `target`
-    * is the [[targetSchema]] the caller resolved; header names win and
-    * values coerce to the declared column types. */
-  private[graft] def insertDecodedRows(spark: SparkSession, table: String,
-                                       target: org.apache.spark.sql.types.StructType,
-                                       names: Seq[String],
-                                       raw: Seq[Seq[Any]]): DataFrame = {
-    import org.apache.spark.sql.types._
-    val fields = names.map(n => target(target.fieldIndex(n)))
-    val rows = raw.map { vs =>
-      org.apache.spark.sql.Row.fromSeq(
-        vs.zip(fields).map { case (v, f) => coerce(v, f.dataType) })
-    }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq),
-      StructType(fields.toIndexedSeq))
-    // unprovided columns fill with their declared DEFAULT (else NULL),
-    // matched case-insensitively — same contract as the VALUES form
-    Ddl.appendAligned(spark, table, Ddl.fillInsertable(spark, table, df))
-    spark.emptyDataFrame
-  }
-
-  /** INSERT ... FORMAT Arrow|ArrowStream: decode the IPC payload and
-    * land it like the other binary bulk formats — header names resolve
-    * to target columns, values coerce to the declared types. */
-  private def arrowInsert(spark: SparkSession, table: String,
-                          cols: Option[Seq[String]], file: Boolean,
-                          payload: Array[Byte]): DataFrame = {
-    val target = targetSchema(spark, table, cols)
-    val (names0, raw) = graft.formats.ArrowCodec.decode(payload, file)
-    // a headerless client can't exist for Arrow (the schema is in the
-    // framing), but names may be positional placeholders — fall back to
-    // the announced column list when none match the target
-    val names = if (names0.exists(n => target.fieldNames.contains(n))) names0
-      else target.fieldNames.toSeq.take(names0.length)
-    insertDecodedRows(spark, table, target, names, raw)
-  }
-
-  /** INSERT ... FORMAT Parquet|ORC: the payload is one complete
-    * columnar file (what clickhouse-client sends for bulk loads). It
-    * lands in a scratch file and Spark's reader parses it — the driver
-    * never decodes values row by row. Columns resolve by name when the
-    * file carries the target's names, positionally over the announced
-    * column list otherwise. */
-  private def columnarFileInsert(spark: SparkSession, table: String,
-                                 cols: Option[Seq[String]], format: String,
-                                 payload: Array[Byte]): DataFrame = {
-    val tmp = java.nio.file.Files.createTempFile("graft_insert", "." + format)
-    try {
-      java.nio.file.Files.write(tmp, payload)
-      val parsed = if (format == "orc") spark.read.orc(tmp.toString)
-        else spark.read.parquet(tmp.toString)
-      val full = spark.table(table).schema
-      val announced =
-        cols.getOrElse(full.fields.map(_.name).filterNot(_ == "_part").toSeq)
-      val named =
-        if (announced.forall(parsed.columns.contains)) parsed
-        else if (parsed.columns.length == announced.length)
-          parsed.toDF(announced.toIndexedSeq: _*)
-        else throw new IllegalArgumentException(
-          s"$format payload has ${parsed.columns.length} columns, " +
-            s"expected ${announced.length} (${announced.mkString(", ")})")
-      // appendAligned writes eagerly, so the scratch file can go in finally
-      Ddl.appendAligned(spark, table, Ddl.fillInsertable(spark, table, named))
-      spark.emptyDataFrame
-    } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
-
-  /** Decoded wire value → the Spark external type of the target column
-    * (the codec returns Int for UInt8, LocalDate for Date, etc.). */
-  private def coerce(v: Any, dt: org.apache.spark.sql.types.DataType): Any = {
-    import org.apache.spark.sql.types._
-    (v, dt) match {
-      case (null, _) => null
-      case (x: Number, ByteType) => x.byteValue()
-      case (x: Number, ShortType) => x.shortValue()
-      case (x: Number, IntegerType) => x.intValue()
-      case (x: Number, LongType) => x.longValue()
-      case (x: Number, FloatType) => x.floatValue()
-      case (x: Number, DoubleType) => x.doubleValue()
-      case (x, StringType) => x.toString
-      case (d: java.time.LocalDate, DateType) => java.sql.Date.valueOf(d)
-      case (i: java.time.Instant, _: TimestampType) => java.sql.Timestamp.from(i)
-      case (b: scala.math.BigDecimal, d: DecimalType) =>
-        b.setScale(d.scale).bigDecimal
-      case (l: java.lang.Long, d: DecimalType) if d.precision == 20 && d.scale == 0 =>
-        // UInt64 travels as the raw 8-byte pattern; unsigned reinterpret
-        new java.math.BigDecimal(java.lang.Long.toUnsignedString(l))
-      case (x: Number, d: DecimalType) =>
-        new java.math.BigDecimal(x.toString).setScale(d.scale)
-      case (b: Boolean, BooleanType) => b
-      case (x: Number, BooleanType) => x.intValue() != 0
-      case (s: scala.collection.Seq[_], ArrayType(et, _)) =>
-        s.map(coerce(_, et))
-      case (other, _) => other
-    }
-  }
-
-  /** Split a stream of top-level JSON objects (`{...}{...}` or
-    * newline-separated) into their verbatim texts — string- and
-    * escape-aware, no parsing of the contents. */
-  private def splitTopLevelJson(data: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var inStr = false; var esc = false; var start = -1
-    var i = 0
-    while (i < data.length) {
-      val c = data.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' => if (depth == 0) start = i; depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0 && start >= 0) {
-            out += data.substring(start, i + 1); start = -1
-          }
-        case _ => ()
-      }
-      i += 1
-    }
-    if (depth != 0) throw new IllegalArgumentException(
-      "JSONAsString payload has an unterminated object")
-    out.toSeq
-  }
-
-  /** Parse the inline payload per format against the target table's
-    * schema and append. `VALUES` data routes back through SQL. */
-  private def insertWithData(spark: SparkSession, table: String,
-                             cols: Option[Seq[String]], format: String,
-                             data: String): DataFrame = {
-    import spark.implicits._
-    if (format.equalsIgnoreCase("Values")) {
-      // reconstruct the column list — dropping it bound VALUES tuples
-      // to the wrong columns when the client listed a subset
-      val colList = cols.map(cs => s"(${cs.mkString(", ")}) ").getOrElse("")
-      return Ddl.insert(spark, s"INSERT INTO $table ${colList}VALUES $data")
-    }
-    val full = spark.table(table).schema
-    val target = targetSchema(spark, table, cols)
-    val allLines = data.trim.split("\n").toIndexedSeq
-    val lines = allLines.toDS()
-    val parsed = format.toLowerCase match {
-      case "tsv" | "tabseparated" =>
-        spark.read.option("sep", "\t").schema(target).csv(lines)
-      case "csv" => spark.read.schema(target).csv(lines)
-      case "jsoneachrow" | "ndjson" =>
-        // ClickHouse (and graft's own export) quotes 64-bit integers and
-        // decimals; the JSON reader would load a quoted number as NULL.
-        // Read those fields as strings (a bare number reads as its text)
-        // and cast to the declared type.
-        import org.apache.spark.sql.functions.col
-        import org.apache.spark.sql.types._
-        def numeric(f: StructField) = f.dataType match {
-          case ByteType | ShortType | IntegerType | LongType | _: DecimalType => true
-          case _ => false
-        }
-        val asRead = StructType(target.fields.map(f =>
-          if (numeric(f)) f.copy(dataType = StringType) else f))
-        spark.read.schema(asRead).json(lines).select(target.fields.map(f =>
-          if (numeric(f)) col(f.name).cast(f.dataType).as(f.name) else col(f.name)
-        ).toIndexedSeq: _*)
-      case f0 @ ("tsvwithnames" | "tsvwithnamesandtypes" |
-                 "tabseparatedwithnames" | "tabseparatedwithnamesandtypes" |
-                 "csvwithnames" | "csvwithnamesandtypes") =>
-        // the header line names the columns (clients may reorder or
-        // send a subset); the AndTypes variants carry a type line the
-        // table schema supersedes
-        val sep = if (f0.startsWith("c")) "," else "\t"
-        val names = allLines.head.split(java.util.regex.Pattern.quote(sep))
-          .map(_.trim.replace("`", "").stripPrefix("\"").stripSuffix("\""))
-          .toSeq
-        val body = allLines.drop(if (f0.endsWith("andtypes")) 2 else 1)
-        val tgt = org.apache.spark.sql.types.StructType(
-          names.map(c => full(full.fieldIndex(c))))
-        spark.read.option("sep", sep).schema(tgt).csv(body.toDS())
-      case "jsoncompacteachrow" =>
-        // one JSON array per line, positional over the announced (or
-        // full) column list; elements land as strings and cast to the
-        // declared types
-        import org.apache.spark.sql.functions.{col, from_json}
-        import org.apache.spark.sql.types.{ArrayType, StringType}
-        val arr = lines.toDF("line")
-          .select(from_json(col("line"), ArrayType(StringType)).as("a"))
-        arr.select(target.fields.zipWithIndex.map { case (f, i) =>
-          col("a")(i).cast(f.dataType).as(f.name)
-        }.toIndexedSeq: _*)
-      case "tskv" =>
-        // name=value pairs tab-separated; names map to target columns,
-        // absent names stay NULL (ClickHouse TSKV contract)
-        import org.apache.spark.sql.functions.{col, expr}
-        val m = lines.toDF("line")
-          .select(expr("str_to_map(line, '\t', '=')").as("m"))
-        m.select(target.fields.map(f =>
-          col("m")(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-      case "lineasstring" =>
-        // the whole line, unescaped, into the single target column —
-        // the raw-text ingest shape an LLM-corpus load uses
-        if (target.fields.length != 1)
-          throw new IllegalArgumentException(
-            s"LineAsString needs exactly 1 target column, got ${target.fields.length}")
-        lines.toDF(target.fields.head.name)
-      case "jsonasstring" =>
-        // each top-level {...} object lands VERBATIM as one String row
-        // (parse downstream with the JSON* functions); objects may be
-        // newline- or whitespace-separated
-        if (target.fields.length != 1)
-          throw new IllegalArgumentException(
-            s"JSONAsString needs exactly 1 target column, got ${target.fields.length}")
-        splitTopLevelJson(data).toDS().toDF(target.fields.head.name)
-      case "rawblob" =>
-        // the entire payload is ONE value in the single target column
-        if (target.fields.length != 1)
-          throw new IllegalArgumentException(
-            s"RawBLOB needs exactly 1 target column, got ${target.fields.length}")
-        Seq(data).toDS().toDF(target.fields.head.name)
-      case other =>
-        throw new IllegalArgumentException(s"INSERT FORMAT $other not supported")
-    }
-    // fill unlisted columns with their declared DEFAULT (else NULL),
-    // emit in table column order
-    Ddl.appendAligned(spark, table, Ddl.fillInsertable(spark, table, parsed))
-    spark.emptyDataFrame
   }
 }

@@ -35,8 +35,9 @@ object ArrowCodec {
         new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE)
       case BooleanType => ArrowType.Bool.INSTANCE
       case DateType => new ArrowType.Date(DateUnit.DAY)
-      case _: TimestampType =>
+      case _: TimestampType | TimestampNTZType =>
         new ArrowType.Timestamp(ATimeUnit.MICROSECOND, "UTC")
+      case d: DecimalType => new ArrowType.Decimal(d.precision, d.scale, 128)
       case _ => ArrowType.Utf8.INSTANCE
     }
     new Field(f.name, new FieldType(true, t, null),
@@ -49,6 +50,9 @@ object ArrowCodec {
       Math.floorDiv(t.getTime, 1000L) * 1000000 + t.getNanos / 1000
     case i: java.time.Instant =>
       i.getEpochSecond * 1000000 + i.getNano / 1000
+    // session time zone is UTC: wall-clock time reads as UTC
+    case t: java.time.LocalDateTime =>
+      epochMicros(t.toInstant(java.time.ZoneOffset.UTC))
     case n: Number => n.longValue()
   }
 
@@ -74,6 +78,8 @@ object ArrowCodec {
       case x: BitVector => x.setSafe(i, if (v.asInstanceOf[Boolean]) 1 else 0)
       case x: DateDayVector => x.setSafe(i, epochDays(v))
       case x: TimeStampMicroTZVector => x.setSafe(i, epochMicros(v))
+      case x: DecimalVector =>
+        x.setSafe(i, v.asInstanceOf[java.math.BigDecimal].setScale(x.getScale))
       case x: VarCharVector =>
         x.setSafe(i, ResultFormatter.textValue(v, dt)
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))

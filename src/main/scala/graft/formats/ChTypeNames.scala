@@ -18,7 +18,7 @@ object ChTypeNames {
     case StringType => "String"
     case BooleanType => "UInt8"
     case DateType => "Date"
-    case _: TimestampType => "DateTime"
+    case _: TimestampType | TimestampNTZType => "DateTime"
     case d: DecimalType if d.precision == 20 && d.scale == 0 => "UInt64"
     case d: DecimalType => s"Decimal(${d.precision}, ${d.scale})"
     case a: ArrayType => s"Array(${name(a.elementType)})"

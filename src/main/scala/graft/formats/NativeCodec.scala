@@ -59,6 +59,14 @@ object NativeCodec {
     buf
   }
 
+  /** One byte as a value: a stream that ends here is truncated (a -1
+    * taken as data would decode a claimed row count out of nothing). */
+  private def readByte(in: java.io.InputStream): Int = {
+    val b = in.read()
+    if (b < 0) throw new java.io.EOFException()
+    b
+  }
+
   private def readStr(in: java.io.InputStream): String = {
     val n = readVarint(in).toInt
     new String(readFully(in, n), "UTF-8")
@@ -139,11 +147,13 @@ object NativeCodec {
           case d: java.time.LocalDate => d.toEpochDay
         }
         fixed(out, 2)(_.putShort(days.toShort))
-      case _: TimestampType =>
+      case _: TimestampType | TimestampNTZType =>
         val secs = v match {
           case null => 0L
           case t: java.sql.Timestamp => t.getTime / 1000
           case t: java.time.Instant => t.getEpochSecond
+          // session time zone is UTC: wall-clock time reads as UTC
+          case t: java.time.LocalDateTime => t.toEpochSecond(java.time.ZoneOffset.UTC)
         }
         fixed(out, 4)(_.putInt(secs.toInt))
       case d: DecimalType =>
@@ -215,31 +225,33 @@ object NativeCodec {
     * a nonzero flag announces sparse/custom encodings this codec does
     * not speak, so it rejects loudly rather than misparse). */
   def decode(in: java.io.InputStream,
-             customSerFlag: Boolean): Seq[(String, String, Vector[Any])] = {
+             customSerFlag: Boolean = false): Seq[(String, String, Vector[Any])] = {
     val nCols = readVarint(in).toInt
     val nRows = readVarint(in).toInt
     (0 until nCols).map { _ =>
       val name = readStr(in)
       val tpe = readStr(in)
       if (customSerFlag) {
-        val flag = in.read()
+        val flag = readByte(in)
         require(flag == 0, s"custom serialization (flag $flag) on column $name not supported")
       }
       val (baseType, nullable) =
         if (tpe.startsWith("Nullable(")) (tpe.stripPrefix("Nullable(").stripSuffix(")"), true)
         else (tpe, false)
-      val nulls: Array[Boolean] =
-        if (nullable) Array.fill(nRows)(in.read() == 1) else Array.fill(nRows)(false)
+      // grown as bytes arrive, not sized by the claimed row count: a
+      // truncated body fails at its end, not after a large allocation
+      val nulls: Array[Boolean] = if (!nullable) null else {
+        val mask = Array.newBuilder[Boolean]
+        (0 until nRows).foreach(_ => mask += readByte(in) == 1)
+        mask.result()
+      }
       val vals = (0 until nRows).map { r =>
         val v = readValue(in, baseType)
-        if (nulls(r)) null else v
+        if (nulls != null && nulls(r)) null else v
       }.toVector
       (name, tpe, vals)
     }
   }
-
-  def decode(in: java.io.InputStream): Seq[(String, String, Vector[Any])] =
-    decode(in, customSerFlag = false)
 
   /** Decode every block of a Native stream (a bulk INSERT payload) into
     * column names + row tuples. Values carry the decoded JVM types of
@@ -278,7 +290,7 @@ object NativeCodec {
       rows += types.map { t =>
         if (t.startsWith("Nullable(")) {
           val base = t.stripPrefix("Nullable(").stripSuffix(")")
-          if (in.read() == 1) null else readValue(in, base)
+          if (readByte(in) == 1) null else readValue(in, base)
         } else readValue(in, t)
       }
     }
@@ -289,11 +301,11 @@ object NativeCodec {
     def buf(n: Int) =
       ByteBuffer.wrap(readFully(in, n)).order(ByteOrder.LITTLE_ENDIAN)
     chType match {
-      case "Int8" => in.read().toByte
+      case "Int8" => readByte(in).toByte
       case "Int16" => buf(2).getShort
       case "Int32" => buf(4).getInt
       case "Int64" => buf(8).getLong
-      case "UInt8" => in.read()
+      case "UInt8" => readByte(in)
       case "UInt16" => buf(2).getShort & 0xffff
       case "UInt32" => buf(4).getInt & 0xffffffffL
       // unsigned view of the 8 wire bytes: 0xFFFF..FF must read back

@@ -48,38 +48,22 @@ object ResultFormatter {
   /** Stream-render `df` into `out` in the named text format; returns
     * the row count. Rows arrive via [[rowsOf]] — the scale-
     * safe result boundary (a 100 TB SELECT streams through, it does
-    * not `collect()` onto the driver). */
-  def write(df: DataFrame, format: String, out: Appendable): Long =
-    write(df, format, out, totals = None)
-
-  /** As [[write]], with an optional WITH TOTALS row rendered per the
-    * format's ClickHouse layout (JSON `totals` member; TSV blank line +
-    * row). Formats with no totals notion ignore it. */
+    * not `collect()` onto the driver). An optional WITH TOTALS row
+    * renders per the format's ClickHouse layout (JSON `totals` member;
+    * TSV blank line + row); formats with no totals notion ignore it. */
   def write(df: DataFrame, format: String, out: Appendable,
-            totals: Option[Row]): Long = {
+            totals: Option[Row] = None): Long = {
     val t0 = System.nanoTime()
     writeRows(df.schema, rowsOf(df), format, out,
       () => (System.nanoTime() - t0) / 1e9, totals)
   }
 
-  /** Format names [[writeRows]] renders (lowercased) — lets callers
-    * validate before any response bytes go out (the HTTP 400 contract
-    * requires rejecting unknown formats before headers are sent). */
-  val knownTextFormats: Set[String] = Set(
-    "tsv", "tabseparated", "tsvwithnames", "tabseparatedwithnames",
-    "tsvwithnamesandtypes", "tabseparatedwithnamesandtypes",
-    "csv", "csvwithnames", "csvwithnamesandtypes",
-    "json", "jsoncompact", "jsoneachrow", "ndjson", "jsoncompacteachrow",
-    "pretty", "prettycompact", "null", "values", "vertical", "markdown",
-    "tskv", "lineasstring", "rawblob")
-  def isKnown(format: String): Boolean = knownTextFormats(format.toLowerCase)
-
   /** Iterator-driven core shared by [[write]] and the HTTP server. */
   def writeRows(schema: StructType, rows: Iterator[Row], format: String,
                 out: Appendable, elapsed: () => Double = () => 0d,
                 totals: Option[Row] = None): Long =
-    format.toLowerCase match {
-      case "tsv" | "tabseparated" =>
+    Formats.canonical(format) match {
+      case "TabSeparated" =>
         val n = delimited(schema, rows, "\t", out, header = false)
         // ClickHouse TSV totals layout: data rows, empty line, totals row
         totals.foreach { t =>
@@ -87,36 +71,22 @@ object ResultFormatter {
           delimited(schema, Iterator(t), "\t", out, header = false)
         }
         n
-      case "tsvwithnames" | "tabseparatedwithnames" =>
-        delimited(schema, rows, "\t", out, header = true)
-      case "tsvwithnamesandtypes" | "tabseparatedwithnamesandtypes" =>
-        delimited(schema, rows, "\t", out, header = true, typesRow = true)
-      case "csv" => delimited(schema, rows, ",", out, header = false, csvQuote = true)
-      case "csvwithnames" => delimited(schema, rows, ",", out, header = true, csvQuote = true)
-      case "csvwithnamesandtypes" =>
-        delimited(schema, rows, ",", out, header = true, csvQuote = true, typesRow = true)
-      case "json" => jsonEnvelope(schema, rows, out, elapsed, compact = false, totals)
-      case "jsoncompact" => jsonEnvelope(schema, rows, out, elapsed, compact = true, totals)
-      case "jsoneachrow" | "ndjson" =>
+      case f @ ("TabSeparatedWithNames" | "TabSeparatedWithNamesAndTypes" |
+                "CSV" | "CSVWithNames" | "CSVWithNamesAndTypes") =>
+        val csv = f.startsWith("CSV")
+        delimited(schema, rows, if (csv) "," else "\t", out, header = f.contains("Names"),
+          csvQuote = csv, typesRow = f.endsWith("AndTypes"))
+      case "JSON" => jsonEnvelope(schema, rows, out, elapsed, compact = false, totals)
+      case "JSONCompact" => jsonEnvelope(schema, rows, out, elapsed, compact = true, totals)
+      case f @ ("JSONEachRow" | "JSONCompactEachRow") =>
         var n = 0L
         rows.foreach { r =>
-          out.append(schema.fields.indices
-            .map(i => s"${jsonString(schema.fields(i).name)}:${jsonValue(r.get(i), schema.fields(i).dataType)}")
-            .mkString("{", ",", "}")).append('\n')
+          out.append(jsonRow(schema, r, compact = f == "JSONCompactEachRow")).append('\n')
           n += 1
         }
         n
-      case "jsoncompacteachrow" =>
-        var n = 0L
-        rows.foreach { r =>
-          out.append(schema.fields.indices
-            .map(i => jsonValue(r.get(i), schema.fields(i).dataType))
-            .mkString("[", ",", "]")).append('\n')
-          n += 1
-        }
-        n
-      case "pretty" | "prettycompact" => pretty(schema, rows, out)
-      case "vertical" =>
+      case "Pretty" | "PrettyCompact" => pretty(schema, rows, out)
+      case "Vertical" =>
         // clickhouse-client's \G display: one `name: value` line per
         // column, names padded so values align. Widths come from the
         // SCHEMA (not the data), so this streams row by row.
@@ -136,7 +106,7 @@ object ResultFormatter {
           n += 1
         }
         n
-      case "markdown" =>
+      case "Markdown" =>
         // header + alignment separator (numbers right-aligned), then
         // one row per line — fully streaming, no width pass
         out.append(schema.fieldNames.map(mdEscape)
@@ -154,13 +124,13 @@ object ResultFormatter {
           n += 1
         }
         n
-      case "null" =>
+      case "Null" =>
         // FORMAT Null: execute fully, emit nothing — the benchmark
         // format ClickBench drives with (output cost excluded)
         var n = 0L
         rows.foreach(_ => n += 1)
         n
-      case "values" =>
+      case "Values" =>
         // ClickHouse Values: (v1,v2),(v3,v4) — strings/dates quoted
         // with the array-element rules, NULL bare
         var n = 0L
@@ -174,7 +144,7 @@ object ResultFormatter {
         }
         if (n > 0) out.append('\n')
         n
-      case "tskv" =>
+      case "TSKV" =>
         // name=value pairs tab-separated, TSV escaping on both sides
         var n = 0L
         rows.foreach { r =>
@@ -186,32 +156,21 @@ object ResultFormatter {
           n += 1
         }
         n
-      case "lineasstring" =>
-        // single String column, one raw (unescaped) line per row
+      case f @ ("LineAsString" | "RawBLOB") =>
+        // single column, raw (unescaped) values: one line per row, or
+        // concatenated with no separators at all
         if (schema.fields.length != 1)
           throw new IllegalArgumentException(
-            s"LineAsString needs exactly 1 column, got ${schema.fields.length}")
+            s"$f needs exactly 1 column, got ${schema.fields.length}")
         var n = 0L
         rows.foreach { r =>
           if (!r.isNullAt(0))
             out.append(textValue(r.get(0), schema.fields(0).dataType))
-          out.append('\n')
+          if (f == "LineAsString") out.append('\n')
           n += 1
         }
         n
-      case "rawblob" =>
-        // single column, values concatenated raw — no separators at all
-        if (schema.fields.length != 1)
-          throw new IllegalArgumentException(
-            s"RawBLOB needs exactly 1 column, got ${schema.fields.length}")
-        var n = 0L
-        rows.foreach { r =>
-          if (!r.isNullAt(0))
-            out.append(textValue(r.get(0), schema.fields(0).dataType))
-          n += 1
-        }
-        n
-      case other => throw new IllegalArgumentException(s"unknown format: $other")
+      case other => throw new IllegalArgumentException(s"$other is not a text format")
     }
 
   /** Values-format cell: scalar strings/dates quote like array
@@ -342,6 +301,16 @@ object ResultFormatter {
     case other => jsonString(textValue(other, dt))
   }
 
+  /** One row as a JSON object (`{"name":value,…}`) or, compact, an
+    * array of values. */
+  private def jsonRow(schema: StructType, r: Row, compact: Boolean): String = {
+    val cells = schema.fields.indices.map { i =>
+      if (compact) jsonValue(r.get(i), schema.fields(i).dataType)
+      else s"${jsonString(schema.fields(i).name)}:${jsonValue(r.get(i), schema.fields(i).dataType)}"
+    }
+    cells.mkString(if (compact) "[" else "{", ",", if (compact) "]" else "}")
+  }
+
   /** The `{meta, data, rows, statistics}` envelope streams too: `rows`
     * and `statistics` come AFTER `data` in the ClickHouse layout, so
     * the count is known by the time it's needed. */
@@ -352,13 +321,7 @@ object ResultFormatter {
     val meta = schema.fields.map(f =>
       s"""{"name":${jsonString(f.name)},"type":${jsonString(ChTypeNames.fieldName(f))}}""")
       .mkString("[", ",", "]")
-    def rowJson(r: Row): String = {
-      val cells = schema.fields.indices.map { i =>
-        if (compact) jsonValue(r.get(i), schema.fields(i).dataType)
-        else s"${jsonString(schema.fields(i).name)}:${jsonValue(r.get(i), schema.fields(i).dataType)}"
-      }
-      cells.mkString(if (compact) "[" else "{", ",", if (compact) "]" else "}")
-    }
+    def rowJson(r: Row): String = jsonRow(schema, r, compact)
     out.append("{\"meta\":").append(meta).append(",\"data\":[")
     var n = 0L
     rows.foreach { r =>

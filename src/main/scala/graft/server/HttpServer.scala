@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
 import graft.dialect.{ChFunctions, Transpiler}
-import graft.formats.{ResultFormatter, NativeCodec}
+import graft.formats.Formats
 
 /** ClickHouse-compatible HTTP endpoint (reference behavior at
   * /root/reference/main.py:849-917):
@@ -31,13 +31,6 @@ class HttpServer(spark: SparkSession, port: Int,
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(8,
     (r: Runnable) => new Thread(r, "graft-http-worker"))
   server.setExecutor(pool)
-
-  // "INSERT INTO t [(cols)] FORMAT <binary format>" — these bodies must
-  // never round-trip through UTF-8
-  private val binaryInsertRe =
-    ("(?is)^\\s*INSERT\\s+INTO\\s+[\\w`.]+\\s*(\\([^)]*\\))?\\s*FORMAT\\s+" +
-      "(RowBinary|RowBinaryWithNamesAndTypes|Native|Parquet|ORC" +
-      "|Arrow|ArrowStream)\\s*$").r
 
   /** Credential sources in ClickHouse precedence: user=/password= URL
     * params, X-ClickHouse-User/-Key headers, then Basic auth. The
@@ -88,53 +81,27 @@ class HttpServer(spark: SparkSession, port: Int,
 
     val params = parseParams(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
     val bodyBytes = ex.getRequestBody.readAllBytes()
-    // Binary bulk INSERT (RowBinary / Native): the payload must never
-    // round-trip through UTF-8. Two client shapes: the statement in the
-    // `query` param with the body as raw payload (how clickhouse
-    // drivers POST bulk data), or a whole-body request whose first line
-    // is the INSERT header.
-    val headerFromParam = params.get("query").filter(q =>
-      binaryInsertRe.findFirstMatchIn(q).isDefined && bodyBytes.nonEmpty)
-    val headerFromBody =
-      if (headerFromParam.isDefined) None
-      else {
+    // INSERT … FORMAT: the rows stay bytes (a binary payload must never
+    // round-trip through UTF-8). Two client shapes: the statement in the
+    // `query` param with the rows as the body (how clickhouse drivers
+    // and `curl --data-binary` POST bulk data), or a body whose first
+    // line is the statement.
+    val (head, rowsFrom) = params.get("query") match {
+      case Some(q) => (q, 0)
+      case None =>
         val nl = bodyBytes.indexOf('\n'.toByte)
-        if (nl < 0) None
-        else Some(new String(bodyBytes, 0, nl, UTF_8))
-          .filter(h => binaryInsertRe.findFirstMatchIn(h).isDefined)
-      }
-    if (headerFromParam.isDefined || headerFromBody.isDefined) {
-      val base = sessionFor(credentialsOf(ex, params))
-      // database= scopes the unqualified table name, same as the main
-      // query path (request-scoped derived session)
-      val session = params.get("database") match {
-        case None => base
-        case Some(db) =>
-          val s2 = base.newSession()
-          ChFunctions.register(s2)
-          s2.catalog.setCurrentDatabase(db)
-          s2
-      }
-      try {
-        val (header, payload) = headerFromParam match {
-          case Some(h) => (h, bodyBytes)
-          case None =>
-            val nl = bodyBytes.indexOf('\n'.toByte)
-            (headerFromBody.get, java.util.Arrays.copyOfRange(bodyBytes, nl + 1, bodyBytes.length))
-        }
-        graft.dialect.Engine.executeInsertPayload(session, header, payload)
-        respond(ex, 200, "")
-      } catch {
-        case t: Throwable =>
-          respond(ex, 400, Option(t.getMessage).getOrElse(t.getClass.getSimpleName) + "\n")
-      }
-      return
+        val end = if (nl < 0) bodyBytes.length else nl + 1
+        (new String(bodyBytes, 0, end, UTF_8), end)
     }
-    val body = new String(bodyBytes, UTF_8).trim
+    val insert = graft.dialect.Engine.insertHeader(head).collect {
+      case (h, end) if h.format.isDefined && head.substring(end).trim.isEmpty =>
+        (h, java.util.Arrays.copyOfRange(bodyBytes, rowsFrom, bodyBytes.length))
+    }
+    val body = if (insert.isDefined) "" else new String(bodyBytes, UTF_8).trim
     // param query first, then body (main.py:876-882 concatenation order)
     val query = (params.get("query").toSeq ++ (if (body.nonEmpty) Seq(body) else Nil))
       .mkString(" ").trim
-    if (query.isEmpty) {
+    if (insert.isEmpty && query.isEmpty) {
       // GET with no query serves the query UI (main.py:856-857); POST
       // with no query is an error (main.py:892-893)
       if (ex.getRequestMethod == "POST")
@@ -171,17 +138,6 @@ class HttpServer(spark: SparkSession, port: Int,
           s2.catalog.setCurrentDatabase(db)
           s2
       }
-      val (bare0, fmtClause) = Transpiler.extractFormat(query)
-      val fmt = fmtClause.getOrElse(defaultFormat)
-      // WITH TOTALS over HTTP: for formats with a totals slot in their
-      // ClickHouse layout (JSON envelopes' `totals` member, TSV's
-      // blank-line-separated row), run the protocol split — grouped
-      // rows as data, the empty-grouping-set aggregate as the totals
-      // row. Other formats keep the dialect's inline GROUPING SETS row.
-      val totalsCapable =
-        Set("json", "jsoncompact", "tsv", "tabseparated")(fmt.toLowerCase)
-      val split = if (totalsCapable) Transpiler.splitTotals(bare0) else None
-      val bare = split.map(_._1).getOrElse(bare0)
       // user identity for system.query_log: the user= param, the
       // X-ClickHouse-User header, or the basic-auth user (in CH's
       // precedence order); anonymous requests log as "default"
@@ -194,93 +150,11 @@ class HttpServer(spark: SparkSession, port: Int,
             catch { case _: Throwable => "default" }
         })
         .filter(_.nonEmpty).getOrElse("default")
-      val df = graft.dialect.Engine.execute(session, bare, user, Some(queryId))
-      // response headers ClickHouse clients read
-      ex.getResponseHeaders.set("X-ClickHouse-Format", fmt)
-      ex.getResponseHeaders.set("X-ClickHouse-Timezone", "UTC")
-      // Results stream to the socket chunked (length 0) through
-      // ResultFormatter.rowsOf — driver memory stays bounded by one
-      // partition regardless of result size, and rows already on the
-      // driver go out with no job. Parse/analysis errors were already
-      // raised above (Spark analyzes eagerly), so the 400 contract
-      // holds; a mid-stream runtime failure truncates the body, the
-      // same visible behavior as ClickHouse's own streamed HTTP.
-      // gzip the stream when the client advertises it (ClickHouse
-      // compresses HTTP responses the same way under
-      // enable_http_compression; the formats themselves are unchanged)
-      val gzip = Option(ex.getRequestHeaders.getFirst("Accept-Encoding"))
-        .exists(_.toLowerCase.contains("gzip"))
-      def body(): java.io.OutputStream = {
-        ex.sendResponseHeaders(200, 0)
-        val raw = new java.io.BufferedOutputStream(ex.getResponseBody, 1 << 16)
-        if (gzip) new java.util.zip.GZIPOutputStream(raw, 1 << 16, true) else raw
-      }
-      if (gzip) ex.getResponseHeaders.set("Content-Encoding", "gzip")
-      val fmtLower = fmt.toLowerCase
-      val binaryFmt = fmtLower == "native" || fmtLower == "rowbinary" ||
-        fmtLower == "rowbinarywithnamesandtypes" || fmtLower == "parquet" ||
-        fmtLower == "orc" || fmtLower == "arrow" || fmtLower == "arrowstream"
-      // validate the format BEFORE body() commits the 200 headers —
-      // an unknown FORMAT must be a 400 with a message, not an empty 200
-      if (!binaryFmt && !ResultFormatter.isKnown(fmt))
-        throw new IllegalArgumentException(s"unknown format: $fmt")
-      if (binaryFmt) {
-        ex.getResponseHeaders.set("Content-Type", "application/octet-stream")
-        if (fmtLower == "parquet" || fmtLower == "orc") {
-          // columnar response: executors write one parquet/orc part into
-          // a scratch dir (no driver row serialization), then the file
-          // streams to the socket in bounded chunks
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_http_" + fmtLower)
-          try {
-            val w = df.coalesce(1).write.mode("overwrite")
-            if (fmtLower == "orc") w.orc(tmp.toString)
-            else w.parquet(tmp.toString)
-            val part = tmp.toFile.listFiles()
-              .find(_.getName.endsWith("." + fmtLower))
-              .getOrElse(throw new IllegalStateException(
-                s"no $fmtLower part written"))
-            val os = body()
-            java.nio.file.Files.copy(part.toPath, os)
-            os.close()
-          } finally {
-            // recursive + non-throwing: a failed write leaves a
-            // _temporary subtree, and a throwing finally would mask
-            // the real error with DirectoryNotEmptyException
-            def rm(f: java.io.File): Unit = {
-              if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-              f.delete()
-            }
-            try rm(tmp.toFile) catch { case _: Throwable => () }
-          }
-        } else {
-          val os = body()
-          if (fmtLower == "arrow" || fmtLower == "arrowstream")
-            graft.formats.ArrowCodec.write(os, df.schema,
-              ResultFormatter.rowsOf(df), file = fmtLower == "arrow")
-          else if (fmtLower == "native")
-            NativeCodec.writeBlocks(os, df.schema,
-              ResultFormatter.rowsOf(df), blockRows = 65536)
-          else
-            NativeCodec.writeRowBinary(os, df.schema,
-              ResultFormatter.rowsOf(df),
-              withNamesAndTypes = fmtLower == "rowbinarywithnamesandtypes")
-          os.close()
-        }
-      } else {
-        val contentType =
-          if (fmtLower.startsWith("json")) "application/json" else "text/plain"
-        ex.getResponseHeaders.set("Content-Type", contentType)
-        // same queryId: the totals pass joins the main pass's job
-        // group, so one KILL QUERY cancels both aggregates
-        val totalsRow = split.flatMap { case (_, tq) =>
-          graft.dialect.Engine.execute(session, tq, user, Some(queryId))
-            .limit(2).collect().headOption
-        }
-        val w = new java.io.BufferedWriter(
-          new java.io.OutputStreamWriter(body(), UTF_8), 1 << 16)
-        ResultFormatter.write(df, fmt, w, totalsRow)
-        w.close()
+      insert match {
+        case Some((h, payload)) =>
+          graft.dialect.Engine.insert(session, h, payload, user, Some(queryId))
+          respond(ex, 200, "")
+        case None => select(ex, session, query, defaultFormat, user, queryId)
       }
     } catch {
       case t: Throwable =>
@@ -294,6 +168,49 @@ class HttpServer(spark: SparkSession, port: Int,
       graft.dialect.Engine.finishQuery(queryId)
       scoped.foreach(graft.Tables.forget)
     }
+  }
+
+  /** Runs a statement and streams its result in the requested format. */
+  private def select(ex: HttpExchange, session: SparkSession, query: String,
+                     defaultFormat: String, user: String, queryId: String): Unit = {
+    val (bare0, fmtClause) = Transpiler.extractFormat(query)
+    val fmt = fmtClause.getOrElse(defaultFormat)
+    // resolved BEFORE anything runs or body() commits the 200 headers —
+    // an unknown FORMAT must be a 400 with a message, not an empty 200
+    val writer = Formats.write(fmt)
+    // WITH TOTALS over HTTP: for formats with a totals slot in their
+    // ClickHouse layout (JSON envelopes' `totals` member, TSV's
+    // blank-line-separated row), run the protocol split — grouped
+    // rows as data, the empty-grouping-set aggregate as the totals
+    // row. Other formats keep the dialect's inline GROUPING SETS row.
+    val split = if (writer.rendersTotals) Transpiler.splitTotals(bare0) else None
+    val bare = split.map(_._1).getOrElse(bare0)
+    val df = graft.dialect.Engine.execute(session, bare, user, Some(queryId))
+    // response headers ClickHouse clients read
+    ex.getResponseHeaders.set("X-ClickHouse-Format", fmt)
+    ex.getResponseHeaders.set("X-ClickHouse-Timezone", "UTC")
+    // The writer streams to the socket chunked (length 0), one
+    // partition at a time. Parse/analysis errors were already raised
+    // above (Spark analyzes eagerly), so the 400 contract holds; a
+    // mid-stream runtime failure truncates the body, the same visible
+    // behavior as ClickHouse's own streamed HTTP. gzip the stream when
+    // the client advertises it (ClickHouse's enable_http_compression).
+    val gzip = Option(ex.getRequestHeaders.getFirst("Accept-Encoding"))
+      .exists(_.toLowerCase.contains("gzip"))
+    def body(): java.io.OutputStream = {
+      ex.sendResponseHeaders(200, 0)
+      val raw = new java.io.BufferedOutputStream(ex.getResponseBody, 1 << 16)
+      if (gzip) new java.util.zip.GZIPOutputStream(raw, 1 << 16, true) else raw
+    }
+    if (gzip) ex.getResponseHeaders.set("Content-Encoding", "gzip")
+    ex.getResponseHeaders.set("Content-Type", writer.contentType)
+    // same queryId: the totals pass joins the main pass's job
+    // group, so one KILL QUERY cancels both aggregates
+    val totalsRow = split.flatMap { case (_, tq) =>
+      graft.dialect.Engine.execute(session, tq, user, Some(queryId))
+        .limit(2).collect().headOption
+    }
+    writer(df, () => body(), totalsRow)
   }
 
   private def parseParams(raw: String): Map[String, String] =

@@ -217,14 +217,16 @@ class NativeServer(spark: SparkSession, port: Int,
       // table structure, then I stream DATA blocks". Server answers
       // with a zero-row sample block, reads client blocks until the
       // empty terminator, lands them through the aligned append path.
-      streamingInsertRe.findFirstMatchIn(query) match {
-        case Some(m) =>
+      Engine.insertHeader(query) match {
+        case Some((h, end)) if query.substring(end).trim.isEmpty =>
           val serFlag = clientRevision >= 54454
-          handleStreamingInsert(in, out, session, m.group(1),
-            Option(m.group(3)).map(_.split(",").map(_.trim.replace("`", "")).toSeq),
-            serFlag, lz4Responses)
+          // under the statement bookkeeping, like an HTTP INSERT … FORMAT
+          Engine.tracked(session, h.statement, authUser, Some(queryId)) {
+            handleStreamingInsert(in, out, session, h.table, h.cols, serFlag, lz4Responses)
+            session.emptyDataFrame
+          }
           return lz4Responses
-        case None => ()
+        case _ => ()
       }
       val (bare0, _) = Transpiler.extractFormat(query) // native ignores FORMAT
       // WITH TOTALS on the native protocol: the grouped rows go out as
@@ -353,12 +355,6 @@ class NativeServer(spark: SparkSession, port: Int,
     lz4Responses
   }
 
-  // INSERT with no inline data (trailing VALUES / FORMAT / nothing):
-  // triggers the sample-block exchange instead of SQL-text execution
-  private val streamingInsertRe =
-    ("(?is)^\\s*INSERT\\s+INTO\\s+([\\w`.]+)\\s*(\\(([^)]*)\\))?\\s*" +
-      "(?:VALUES|FORMAT\\s+\\w+)?\\s*$").r
-
   /** The native bulk-write flow (public protocol; clickhouse-driver's
     * `execute("INSERT INTO t VALUES", rows)`): consume the
     * external-tables stream the client sends unconditionally after the
@@ -429,7 +425,8 @@ class NativeServer(spark: SparkSession, port: Int,
     def flush(): Unit = {
       val collected = rows.result()
       if (collected.nonEmpty)
-        Engine.insertDecodedRows(session, bare, target, names, collected)
+        Engine.land(session, bare,
+          graft.formats.Formats.decodedFrame(session, target, names, collected))
       rows = Vector.newBuilder[Seq[Any]]
       buffered = 0
     }

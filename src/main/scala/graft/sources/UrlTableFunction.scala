@@ -12,10 +12,10 @@ import java.nio.file.{Files, Paths}
   * fetch-then-read: the address is materialized locally (file:// used
   * directly; http(s):// downloaded), transparently decompressed
   * (.xz via org.tukaani, .gz via JDK — matching the reference's
-  * hits_v1.tsv.xz), then read with the Spark reader for the named
-  * ClickHouse format. Header-less formats (TSV/CSV) infer types but
-  * keep positional column names, which is what `INSERT ... SELECT *`
-  * consumes.
+  * hits_v1.tsv.xz), then parsed by the named format's reader in
+  * [[graft.formats.Formats.read]] — the same one `INSERT … FORMAT`
+  * uses. Header-less formats (TSV/CSV) infer types but keep positional
+  * column names, which is what `INSERT ... SELECT *` consumes.
   *
   * At scale the fetch step belongs on the executors (distribute a list
   * of URLs via a dataset of addresses); a single url() call is
@@ -25,33 +25,9 @@ import java.nio.file.{Files, Paths}
 object UrlTableFunction {
 
   def read(spark: SparkSession, addr: String, format: String): DataFrame = {
-    val local = materialize(addr)
-    // ClickHouse TSV is NOT quoted CSV: fields are never quoted (a
-    // value starting with `"` must not swallow following tabs/rows),
-    // and NULL is the two-char marker \N. Spark's CSV reader disables
-    // quoting when `quote` is the NUL char. ClickHouse's in-field
-    // escapes (\t, \n, \\) remain literal two-char sequences — decoding
-    // them needs a per-column pass; numeric/date columns (the ClickBench
-    // load) are unaffected.
-    def tsvReader = spark.read
-      .option("sep", "\t")
-      .option("quote", "\u0000") // NUL disables quoting (CH TSV is never quoted)
-      .option("nullValue", "\\N")
-      .option("inferSchema", "true")
-    format.toLowerCase match {
-      case "tsv" | "tabseparated" => tsvReader.csv(local)
-      case "tsvwithnames" | "tabseparatedwithnames" =>
-        tsvReader.option("header", "true").csv(local)
-      case "csv" =>
-        spark.read.option("nullValue", "\\N").option("inferSchema", "true").csv(local)
-      case "csvwithnames" =>
-        spark.read.option("nullValue", "\\N")
-          .option("header", "true").option("inferSchema", "true").csv(local)
-      case "jsoneachrow" | "ndjson" | "json" => spark.read.json(local)
-      case "parquet" => spark.read.parquet(local)
-      case "orc" => spark.read.orc(local)
-      case other => throw new IllegalArgumentException(s"url(): unsupported format $other")
-    }
+    graft.formats.Formats.canonical(format) // a misspelled name fails before the fetch
+    graft.formats.Formats.read(spark, format,
+      graft.formats.Formats.LocalFile(materialize(addr)), target = None)(identity)
   }
 
   /** Resolve to a local path, downloading and/or decompressing. */

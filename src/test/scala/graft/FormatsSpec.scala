@@ -15,6 +15,13 @@ class FormatsSpec extends AnyFunSuite {
     spark.sql(Transpiler.transpile(sql))
   }
 
+  /** INSERT … FORMAT with its rows as a byte payload, landed the way
+    * the servers land it. */
+  private def insertPayload(header: String, payload: Array[Byte]) = {
+    import graft.dialect.Engine
+    Engine.insert(spark, Engine.insertHeader(header).get._1, payload, "default", None)
+  }
+
   /** Whole-result single-block encode — test-only; production paths
     * stream bounded blocks via NativeCodec.writeBlocks. */
   private def encodeDf(df: org.apache.spark.sql.DataFrame): Array[Byte] =
@@ -221,6 +228,33 @@ class FormatsSpec extends AnyFunSuite {
     vals.foreach(v => assert(NativeCodec.readVarint(in) === v))
   }
 
+  test("Native decode: a truncated body fails with EOFException at once") {
+    import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException}
+    // one column that claims 50M rows and carries none of them
+    def body(tpe: String): Array[Byte] = {
+      val b = new ByteArrayOutputStream()
+      NativeCodec.writeVarint(b, 1); NativeCodec.writeVarint(b, 50000000)
+      Seq("x", tpe).foreach { s => NativeCodec.writeVarint(b, s.length); b.write(s.getBytes("UTF-8")) }
+      b.toByteArray
+    }
+    assert(body("Int8").length === 12)
+    // warm the decoder on a well-formed block first
+    NativeCodec.decode(encodeDf(q("SELECT toInt8(1) AS x")))
+    Seq("Int8", "UInt8", "Nullable(Int8)").foreach { t =>
+      // best of three, so a GC pause elsewhere in the JVM does not count
+      val ms = (1 to 3).map { _ =>
+        val t0 = System.nanoTime()
+        intercept[EOFException](NativeCodec.decode(new ByteArrayInputStream(body(t)), false))
+        (System.nanoTime() - t0) / 1e6
+      }.min
+      assert(ms < 10, s"$t: $ms ms")
+    }
+    // the custom-serialization flag and the RowBinary null flag too
+    intercept[EOFException](NativeCodec.decode(new ByteArrayInputStream(body("Int8")), true))
+    intercept[EOFException](NativeCodec.decodeRowBinary(Array[Byte](0),
+      withNamesAndTypes = false, Seq("x" -> "Nullable(Int8)")))
+  }
+
   test("writeBlocks streams bounded multi-block Native via toLocalIterator") {
     import scala.jdk.CollectionConverters._
     val df = spark.range(10).selectExpr("id", "cast(id AS string) AS s")
@@ -298,8 +332,7 @@ class FormatsSpec extends AnyFunSuite {
     val bos = new java.io.ByteArrayOutputStream()
     NativeCodec.writeRowBinary(bos, src, df.toLocalIterator().asScala,
       withNamesAndTypes = false)
-    Engine.executeInsertPayload(spark,
-      "INSERT INTO graft_fmt.rb FORMAT RowBinary", bos.toByteArray)
+    insertPayload("INSERT INTO graft_fmt.rb FORMAT RowBinary", bos.toByteArray)
     val back = Engine.execute(spark,
       "SELECT id, s, toString(d) AS d, v FROM graft_fmt.rb ORDER BY id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getDouble(3)))
@@ -309,8 +342,7 @@ class FormatsSpec extends AnyFunSuite {
     NativeCodec.writeRowBinary(bos2, src, spark.createDataFrame(Seq(
       org.apache.spark.sql.Row(3L, "c", java.sql.Date.valueOf("2025-05-06"), 0.125)
     ).asJava, src).toLocalIterator().asScala, withNamesAndTypes = true)
-    Engine.executeInsertPayload(spark,
-      "INSERT INTO graft_fmt.rb FORMAT RowBinaryWithNamesAndTypes", bos2.toByteArray)
+    insertPayload("INSERT INTO graft_fmt.rb FORMAT RowBinaryWithNamesAndTypes", bos2.toByteArray)
     assert(Engine.execute(spark, "SELECT count() AS n FROM graft_fmt.rb")
       .collect().head.getLong(0) === 3L)
   }
@@ -327,8 +359,7 @@ class FormatsSpec extends AnyFunSuite {
     val bos = new java.io.ByteArrayOutputStream()
     NativeCodec.writeBlocks(bos, df.schema,
       df.toLocalIterator().asScala, blockRows = 3) // forces 4 blocks
-    Engine.executeInsertPayload(spark,
-      "INSERT INTO graft_fmt.nat FORMAT Native", bos.toByteArray)
+    insertPayload("INSERT INTO graft_fmt.nat FORMAT Native", bos.toByteArray)
     val back = Engine.execute(spark,
       "SELECT n, s FROM graft_fmt.nat ORDER BY n").collect()
     assert(back.length === 10)
@@ -378,8 +409,7 @@ class FormatsSpec extends AnyFunSuite {
     src.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
     val payload = java.nio.file.Files.readAllBytes(part.toPath)
-    Engine.executeInsertPayload(spark,
-      "INSERT INTO graft_fmt.pq FORMAT Parquet", payload)
+    insertPayload("INSERT INTO graft_fmt.pq FORMAT Parquet", payload)
     val back = Engine.execute(spark,
       "SELECT count() AS n, sum(id) AS s, max(f) AS m FROM graft_fmt.pq")
       .collect().head
@@ -401,8 +431,7 @@ class FormatsSpec extends AnyFunSuite {
     q("SELECT toString(number) AS a, number AS b FROM numbers(3)")
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
-    Engine.executeInsertPayload(spark,
-      "INSERT INTO graft_fmt.pq2 (s, id) FORMAT Parquet",
+    insertPayload("INSERT INTO graft_fmt.pq2 (s, id) FORMAT Parquet",
       java.nio.file.Files.readAllBytes(part.toPath))
     val rows = Engine.execute(spark,
       "SELECT id, s FROM graft_fmt.pq2 ORDER BY id").collect()
@@ -429,13 +458,11 @@ class FormatsSpec extends AnyFunSuite {
     // stream framing
     val bos = new java.io.ByteArrayOutputStream()
     ArrowCodec.write(bos, src, df.toLocalIterator().asScala, file = false)
-    Engine.executeInsertPayload(spark,
-      "INSERT INTO graft_fmt.arr FORMAT ArrowStream", bos.toByteArray)
+    insertPayload("INSERT INTO graft_fmt.arr FORMAT ArrowStream", bos.toByteArray)
     // file framing
     val bos2 = new java.io.ByteArrayOutputStream()
     ArrowCodec.write(bos2, src, df.toLocalIterator().asScala, file = true)
-    Engine.executeInsertPayload(spark,
-      "INSERT INTO graft_fmt.arr FORMAT Arrow", bos2.toByteArray)
+    insertPayload("INSERT INTO graft_fmt.arr FORMAT Arrow", bos2.toByteArray)
     val back = Engine.execute(spark, """
       SELECT id, coalesce(s, '<null>') AS s, toString(d) AS d, v
       FROM graft_fmt.arr ORDER BY id, d""").collect()
@@ -459,8 +486,7 @@ class FormatsSpec extends AnyFunSuite {
     q("SELECT number AS id, toString(number) AS s, number * 1.5 AS f " +
       "FROM numbers(100)").coalesce(1).write.mode("overwrite").orc(tmp.toString)
     val part = tmp.toFile.listFiles().find(_.getName.endsWith(".orc")).get
-    Engine.executeInsertPayload(spark,
-      "INSERT INTO graft_fmt.orc1 FORMAT ORC",
+    insertPayload("INSERT INTO graft_fmt.orc1 FORMAT ORC",
       java.nio.file.Files.readAllBytes(part.toPath))
     val back = Engine.execute(spark,
       "SELECT count() AS n, sum(id) AS s, max(f) AS m FROM graft_fmt.orc1")
@@ -552,5 +578,13 @@ class FormatsSpec extends AnyFunSuite {
     assert(rows.head.getString(0) === "multi\nline\npayload")
     assert(ResultFormatter.render(Engine.execute(spark,
       "SELECT b FROM graft_fmt.blob"), "RawBLOB") === "multi\nline\npayload")
+  }
+
+  test("a text write that fails mid-stream still hands over the rows it rendered") {
+    // two partitions: 0..4 stream out, then the second partition fails
+    val df = spark.range(0, 10, 1, 2).toDF("id").where("assert_true(id < 5) IS NULL")
+    val out = new java.io.ByteArrayOutputStream()
+    intercept[Exception](graft.formats.Formats.write("TSV")(df, () => out))
+    assert(out.toString("UTF-8") === "0\n1\n2\n3\n4\n")
   }
 }

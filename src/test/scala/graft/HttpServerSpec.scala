@@ -236,6 +236,142 @@ class HttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r2 = post("INSERT INTO graft_spec.bulk (name, id) FORMAT CSV\ndelta,4")
     assert(r2.statusCode() === 200, r2.body())
     assert(post("SELECT name FROM graft_spec.bulk WHERE id = 4").body() === "delta\n")
+    // the statement in ?query= with the rows as the body
+    // (`curl '…?query=INSERT…FORMAT TSV' --data-binary @f.tsv`)
+    Seq("TSV" -> "5\tepsilon\n", "CSV" -> "6,zeta\n",
+      "JSONEachRow" -> "{\"id\":7,\"name\":\"eta\"}\n").foreach { case (fmt, rows) =>
+      val r3 = post(rows, s"?query=${enc(s"INSERT INTO graft_spec.bulk FORMAT $fmt")}")
+      assert(r3.statusCode() === 200, s"$fmt: ${r3.body()}")
+    }
+    assert(post("SELECT name FROM graft_spec.bulk WHERE id >= 5 ORDER BY id").body() ===
+      "epsilon\nzeta\neta\n")
+  }
+
+  private def postBytes(body: Array[Byte], params: String = ""): HttpResponse[Array[Byte]] =
+    client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:$port/$params"))
+      .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+      HttpResponse.BodyHandlers.ofByteArray())
+
+  private def utf8(b: Array[Byte]) = new String(b, java.nio.charset.StandardCharsets.UTF_8)
+
+  test("format round-trip matrix: every export re-imports the same rows over HTTP") {
+    import graft.dialect.Engine
+    val cols = "(i Int32, l Int64, f Float64, d Decimal(12, 2), dt Date, ts DateTime, " +
+      "s String, ns Nullable(String))"
+    post("CREATE DATABASE IF NOT EXISTS graft_http")
+    post("DROP TABLE IF EXISTS graft_http.rt_src")
+    assert(post(s"CREATE TABLE graft_http.rt_src $cols ENGINE=Memory").statusCode() === 200)
+    val ins = post("INSERT INTO graft_http.rt_src VALUES " +
+      "(1, -9007199254740993, 0.5, 1234.50, '2024-01-02', '2024-01-02 03:04:05', '\"quoted\"', NULL), " +
+      "(2, 42, -1.25, -0.01, '1999-12-31', '1999-12-31 23:59:59', 'a,b', '\"q\"'), " +
+      "(3, 0, 1e10, 0, '2000-02-29', '2000-02-29 12:00:00', 'plain', 'x y')")
+    assert(ins.statusCode() === 200, ins.body())
+    val rows = "SELECT * FROM graft_http.%s ORDER BY i"
+    val want = Engine.execute(spark, rows.format("rt_src")).collect().toSeq
+    assert(want.length === 3)
+    val formats = Seq("TSV", "TabSeparatedWithNames", "TSVWithNamesAndTypes", "CSV",
+      "CSVWithNames", "CSVWithNamesAndTypes", "JSONEachRow", "JSONCompactEachRow", "TSKV",
+      "Values", "RowBinary", "RowBinaryWithNamesAndTypes", "Native", "Arrow", "ArrowStream",
+      "Parquet", "ORC")
+    val failures = formats.flatMap { fmt =>
+      post("DROP TABLE IF EXISTS graft_http.rt_dst")
+      post(s"CREATE TABLE graft_http.rt_dst $cols ENGINE=Memory")
+      val out = postBytes(s"${rows.format("rt_src")} FORMAT $fmt".getBytes("UTF-8"))
+      assert(out.statusCode() === 200, s"$fmt export: ${utf8(out.body())}")
+      val in = postBytes(out.body(),
+        s"?query=${enc(s"INSERT INTO graft_http.rt_dst FORMAT $fmt")}")
+      if (in.statusCode() != 200) Some(s"$fmt: ${utf8(in.body())}")
+      else {
+        val got = Engine.execute(spark, rows.format("rt_dst")).collect().toSeq
+        if (got == want) None else Some(s"$fmt: $got")
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("lineitem's TIMESTAMP_NTZ l_shipdate re-imports from Native, Arrow and RowBinary") {
+    import graft.dialect.Engine
+    val src = "SELECT l_orderkey, l_linenumber, l_shipdate FROM lineitem " +
+      "ORDER BY l_orderkey, l_linenumber LIMIT 50"
+    assert(Engine.execute(spark, src).schema("l_shipdate").dataType ===
+      org.apache.spark.sql.types.TimestampNTZType)
+    val text = "SELECT l_orderkey, l_linenumber, CAST(l_shipdate AS STRING) FROM %s " +
+      "ORDER BY l_orderkey, l_linenumber LIMIT 50"
+    val want = spark.sql(text.format("lineitem")).collect().toSeq
+    post("CREATE DATABASE IF NOT EXISTS graft_http")
+    Seq("Native", "Arrow", "RowBinary").foreach { fmt =>
+      post("DROP TABLE IF EXISTS graft_http.ntz")
+      post("CREATE TABLE graft_http.ntz (l_orderkey Int64, l_linenumber Int32, " +
+        "l_shipdate DateTime) ENGINE=Memory")
+      val out = postBytes(s"$src FORMAT $fmt".getBytes("UTF-8"))
+      assert(out.statusCode() === 200, fmt)
+      val in = postBytes(out.body(), s"?query=${enc(s"INSERT INTO graft_http.ntz FORMAT $fmt")}")
+      assert(in.statusCode() === 200, s"$fmt: ${utf8(in.body())}")
+      assert(spark.sql(text.format("graft_http.ntz")).collect().toSeq === want, fmt)
+    }
+  }
+
+  test("binary INSERTs leave a query_log row and an InsertQuery each") {
+    import graft.dialect.Engine
+    def inserts(): Long = Engine.execute(spark,
+      "SELECT value FROM system.events WHERE event = 'InsertQuery'").collect().head.getLong(0)
+    def logged(stmt: String): Long = Engine.execute(spark,
+      s"SELECT count() FROM system.query_log WHERE query = '$stmt' AND type = 'QueryFinish'")
+      .collect().head.getLong(0)
+    post("CREATE DATABASE IF NOT EXISTS graft_http")
+    for (t <- Seq("trace_src", "trace")) {
+      post(s"DROP TABLE IF EXISTS graft_http.$t")
+      post(s"CREATE TABLE graft_http.$t (n Int64, s String) ENGINE=Memory")
+    }
+    post("INSERT INTO graft_http.trace_src VALUES (0, 'a'), (1, 'b'), (2, 'c')")
+    val src = "SELECT * FROM graft_http.trace_src"
+    Seq("RowBinary", "Native", "Arrow", "Parquet").foreach { fmt =>
+      val payload = postBytes(s"$src FORMAT $fmt".getBytes("UTF-8")).body()
+      val stmt = s"INSERT INTO graft_http.trace FORMAT $fmt"
+      val before = inserts()
+      val r = postBytes(payload, s"?query=${enc(stmt)}&query_id=trace-$fmt")
+      assert(r.statusCode() === 200, s"$fmt: ${utf8(r.body())}")
+      assert(inserts() - before === 1, fmt)
+      assert(logged(stmt) === 1, fmt)
+    }
+    assert(post("SELECT count() FROM graft_http.trace").body() === "12\n")
+  }
+
+  test("INTO OUTFILE writes the bytes HTTP sends, in every output format") {
+    import graft.dialect.Engine
+    import java.nio.file.Files
+    val src = "SELECT toInt64(number) AS n, toString(number) AS s, " +
+      "toDate('2024-01-02') AS d FROM numbers(4) ORDER BY n"
+    // the JSON envelopes carry the elapsed time, the one varying field
+    def masked(b: Array[Byte]) = utf8(b).replaceAll("\"elapsed\":[0-9.]+", "")
+    val dir = Files.createTempDirectory("graft_outfile_fmt")
+    Seq("TSV", "TabSeparatedWithNames", "TSVWithNamesAndTypes", "CSV", "CSVWithNames",
+      "CSVWithNamesAndTypes", "JSON", "JSONCompact", "JSONEachRow", "JSONCompactEachRow",
+      "TSKV", "Values", "Pretty", "PrettyCompact", "Vertical", "Markdown", "Null", "Native",
+      "RowBinary", "RowBinaryWithNamesAndTypes", "Arrow", "ArrowStream", "Parquet", "ORC"
+    ).foreach { fmt =>
+      val f = dir.resolve(s"out.$fmt")
+      Engine.execute(spark, s"$src INTO OUTFILE '$f' FORMAT $fmt")
+      val http = postBytes(s"$src FORMAT $fmt".getBytes("UTF-8"))
+      assert(http.statusCode() === 200, fmt)
+      val file = Files.readAllBytes(f)
+      if (fmt.startsWith("JSON")) assert(masked(file) === masked(http.body()), fmt)
+      else assert(file.sameElements(http.body()), fmt)
+    }
+    // an unknown format fails before the file exists, so a retry works
+    val g = dir.resolve("retry.out")
+    val e = intercept[IllegalArgumentException](
+      Engine.execute(spark, s"$src INTO OUTFILE '$g' FORMAT NoSuchFormat"))
+    assert(e.getMessage.contains("unknown format"), e.getMessage)
+    assert(!Files.exists(g))
+    Engine.execute(spark, s"$src INTO OUTFILE '$g' FORMAT Native")
+    assert(Files.size(g) > 0)
+    // a format with a footer cannot take a second result
+    val a = intercept[IllegalArgumentException](
+      Engine.execute(spark, s"$src INTO OUTFILE '$g' APPEND FORMAT ORC"))
+    assert(a.getMessage.contains("TRUNCATE, not APPEND"), a.getMessage)
+    Files.list(dir).forEach(p => Files.delete(p))
+    Files.delete(dir)
   }
 
   test("WITH TOTALS over HTTP: JSON `totals` member and TSV blank-line row") {

@@ -22,6 +22,9 @@ class UrlSourceSpec extends AnyFunSuite {
       s"SELECT * FROM url('file://$f', 'TSV') ORDER BY _c0")
     val rows = df.collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(rows === Seq((1, "alpha"), (2, "beta")))
+    // read by path, the relation sizes itself from the file (a join
+    // side can broadcast); one over parsed lines reports Long.MaxValue
+    assert(df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(1 << 20))
   }
 
   test("url() with .xz decompresses transparently (hits_v1.tsv.xz shape)") {
@@ -53,6 +56,36 @@ class UrlSourceSpec extends AnyFunSuite {
     val f = writeTsv(Seq("9\tnine"))
     val df = Engine.execute(spark, s"SELECT * FROM file('$f', 'TSV')")
     assert(df.collect().head.getInt(0) === 9)
+  }
+
+  test("INSERT … FORMAT and file() read the same rows from the same bytes") {
+    Engine.execute(spark, "CREATE DATABASE IF NOT EXISTS graft_spec")
+    def rows(sql: String) = Engine.execute(spark, sql).collect()
+      .map(r => (r.getInt(0), Option(r.getString(1)))).toSeq
+    val want = Seq((1, Some("\"quoted\"")), (2, None), (3, Some("a,b")))
+    Seq("TSV" -> "1\t\"quoted\"\n2\t\\N\n3\ta,b\n",
+      "CSV" -> "1,\"\"\"quoted\"\"\"\n2,\\N\n3,\"a,b\"\n").foreach { case (fmt, bytes) =>
+      val f = Files.createTempFile("urlspec_", "." + fmt.toLowerCase)
+      Files.writeString(f, bytes)
+      assert(rows(s"SELECT * FROM file('$f', '$fmt') ORDER BY _c0") === want, fmt)
+      Engine.execute(spark, "DROP TABLE IF EXISTS graft_spec.same")
+      Engine.execute(spark,
+        "CREATE TABLE graft_spec.same (id Int32, s Nullable(String)) ENGINE=Memory")
+      Engine.execute(spark, s"INSERT INTO graft_spec.same FORMAT $fmt\n$bytes")
+      assert(rows("SELECT id, s FROM graft_spec.same ORDER BY id") === want, fmt)
+    }
+  }
+
+  test("url(…, 'JSON') reads newline-delimited objects; RawBLOB names its column raw_blob") {
+    val f = Files.createTempFile("urlspec_", ".json")
+    Files.writeString(f, "{\"id\":1,\"s\":\"a\"}\n{\"id\":2,\"s\":null}\n")
+    val rows = Engine.execute(spark,
+      s"SELECT id, s FROM url('file://$f', 'JSON') ORDER BY id").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)))).toSeq
+    assert(rows === Seq((1L, Some("a")), (2L, None)))
+    val blob = Engine.execute(spark, s"SELECT raw_blob FROM file('$f', 'RawBLOB')")
+      .collect().map(_.getString(0)).toSeq
+    assert(blob === Seq(Files.readString(f)))
   }
 
   test("system.one and system.settings answer client probes") {
