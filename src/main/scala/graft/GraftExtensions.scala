@@ -26,5 +26,6 @@ object GraftExtensions {
     graft.plans.PartitionPruneFromDate,
     graft.plans.SkipIndexPrune,
     graft.plans.UInt64DistinctNarrow,
-    graft.plans.LocalSort)
+    graft.plans.LocalSort,
+    graft.plans.OneTask)
 }

@@ -48,6 +48,9 @@ object Tables {
 
   private[graft] def memoSize: Int = loadCache.size
 
+  /** Footers [[footerSchema]] has read in this JVM. */
+  private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong
+
   /** The schema `spark.read.parquet(path)` infers, read on the driver
     * with no job: the footer of the file, or of a directory's first part
     * file (Spark's inference also reads one footer when not merging
@@ -68,6 +71,7 @@ object Tables {
         .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
         .minByOption(_.getName)
     file.map { f =>
+      footerReads.incrementAndGet()
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
       val footer = try reader.getFooter finally reader.close()

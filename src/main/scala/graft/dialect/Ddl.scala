@@ -696,6 +696,10 @@ object Ddl {
     }.toMap
   }
 
+  /** `DROP VIEW [IF EXISTS] db.v`: (IF EXISTS, db, v). */
+  private val dropViewRe =
+    "(?is)^\\s*DROP\\s+VIEW\\s+(IF\\s+EXISTS\\s+)?`?(\\w+)`?\\.`?(\\w+)`?\\s*$".r
+
   private val createViewRe =
     ("(?is)^\\s*CREATE\\s+(OR\\s+REPLACE\\s+)?(MATERIALIZED\\s+)?VIEW\\s+" +
       "(IF\\s+NOT\\s+EXISTS\\s+)?([\\w`.]+)" +
@@ -1892,7 +1896,13 @@ object Ddl {
               case (_, Some(m)) =>
                 dropTableStaged(spark, Option(m.group(1)).isDefined,
                   m.group(2), sync = Option(m.group(3)).isDefined)
-              case _ => spark.sql(s)
+              case _ => dropViewRe.findFirstMatchIn(s) match {
+                // CREATE VIEW registers `db.v` as the session view `v`
+                case Some(m) if !scala.util.Try(spark.catalog.tableExists(
+                    s"${m.group(2)}.${m.group(3)}")).getOrElse(false) =>
+                  spark.sql(s"DROP VIEW ${Option(m.group(1)).getOrElse("")}`${m.group(3)}`")
+                case _ => spark.sql(s)
+              }
             }
             out
         }

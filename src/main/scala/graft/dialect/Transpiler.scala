@@ -967,15 +967,31 @@ object ChContext {
     * Re-registration for the SAME dir is skipped (queries call setup
     * per run; re-creating 10 views each time is pure overhead). */
   def setupViews(spark: SparkSession, dir: String): Unit = {
-    val marker = "graft.views.dir"
-    if (spark.conf.getOption(marker).contains(dir)) return
+    if (spark.conf.getOption(viewsMarker).contains(dir)) return
     graft.Tables.names.foreach { t =>
       graft.Tables.load(spark, dir, t).createOrReplaceTempView(t)
     }
     graft.Tables.events(spark, dir).createOrReplaceTempView("events")
     setupSystemTables(spark)
-    spark.conf.set(marker, dir)
+    spark.conf.set(viewsMarker, dir)
   }
+
+  private val viewsMarker = "graft.views.dir"
+
+  /** The fixture views of `to`, a short-lived session derived from
+    * `from`, registered from the relations `from` already resolved: no
+    * footer is read and nothing is memoized for `to`. Falls back to
+    * [[setupViews]] when `from` holds no views of `dir`. */
+  def shareViews(from: SparkSession, to: SparkSession, dir: String): Unit =
+    if (!from.conf.getOption(viewsMarker).contains(dir)) setupViews(to, dir)
+    else {
+      val (src, dst) = (from.sessionState.catalog, to.sessionState.catalog)
+      (graft.Tables.names :+ "events").foreach { t =>
+        src.getRawTempView(t).foreach(dst.createTempView(t, _, overrideIfExists = true))
+      }
+      setupSystemTables(to)
+      to.conf.set(viewsMarker, dir)
+    }
 
   /** Live catalog frames behind system.databases/tables/columns, read
     * from the session catalog on the driver: a handful of rows and no

@@ -177,7 +177,7 @@ object ResultFormatter {
     * elements; containers already render with quoted elements. */
   private def valuesCell(v: Any, dt: DataType): String = v match {
     case _: String | _: java.sql.Date | _: java.time.LocalDate |
-         _: java.sql.Timestamp | _: java.time.Instant =>
+         _: java.sql.Timestamp | _: java.time.Instant | _: java.time.LocalDateTime =>
       arrayElement(v, dt)
     case b: Array[Byte] => arrayElement(new String(b, "UTF-8"), dt)
     case other => textValue(other, dt)
@@ -191,6 +191,7 @@ object ResultFormatter {
     case d: java.time.LocalDate => dateFmt.format(d)
     case t: java.sql.Timestamp => tsFmt.format(t.toInstant)
     case t: java.time.Instant => tsFmt.format(t)
+    case t: java.time.LocalDateTime => tsFmt.format(t) // TIMESTAMP_NTZ
     case b: Boolean => if (b) "1" else "0"
     case d: java.math.BigDecimal => d.toPlainString
     case s: scala.collection.Seq[_] =>
@@ -214,7 +215,7 @@ object ResultFormatter {
     case null => "NULL"
     case _: String => "'" + v.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
     case _: java.sql.Date | _: java.time.LocalDate |
-         _: java.sql.Timestamp | _: java.time.Instant =>
+         _: java.sql.Timestamp | _: java.time.Instant | _: java.time.LocalDateTime =>
       "'" + textValue(v, dt) + "'"
     case _ => textValue(v, dt)
   }
@@ -288,7 +289,7 @@ object ResultFormatter {
     case b: Boolean => if (b) "1" else "0"
     case s: String => jsonString(s)
     case _: java.sql.Date | _: java.time.LocalDate |
-         _: java.sql.Timestamp | _: java.time.Instant =>
+         _: java.sql.Timestamp | _: java.time.Instant | _: java.time.LocalDateTime =>
       jsonString(textValue(v, dt))
     case s: scala.collection.Seq[_] =>
       val et = dt.asInstanceOf[ArrayType].elementType

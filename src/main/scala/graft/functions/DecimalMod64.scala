@@ -17,6 +17,11 @@ import org.apache.spark.sql.types.Decimal
   * makes it safe under COUNT(DISTINCT ...): the count over the longs
   * equals the count over the decimals (see
   * [[graft.plans.UInt64DistinctNarrow]]).
+  *
+  * Outside that domain the mapping collides: DECIMAL(20,0) also holds
+  * negatives and values in [2^64, 1e20), and −1 and 2^64−1 both map to
+  * −1L. The user-callable `decimalMod64` does not check its input, so a
+  * distinct count over it is exact only for keys known to be UInt64.
   */
 case class DecimalMod64(child: Expression) extends UnaryExpression {
 

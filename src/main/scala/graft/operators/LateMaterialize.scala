@@ -48,7 +48,7 @@ object LateMaterialize {
   /** Rewrite threshold: only fire when the projection is wide and the
     * phase-1 scan is narrow — otherwise two passes cost more than one. */
   private val MaxK = 1000
-  private val MinProjCols = 16
+  private[graft] val MinProjCols = 16
   private val MaxKeyCols = 10
 
   /** SQL-text entry (the dialect layer): analyze, then plan-rewrite.

@@ -126,15 +126,15 @@ class HttpServer(spark: SparkSession, port: Int,
       // session's current database would race concurrent requests and
       // leak into later ones, so such requests run on a derived session:
       // same persistent catalog (DDL tables), own current-database and
-      // (re-registered, lazy) fixture views. The session ends with the
-      // request (the finally below drops its memoized fixture relations).
+      // the base session's fixture views. The session ends with the
+      // request (the finally below drops anything it memoized).
       val session = params.get("database") match {
         case None => baseSession
         case Some(db) =>
           val s2 = baseSession.newSession()
           scoped = Some(s2)
           ChFunctions.register(s2)
-          fixtureDir.foreach(dir => graft.dialect.ChContext.setupViews(s2, dir))
+          fixtureDir.foreach(dir => graft.dialect.ChContext.shareViews(baseSession, s2, dir))
           s2.catalog.setCurrentDatabase(db)
           s2
       }

@@ -109,4 +109,33 @@ class CodegenFnsSpec extends AnyFunSuite {
     assert(q.collect().head.getLong(0) === 4L)
     assert(q.schema("c").dataType.typeName === "long")
   }
+
+  test("UInt64DistinctNarrow narrows only keys known to be UInt64: out-of-domain sets count exactly") {
+    reg()
+    def narrowed(q: org.apache.spark.sql.DataFrame) =
+      q.queryExecution.optimizedPlan.toString.contains("decimalMod64")
+    // -1 and 2^64-1 are one value mod 2^64; narrowed, they would count as 1
+    val computed = spark.sql("SELECT COUNT(DISTINCT CAST(s AS DECIMAL(20,0))) AS c " +
+      "FROM VALUES ('-1'), ('18446744073709551615') AS t(s)")
+    assert(!narrowed(computed) && computed.collect().head.getLong(0) === 2L)
+    Seq("-1", "18446744073709551615").toDF("s")
+      .selectExpr("CAST(s AS DECIMAL(20,0)) AS u").createOrReplaceTempView("narrow_neg")
+    val local = spark.sql("SELECT COUNT(DISTINCT u) AS c FROM narrow_neg")
+    assert(!narrowed(local) && local.collect().head.getLong(0) === 2L)
+    // a Union merges other rows under the first branch's column
+    Seq("18446744073709551615").toDF("s")
+      .selectExpr("CAST(s AS DECIMAL(20,0)) AS u").createOrReplaceTempView("narrow_pos")
+    val union = spark.sql("SELECT COUNT(DISTINCT u) AS c FROM " +
+      "(SELECT u FROM narrow_pos UNION ALL SELECT CAST(-1 AS DECIMAL(20,0)))")
+    assert(!narrowed(union) && union.collect().head.getLong(0) === 2L)
+    // a graft table column declared UInt64 is narrowed
+    import graft.dialect.Engine
+    Engine.execute(spark, "CREATE DATABASE IF NOT EXISTS graft_narrow")
+    Engine.execute(spark, "DROP TABLE IF EXISTS graft_narrow.t")
+    Engine.execute(spark, "CREATE TABLE graft_narrow.t (u UInt64) ENGINE=MergeTree ORDER BY u")
+    Engine.execute(spark, "INSERT INTO graft_narrow.t VALUES (1), (1), (18446744073709551615)")
+    val table = Engine.execute(spark, "SELECT COUNT(DISTINCT u) AS c FROM graft_narrow.t")
+    assert(narrowed(table) && table.collect().head.getLong(0) === 2L)
+    Engine.execute(spark, "DROP TABLE graft_narrow.t")
+  }
 }

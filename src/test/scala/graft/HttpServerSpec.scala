@@ -311,6 +311,30 @@ class HttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("TIMESTAMP_NTZ renders as DateTime text in TSV and JSONEachRow; TSV re-imports it") {
+    val src = "SELECT l_orderkey, l_linenumber, l_shipdate FROM lineitem " +
+      "ORDER BY l_orderkey, l_linenumber LIMIT 5"
+    val tsv = post(s"$src FORMAT TSV")
+    assert(tsv.statusCode() === 200, tsv.body())
+    // Spark's own NTZ-to-string cast: `yyyy-MM-dd HH:mm:ss` for whole seconds
+    val want = spark.sql("SELECT CAST(l_shipdate AS STRING) FROM lineitem " +
+      "ORDER BY l_orderkey, l_linenumber LIMIT 5").collect().map(_.getString(0)).toSeq
+    assert(want.forall(_.matches("\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}")), want)
+    assert(tsv.body().split("\n").map(_.split("\t")(2)).toSeq === want)
+    val json = post(s"$src FORMAT JSONEachRow")
+    assert(json.statusCode() === 200, json.body())
+    assert(json.body().split("\n").map(_.replaceAll(""".*"l_shipdate":"([^"]*)"}""", "$1"))
+      .toSeq === want)
+    post("CREATE DATABASE IF NOT EXISTS graft_http")
+    post("DROP TABLE IF EXISTS graft_http.ntz_tsv")
+    post("CREATE TABLE graft_http.ntz_tsv (l_orderkey Int64, l_linenumber Int32, " +
+      "l_shipdate DateTime) ENGINE=Memory")
+    val in = post(tsv.body(), s"?query=${enc("INSERT INTO graft_http.ntz_tsv FORMAT TSV")}")
+    assert(in.statusCode() === 200, in.body())
+    assert(post("SELECT * FROM graft_http.ntz_tsv ORDER BY l_orderkey, l_linenumber FORMAT TSV")
+      .body() === tsv.body())
+  }
+
   test("binary INSERTs leave a query_log row and an InsertQuery each") {
     import graft.dialect.Engine
     def inserts(): Long = Engine.execute(spark,
@@ -483,11 +507,16 @@ class HttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("database= requests and ended user sessions leave no fixture relations memoized") {
-    val before = Tables.memoSize
+    val sql = enc("SELECT n_name, count() FROM nation GROUP BY n_name ORDER BY n_name")
+    val base = get(s"/?query=$sql")
+    assert(base.statusCode() === 200 && base.body().count(_ == '\n') === 25)
+    val (before, footers) = (Tables.memoSize, Tables.footerReads.get)
     (1 to 50).foreach { _ =>
-      val r = get(s"/?query=${enc("SELECT count() FROM nation")}&database=default")
-      assert(r.statusCode() === 200 && r.body() === "25\n")
+      val r = get(s"/?query=$sql&database=default")
+      assert(r.statusCode() === 200 && r.body() === base.body())
     }
+    // the base session's fixture views are shared, not re-read
+    assert(Tables.footerReads.get === footers)
     assert(Tables.memoSize === before)
     import graft.server.UserSessions
     // a per-user session over the fixture the suite's views came from

@@ -517,9 +517,9 @@ class NativeServerSpec extends AnyFunSuite with BeforeAndAfterAll {
           "ALTER TABLE graft_spec.nat_ddl DELETE WHERE id = 2",
           "OPTIMIZE TABLE graft_spec.nat_ddl FINAL",
           "RENAME TABLE graft_spec.nat_ddl TO graft_spec.nat_ddl2",
-          "CREATE VIEW nat_v AS SELECT id FROM graft_spec.nat_ddl2",
-          "CREATE VIEW IF NOT EXISTS nat_v AS SELECT 1 AS id",
-          "DROP VIEW nat_v",
+          "CREATE VIEW graft_spec.nat_v AS SELECT id FROM graft_spec.nat_ddl2",
+          "CREATE VIEW IF NOT EXISTS graft_spec.nat_v AS SELECT 1 AS id",
+          "DROP VIEW graft_spec.nat_v",
           "CREATE TABLE graft_spec.nat_ctas ENGINE=Memory AS SELECT 1 AS x",
           "CREATE TABLE IF NOT EXISTS graft_spec.nat_ctas ENGINE=Memory AS SELECT 1 AS x",
           "DROP TABLE graft_spec.nat_ctas",
