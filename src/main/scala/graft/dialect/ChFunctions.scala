@@ -1202,12 +1202,24 @@ object ChFunctions {
     * static conf, which `spark.conf.set` refuses; `CodeGenerator`
     * reads it from the active session once, when it builds its cache
     * at the JVM's first compile, and every entry path calls this
-    * before its first query. */
+    * before its first query.
+    *
+    * And it makes [[graft.LocalFs]] the session's `file:` file system,
+    * so local writes set permissions without forking `chmod`. Every
+    * SQL conf reaches the Hadoop conf of the session's reads and
+    * writes; Hadoop's file system cache already holds a `file:`
+    * instance by now (the warehouse path was qualified through it), so
+    * the session asks for uncached instances. No caller relies on a
+    * local instance's `deleteOnExit`, which only `close` would run. */
   def register(spark: SparkSession): Unit = {
     val cap = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
     val conf = spark.sessionState.conf
     if (conf.getConf(cap) < CodegenCacheEntries)
       conf.setConfString(cap.key, CodegenCacheEntries.toString)
+    if (!conf.contains("fs.file.impl")) {
+      conf.setConfString("fs.file.impl.disable.cache", "true")
+      conf.setConfString("fs.file.impl", graft.LocalFs.Impl)
+    }
     if (registered(spark)) return
     spark.synchronized {
       if (registered(spark)) return

@@ -2935,9 +2935,11 @@ object Ddl {
     * month, which capped scan parallelism at the row-group count.
     * Every ingest path funnels here (INSERT...SELECT, VALUES, text
     * formats, RowBinary/Native/Parquet payloads) so all of them write
-    * the same sorted, prunable files. */
-  private[graft] def appendAligned(spark: SparkSession, name: String,
-                                   src0: DataFrame): Unit = {
+    * the same sorted, prunable files; a small block lands as one file
+    * per partition (see [[layoutAligned]], which `payloadBytes`, the
+    * byte length of an INSERT … FORMAT body, helps size). */
+  private[graft] def appendAligned(spark: SparkSession, name: String, src0: DataFrame,
+                                   payloadBytes: Option[Long] = None): Unit = {
     val bare = name.replace("`", "")
     val full = spark.table(bare).schema
     val baseCols = insertableFields(spark, name, full).map(_.name)
@@ -2972,7 +2974,7 @@ object Ddl {
         fireMaterializedViews(spark, bare, src)
         return
     }
-    val df = layoutAligned(spark, name, src1)
+    val df = layoutAligned(spark, name, src1, payloadBytes)
     // Concurrent INSERTs into one table share the FileOutputCommitter
     // staging dir (_temporary/0) — unserialized, one job's commit
     // deletes the other's staging and the write throws. ClickHouse
@@ -3044,29 +3046,38 @@ object Ddl {
     * expression keys (hits DDL: intHash32(UserID)) by the transpiled
     * expression. EVERY write path — INSERTs, mutations' rewrites,
     * reshapes, OPTIMIZE compaction — funnels through this, so no data
-    * change can silently degrade the clustering. */
-  private def layoutAligned(spark: SparkSession, name: String,
-                            src: DataFrame): DataFrame = {
+    * change can silently degrade the clustering.
+    *
+    * A block no larger than one file split (`spark.sql.files
+    * .openCostInBytes`, the bound [[graft.plans.OneTask]] runs a read
+    * as one task under) lands as ClickHouse lands a block: one sorted
+    * file per partition value, written by one task. Range clustering
+    * would spend a sampling job and a shuffle on it. The block is sized
+    * as OneTask sizes a read (a file scan chain or a driver-side
+    * relation); a payload the reader parses as it goes (an INSERT …
+    * FORMAT text body) is sized by its `payloadBytes`. An unsized block
+    * (`numbers()`, a join, a generator) keeps range clustering. */
+  private def layoutAligned(spark: SparkSession, name: String, src: DataFrame,
+                            payloadBytes: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     val meta = tables.get(normalize(spark, name))
     val sortCols = meta.map(_.orderBy).getOrElse(Nil).map { k =>
       if (src.columns.contains(k)) col(k)
       else expr(Transpiler.transpile(k))
     }
-    meta.flatMap(_.partitionExpr) match {
+    val (df, keys) = meta.flatMap(_.partitionExpr) match {
       case Some(pe) =>
-        val withPart = src.withColumn("_part",
-          expr(Transpiler.transpile(pe)).cast("int"))
-        if (sortCols.isEmpty) withPart
-        else {
-          val keys = col("_part") +: sortCols
-          withPart.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*)
-        }
-      case None =>
-        if (sortCols.isEmpty) src
-        else src.repartitionByRange(sortCols: _*)
-          .sortWithinPartitions(sortCols: _*)
+        (src.withColumn("_part", expr(Transpiler.transpile(pe)).cast("int")),
+          col("_part") +: sortCols)
+      case None => (src, sortCols)
     }
+    val small = graft.plans.OneTask.scanBytes(src.queryExecution.analyzed)
+      .orElse(payloadBytes).exists(_ <= spark.sessionState.conf.filesOpenCostInBytes)
+    if (small) {
+      val one = df.coalesce(1)
+      if (keys.isEmpty) one else one.sortWithinPartitions(keys: _*)
+    } else if (sortCols.isEmpty) df
+    else df.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*)
   }
 
   /** `CREATE MATERIALIZED VIEW mv [TO tgt] [ENGINE=...] [POPULATE] AS
@@ -3132,9 +3143,10 @@ object Ddl {
     * cluster. */
   private val distributedTargets = TrieMap.empty[String, String]
 
+  private val insertRe = "(?is)^\\s*INSERT\\s+INTO\\s+([\\w`.]+)\\s+(.*)$".r
+
   def insert(spark: SparkSession, sql: String): DataFrame = {
-    val m = "(?is)^\\s*INSERT\\s+INTO\\s+([\\w`.]+)\\s+(.*)$".r
-      .findFirstMatchIn(sql.trim.stripSuffix(";"))
+    val m = insertRe.findFirstMatchIn(sql.trim.stripSuffix(";"))
       .getOrElse(throw new IllegalArgumentException(s"bad INSERT: $sql"))
     val (name0, body) = (m.group(1), m.group(2).trim)
     val name = distributedTargets.getOrElse(
@@ -3476,6 +3488,9 @@ object Engine {
     }
   }
 
+  private val selectKindRe = "(?is)^\\s*(SELECT|WITH|EXPLAIN)\\b".r
+  private val insertKindRe = "(?is)^\\s*INSERT\\b".r
+
   /** Runs one statement under the query bookkeeping: query id and
     * `graft-qid-*` job group, `system.processes`, `system.query_log`
     * and the `system.events` counters. */
@@ -3483,12 +3498,10 @@ object Engine {
                              queryId: Option[String])(run: => DataFrame): DataFrame = {
     val t0 = System.currentTimeMillis()
     val id = beginQuery(spark, queryId, sql, user)
-    val isSelect = "(?is)^\\s*(SELECT|WITH|EXPLAIN)\\b".r
-      .findFirstIn(sql).isDefined
+    val isSelect = selectKindRe.findFirstIn(sql).isDefined
     cQuery.incrementAndGet()
     if (isSelect) cSelect.incrementAndGet()
-    if ("(?is)^\\s*INSERT\\b".r.findFirstIn(sql).isDefined)
-      cInsert.incrementAndGet()
+    if (insertKindRe.findFirstIn(sql).isDefined) cInsert.incrementAndGet()
     try {
       ChFunctions.register(spark)
       // lazy durable-catalog restore: first statement of a fresh JVM
@@ -3593,33 +3606,36 @@ object Engine {
     * part listings), so each probe sees post-DDL state and the catalog
     * ones run no Spark job. Each referenced name materializes a fresh
     * temp view; `system.one` passes through to its static view. */
-  private def rewriteSystemParts(spark: SparkSession, sql: String): String = {
-    val live: Seq[(String, () => DataFrame)] = Seq(
-      "detached_parts" -> (() => Ddl.detachedPartsSnapshot(spark)),
-      "parts" -> (() => Ddl.partsSnapshot(spark)),
-      "databases" -> (() => ChContext.databasesLive(spark)),
-      "tables" -> (() => ChContext.tablesLive(spark)),
-      "columns" -> (() => ChContext.columnsLive(spark)),
-      "query_log" -> (() => Engine.queryLogSnapshot(spark)),
-      "processes" -> (() => Engine.processesSnapshot(spark)),
-      "dictionaries" -> (() => Dictionaries.snapshot(spark)),
-      "projections" -> (() => Projections.snapshot(spark)),
-      "data_skipping_indices" -> (() => SkipIndexes.snapshot(spark)),
-      "functions" -> (() => UserFunctions.snapshot(spark)),
-      "dropped_tables" -> (() => Ddl.droppedTablesSnapshot(spark)),
-      "frozen_parts" -> (() => Ddl.frozenPartsSnapshot(spark)),
-      "metrics" -> (() => Engine.metricsSnapshot(spark)),
-      "events" -> (() => Engine.eventsSnapshot(spark)),
-      "settings" -> (() => Engine.settingsSnapshot(spark)))
-    live.foldLeft(sql) { case (s, (name, build)) =>
-      val re = s"(?i)(?<![\\w`])system\\.$name(?![\\w`])"
-      if (re.r.findFirstIn(s).isEmpty) s
+  private def rewriteSystemParts(spark: SparkSession, sql: String): String =
+    systemParts.foldLeft(sql) { case (s, (name, re, build)) =>
+      if (re.findFirstIn(s).isEmpty) s
       else {
-        build().createOrReplaceTempView(s"__graft_system_$name")
-        s.replaceAll(re, s"__graft_system_$name")
+        build(spark).createOrReplaceTempView(s"__graft_system_$name")
+        re.replaceAllIn(s, s"__graft_system_$name")
       }
     }
-  }
+
+  /** Each live system table: its name, `system.<name>` as a whole
+    * name, and the frame that answers it. */
+  private val systemParts: Seq[(String, scala.util.matching.Regex, SparkSession => DataFrame)] =
+    Seq[(String, SparkSession => DataFrame)](
+      "detached_parts" -> (s => Ddl.detachedPartsSnapshot(s)),
+      "parts" -> (s => Ddl.partsSnapshot(s)),
+      "databases" -> (s => ChContext.databasesLive(s)),
+      "tables" -> (s => ChContext.tablesLive(s)),
+      "columns" -> (s => ChContext.columnsLive(s)),
+      "query_log" -> (s => Engine.queryLogSnapshot(s)),
+      "processes" -> (s => Engine.processesSnapshot(s)),
+      "dictionaries" -> (s => Dictionaries.snapshot(s)),
+      "projections" -> (s => Projections.snapshot(s)),
+      "data_skipping_indices" -> (s => SkipIndexes.snapshot(s)),
+      "functions" -> (s => UserFunctions.snapshot(s)),
+      "dropped_tables" -> (s => Ddl.droppedTablesSnapshot(s)),
+      "frozen_parts" -> (s => Ddl.frozenPartsSnapshot(s)),
+      "metrics" -> (s => Engine.metricsSnapshot(s)),
+      "events" -> (s => Engine.eventsSnapshot(s)),
+      "settings" -> (s => Engine.settingsSnapshot(s)))
+      .map { case (n, build) => (n, s"(?i)(?<![\\w`])system\\.$n(?![\\w`])".r, build) }
 
   /** ClickHouse hides MATERIALIZED columns from `SELECT *` while
     * keeping them selectable by name. The physical parquet column
@@ -4107,16 +4123,18 @@ object Engine {
           new String(payload, java.nio.charset.StandardCharsets.UTF_8).trim)
       } else {
         val target = targetSchema(spark, h.table, h.cols)
-        graft.formats.Formats.read(spark, format,
-          graft.formats.Formats.Payload(payload), Some(target))(land(spark, h.table, _))
+        graft.formats.Formats.read(spark, format, graft.formats.Formats.Payload(payload),
+          Some(target))(land(spark, h.table, _, Some(payload.length.toLong)))
       }
     }
 
   /** Appends `df` to `table`: unprovided columns fill with their
     * declared DEFAULT (else NULL), matched case-insensitively, and the
-    * columns are emitted in table order. */
-  private[graft] def land(spark: SparkSession, table: String, df: DataFrame): DataFrame = {
-    Ddl.appendAligned(spark, table, Ddl.fillInsertable(spark, table, df))
+    * columns are emitted in table order. `payloadBytes` is the length
+    * of the body `df` was parsed from, if any. */
+  private[graft] def land(spark: SparkSession, table: String, df: DataFrame,
+                          payloadBytes: Option[Long] = None): DataFrame = {
+    Ddl.appendAligned(spark, table, Ddl.fillInsertable(spark, table, df), payloadBytes)
     spark.emptyDataFrame
   }
 

@@ -3,6 +3,7 @@ package graft.formats
 import java.io.{BufferedWriter, OutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, DataFrameReader, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, from_json, lit, when}
 import org.apache.spark.sql.types._
@@ -303,8 +304,9 @@ object Formats {
     val fields = names.map(n => target(target.fieldIndex(n)))
     val rows = raw.map(vs =>
       Row.fromSeq(vs.zip(fields).map { case (v, f) => coerce(v, f.dataType) }))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq),
-      StructType(fields.toIndexedSeq))
+    // a driver-side relation: the rows are already here, and the write
+    // layer sizes it like a VALUES block
+    spark.createDataFrame(rows.asJava, StructType(fields.toIndexedSeq))
   }
 
   /** Decoded wire value → the Spark external type of the target column

@@ -78,6 +78,14 @@ object CosineKnn {
               THEN shiftleft(1, p) ELSE 0 END)"""))
       .drop("planes")
 
+  /** Rows a block-pair task takes from each side: the quadratic work
+    * of one task is bounded by its square. */
+  private val BlockRows = 512
+
+  /** Blocks for `rows` rows: [[BlockRows]] rows a block, at least one. */
+  private def blocksFor(rows: Long): Int =
+    math.max(1L, (rows + BlockRows - 1) / BlockRows).toInt
+
   /** Embedding near-duplicate pairs: all (a < b) with cosine >= the
     * threshold. Exact — cosine thresholds admit no lossless bucketing
     * (unlike SimHash/prefix filtering), so O(n²) COMPUTE is inherent;
@@ -89,19 +97,21 @@ object CosineKnn {
     * B(B+1)/2 (i<=j) block-pair tasks, each a bounded
     * block-size×block-size cartesian. Replication factor ~B/2 on the
     * shuffle; per-task memory is one block, tunable independently of
-    * corpus size. Ranking/filter uses the ROUNDED similarity so
+    * corpus size. `blocks = 0` derives the count from the corpus rows
+    * ([[blocksFor]]). Ranking/filter uses the ROUNDED similarity so
     * results are engine-independent. */
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
-                   threshold: Double, blocks: Int = 8): DataFrame = {
+                   threshold: Double, blocks: Int = 0): DataFrame = {
     reg(corpus)
     // normalized unit vectors, materialized ONCE per call (r16: the
     // frame feeds both join sides AND the exact re-verify — it used to
     // recompute per reference; eager localCheckpoint, never persist)
-    val u = corpus.select(col(idCol).as("id"), asDouble(vecCol).as("v"))
+    val unit = corpus.select(col(idCol).as("id"), asDouble(vecCol).as("v"))
       .withColumn("n", sqrt(dot("v", "v")))
       .select(col("id"), expr("transform(v, x -> x / n)").as("u"))
-      .withColumn("blk", pmod(xxhash64(col("id")), lit(blocks)).cast("int"))
       .localCheckpoint(true)
+    val nBlocks = if (blocks > 0) blocks else blocksFor(unit.count())
+    val u = unit.withColumn("blk", pmod(xxhash64(col("id")), lit(nBlocks)).cast("int"))
     // r16 two-phase scan (guide §8 "decide with small rows, move big
     // rows once"): the O(n²) block-pair SCORING pass carries float32
     // copies of the unit vectors — every join output row copies both
@@ -117,7 +127,7 @@ object CosineKnn {
       expr("transform(u, x -> cast(x AS FLOAT))").as("f"))
     // a row in block k is the LEFT side of tasks (k, j>=k) and the
     // RIGHT side of tasks (i<=k, k)
-    val lhs = uf.withColumn("pj", explode(expr(s"sequence(blk, ${blocks - 1})")))
+    val lhs = uf.withColumn("pj", explode(expr(s"sequence(blk, ${nBlocks - 1})")))
       .select(col("id").as("ia"), col("f").as("fa"),
         col("blk").as("pi"), col("pj"))
     val rhs = uf.withColumn("pi", explode(expr("sequence(0, blk)")))
@@ -156,17 +166,20 @@ object CosineKnn {
     * corpus-block, so only |Q|·Bc·k candidate rows shuffle into the
     * final per-qid top-k — not the |Q|×|C| scored product. */
   def blockTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                vecCol: String, k: Int, corpusBlocks: Int = 8,
-                queryBlocks: Int = 4): DataFrame = {
+                vecCol: String, k: Int, corpusBlocks: Int = 0,
+                queryBlocks: Int = 0): DataFrame = {
     reg(corpus)
+    // 0 derives a side's block count from its rows (blocksFor)
+    val cBlocks = if (corpusBlocks > 0) corpusBlocks else blocksFor(corpus.count())
+    val qBlocks = if (queryBlocks > 0) queryBlocks else blocksFor(queries.count())
     val c = corpus.select(col(idCol).as("nid"), asDouble(vecCol).as("nv"))
       .withColumn("nn", sqrt(dot("nv", "nv")))
-      .withColumn("ci", pmod(xxhash64(col("nid")), lit(corpusBlocks)).cast("int"))
-      .withColumn("qj", explode(expr(s"sequence(0, ${queryBlocks - 1})")))
+      .withColumn("ci", pmod(xxhash64(col("nid")), lit(cBlocks)).cast("int"))
+      .withColumn("qj", explode(expr(s"sequence(0, ${qBlocks - 1})")))
     val q = queries.select(col(idCol).as("qid"), asDouble(vecCol).as("qv"))
       .withColumn("qn", sqrt(dot("qv", "qv")))
-      .withColumn("qj", pmod(xxhash64(col("qid")), lit(queryBlocks)).cast("int"))
-      .withColumn("ci", explode(expr(s"sequence(0, ${corpusBlocks - 1})")))
+      .withColumn("qj", pmod(xxhash64(col("qid")), lit(qBlocks)).cast("int"))
+      .withColumn("ci", explode(expr(s"sequence(0, ${cBlocks - 1})")))
     val scored = c.join(q, Seq("ci", "qj"))
       .filter(col("nid") =!= col("qid"))
       .withColumn("sim", round(dot("qv", "nv") / (col("qn") * col("nn")), 6))

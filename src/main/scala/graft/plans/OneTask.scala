@@ -81,9 +81,17 @@ object OneTask extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None
   }
 
+  /** Bytes `plan` reads when it is a scan chain over a relation this
+    * rule sizes, else None. An analyzed plan is accepted as is: its
+    * subquery aliases are looked through. The write layer sizes an
+    * INSERT block with it. */
+  def scanBytes(plan: LogicalPlan): Option[Long] =
+    if (isScanChain(plan)) inputBytes(plan) else None
+
   private def isScanChain(p: LogicalPlan): Boolean = p match {
     case Project(_, c) => isScanChain(c)
     case Filter(_, c) => isScanChain(c)
+    case SubqueryAlias(_, c) => isScanChain(c)
     case _: LogicalRelation | _: LocalRelation | _: OneRowRelation => true
     case _ => false
   }

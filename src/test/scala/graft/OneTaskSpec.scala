@@ -4,7 +4,7 @@ import scala.collection.mutable
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -28,36 +28,7 @@ class OneTaskSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkP
 
   override def afterAll(): Unit = HitsFixture.reset(spark)
 
-  /** Runs `f` and counts what each job group started meanwhile. */
-  private def counted(f: => Unit): Map[String, Counts] = {
-    val sc = spark.sparkContext
-    val jobs = mutable.Map.empty[String, Int]
-    val stageGroup = mutable.Map.empty[Int, String]
-    val tasks = mutable.Map.empty[String, Int]
-    def groupOf(p: java.util.Properties) =
-      Option(p).flatMap(x => Option(x.getProperty("spark.jobGroup.id"))).getOrElse("")
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-        jobs(groupOf(e.properties)) = jobs.getOrElse(groupOf(e.properties), 0) + 1
-      }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
-        stageGroup(e.stageInfo.stageId) = groupOf(e.properties)
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-        val g = stageGroup.getOrElse(e.stageId, "")
-        tasks(g) = tasks.getOrElse(g, 0) + 1
-      }
-    }
-    org.apache.spark.graftspec.Bus.drain(sc)
-    sc.addSparkListener(l)
-    try { f; org.apache.spark.graftspec.Bus.drain(sc) }
-    finally sc.removeSparkListener(l)
-    l.synchronized {
-      jobs.keySet.map { g =>
-        g -> Counts(jobs(g), stageGroup.values.count(_ == g), tasks.getOrElse(g, 0))
-      }.toMap
-    }
-  }
+  private def counted(f: => Unit): Map[String, Counts] = OneTaskSpec.counted(spark)(f)
 
   private def admitted(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.exists {
@@ -171,4 +142,35 @@ class OneTaskSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkP
 object OneTaskSpec {
   /** Jobs, stages and tasks one job group ran. */
   final case class Counts(jobs: Int, stages: Int, tasks: Int)
+
+  /** Runs `f` and counts what each job group started meanwhile. */
+  def counted(spark: SparkSession)(f: => Unit): Map[String, Counts] = {
+    val sc = spark.sparkContext
+    val jobs = mutable.Map.empty[String, Int]
+    val stageGroup = mutable.Map.empty[Int, String]
+    val tasks = mutable.Map.empty[String, Int]
+    def groupOf(p: java.util.Properties) =
+      Option(p).flatMap(x => Option(x.getProperty("spark.jobGroup.id"))).getOrElse("")
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        jobs(groupOf(e.properties)) = jobs.getOrElse(groupOf(e.properties), 0) + 1
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+        stageGroup(e.stageInfo.stageId) = groupOf(e.properties)
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+        val g = stageGroup.getOrElse(e.stageId, "")
+        tasks(g) = tasks.getOrElse(g, 0) + 1
+      }
+    }
+    org.apache.spark.graftspec.Bus.drain(sc)
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.graftspec.Bus.drain(sc) }
+    finally sc.removeSparkListener(l)
+    l.synchronized {
+      jobs.keySet.map { g =>
+        g -> Counts(jobs(g), stageGroup.values.count(_ == g), tasks.getOrElse(g, 0))
+      }.toMap
+    }
+  }
 }
