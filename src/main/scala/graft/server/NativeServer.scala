@@ -461,9 +461,8 @@ class NativeServer(spark: SparkSession, port: Int,
     * Returns (text, wasActuallyZlib) — plain text falls through with
     * false, which is how real-client compression mode is detected. */
   private def readZlibStr(in: InputStream): (String, Boolean) = {
-    val n = readVarint(in)
-    if (n <= 0) return ("", false)
-    val buf = readFixed(in, n.toInt).array()
+    val buf = readBytes(in)
+    if (buf.isEmpty) return ("", false)
     val inflater = new java.util.zip.Inflater()
     inflater.setInput(buf)
     val out = new java.io.ByteArrayOutputStream()
@@ -542,40 +541,23 @@ object NativeServer {
     out.write(v.toInt)
   }
 
-  /** Hard cap on wire-supplied string/fixed sizes: a hostile length
-    * would otherwise drive a multi-GB allocation (or an Int-wrapped 0
-    * that busy-loops) on the shared driver JVM before any validation. */
-  private val MaxWireBytes = 64 << 20
-
-  def readStr(in: InputStream): String = {
+  /** A varint-length byte string, its length checked against the wire
+    * cap before anything is allocated. */
+  private def readBytes(in: InputStream): Array[Byte] = {
     val n = readVarint(in)
-    if (n <= 0) return ""
-    require(n <= MaxWireBytes, s"string length $n exceeds wire cap")
-    val buf = new Array[Byte](n.toInt)
-    var off = 0
-    while (off < n) {
-      val k = in.read(buf, off, n.toInt - off)
-      if (k < 0) throw new java.io.EOFException()
-      off += k
-    }
-    new String(buf, "UTF-8")
+    require(n <= NativeCodec.MaxWireBytes, s"string length $n exceeds wire cap")
+    if (n <= 0) Array.emptyByteArray else NativeCodec.readFully(in, n.toInt)
   }
+
+  def readStr(in: InputStream): String = new String(readBytes(in), "UTF-8")
 
   def writeStr(out: OutputStream, s: String): Unit = {
     val bytes = s.getBytes("UTF-8")
     writeVarint(out, bytes.length); out.write(bytes)
   }
 
-  def readFixed(in: InputStream, n: Int): ByteBuffer = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val k = in.read(buf, off, n - off)
-      if (k < 0) throw new java.io.EOFException()
-      off += k
-    }
-    ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
-  }
+  def readFixed(in: InputStream, n: Int): ByteBuffer =
+    ByteBuffer.wrap(NativeCodec.readFully(in, n)).order(ByteOrder.LITTLE_ENDIAN)
 
   def writeFixed(out: OutputStream, n: Int)(fill: ByteBuffer => Unit): Unit = {
     val bb = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)

@@ -255,6 +255,36 @@ class FormatsSpec extends AnyFunSuite {
       withNamesAndTypes = false, Seq("x" -> "Nullable(Int8)")))
   }
 
+  test("Native/RowBinary decode: a declared length is checked before it is allocated") {
+    import java.io.{ByteArrayInputStream, EOFException, InputStream}
+    val out = new java.io.ByteArrayOutputStream()
+    NativeCodec.writeVarint(out, 2000000000L) // a 2 GB string
+    val claim = out.toByteArray
+    assert(claim.length === 5)
+    def timed(f: => Unit): Double = {
+      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6
+    }
+    // a byte-array body: the claim exceeds the 0 bytes left after it
+    val ms = (1 to 3).map { _ =>
+      timed {
+        val e = intercept[EOFException](NativeCodec.decodeRowBinary(claim,
+          withNamesAndTypes = false, Seq("s" -> "String")))
+        assert(e.getMessage.contains("string length 2000000000"), e)
+      }
+    }.min
+    assert(ms < 10, s"$ms ms")
+    // a column count, a row count and an array length are checked too
+    intercept[EOFException](NativeCodec.decodeRowBinary(claim, withNamesAndTypes = true, Nil))
+    intercept[EOFException](NativeCodec.decode(claim))
+    intercept[EOFException](NativeCodec.decodeRowBinary(claim,
+      withNamesAndTypes = false, Seq("a" -> "Array(Int8)")))
+    // a socket stream is held to the wire cap before anything is read
+    val socket: InputStream = new java.io.SequenceInputStream(
+      new ByteArrayInputStream(Array[Byte](1)), new ByteArrayInputStream(claim))
+    val e = intercept[IllegalArgumentException](NativeCodec.decode(socket))
+    assert(e.getMessage.contains("wire cap"), e)
+  }
+
   test("writeBlocks streams bounded multi-block Native via toLocalIterator") {
     import scala.jdk.CollectionConverters._
     val df = spark.range(10).selectExpr("id", "cast(id AS string) AS s")

@@ -137,6 +137,89 @@ class OneTaskSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkP
     assert(!admitted(df))
     assert(c.jobs === 2 && c.tasks > 2, c)
   }
+
+  /** One statement through the engine: its rows, its plan and what its
+    * job group ran. */
+  private def engineRun(sql: String): (Seq[org.apache.spark.sql.Row], DataFrame, Counts) = {
+    val qid = s"one-task-${java.util.UUID.randomUUID()}"
+    var df: DataFrame = null
+    var rows = Seq.empty[org.apache.spark.sql.Row]
+    val c = counted {
+      df = Engine.execute(spark, sql, "default", Some(qid))
+      rows = ResultFormatter.rowsOf(df).toSeq
+    }
+    (rows, df, c(s"graft-qid-$qid"))
+  }
+
+  test("one parquet file of one row group above the byte bound runs as one task") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-rowgroup").toFile
+    def footerGroups(path: String): Seq[Int] = {
+      val conf = spark.sessionState.newHadoopConf()
+      val files = new java.io.File(path).listFiles.filter(_.getName.endsWith(".parquet"))
+      files.toSeq.map { f =>
+        val st = new org.apache.hadoop.fs.Path(f.toURI).getFileSystem(conf)
+          .getFileStatus(new org.apache.hadoop.fs.Path(f.toURI))
+        Tables.footer(st, conf).getBlocks.size
+      }
+    }
+    // 64 hex characters per row hardly compress: the file is above 4 MB
+    val rows = spark.range(0, 150000, 1, 1)
+      .select(col("id"), (col("id") % 13).as("g"), sha2(col("id").cast("string"), 256).as("s"))
+    def write(name: String, df: DataFrame, blockSize: Long = 128L << 20): String = {
+      val path = s"$dir/$name"
+      df.write.option("parquet.block.size", blockSize).parquet(path)
+      spark.read.parquet(path).createOrReplaceTempView(name)
+      path
+    }
+    val one = write("rg_one", rows.coalesce(1))
+    val two = write("rg_two", rows.coalesce(1), blockSize = 4L << 20)
+    val split = write("rg_split", rows.repartition(2))
+    try {
+      val bytes = new java.io.File(one).listFiles.filter(_.getName.endsWith(".parquet")).map(_.length).sum
+      assert(bytes > spark.sessionState.conf.filesOpenCostInBytes, bytes)
+      assert(footerGroups(one) === Seq(1))
+      val twoGroups = footerGroups(two)
+      assert(twoGroups.size === 1 && twoGroups.head >= 2)
+      assert(footerGroups(split).size === 2)
+
+      def agg(t: String) = s"SELECT g, count() AS c, sum(id) AS si FROM $t WHERE id % 5 != 0 GROUP BY g ORDER BY g"
+      def star(t: String) = s"SELECT * FROM $t WHERE id % 1000 = 7"
+      val footers = Tables.footerReads.get
+      val (aggRows, aggDf, aggCounts) = engineRun(agg("rg_one"))
+      assert(Tables.footerReads.get - footers === 1)
+      assert(admitted(aggDf) && exchanges(aggDf).isEmpty)
+      assert(aggCounts === Counts(1, 1, 1))
+      val (starRows, starDf, starCounts) = engineRun(star("rg_one"))
+      assert(admitted(starDf) && starCounts.jobs === 1, starCounts)
+      assert(Tables.footerReads.get - footers === 1) // once per file version
+
+      def notAdmitted(sql: String): Seq[org.apache.spark.sql.Row] = {
+        val (r, df, _) = engineRun(sql)
+        assert(!admitted(df), sql)
+        assert(exchanges(df).nonEmpty, sql)
+        r
+      }
+      // two row groups, two files: the splits carry rows of their own
+      val twoAgg = notAdmitted(agg("rg_two"))
+      notAdmitted(agg("rg_split"))
+      // a row group above maxPartitionBytes is more than one task's worth
+      val maxSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
+      try notAdmitted(agg("rg_one"))
+      finally spark.conf.set("spark.sql.files.maxPartitionBytes", maxSplit)
+
+      // the one-task answers equal the 2-row-group copy's
+      assert(aggRows === twoAgg)
+      val (twoStar, _, _) = engineRun(star("rg_two"))
+      def digest(r: Seq[org.apache.spark.sql.Row]) = (r.size, r.map(_.hashCode.toLong).sum)
+      assert(starRows.size === 150)
+      assert(digest(starRows) === digest(twoStar))
+    } finally {
+      Seq("rg_one", "rg_two", "rg_split").foreach(spark.catalog.dropTempView)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
 }
 
 object OneTaskSpec {
