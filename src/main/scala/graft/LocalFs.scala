@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, LinkOption, Path => NioPath}
 import java.nio.file.attribute.PosixFilePermissions
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -23,6 +24,15 @@ class LocalFs extends LocalFileSystem(new LocalFs.Raw)
 object LocalFs {
   /** The `fs.file.impl` value that installs it. */
   val Impl: String = classOf[LocalFs].getName
+
+  /** Deletes `root` and everything under it, children before their
+    * directory; a missing `root` is a no-op. */
+  def deleteTree(root: NioPath): Unit =
+    if (Files.exists(root, LinkOption.NOFOLLOW_LINKS)) {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists)
+      finally walk.close()
+    }
 
   class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit =

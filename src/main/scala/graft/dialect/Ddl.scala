@@ -1095,7 +1095,7 @@ object Ddl {
     listDirs(CatalogStore.droppedDir(spark)).foreach { p =>
       val ts = p.getFileName.toString.split("\\.").lastOption
         .filter(_.forall(_.isDigit)).map(_.toLong)
-      if (ts.exists(now - _ > DropGraceMs)) deleteRecursively(p)
+      if (ts.exists(now - _ > DropGraceMs)) graft.LocalFs.deleteTree(p)
     }
   } catch { case _: Throwable => () }
 
@@ -1108,12 +1108,6 @@ object Ddl {
         s.iterator().asScala.toList.filter(java.nio.file.Files.isDirectory(_))
       } finally s.close()
     }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.deleteIfExists(_))
-  }
 
   /** `system.dropped_tables` face: what UNDROP can still restore. */
   private[graft] def droppedTablesSnapshot(spark: SparkSession): DataFrame = {
@@ -1190,7 +1184,7 @@ object Ddl {
         // generation
         try listDirs(CatalogStore.droppedDir(spark))
           .filter(_.getFileName.toString.toLowerCase.startsWith(db + "."))
-          .foreach(deleteRecursively)
+          .foreach(graft.LocalFs.deleteTree)
         catch { case _: Throwable => () }
         spark.sql(s"DROP DATABASE ${Option(ifEx).getOrElse("")} `$db` CASCADE")
       case showProcesslistRe() =>
@@ -2347,14 +2341,8 @@ object Ddl {
       // belt and braces: if the catalog retained the directory, remove
       // it — a later INSERT writing the same partition must not
       // resurrect dropped rows next to the new ones
-      val leftover = detachedLoc(spark, bare, v).getParent.getParent
-        .resolve(s"_part=$v")
-      if (java.nio.file.Files.isDirectory(leftover)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(leftover).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      graft.LocalFs.deleteTree(detachedLoc(spark, bare, v).getParent.getParent
+        .resolve(s"_part=$v"))
       spark.catalog.refreshTable(bare)
       spark.emptyDataFrame
     }
@@ -2460,11 +2448,7 @@ object Ddl {
       case Some(v) => base.resolve(s"_part=$v")
       case None => base
     }
-    if (java.nio.file.Files.exists(target)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(target).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    graft.LocalFs.deleteTree(target)
     spark.emptyDataFrame
   }
 
@@ -3282,12 +3266,7 @@ object Ddl {
             " before reusing the name")
       try {
         val dbLoc = spark.sessionState.catalog.getDatabaseMetadata(db).locationUri
-        val loc = java.nio.file.Paths.get(new java.net.URI(s"$dbLoc/$tbl"))
-        if (java.nio.file.Files.exists(loc)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
+        graft.LocalFs.deleteTree(java.nio.file.Paths.get(new java.net.URI(s"$dbLoc/$tbl")))
       } catch { case _: Throwable => () } // db missing / non-file scheme
     }
   }

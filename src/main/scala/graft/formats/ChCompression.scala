@@ -108,13 +108,13 @@ object ChCompression {
 
   /** Read exactly one compressed frame off a stream (blocking). */
   def readFrame(in: InputStream): Array[Byte] = {
-    val head = readN(in, 16 + HeaderSize)
+    val head = Wire.readFully(in, 16 + HeaderSize)
     val bb = ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
     bb.position(16 + 1)
     val compressedSize = bb.getInt
     val uncompressedSize = bb.getInt
     checkSizes(compressedSize, uncompressedSize)
-    val rest = readN(in, compressedSize - HeaderSize)
+    val rest = Wire.readFully(in, compressedSize - HeaderSize)
     val frame = new Array[Byte](16 + compressedSize)
     System.arraycopy(head, 0, frame, 0, head.length)
     System.arraycopy(rest, 0, frame, head.length, rest.length)
@@ -149,7 +149,4 @@ object ChCompression {
       n
     }
   }
-
-  private def readN(in: InputStream, n: Int): Array[Byte] =
-    NativeCodec.readFully(in, n)
 }

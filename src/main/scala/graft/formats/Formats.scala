@@ -111,11 +111,7 @@ object Formats {
         } finally {
           // recursive + non-throwing: a failed write leaves a _temporary
           // subtree, and a throwing finally would mask the real error
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-            f.delete()
-          }
-          try rm(tmp.toFile) catch { case _: Throwable => () }
+          try graft.LocalFs.deleteTree(tmp) catch { case _: Throwable => () }
         }
       })
 

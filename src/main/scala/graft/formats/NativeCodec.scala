@@ -3,7 +3,6 @@ package graft.formats
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import java.io.{ByteArrayOutputStream, ByteArrayInputStream}
-import java.nio.{ByteBuffer, ByteOrder}
 
 /** ClickHouse Native-format columnar block codec.
   *
@@ -24,85 +23,19 @@ import java.nio.{ByteBuffer, ByteOrder}
   */
 object NativeCodec {
 
-  // ---- primitives ----
+  import Wire._
 
-  def writeVarint(out: ByteArrayOutputStream, value: Long): Unit = {
-    var v = value
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-
-  def readVarint(in: java.io.InputStream): Long = {
-    var shift = 0; var result = 0L; var b = 0
-    while ({ b = in.read(); b >= 0x80 }) {
-      result |= (b & 0x7fL) << shift; shift += 7
-    }
-    // a truncated stream must surface as EOF, not as a garbage length
-    // (ORing -1 produced huge/negative sizes for downstream readFully)
-    if (b < 0) throw new java.io.EOFException("stream ended mid-varint")
-    result | (b.toLong << shift)
-  }
-
-  private def writeStr(out: ByteArrayOutputStream, s: String): Unit = {
-    val bytes = s.getBytes("UTF-8")
-    writeVarint(out, bytes.length); out.write(bytes)
-  }
-
-  private[graft] def readFully(in: java.io.InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val k = in.read(buf, off, n - off)
-      if (k < 0) throw new java.io.EOFException()
-      off += k
-    }
-    buf
-  }
-
-  /** One byte as a value: a stream that ends here is truncated (a -1
-    * taken as data would decode a claimed row count out of nothing). */
-  private def readByte(in: java.io.InputStream): Int = {
-    val b = in.read()
-    if (b < 0) throw new java.io.EOFException()
-    b
-  }
-
-  /** Hard cap on a length a socket stream declares: a hostile length
-    * would otherwise drive a multi-GB allocation on the shared driver
-    * JVM before any byte of it arrives. */
-  private[graft] val MaxWireBytes = 64 << 20
-
-  /** A length the stream declares (a string's bytes, or a count of
-    * items of at least one byte each), checked before anything is
-    * allocated for it: a byte-array body that holds fewer bytes than it
-    * declares is truncated, and a socket stream may declare no more
-    * than [[MaxWireBytes]]. */
-  private def declared(in: java.io.InputStream, what: String): Int = {
-    val n = readVarint(in)
-    in match {
-      case b: ByteArrayInputStream =>
-        if (n < 0 || n > b.available())
-          throw new java.io.EOFException(s"$what $n exceeds the ${b.available()} bytes left in the body")
-      case _ =>
-        require(n >= 0 && n <= MaxWireBytes, s"$what $n exceeds the wire cap of $MaxWireBytes bytes")
-    }
-    n.toInt
-  }
-
-  private def readStr(in: java.io.InputStream): String =
-    new String(readFully(in, declared(in, "string length")), "UTF-8")
-
-  private def fixed(out: ByteArrayOutputStream, width: Int)(fill: ByteBuffer => Unit): Unit = {
-    val bb = ByteBuffer.allocate(width).order(ByteOrder.LITTLE_ENDIAN)
-    fill(bb); out.write(bb.array())
-  }
+  /** A decoded block: (columnName, chTypeName, values) per column. */
+  type Block = Seq[(String, String, Vector[Any])]
 
   // ---- encode ----
 
   /** Stream `rows` into `out` as a sequence of Native blocks of at most
     * `blockRows` rows each (the scale-safe result boundary: driver
     * memory is bounded by one block + one partition, not the result).
-    * `frame` runs before each block for protocol packet headers.
+    * `frame` runs before each block with its row count, for protocol
+    * packet headers; `body` writes the encoded block (the TCP server
+    * wraps it in BlockInfo and, when negotiated, an LZ4 frame).
     * Always emits at least one block — an empty result is a zero-row
     * block carrying the schema, which is how clients learn the column
     * types. Returns the row count. */
@@ -110,20 +43,16 @@ object NativeCodec {
                   rows: Iterator[Row], blockRows: Int,
                   customSerFlag: Boolean = false,
                   frame: Int => Unit = _ => (),
-                  transform: Array[Byte] => Array[Byte] = identity): Long = {
+                  body: (java.io.OutputStream, Array[Byte]) => Unit = _.write(_)): Long = {
     var n = 0L
-    var any = false
-    rows.grouped(blockRows).foreach { chunk =>
-      val block = chunk.toArray
+    def emit(block: Array[Row]): Unit = {
       frame(block.length)
-      out.write(transform(encode(schema, block, customSerFlag)))
+      body(out, encode(schema, block, customSerFlag))
       n += block.length
-      any = true
     }
-    if (!any) {
-      frame(0)
-      out.write(transform(encode(schema, Array.empty[Row], customSerFlag)))
-    }
+    val chunks = rows.grouped(blockRows)
+    if (!chunks.hasNext) emit(Array.empty)
+    chunks.foreach(chunk => emit(chunk.toArray))
     n
   }
 
@@ -153,11 +82,11 @@ object NativeCodec {
   private def writeValue(out: ByteArrayOutputStream, dt: DataType, v: Any): Unit =
     dt match {
       case ByteType => out.write(if (v == null) 0 else v.asInstanceOf[Byte].toInt)
-      case ShortType => fixed(out, 2)(_.putShort(if (v == null) 0 else v.asInstanceOf[Short]))
-      case IntegerType => fixed(out, 4)(_.putInt(if (v == null) 0 else v.asInstanceOf[Int]))
-      case LongType => fixed(out, 8)(_.putLong(if (v == null) 0L else v.asInstanceOf[Long]))
-      case FloatType => fixed(out, 4)(_.putFloat(if (v == null) 0f else v.asInstanceOf[Float]))
-      case DoubleType => fixed(out, 8)(_.putDouble(if (v == null) 0d else v.asInstanceOf[Double]))
+      case ShortType => writeFixed(out, 2)(_.putShort(if (v == null) 0 else v.asInstanceOf[Short]))
+      case IntegerType => writeFixed(out, 4)(_.putInt(if (v == null) 0 else v.asInstanceOf[Int]))
+      case LongType => writeFixed(out, 8)(_.putLong(if (v == null) 0L else v.asInstanceOf[Long]))
+      case FloatType => writeFixed(out, 4)(_.putFloat(if (v == null) 0f else v.asInstanceOf[Float]))
+      case DoubleType => writeFixed(out, 8)(_.putDouble(if (v == null) 0d else v.asInstanceOf[Double]))
       case BooleanType => out.write(if (v != null && v.asInstanceOf[Boolean]) 1 else 0)
       case StringType => writeStr(out, if (v == null) "" else v.toString)
       case DateType =>
@@ -166,7 +95,7 @@ object NativeCodec {
           case d: java.sql.Date => d.toLocalDate.toEpochDay
           case d: java.time.LocalDate => d.toEpochDay
         }
-        fixed(out, 2)(_.putShort(days.toShort))
+        writeFixed(out, 2)(_.putShort(days.toShort))
       case _: TimestampType | TimestampNTZType =>
         val secs = v match {
           case null => 0L
@@ -175,7 +104,7 @@ object NativeCodec {
           // session time zone is UTC: wall-clock time reads as UTC
           case t: java.time.LocalDateTime => t.toEpochSecond(java.time.ZoneOffset.UTC)
         }
-        fixed(out, 4)(_.putInt(secs.toInt))
+        writeFixed(out, 4)(_.putInt(secs.toInt))
       case d: DecimalType =>
         val unscaled = if (v == null) BigInt(0)
           else BigInt(v.asInstanceOf[java.math.BigDecimal]
@@ -183,10 +112,10 @@ object NativeCodec {
         // Decimal(20,0) is surfaced as UInt64 (8-byte two's complement
         // round-trip; SURVEY §1.2 UInt64 caveat)
         if (d.precision == 20 && d.scale == 0)
-          fixed(out, 8)(_.putLong(unscaled.toLong))
-        else if (d.precision <= 9) fixed(out, 4)(_.putInt(unscaled.toInt))
-        else if (d.precision <= 18) fixed(out, 8)(_.putLong(unscaled.toLong))
-        else fixed(out, 16) { bb =>
+          writeFixed(out, 8)(_.putLong(unscaled.toLong))
+        else if (d.precision <= 9) writeFixed(out, 4)(_.putInt(unscaled.toInt))
+        else if (d.precision <= 18) writeFixed(out, 8)(_.putLong(unscaled.toLong))
+        else writeFixed(out, 16) { bb =>
           bb.putLong(unscaled.toLong)
           bb.putLong((unscaled >> 64).toLong)
         }
@@ -235,7 +164,7 @@ object NativeCodec {
   // ---- decode (round-trip testing + native-protocol relay) ----
 
   /** Decode one block into (columnName, chTypeName, values). */
-  def decode(bytes: Array[Byte]): Seq[(String, String, Vector[Any])] =
+  def decode(bytes: Array[Byte]): Block =
     decode(new ByteArrayInputStream(bytes))
 
   /** Decode one block from a stream positioned at a block boundary —
@@ -245,7 +174,7 @@ object NativeCodec {
     * a nonzero flag announces sparse/custom encodings this codec does
     * not speak, so it rejects loudly rather than misparse). */
   def decode(in: java.io.InputStream,
-             customSerFlag: Boolean = false): Seq[(String, String, Vector[Any])] = {
+             customSerFlag: Boolean = false): Block = {
     val nCols = declared(in, "column count")
     val nRows = declared(in, "row count")
     (0 until nCols).map { _ =>
@@ -282,13 +211,16 @@ object NativeCodec {
     var names: Seq[String] = Nil
     val rows = Vector.newBuilder[Seq[Any]]
     while (in.available() > 0) {
-      val cols = decode(in)
-      if (names.isEmpty) names = cols.map(_._1)
-      val nRows = cols.headOption.map(_._3.length).getOrElse(0)
-      (0 until nRows).foreach(r => rows += cols.map(_._3(r)))
+      val block = decode(in)
+      if (names.isEmpty) names = block.map(_._1)
+      rows ++= rowsOf(block)
     }
     (names, rows.result())
   }
+
+  /** A decoded block's rows, each its values in column order. */
+  def rowsOf(block: Block): IndexedSeq[Seq[Any]] =
+    (0 until block.headOption.fold(0)(_._3.length)).map(r => block.map(_._3(r)))
 
   /** Decode a RowBinary / RowBinaryWithNamesAndTypes INSERT payload.
     * Plain RowBinary has no header, so the caller passes the target
@@ -317,27 +249,25 @@ object NativeCodec {
     (names, rows.result())
   }
 
-  private def readValue(in: java.io.InputStream, chType: String): Any = {
-    def buf(n: Int) =
-      ByteBuffer.wrap(readFully(in, n)).order(ByteOrder.LITTLE_ENDIAN)
+  private def readValue(in: java.io.InputStream, chType: String): Any =
     chType match {
       case "Int8" => readByte(in).toByte
-      case "Int16" => buf(2).getShort
-      case "Int32" => buf(4).getInt
-      case "Int64" => buf(8).getLong
+      case "Int16" => readFixed(in, 2).getShort
+      case "Int32" => readFixed(in, 4).getInt
+      case "Int64" => readFixed(in, 8).getLong
       case "UInt8" => readByte(in)
-      case "UInt16" => buf(2).getShort & 0xffff
-      case "UInt32" => buf(4).getInt & 0xffffffffL
+      case "UInt16" => readFixed(in, 2).getShort & 0xffff
+      case "UInt32" => readFixed(in, 4).getInt & 0xffffffffL
       // unsigned view of the 8 wire bytes: 0xFFFF..FF must read back
       // as 18446744073709551615, not -1 (ref test_suite.py:359-361
       // probes exactly these boundaries)
       case "UInt64" =>
-        BigDecimal(BigInt(java.lang.Long.toUnsignedString(buf(8).getLong)))
-      case "Float32" => buf(4).getFloat
-      case "Float64" => buf(8).getDouble
+        BigDecimal(BigInt(java.lang.Long.toUnsignedString(readFixed(in, 8).getLong)))
+      case "Float32" => readFixed(in, 4).getFloat
+      case "Float64" => readFixed(in, 8).getDouble
       case "String" => readStr(in)
-      case "Date" => java.time.LocalDate.ofEpochDay((buf(2).getShort & 0xffff).toLong)
-      case "DateTime" => java.time.Instant.ofEpochSecond(buf(4).getInt & 0xffffffffL)
+      case "Date" => java.time.LocalDate.ofEpochDay((readFixed(in, 2).getShort & 0xffff).toLong)
+      case "DateTime" => java.time.Instant.ofEpochSecond(readFixed(in, 4).getInt & 0xffffffffL)
       case t if t.startsWith("Array(") =>
         val et = t.stripPrefix("Array(").stripSuffix(")")
         val n = declared(in, "array length")
@@ -346,12 +276,11 @@ object NativeCodec {
         val Array(p, s) = t.stripPrefix("Decimal(").stripSuffix(")")
           .split(",").map(_.trim.toInt)
         val unscaled: BigInt =
-          if (p <= 9) BigInt(buf(4).getInt)
-          else if (p <= 18) BigInt(buf(8).getLong)
-          else { val bb = buf(16); val lo = bb.getLong; val hi = bb.getLong
+          if (p <= 9) BigInt(readFixed(in, 4).getInt)
+          else if (p <= 18) BigInt(readFixed(in, 8).getLong)
+          else { val bb = readFixed(in, 16); val lo = bb.getLong; val hi = bb.getLong
             (BigInt(hi) << 64) | (BigInt(lo) & ((BigInt(1) << 64) - 1)) }
         BigDecimal(unscaled, s)
       case _ => readStr(in)
     }
-  }
 }

@@ -32,34 +32,40 @@ class HttpServer(spark: SparkSession, port: Int,
     (r: Runnable) => new Thread(r, "graft-http-worker"))
   server.setExecutor(pool)
 
-  /** Credential sources in ClickHouse precedence: user=/password= URL
-    * params, X-ClickHouse-User/-Key headers, then Basic auth. The
-    * default user (or none) runs on the shared root session; anything
-    * else gets its per-credential session (catalog isolation). */
+  /** The request's credentials, from the first source in ClickHouse
+    * precedence: user=/password= URL params, X-ClickHouse-User/-Key
+    * headers, then the Authorization header. Returns the session key
+    * ("user:password") and the user it names. An Authorization header
+    * that is not decodable Basic auth is its own opaque key and names
+    * no user. */
   private def credentialsOf(ex: HttpExchange,
-                            params: Map[String, String]): Option[String] = {
-    val fromParams = params.get("user").map(u =>
-      s"$u:${params.getOrElse("password", "")}")
+                            params: Map[String, String]): Option[(String, String)] = {
+    def named(user: String, password: String) = (s"$user:$password", user)
+    val fromParams = params.get("user").map(named(_, params.getOrElse("password", "")))
     val fromHeaders = Option(ex.getRequestHeaders.getFirst("X-ClickHouse-User"))
-      .map(u => s"$u:${Option(ex.getRequestHeaders.getFirst("X-ClickHouse-Key")).getOrElse("")}")
+      .map(named(_, Option(ex.getRequestHeaders.getFirst("X-ClickHouse-Key")).getOrElse("")))
     // Basic auth arrives base64-coded — decode to the same "user:pass"
-    // shape so the default-user filter below sees it (an undecoded
-    // "Basic ..." never matched, silently giving `curl -u default:` an
-    // isolated session while `?user=default` got the shared root one)
-    val fromBasic = Option(ex.getRequestHeaders.getFirst("Authorization"))
+    // shape so the default-user check in sessionFor sees it (an
+    // undecoded "Basic ..." never matched, silently giving `curl -u
+    // default:` an isolated session while `?user=default` got the
+    // shared root one)
+    val fromAuth = Option(ex.getRequestHeaders.getFirst("Authorization"))
       .map { h =>
-        if (h.startsWith("Basic "))
-          try new String(java.util.Base64.getDecoder.decode(h.drop(6).trim), UTF_8)
-          catch { case _: IllegalArgumentException => h }
-        else h
+        val basic = if (!h.startsWith("Basic ")) None
+          else try Some(new String(java.util.Base64.getDecoder.decode(h.drop(6).trim), UTF_8))
+          catch { case _: IllegalArgumentException => None }
+        basic.fold((h, ""))(c => (c, c.takeWhile(_ != ':')))
       }
-    fromParams.orElse(fromHeaders).orElse(fromBasic)
-      .filterNot(c => c == "default" || c.startsWith("default:"))
+    fromParams.orElse(fromHeaders).orElse(fromAuth)
   }
 
-  private def sessionFor(auth: Option[String]): SparkSession = auth match {
-    case None => spark
-    case Some(credentials) => UserSessions.forKey(spark, credentials, fixtureDir)
+  /** The default user (or none) runs on the shared root session;
+    * anything else gets its per-credential session (catalog
+    * isolation). */
+  private def sessionFor(key: Option[String]): SparkSession = key match {
+    case Some(k) if k != "default" && !k.startsWith("default:") =>
+      UserSessions.forKey(spark, k, fixtureDir)
+    case _ => spark
   }
 
   server.createContext("/", new HttpHandler {
@@ -111,8 +117,8 @@ class HttpServer(spark: SparkSession, port: Int,
       return
     }
 
-    val auth = Option(ex.getRequestHeaders.getFirst("Authorization"))
-    val baseSession = sessionFor(credentialsOf(ex, params))
+    val credentials = credentialsOf(ex, params)
+    val baseSession = sessionFor(credentials.map(_._1))
     val defaultFormat = params.getOrElse("default_format", "TSV")
     // query_id keys system.processes / KILL QUERY; generated if absent
     // so every request is addressable. Retired once the response has
@@ -138,18 +144,9 @@ class HttpServer(spark: SparkSession, port: Int,
           s2.catalog.setCurrentDatabase(db)
           s2
       }
-      // user identity for system.query_log: the user= param, the
-      // X-ClickHouse-User header, or the basic-auth user (in CH's
-      // precedence order); anonymous requests log as "default"
-      val user = params.get("user")
-        .orElse(Option(ex.getRequestHeaders.getFirst("X-ClickHouse-User")))
-        .orElse(auth.collect {
-          case a if a.startsWith("Basic ") =>
-            try new String(java.util.Base64.getDecoder.decode(a.drop(6)), UTF_8)
-              .takeWhile(_ != ':')
-            catch { case _: Throwable => "default" }
-        })
-        .filter(_.nonEmpty).getOrElse("default")
+      // user identity for system.query_log; anonymous requests log
+      // as "default"
+      val user = credentials.map(_._2).filter(_.nonEmpty).getOrElse("default")
       insert match {
         case Some((h, payload)) =>
           graft.dialect.Engine.insert(session, h, payload, user, Some(queryId))
@@ -317,11 +314,7 @@ object UserSessions {
           s.sessionState.catalog.getDatabaseMetadata(db).locationUri.toString))
         s.catalog.setCurrentDatabase("default")
         s.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-        if (java.nio.file.Files.exists(loc)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        graft.LocalFs.deleteTree(loc)
       } catch { case _: Throwable => () } // shutdown path: best-effort
       graft.Tables.forget(s)
     }

@@ -3,10 +3,9 @@ package graft.server
 import org.apache.spark.sql.SparkSession
 import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
 import java.net.{ServerSocket, Socket}
-import java.nio.{ByteBuffer, ByteOrder}
 import java.util.concurrent.Executors
 import graft.dialect.{ChFunctions, Engine, Transpiler}
-import graft.formats.{ChCompression, NativeCodec}
+import graft.formats.{ChCompression, NativeCodec, Wire}
 
 /** ClickHouse native TCP protocol server (SURVEY.md §2.10 A7-A10;
   * reference behavior at /root/reference/main.py:219-814).
@@ -116,24 +115,13 @@ class NativeServer(spark: SparkSession, port: Int,
             // Usually the empty terminator, but a client MAY ship an
             // actual external table — decode the full block (discarding
             // it; external tables are unsupported, not desync-fatal).
-            // Under negotiated compression the body is one LZ4 frame.
-            readStr(in)
-            if (dataCompressed) {
-              val bin = ChCompression.frameStream(in)
-              skipBlockInfo(bin)
-              NativeCodec.decode(bin, clientRevision >= 54454)
-            } else {
-              skipBlockInfo(in)
-              NativeCodec.decode(in, clientRevision >= 54454)
-            }
-            out.flush()
+            readData(in, dataCompressed, clientRevision >= 54454)
 
           case ClientPing =>
             writeVarint(out, ServerPong); out.flush()
 
           case ClientCancel => ()
 
-          case -1L => return
           case _ => return // unknown packet: drop connection
         }
       }
@@ -153,11 +141,11 @@ class NativeServer(spark: SparkSession, port: Int,
     val queryId = if (queryId0.nonEmpty) queryId0
       else java.util.UUID.randomUUID().toString
     if (clientRevision >= 54032) {
-      val kind = in.read()
+      val kind = readByte(in)
       if (kind != 0) {
         readStr(in); readStr(in); readStr(in) // initial user/query_id/address
         if (clientRevision >= 54449) readFixed(in, 8) // initial start time
-        in.read() // interface
+        readByte(in) // interface
         readStr(in); readStr(in); readStr(in) // os_user, hostname, client name
         readVarint(in); readVarint(in) // version major/minor
         val infoRevision = readVarint(in)
@@ -168,11 +156,11 @@ class NativeServer(spark: SparkSession, port: Int,
         // more client-info fields — unread, the settings loop would
         // parse them as setting names and desync every real query
         if (clientRevision >= 54401) readVarint(in) // client version patch
-        if (clientRevision >= 54442 && in.read() == 1) { // OpenTelemetry
+        if (clientRevision >= 54442 && readByte(in) == 1) { // OpenTelemetry
           readFixed(in, 16) // trace_id
           readFixed(in, 8) // span_id
           readStr(in) // tracestate
-          in.read() // trace_flags
+          readByte(in) // trace_flags
         }
         if (clientRevision >= 54453) {
           readVarint(in) // collaborate_with_initiator
@@ -185,7 +173,7 @@ class NativeServer(spark: SparkSession, port: Int,
     // gates the EXTREMES packet (type 8) like real ClickHouse.
     val settings = scala.collection.mutable.Map[String, String]()
     while ({ val name = readStr(in)
-             name.nonEmpty && { in.read(); settings(name) = readStr(in); true } }) ()
+             name.nonEmpty && { readByte(in); settings(name) = readStr(in); true } }) ()
     if (clientRevision >= 54441) readStr(in) // inter-server secret
     readVarint(in) // query stage
     val compression = readVarint(in)
@@ -209,7 +197,7 @@ class NativeServer(spark: SparkSession, port: Int,
       case _ => readZlibStr(in); readStr(in)
     }
     if (clientRevision >= 54459)
-      while ({ val name = readStr(in); name.nonEmpty && { in.read(); readStr(in); true } }) ()
+      while ({ val name = readStr(in); name.nonEmpty && { readByte(in); readStr(in); true } }) ()
 
     try {
       // Streaming INSERT (the real clickhouse-driver bulk-write flow):
@@ -258,13 +246,6 @@ class NativeServer(spark: SparkSession, port: Int,
         val used = math.min(clientRevision, Revision)
         val nCols = df.schema.fields.length
         val serFlag = clientRevision >= 54454
-        // When the client negotiated compression, BlockInfo + block go
-        // INSIDE one LZ4 frame per block; packet type and table name
-        // stay plain (the public compressed-wire layout).
-        def emitBlockBody(bytes: Array[Byte]): Unit =
-          if (lz4Responses)
-            out.write(ChCompression.compressFrame(BlockInfoBytes ++ bytes))
-          else { writeBlockInfo(out); out.write(bytes) }
         var nBlocks = 0L
         val nRows = NativeCodec.writeBlocks(out, df.schema,
           graft.formats.ResultFormatter.rowsOf(df), blockRows,
@@ -279,13 +260,8 @@ class NativeServer(spark: SparkSession, port: Int,
             if (used >= 54463) writeVarint(out, 0) // total_bytes_to_read: unknown
             if (used >= 54420) { writeVarint(out, 0); writeVarint(out, 0) } // written rows/bytes
             if (used >= 54460) writeVarint(out, System.nanoTime() - t0) // elapsed_ns
-            writeVarint(out, ServerData)
-            writeStr(out, "") // table name
-            if (!lz4Responses) writeBlockInfo(out)
           },
-          transform = if (lz4Responses)
-            (b: Array[Byte]) => ChCompression.compressFrame(BlockInfoBytes ++ b)
-          else identity)
+          body = writeBlockPacket(_, ServerData, "", _, lz4Responses))
         // TOTALS packet (type 7): the empty-grouping-set aggregate, one
         // row, encoded against the MAIN schema so both blocks announce
         // identical column types (null group keys encode as ClickHouse
@@ -294,9 +270,8 @@ class NativeServer(spark: SparkSession, port: Int,
           // same queryId: KILL QUERY cancels the totals pass too
           val trows = Engine.execute(session, tq, authUser, Some(queryId))
             .limit(2).collect()
-          writeVarint(out, ServerTotals)
-          writeStr(out, "")
-          emitBlockBody(NativeCodec.encode(df.schema, trows, serFlag))
+          writeBlockPacket(out, ServerTotals, "",
+            NativeCodec.encode(df.schema, trows, serFlag), lz4Responses)
         }
         // EXTREMES packet (type 8), gated on the `extremes` setting like
         // real ClickHouse: min/max per numeric/date column over the
@@ -320,9 +295,8 @@ class NativeServer(spark: SparkSession, port: Int,
             fields.indices.map(i => ext.get(2 * i)))
           val maxRow = org.apache.spark.sql.Row.fromSeq(
             fields.indices.map(i => ext.get(2 * i + 1)))
-          writeVarint(out, ServerExtremes)
-          writeStr(out, "")
-          emitBlockBody(NativeCodec.encode(df.schema, Array(minRow, maxRow), serFlag))
+          writeBlockPacket(out, ServerExtremes, "",
+            NativeCodec.encode(df.schema, Array(minRow, maxRow), serFlag), lz4Responses)
         }
         // PROFILE_INFO (type 6, reference constant main.py:60): rows,
         // blocks, bytes, applied_limit, rows_before_limit,
@@ -369,24 +343,6 @@ class NativeServer(spark: SparkSession, port: Int,
                                     compressed: Boolean): Unit = {
     val bare = table.replace("`", "")
     val target = Engine.targetSchema(session, bare, cols)
-    def readBlock(): (String, Seq[(String, String, Vector[Any])]) = {
-      val tableName = readStr(in)
-      val block =
-        if (compressed) {
-          // frame-spanning: one block can arrive as several ~1 MiB
-          // frames (clients flush mid-block at max_compress_block_size)
-          // — pull frames lazily until the block's structure is decoded
-          val bin = ChCompression.frameStream(in)
-          skipBlockInfo(bin)
-          NativeCodec.decode(bin, serFlag)
-        } else {
-          skipBlockInfo(in)
-          NativeCodec.decode(in, serFlag)
-        }
-      (tableName, block)
-    }
-    def nRowsOf(b: Seq[(String, String, Vector[Any])]): Int =
-      b.headOption.map(_._3.length).getOrElse(0)
     // External tables: every real client (clickhouse-driver
     // send_external_tables) streams zero or more NAMED blocks plus an
     // UNNAMED empty terminator block IMMEDIATELY after the query,
@@ -400,19 +356,15 @@ class NativeServer(spark: SparkSession, port: Int,
     var extDone = false
     while (!extDone) {
       readVarint(in) match {
-        case ClientData => if (readBlock()._1.isEmpty) extDone = true
+        case ClientData => extDone = readData(in, compressed, serFlag)._1.isEmpty
         case ClientPing => writeVarint(out, ServerPong); out.flush()
         case ClientCancel => extDone = true
-        case -1L => throw new java.io.EOFException()
         case other =>
           throw new IllegalStateException(s"unexpected packet $other before INSERT data")
       }
     }
-    writeVarint(out, ServerData)
-    writeStr(out, bare)
-    val sample = NativeCodec.encode(target, Array.empty, serFlag)
-    if (compressed) out.write(ChCompression.compressFrame(BlockInfoBytes ++ sample))
-    else { writeBlockInfo(out); out.write(sample) }
+    writeBlockPacket(out, ServerData, bare,
+      NativeCodec.encode(target, Array.empty, serFlag), compressed)
     out.flush()
     // Land in bounded chunks: blocks arrive pre-framed, so buffering
     // the WHOLE stream before one append put an O(insert-size) heap
@@ -434,20 +386,19 @@ class NativeServer(spark: SparkSession, port: Int,
     while (!done) {
       readVarint(in) match {
         case ClientData =>
-          val block = readBlock()._2
-          val nRows = nRowsOf(block)
+          val block = readData(in, compressed, serFlag)._2
+          val received = NativeCodec.rowsOf(block)
           // a zero-row block (0 cols, or schema echo with 0 rows) is
           // the stream terminator
-          if (nRows == 0) done = true
+          if (received.isEmpty) done = true
           else {
             if (names.isEmpty) names = block.map(_._1)
-            (0 until nRows).foreach(r => rows += block.map(_._3(r)))
-            buffered += nRows
+            rows ++= received
+            buffered += received.length
             if (buffered >= FlushRows) flush()
           }
         case ClientPing => writeVarint(out, ServerPong); out.flush()
         case ClientCancel => done = true
-        case -1L => throw new java.io.EOFException()
         case other =>
           throw new IllegalStateException(s"unexpected packet $other during INSERT")
       }
@@ -481,19 +432,37 @@ class NativeServer(spark: SparkSession, port: Int,
     }
   }
 
-  /** BlockInfo: field 1 = is_overflows(0), field 2 = bucket_num(-1),
-    * field 0 = end (main.py:562-568). */
-  private def writeBlockInfo(out: OutputStream): Unit = {
-    writeVarint(out, 1); out.write(0)
-    writeVarint(out, 2); writeFixed(out, 4)(_.putInt(-1))
-    writeVarint(out, 0)
+  /** A block-carrying server packet (DATA, TOTALS, EXTREMES): type and
+    * table name, then BlockInfo + the encoded block. When the query
+    * negotiated compression, BlockInfo + block go INSIDE one LZ4 frame;
+    * packet type and table name stay plain (the public compressed-wire
+    * layout). */
+  private def writeBlockPacket(out: OutputStream, kind: Long, table: String,
+                               block: Array[Byte], compressed: Boolean): Unit = {
+    writeVarint(out, kind)
+    writeStr(out, table)
+    if (compressed) out.write(ChCompression.compressFrame(BlockInfoBytes ++ block))
+    else { out.write(BlockInfoBytes); out.write(block) }
+  }
+
+  /** A client DATA packet after its type: (table name, block), the
+    * BlockInfo skipped. Under negotiated compression the body is
+    * frame-spanning: one block can arrive as several ~1 MiB frames
+    * (clients flush mid-block at max_compress_block_size), so frames
+    * are pulled lazily until the block's structure is decoded. */
+  private def readData(in: InputStream, compressed: Boolean,
+                       serFlag: Boolean): (String, NativeCodec.Block) = {
+    val table = readStr(in)
+    val body = if (compressed) ChCompression.frameStream(in) else in
+    skipBlockInfo(body)
+    (table, NativeCodec.decode(body, serFlag))
   }
 
   private def skipBlockInfo(in: InputStream): Unit = {
     var field = readVarint(in)
     while (field != 0) {
       field match {
-        case 1 => in.read()
+        case 1 => readByte(in)
         case 2 => readFixed(in, 4)
         case other =>
           // an unknown field's VALUE size is unknown — returning here
@@ -505,7 +474,7 @@ class NativeServer(spark: SparkSession, port: Int,
   }
 }
 
-object NativeServer {
+object NativeServer extends Wire {
   // client packet types (main.py:40-50 enum order)
   val ClientHello = 0L; val ClientQuery = 1L; val ClientData = 2L
   val ClientCancel = 3L; val ClientPing = 4L
@@ -514,55 +483,13 @@ object NativeServer {
   val ServerProgress = 3L; val ServerPong = 4L; val ServerEndOfStream = 5L
   val ServerProfileInfo = 6L; val ServerTotals = 7L; val ServerExtremes = 8L
 
-  /** Serialized BlockInfo (is_overflows=0, bucket_num=-1, end) — the
-    * prefix that goes inside each compressed frame. */
+  /** Serialized BlockInfo: field 1 = is_overflows (0), field 2 =
+    * bucket_num (-1 as Int32), field 0 = end (main.py:562-568). */
   val BlockInfoBytes: Array[Byte] = Array[Byte](1, 0, 2, -1, -1, -1, -1, 0)
 
   val ServerName = "graft"
   val VersionMajor = 25L; val VersionMinor = 5L; val VersionPatch = 2L
   val Revision = 54468L // protocol revision the reference reports (main.py:75-78)
-
-  def readVarint(in: InputStream): Long = {
-    var shift = 0; var result = 0L; var b = in.read()
-    if (b < 0) return -1L // clean EOF at a packet boundary
-    while ((b & 0x80) != 0) {
-      result |= (b & 0x7fL) << shift; shift += 7; b = in.read()
-      // MID-varint truncation must raise, not return a garbage value
-      // (a truncated settings name read as "" would end the settings
-      // loop early and misparse everything after it)
-      if (b < 0) throw new java.io.EOFException("stream ended mid-varint")
-    }
-    result | (b.toLong << shift)
-  }
-
-  def writeVarint(out: OutputStream, value: Long): Unit = {
-    var v = value
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-
-  /** A varint-length byte string, its length checked against the wire
-    * cap before anything is allocated. */
-  private def readBytes(in: InputStream): Array[Byte] = {
-    val n = readVarint(in)
-    require(n <= NativeCodec.MaxWireBytes, s"string length $n exceeds wire cap")
-    if (n <= 0) Array.emptyByteArray else NativeCodec.readFully(in, n.toInt)
-  }
-
-  def readStr(in: InputStream): String = new String(readBytes(in), "UTF-8")
-
-  def writeStr(out: OutputStream, s: String): Unit = {
-    val bytes = s.getBytes("UTF-8")
-    writeVarint(out, bytes.length); out.write(bytes)
-  }
-
-  def readFixed(in: InputStream, n: Int): ByteBuffer =
-    ByteBuffer.wrap(NativeCodec.readFully(in, n)).order(ByteOrder.LITTLE_ENDIAN)
-
-  def writeFixed(out: OutputStream, n: Int)(fill: ByteBuffer => Unit): Unit = {
-    val bb = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    fill(bb); out.write(bb.array())
-  }
 }
 
 /** `runMain graft.server.NativeServeMain [port] [sfDir]` */

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.formats.{ResultFormatter, NativeCodec, ChTypeNames}
+import graft.formats.{ResultFormatter, NativeCodec, ChTypeNames, Wire}
 import graft.dialect.Transpiler
 
 /** Output-format shapes mirroring the reference's expectations
@@ -223,9 +223,21 @@ class FormatsSpec extends AnyFunSuite {
   test("varint round-trips across widths") {
     val out = new java.io.ByteArrayOutputStream()
     val vals = Seq(0L, 1L, 127L, 128L, 300L, 65536L, Int.MaxValue.toLong, 1L << 40)
-    vals.foreach(v => NativeCodec.writeVarint(out, v))
+    vals.foreach(v => Wire.writeVarint(out, v))
     val in = new java.io.ByteArrayInputStream(out.toByteArray)
-    vals.foreach(v => assert(NativeCodec.readVarint(in) === v))
+    vals.foreach(v => assert(Wire.readVarint(in) === v))
+    // a stream that ends inside a varint is truncated
+    intercept[java.io.EOFException](Wire.readVarint(
+      new java.io.ByteArrayInputStream(Array[Byte](0x80.toByte, 0x80.toByte))))
+    // ten bytes carry all 64 bits; an eleventh is rejected, not wrapped
+    val max = new java.io.ByteArrayOutputStream()
+    Wire.writeVarint(max, -1L)
+    assert(max.size() === 10)
+    assert(Wire.readVarint(new java.io.ByteArrayInputStream(max.toByteArray)) === -1L)
+    val tooLong = Array.fill[Byte](10)(0x80.toByte) :+ 1.toByte
+    val e = intercept[IllegalArgumentException](
+      Wire.readVarint(new java.io.ByteArrayInputStream(tooLong)))
+    assert(e.getMessage.contains("longer than 10 bytes"), e)
   }
 
   test("Native decode: a truncated body fails with EOFException at once") {
@@ -233,8 +245,8 @@ class FormatsSpec extends AnyFunSuite {
     // one column that claims 50M rows and carries none of them
     def body(tpe: String): Array[Byte] = {
       val b = new ByteArrayOutputStream()
-      NativeCodec.writeVarint(b, 1); NativeCodec.writeVarint(b, 50000000)
-      Seq("x", tpe).foreach { s => NativeCodec.writeVarint(b, s.length); b.write(s.getBytes("UTF-8")) }
+      Wire.writeVarint(b, 1); Wire.writeVarint(b, 50000000)
+      Seq("x", tpe).foreach { s => Wire.writeVarint(b, s.length); b.write(s.getBytes("UTF-8")) }
       b.toByteArray
     }
     assert(body("Int8").length === 12)
@@ -258,7 +270,7 @@ class FormatsSpec extends AnyFunSuite {
   test("Native/RowBinary decode: a declared length is checked before it is allocated") {
     import java.io.{ByteArrayInputStream, EOFException, InputStream}
     val out = new java.io.ByteArrayOutputStream()
-    NativeCodec.writeVarint(out, 2000000000L) // a 2 GB string
+    Wire.writeVarint(out, 2000000000L) // a 2 GB string
     val claim = out.toByteArray
     assert(claim.length === 5)
     def timed(f: => Unit): Double = {

@@ -567,6 +567,18 @@ class HttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(postAs("carol2:pw", "SELECT v FROM defshare").statusCode() === 400)
   }
 
+  test("a Basic-auth request's query_log row carries the Basic user") {
+    val stmt = "SELECT 4242 AS basic_user_probe"
+    val token = java.util.Base64.getEncoder.encodeToString("erin:pw".getBytes)
+    val r = client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:$port/"))
+      .header("Authorization", s"Basic $token")
+      .POST(HttpRequest.BodyPublishers.ofString(stmt)).build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() === 200 && r.body() === "4242\n", r.body())
+    val users = post(s"SELECT DISTINCT user FROM system.query_log WHERE query = '$stmt'")
+    assert(users.body() === "erin\n")
+  }
+
   test("shutdown purge removes per-credential scratch warehouses (main.py:934-952)") {
     import graft.server.UserSessions
     val s = UserSessions.forKey(spark, "carol:pw", None)

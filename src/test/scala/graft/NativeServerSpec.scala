@@ -239,6 +239,25 @@ class NativeServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sock.close()
   }
 
+  test("a QUERY packet cut short by the client closes the connection, with no EXCEPTION") {
+    val (sock, in, out) = connect()
+    try {
+      hello(out); readServerHello(in)
+      P.writeVarint(out, P.ClientQuery)
+      P.writeStr(out, "truncated-query")
+      out.write(0) // no client info; settings, stage and text never come
+      out.flush()
+      sock.shutdownOutput()
+      // generous, so a late answer (after a cold catalog restore) is
+      // still seen
+      sock.setSoTimeout(60000)
+      val got = try in.read() catch {
+        case _: java.net.SocketException => -1 // RST also proves close
+      }
+      assert(got === -1, s"server answered a truncated QUERY with packet $got")
+    } finally sock.close()
+  }
+
   test("bad query -> EXCEPTION packet (main.py:664-667)") {
     val (sock, in, out) = connect()
     try {
