@@ -3277,881 +3277,3 @@ object Ddl {
     else s"${spark.catalog.currentDatabase}.$bare"
   }
 }
-
-/** Statement router: the single entry point servers/clients call with
-  * raw ClickHouse SQL (possibly `USE db; query` — the reference
-  * prefixes the database selection the same way, main.py:860-861). */
-object Engine {
-  /** `INSERT INTO t [(cols)] [VALUES | FORMAT x]` through the end of
-    * its line: the header of every bulk write. With a FORMAT, its rows
-    * follow inline, fill the rest of an HTTP body, or are the whole
-    * body when the header came in the `query` param; they never pass
-    * through statement splitting. */
-  private val insertHeaderRe =
-    ("(?is)^\\s*INSERT\\s+INTO\\s+([\\w`.]+)\\s*(?:\\(([^)]*)\\))?\\s*" +
-      "(?:VALUES|FORMAT\\s+(\\w+))?[ \\t]*(?:\\r?\\n|$)").r
-
-  /** A parsed INSERT header; `statement` is its text. */
-  private[graft] final case class InsertHeader(statement: String, table: String,
-                                               cols: Option[Seq[String]],
-                                               format: Option[String])
-
-  /** The INSERT header `text` opens with, and the offset after it. */
-  private[graft] def insertHeader(text: String): Option[(InsertHeader, Int)] =
-    insertHeaderRe.findPrefixMatchOf(text).map { m =>
-      (InsertHeader(m.matched.trim, m.group(1),
-        Option(m.group(2)).map(_.split(",").map(_.trim.replace("`", "")).toSeq),
-        Option(m.group(3))), m.end)
-    }
-
-  /** Bounded query log behind `system.query_log` (most-probed columns
-    * of ClickHouse's table). Durations cover the synchronous part of
-    * execution — DDL/DML fully; a SELECT's lazy tail materializes at
-    * the caller's sink and is not included. */
-  private case class LogEntry(eventTimeMs: Long, query: String,
-                              durationMs: Long, qtype: String, user: String)
-  private val queryLog =
-    new java.util.concurrent.ConcurrentLinkedDeque[LogEntry]()
-  private val maxLog = 1000
-
-  private def record(e: LogEntry): Unit = {
-    queryLog.addLast(e)
-    while (queryLog.size() > maxLog) queryLog.pollFirst()
-  }
-
-  private[graft] def queryLogSnapshot(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    queryLog.iterator().asScala.toSeq
-      .map(e => (new java.sql.Timestamp(e.eventTimeMs), e.query,
-        e.durationMs, e.qtype, e.user))
-      .toDF("event_time", "query", "query_duration_ms", "type", "user")
-  }
-
-  /** Live registry behind `system.processes` and `KILL QUERY`. Every
-    * execute() tags its thread with a per-query job group
-    * (interruptOnCancel), so a KILL from another connection cancels the
-    * query's running/future Spark jobs — including the lazy tail of a
-    * SELECT that is still streaming to its client. Entries retire when
-    * the statement's synchronous part ends (DDL/DML) or when the server
-    * finishes streaming ([[finishQuery]]); a size cap bounds strays. */
-  private case class Running(groupId: String, startMs: Long, query: String,
-                             user: String, sc: org.apache.spark.SparkContext)
-  private val running =
-    scala.collection.concurrent.TrieMap.empty[String, Running]
-  private val maxRunning = 200
-  private val lastIdOnThread = new ThreadLocal[String]
-
-  private def beginQuery(spark: SparkSession, queryId: Option[String],
-                         query: String, user: String): String = {
-    val id = queryId.filter(_.nonEmpty)
-      .getOrElse(java.util.UUID.randomUUID().toString)
-    val gid = s"graft-qid-$id"
-    spark.sparkContext.setJobGroup(gid, query.take(200),
-      interruptOnCancel = true)
-    // one thread runs one query at a time: starting a new one retires
-    // the thread's previous entry (library callers never call
-    // finishQuery; without this a query loop would pool up to the cap)
-    Option(lastIdOnThread.get()).foreach(finishQuery)
-    lastIdOnThread.set(id)
-    if (running.size >= maxRunning) // bound strays (oldest first)
-      running.toSeq.sortBy(_._2.startMs).take(running.size - maxRunning + 1)
-        .foreach { case (k, _) => running.remove(k) }
-    running.put(id, Running(gid, System.currentTimeMillis(), query, user,
-      spark.sparkContext))
-    id
-  }
-
-  /** Retire a query from `system.processes` once its result has fully
-    * streamed. Servers call this from their response `finally`. */
-  def finishQuery(id: String): Unit = running.remove(id)
-
-  // cumulative profile counters behind system.events (ClickHouse's
-  // own counter names); started-at stamp feeds the Uptime metric
-  private val startedAtMs = System.currentTimeMillis()
-  private val cQuery = new java.util.concurrent.atomic.AtomicLong
-  private val cSelect = new java.util.concurrent.atomic.AtomicLong
-  private val cInsert = new java.util.concurrent.atomic.AtomicLong
-  private val cFailed = new java.util.concurrent.atomic.AtomicLong
-
-  /** system.settings, live: defaults merged with the session's SET
-    * overrides (`changed` = 1 exactly for overrides, like ClickHouse). */
-  private[graft] def settingsSnapshot(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val base = Map("max_threads" -> "32", "session_timezone" -> "UTC",
-      "readonly" -> "0")
-    val over = sessionSettings.synchronized {
-      sessionSettings.getOrElse(spark, Map.empty)
-    }
-    (base ++ over).toSeq.sortBy(_._1)
-      .map { case (k, v) => (k, v, if (over.contains(k)) 1 else 0, "") }
-      .toDF("name", "value", "changed", "description")
-  }
-
-  /** system.metrics: point-in-time gauges (live, not a snapshot). */
-  private[graft] def metricsSnapshot(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val rt = Runtime.getRuntime
-    Seq(
-      ("Query", running.size.toLong, "Number of executing queries"),
-      ("MemoryTracking", rt.totalMemory() - rt.freeMemory(),
-        "Total amount of memory allocated by the server"),
-      ("Uptime", (System.currentTimeMillis() - startedAtMs) / 1000,
-        "Server uptime in seconds"))
-      .toDF("metric", "value", "description")
-  }
-
-  /** system.events: cumulative counters since process start. */
-  private[graft] def eventsSnapshot(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("Query", cQuery.get, "Number of queries started"),
-      ("SelectQuery", cSelect.get, "Number of SELECT queries started"),
-      ("InsertQuery", cInsert.get, "Number of INSERT queries started"),
-      ("FailedQuery", cFailed.get, "Number of failed queries"),
-      ("CompileFunction",
-        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
-        "Number of generated classes compiled"))
-      .toDF("event", "value", "description")
-  }
-
-  private[graft] def processesSnapshot(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val now = System.currentTimeMillis()
-    running.toSeq.sortBy(_._2.startMs)
-      .map { case (id, r) =>
-        (id, r.user, (now - r.startMs) / 1000.0, r.query) }
-      .toDF("query_id", "user", "elapsed", "query")
-  }
-
-  private val killQueryRe =
-    "(?is)^\\s*KILL\\s+QUERY\\s+WHERE\\s+(.+?)\\s*(?:SYNC|ASYNC|TEST)?\\s*$".r
-
-  /** `KILL QUERY WHERE <cond> [SYNC|ASYNC|TEST]` — the predicate runs
-    * over the system.processes frame (so any of its columns work),
-    * matched queries get their job group cancelled, and the ClickHouse
-    * result shape (kill_status, query_id, user, query) returns. */
-  private def killQuery(spark: SparkSession, cond: String): DataFrame = {
-    import spark.implicits._
-    val matched = processesSnapshot(spark)
-      .filter(org.apache.spark.sql.functions.expr(Transpiler.transpile(cond)))
-      .select("query_id").collect().map(_.getString(0)).toSeq
-    val rows = matched.flatMap { id =>
-      running.remove(id).map { r =>
-        try r.sc.cancelJobGroup(r.groupId) catch { case _: Throwable => () }
-        ("finished", id, r.user, r.query)
-      }
-    }
-    rows.toDF("kill_status", "query_id", "user", "query")
-  }
-
-  def execute(spark: SparkSession, rawSql: String): DataFrame =
-    execute(spark, rawSql, "default")
-
-  def execute(spark: SparkSession, rawSql: String, user: String): DataFrame =
-    execute(spark, rawSql, user, None)
-
-  /** @param queryId client-supplied id (HTTP `query_id=` param /
-    *                native client info) keying `system.processes` and
-    *                `KILL QUERY`; generated when absent. */
-  def execute(spark: SparkSession, rawSql: String, user: String,
-              queryId: Option[String]): DataFrame = {
-    killQueryRe.findFirstMatchIn(rawSql) match {
-      case Some(m) => return killQuery(spark, m.group(1))
-      case None => ()
-    }
-    insertHeader(rawSql) match {
-      case Some((h, end)) if h.format.isDefined => insert(spark, h,
-        rawSql.substring(end).getBytes(java.nio.charset.StandardCharsets.UTF_8), user, queryId)
-      case _ => tracked(spark, rawSql, user, queryId)(executeInner(spark, rawSql))
-    }
-  }
-
-  private val selectKindRe = "(?is)^\\s*(SELECT|WITH|EXPLAIN)\\b".r
-  private val insertKindRe = "(?is)^\\s*INSERT\\b".r
-
-  /** Runs one statement under the query bookkeeping: query id and
-    * `graft-qid-*` job group, `system.processes`, `system.query_log`
-    * and the `system.events` counters. */
-  private[graft] def tracked(spark: SparkSession, sql: String, user: String,
-                             queryId: Option[String])(run: => DataFrame): DataFrame = {
-    val t0 = System.currentTimeMillis()
-    val id = beginQuery(spark, queryId, sql, user)
-    val isSelect = selectKindRe.findFirstIn(sql).isDefined
-    cQuery.incrementAndGet()
-    if (isSelect) cSelect.incrementAndGet()
-    if (insertKindRe.findFirstIn(sql).isDefined) cInsert.incrementAndGet()
-    try {
-      ChFunctions.register(spark)
-      // lazy durable-catalog restore: first statement of a fresh JVM
-      // re-registers persisted tables/dictionaries/projections
-      CatalogStore.ensureRestored(spark)
-      val out = run
-      // the log itself is queryable but never logs its own reads
-      if (!sql.toLowerCase.contains("system.query_log"))
-        record(LogEntry(t0, sql, System.currentTimeMillis() - t0,
-          "QueryFinish", user))
-      out
-    } catch {
-      case e: Throwable =>
-        record(LogEntry(t0, sql, System.currentTimeMillis() - t0,
-          "ExceptionWhileProcessing", user))
-        cFailed.incrementAndGet()
-        finishQuery(id)
-        throw e
-    } finally {
-      // DDL/DML ran synchronously — retire now. A SELECT's jobs run at
-      // the caller's sink; it stays listed until finishQuery (servers)
-      // or the size cap (library callers, where cancellation targets
-      // the caller's own thread anyway).
-      if (!isSelect) finishQuery(id)
-    }
-  }
-
-  private def executeInner(spark: SparkSession, rawSql: String): DataFrame = {
-    val statements = SqlScan(rawSql).split(';').map(_.trim).filter(_.nonEmpty)
-    statements.map { st0 =>
-      val st = graft.sources.UrlTableFunction.rewrite(spark, st0)
-      if (Ddl.isDdl(st)) Ddl.execute(spark, st)
-      else {
-        val (noFmt, fmt) = Transpiler.extractFormat(st)
-        outfileRe.findFirstMatchIn(noFmt) match {
-          case Some(m) =>
-            // `SELECT ... INTO OUTFILE 'f' [APPEND|TRUNCATE] [FORMAT x]`
-            // — the bytes HTTP would send (TSV default, main.py:853);
-            // the rows still return. Like the reference, an existing
-            // file is refused unless APPEND or TRUNCATE is given.
-            val fmtName = fmt.getOrElse("TSV")
-            val writer = graft.formats.Formats.write(fmtName)
-            val df = query(spark, m.group(1))
-            val p = java.nio.file.Paths.get(m.group(2))
-            import java.nio.file.StandardOpenOption._
-            val opts = Option(m.group(3)).map(_.toUpperCase) match {
-              case Some("APPEND") =>
-                if (!writer.appendable) throw new IllegalArgumentException(
-                  s"INTO OUTFILE ... FORMAT $fmtName supports TRUNCATE, not APPEND")
-                Seq(CREATE, APPEND)
-              case Some("TRUNCATE") => Seq(CREATE, TRUNCATE_EXISTING)
-              case _ =>
-                if (java.nio.file.Files.exists(p))
-                  throw new IllegalArgumentException(
-                    s"File ${m.group(2)} exists; use INTO OUTFILE ... APPEND or TRUNCATE")
-                Seq(CREATE_NEW)
-            }
-            var os: java.io.OutputStream = null
-            try writer(df, () => {
-              if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-              os = new java.io.BufferedOutputStream(
-                java.nio.file.Files.newOutputStream(p, opts: _*), 1 << 16)
-              os
-            }) finally if (os != null) os.close()
-            df
-          case None => query(spark, noFmt)
-        }
-      }
-    }.last
-  }
-
-  private val outfileRe =
-    "(?is)^(.*?)\\s+INTO\\s+OUTFILE\\s+'([^']+)'(?:\\s+(APPEND|TRUNCATE))?\\s*$".r
-
-  // `FROM t SAMPLE 0.1` on a table created with SAMPLE BY key
-  private val sampleRe =
-    "(?i)\\bFROM\\s+([\\w`.]+)\\s+SAMPLE\\s+(0?\\.\\d+)".r
-
-  /** ClickHouse `SAMPLE k` on a keyed table: the deterministic subset
-    * `pmod(key, 1000) < k*1000` (0.1% bucket granularity). Like the
-    * reference, repeated queries see the SAME rows (the property
-    * SAMPLE BY exists for — consistent subsets across queries, unlike
-    * Bernoulli TABLESAMPLE); at scale the filter is a cheap codegen'd
-    * predicate pushed to the scan, no shuffle. Keyless tables fall
-    * through to the transpiler's TABLESAMPLE mapping. */
-  private def rewriteSample(spark: org.apache.spark.sql.SparkSession,
-                            sql: String): String =
-    sampleRe.replaceAllIn(sql, m => {
-      Ddl.sampleKey(spark, m.group(1)) match {
-        case Some(key) =>
-          val thr = math.round(m.group(2).toDouble * 1000)
-          val alias = m.group(1).substring(m.group(1).lastIndexOf('.') + 1)
-            .replace("`", "")
-          java.util.regex.Matcher.quoteReplacement(
-            s"FROM (SELECT * FROM ${m.group(1)} WHERE pmod($key, 1000) < $thr) $alias")
-        case None => m.matched
-      }
-    })
-
-  /** Substitute every `system.*` table except `one` with a frame built
-    * at query time from driver-side state (catalog, query registry,
-    * part listings), so each probe sees post-DDL state and the catalog
-    * ones run no Spark job. Each referenced name materializes a fresh
-    * temp view; `system.one` passes through to its static view. */
-  private def rewriteSystemParts(spark: SparkSession, sql: String): String =
-    systemParts.foldLeft(sql) { case (s, (name, re, build)) =>
-      if (re.findFirstIn(s).isEmpty) s
-      else {
-        build(spark).createOrReplaceTempView(s"__graft_system_$name")
-        re.replaceAllIn(s, s"__graft_system_$name")
-      }
-    }
-
-  /** Each live system table: its name, `system.<name>` as a whole
-    * name, and the frame that answers it. */
-  private val systemParts: Seq[(String, scala.util.matching.Regex, SparkSession => DataFrame)] =
-    Seq[(String, SparkSession => DataFrame)](
-      "detached_parts" -> (s => Ddl.detachedPartsSnapshot(s)),
-      "parts" -> (s => Ddl.partsSnapshot(s)),
-      "databases" -> (s => ChContext.databasesLive(s)),
-      "tables" -> (s => ChContext.tablesLive(s)),
-      "columns" -> (s => ChContext.columnsLive(s)),
-      "query_log" -> (s => Engine.queryLogSnapshot(s)),
-      "processes" -> (s => Engine.processesSnapshot(s)),
-      "dictionaries" -> (s => Dictionaries.snapshot(s)),
-      "projections" -> (s => Projections.snapshot(s)),
-      "data_skipping_indices" -> (s => SkipIndexes.snapshot(s)),
-      "functions" -> (s => UserFunctions.snapshot(s)),
-      "dropped_tables" -> (s => Ddl.droppedTablesSnapshot(s)),
-      "frozen_parts" -> (s => Ddl.frozenPartsSnapshot(s)),
-      "metrics" -> (s => Engine.metricsSnapshot(s)),
-      "events" -> (s => Engine.eventsSnapshot(s)),
-      "settings" -> (s => Engine.settingsSnapshot(s)))
-      .map { case (n, build) => (n, s"(?i)(?<![\\w`])system\\.$n(?![\\w`])".r, build) }
-
-  /** ClickHouse hides MATERIALIZED columns from `SELECT *` while
-    * keeping them selectable by name. The physical parquet column
-    * exists, so a bare select-list `*` over a table with materialized
-    * columns expands to the visible column list here (analysis-time
-    * expansion, the expandStarModifiers style). Only a star directly
-    * following `SELECT [DISTINCT]` expands — `count(*)` and `a * b`
-    * are untouched; each star pairs with the next `FROM <name>` after
-    * it, so subquery stars expand against their own tables. Tables
-    * without materialized columns pass through unchanged. */
-  private def rewriteMaterializedStar(spark: SparkSession,
-                                      sql0: String): String = {
-    if (!sql0.contains("*")) return sql0
-    val starRe = "(?is)\\bSELECT\\s+(?:DISTINCT\\s+)?\\*".r
-    val fromRe = "(?is)\\bFROM\\s+([\\w`.]+)".r
-    var s = sql0; var searchFrom = 0; var guard = 0
-    while (guard < 16) {
-      guard += 1
-      starRe.findFirstMatchIn(s.substring(searchFrom)) match {
-        case None => return s
-        case Some(m) =>
-          val starAt = searchFrom + m.end - 1
-          val cols = fromRe.findFirstMatchIn(s.substring(starAt))
-            .map(_.group(1).replace("`", "")).flatMap { bare =>
-              val mat = Ddl.materializedCols(spark, bare)
-              // ALIAS tables expand too: the physical schema naturally
-              // excludes aliases, and pre-expanding keeps `*` correct
-              // when the FROM later swaps to the alias-enriched view
-              if (mat.isEmpty && Ddl.aliasDefs(spark, bare).isEmpty) None
-              else scala.util.Try(spark.table(bare).schema.fieldNames.toSeq)
-                .toOption.map(_.filterNot(_ == "_part")
-                  .filterNot(c => mat(c.toLowerCase)))
-            }
-          cols match {
-            case Some(cs) if cs.nonEmpty =>
-              val repl = cs.map(c => s"`$c`").mkString(", ")
-              s = s.substring(0, starAt) + repl + s.substring(starAt + 1)
-              searchFrom = starAt + repl.length
-            case _ => searchFrom = starAt + 1
-          }
-      }
-    }
-    s
-  }
-
-  private val finalRe = "(?i)\\b(FROM|JOIN)\\s+([\\w`.]+)\\s+FINAL\\b".r
-
-  /** `FROM t FINAL` on a Replacing/SummingMergeTree applies the
-    * engine's merge on read: the merged frame registers as a temp view
-    * and the reference is substituted. On any other table FINAL is a
-    * no-op hint (the Transpiler drops the keyword). The merged frame
-    * carries the table's ALIAS columns when the query names one (the
-    * star was pre-expanded by [[rewriteMaterializedStar]], so `*`
-    * never picks them up). */
-  private def rewriteFinal(spark: SparkSession, sql: String): String =
-    finalRe.replaceAllIn(sql, m => {
-      val kw = m.group(1).toUpperCase
-      val bare = m.group(2).replace("`", "")
-      val view = "__graft_final_" + bare.replace(".", "_")
-      def sub(df0: DataFrame): String = {
-        val df =
-          if (Ddl.aliasDefs(spark, bare)
-              .exists(a => aliasNameIn(sql, a._1))) Ddl.aliasEnrich(spark, bare, df0)
-          else df0
-        df.createOrReplaceTempView(view)
-        java.util.regex.Matcher.quoteReplacement(s"$kw $view")
-      }
-      (Ddl.replacingMeta(spark, m.group(2)),
-        Ddl.summingMeta(spark, m.group(2)),
-        Ddl.collapsingMeta(spark, m.group(2)),
-        Ddl.aggregatingMeta(spark, m.group(2))) match {
-        case (Some((keys, ver)), _, _, _) if keys.nonEmpty =>
-          sub(Ddl.replacingDedup(spark.table(bare), keys, ver))
-        case (_, Some((keys, cols)), _, _) if keys.nonEmpty =>
-          sub(Ddl.summingMerge(spark.table(bare), keys, cols))
-        case (_, _, Some((keys, sign, ver)), _) if keys.nonEmpty =>
-          sub(Ddl.collapsingFold(spark.table(bare), keys, sign, ver))
-        case (_, _, _, Some((keys, aggCols))) if keys.nonEmpty =>
-          sub(Ddl.aggregatingMerge(spark.table(bare), keys, aggCols))
-        case _ => m.matched
-      }
-    })
-
-  /** Identifier-bounded, case-insensitive: does `sql` mention `name`? */
-  private def aliasNameIn(sql: String, name: String): Boolean =
-    ("(?i)(?<![\\w`])" + java.util.regex.Pattern.quote(name) +
-      "(?![\\w`])").r.findFirstIn(sql).isDefined
-
-  private val fromJoinTableRe = "(?i)\\b(FROM|JOIN)\\s+([\\w`.]+)".r
-
-  /** ALIAS columns have no storage — when a query names one, the
-    * table reference swaps to a temp view carrying the alias
-    * expressions ([[Ddl.aliasEnrich]]; Catalyst prunes the unused
-    * ones). Gated on an alias name actually appearing in the text, so
-    * every other query pays nothing. Runs AFTER the star rewrite
-    * (stars pre-expand against the physical schema, which excludes
-    * aliases) and after FINAL (whose merged views enrich themselves). */
-  private def rewriteAliasReads(spark: SparkSession, sql: String): String = {
-    var s = sql
-    fromJoinTableRe.findAllMatchIn(sql).map(_.group(2))
-      .toSeq.distinct.foreach { spelled =>
-        val bare = spelled.replace("`", "")
-        if (!bare.startsWith("__graft_")) {
-          val defs = scala.util.Try(Ddl.aliasDefs(spark, bare))
-            .getOrElse(Nil)
-          if (defs.nonEmpty && defs.exists(a => aliasNameIn(s, a._1))) {
-            val view = "__graft_aliased_" +
-              bare.replace(".", "_").toLowerCase
-            Ddl.aliasEnrich(spark, bare, spark.table(bare))
-              .createOrReplaceTempView(view)
-            s = ("(?i)\\b(FROM|JOIN)\\s+" +
-              java.util.regex.Pattern.quote(spelled) + "(?![\\w`.])").r
-              .replaceAllIn(s, mm => java.util.regex.Matcher
-                .quoteReplacement(s"${mm.group(1).toUpperCase} $view"))
-          }
-        }
-      }
-    s
-  }
-
-  private lazy val settingsTimer = {
-    val t = new java.util.Timer("graft-settings-timeout", true)
-    t
-  }
-
-  private val viewCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** `alias.col` → col (plain identifiers only). */
-  private def stripQual(e: String, alias: String): Option[String] = {
-    val re = ("^`?" + java.util.regex.Pattern.quote(alias) +
-      "`?\\.`?([A-Za-z_]\\w*)`?$").r
-    re.findFirstMatchIn(e.trim).map(_.group(1))
-  }
-
-  /** Materialize FROM/JOIN-adjacent parenthesized subqueries as temp
-    * views (lazy frames — no data moves) so the textual ASOF/ANY join
-    * rewrites below only ever see bare relation names. Runs the inner
-    * text through [[query]] recursively, so subqueries keep the full
-    * dialect. Only invoked when the outer query contains a join form
-    * Spark's parser cannot take. */
-  private def flattenFromSubqueries(spark: SparkSession, sql0: String): String = {
-    var s = sql0
-    var sc = SqlScan(s)
-    var from = 0
-    var guard = 0
-    val re = "(?is)\\b(FROM|JOIN)\\s*\\(".r
-    while (guard < 32) {
-      guard += 1
-      val m = sc.codeMatches(re, from).nextOption().getOrElse(return s)
-      val open = m.end - 1
-      val close = sc.closing(open)
-      if (close < 0) return s
-      val inner = s.substring(open + 1, close)
-      if ("(?is)^\\s*SELECT\\b".r.findFirstIn(inner).isDefined) {
-        val view = "__graft_subq_" + viewCounter.incrementAndGet()
-        query(spark, inner).createOrReplaceTempView(view)
-        s = s.substring(0, m.start) + m.group(1) + " " + view +
-          s.substring(close + 1)
-        sc = SqlScan(s)
-        from = 0
-      } else from = close
-    }
-    s
-  }
-
-  private val anyJoinRe =
-    ("(?is)\\bANY\\s+(LEFT|INNER|RIGHT|FULL)?\\s*JOIN\\s+([\\w`.]+)" +
-      "(?:\\s+(?:AS\\s+)?(?!ON\\b)([A-Za-z_]\\w*))?\\s+ON\\s+(.+?)" +
-      "(?=\\s+(?:WHERE|GROUP|HAVING|ORDER|LIMIT|SETTINGS|UNION|INTERSECT" +
-      "|EXCEPT|LEFT|RIGHT|INNER|FULL|CROSS|ANY|ASOF|JOIN)\\b|\\s*$)").r
-
-  /** ClickHouse `ANY [LEFT|INNER] JOIN`: at most one right-side row per
-    * left row. ClickHouse picks an arbitrary ("any") matching row; this
-    * engine picks a DETERMINISTIC representative — the least full row
-    * per join key under ascending sort over all right columns in
-    * declaration order — so results are stable across partitionings and
-    * oracle-checkable. The right relation dedupes to one row per key
-    * (row_number window = one keyed shuffle of the right side only),
-    * then a plain LEFT/INNER join. `ANY RIGHT/FULL` (which dedupes the
-    * LEFT side) must be written from the other side and fails loudly. */
-  private def rewriteAnyJoin(spark: SparkSession, sql0: String): String = {
-    val up = sql0.toUpperCase
-    if (!up.contains("ANY") || !up.contains("JOIN")) return sql0
-    val sql = flattenFromSubqueries(spark, sql0)
-    anyJoinRe.replaceAllIn(sql, m => {
-      val jt = Option(m.group(1)).map(_.trim.toUpperCase).getOrElse("INNER")
-      if (jt == "RIGHT" || jt == "FULL")
-        throw new UnsupportedOperationException(
-          s"ANY $jt JOIN is not supported: ANY dedupes the LEFT side " +
-            "there — rewrite the query with the sides swapped")
-      val rtbl = m.group(2).replace("`", "")
-      val ralias = Option(m.group(3))
-        .getOrElse(rtbl.substring(rtbl.lastIndexOf('.') + 1))
-      val cond = m.group(4)
-      val keys = SqlScan(cond).splitKeyword("AND").map(_.trim).filter(_.nonEmpty).flatMap { c =>
-        c.split("=") match {
-          case Array(a, b) =>
-            stripQual(a, ralias).orElse(stripQual(b, ralias))
-          case _ => None
-        }
-      }.distinct
-      if (keys.isEmpty) m.matched
-      else {
-        import org.apache.spark.sql.functions.{col, row_number}
-        import org.apache.spark.sql.expressions.Window
-        val rdf = spark.table(rtbl)
-        val w = Window.partitionBy(keys.map(col): _*)
-          .orderBy(rdf.columns.map(col(_).asc): _*)
-        val view = "__graft_any_" + viewCounter.incrementAndGet()
-        rdf.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .createOrReplaceTempView(view)
-        java.util.regex.Matcher.quoteReplacement(
-          s"$jt JOIN $view AS $ralias ON $cond")
-      }
-    })
-  }
-
-  private val asofJoinRe =
-    ("(?is)\\bFROM\\s+([\\w`.]+)" +
-      "(?:\\s+(?:AS\\s+)?(?!ASOF\\b|LEFT\\b|INNER\\b|JOIN\\b)([A-Za-z_]\\w*))?" +
-      "\\s+ASOF\\s+(LEFT\\s+)?(?:INNER\\s+)?JOIN\\s+([\\w`.]+)" +
-      "(?:\\s+(?:AS\\s+)?(?!ON\\b)([A-Za-z_]\\w*))?\\s+ON\\s+(.+?)" +
-      "(?=\\s+(?:WHERE|GROUP|HAVING|ORDER|LIMIT|SETTINGS|UNION)\\b|\\s*$)").r
-
-  /** `FROM l ASOF [LEFT] JOIN r ON l.k = r.k AND l.ts >= r.ts` — routed
-    * to the [[graft.operators.AsofJoin]] one-shuffle operator (SURVEY
-    * §2.3 J5). Equality conjuncts are the keys; the single inequality
-    * picks direction (`>=` backward, `<=` forward; strict forms are not
-    * supported and fail loudly downstream). The join collapses to a
-    * temp view and alias-qualified references are remapped: right keys
-    * to the (equal) left key, other right columns to their carried
-    * names. Subquery sides are flattened first, so both relations are
-    * names by the time this runs. */
-  private def rewriteAsofJoin(spark: SparkSession, sql0: String): String = {
-    if (!sql0.toUpperCase.contains("ASOF")) return sql0
-    var s = flattenFromSubqueries(spark, sql0)
-    var guard = 0
-    while (guard < 8) {
-      guard += 1
-      val m = asofJoinRe.findFirstMatchIn(s).getOrElse(return s)
-      val ltbl = m.group(1).replace("`", "")
-      val lalias = Option(m.group(2))
-        .getOrElse(ltbl.substring(ltbl.lastIndexOf('.') + 1))
-      val isLeft = Option(m.group(3)).isDefined
-      val rtbl = m.group(4).replace("`", "")
-      val ralias = Option(m.group(5))
-        .getOrElse(rtbl.substring(rtbl.lastIndexOf('.') + 1))
-      val cond = m.group(6)
-      var pairs = Seq.empty[(String, String)]
-      var tsSpec: Option[(String, String, Boolean)] = None // (lts, rts, forward)
-      SqlScan(cond).splitKeyword("AND").map(_.trim).filter(_.nonEmpty).foreach { c =>
-        val ineq = "(?s)^(.+?)(>=|<=)(.+)$".r.findFirstMatchIn(c)
-        ineq match {
-          case Some(im) =>
-            val (a, op, b) = (im.group(1), im.group(2), im.group(3))
-            (stripQual(a, lalias), stripQual(b, ralias),
-              stripQual(a, ralias), stripQual(b, lalias)) match {
-              case (Some(lc), Some(rc), _, _) =>
-                tsSpec = Some((lc, rc, op == "<="))
-              case (_, _, Some(rc), Some(lc)) =>
-                tsSpec = Some((lc, rc, op == ">="))
-              case _ => ()
-            }
-          case None => c.split("=") match {
-            case Array(a, b) =>
-              (stripQual(a, lalias), stripQual(b, ralias),
-                stripQual(a, ralias), stripQual(b, lalias)) match {
-                case (Some(lc), Some(rc), _, _) => pairs :+= ((lc, rc))
-                case (_, _, Some(rc), Some(lc)) => pairs :+= ((lc, rc))
-                case _ => ()
-              }
-            case _ => ()
-          }
-        }
-      }
-      if (pairs.isEmpty || tsSpec.isEmpty) return s
-      val (lts, rts, fwd) = tsSpec.get
-      val ldf = spark.table(ltbl)
-      var rdf = spark.table(rtbl)
-      pairs.foreach { case (lk, rk) =>
-        if (lk != rk) {
-          if (rdf.columns.contains(lk)) return s // rename would collide
-          rdf = rdf.withColumnRenamed(rk, lk)
-        }
-      }
-      val res = graft.operators.AsofJoin(ldf, rdf, pairs.map(_._1),
-        lts, rts, rightPrefix = "__asofr_", inner = !isLeft, forward = fwd)
-      val view = "__graft_asof_" + viewCounter.incrementAndGet()
-      res.createOrReplaceTempView(view)
-      val keyMap = pairs.map { case (lk, rk) => rk -> lk }.toMap
-      s = s.substring(0, m.start) + s"FROM $view" + s.substring(m.end)
-      s = ("(?i)\\b" + java.util.regex.Pattern.quote(ralias) +
-        "\\.([A-Za-z_]\\w*)").r.replaceAllIn(s, rm =>
-        keyMap.getOrElse(rm.group(1), s"__asofr_${rm.group(1)}"))
-      s = ("(?i)\\b" + java.util.regex.Pattern.quote(lalias) +
-        "\\.([A-Za-z_]\\w*)").r.replaceAllIn(s, rm => rm.group(1))
-    }
-    s
-  }
-
-  /** Honor the useful subset of per-query SETTINGS instead of silently
-    * dropping them (reference relays all of them to chdb, main.py:190):
-    *   - `max_result_rows` with `result_overflow_mode=break` truncates
-    *     the result (the non-break default mode is `throw`, which would
-    *     need a count per query — still dropped);
-    *   - `max_execution_time` (seconds) cancels the query's job group
-    *     when the budget expires. Execution happens on the calling
-    *     thread in every production path (servers stream immediately),
-    *     so the thread-scoped group catches the right jobs.
-    * Unknown settings remain accepted and ignored. */
-  /** Session-scoped settings from `SET k = v` statements — merged under
-    * per-query `SETTINGS` (query wins), ClickHouse's precedence. Weak
-    * keys: an evicted per-credential session drops its settings. */
-  private val sessionSettings = scala.collection.mutable
-    .WeakHashMap.empty[SparkSession, Map[String, String]]
-
-  private[graft] def setSessionSettings(spark: SparkSession,
-                                        kv: Seq[(String, String)]): Unit =
-    sessionSettings.synchronized {
-      val cur = sessionSettings.getOrElse(spark, Map.empty)
-      // `SET k = DEFAULT` restores the default, i.e. drops the override
-      val next = kv.foldLeft(cur) { case (m, (k, v)) =>
-        if (v.equalsIgnoreCase("default")) m - k else m.updated(k, v)
-      }
-      sessionSettings.put(spark, next)
-    }
-
-  private def applySettings(spark: SparkSession, df: DataFrame,
-                            st0: Map[String, String]): DataFrame = {
-    val st = sessionSettings.synchronized {
-      sessionSettings.getOrElse(spark, Map.empty)
-    } ++ st0
-    if (st.isEmpty) return df
-    var out = df
-    if (st.contains("max_result_rows") &&
-        st.get("result_overflow_mode").contains("break"))
-      out = out.limit(st("max_result_rows").toInt)
-    st.get("max_execution_time").foreach { secs =>
-      val group = "graft-timeout-" + java.util.UUID.randomUUID()
-      spark.sparkContext.setJobGroup(group,
-        s"max_execution_time=$secs", interruptOnCancel = true)
-      val sc = spark.sparkContext
-      settingsTimer.schedule(new java.util.TimerTask {
-        override def run(): Unit =
-          try sc.cancelJobGroup(group) catch { case _: Throwable => () }
-      }, math.max(1L, (secs.toDouble * 1000).toLong))
-    }
-    out
-  }
-
-  /** One SELECT statement, handling the ClickHouse-only `LIMIT n BY`
-    * clause (SURVEY §2.6 O4) as a row_number window over the inner
-    * query's ORDER BY, and `ORDER BY ... WITH FILL` via the
-    * gap-filling operator. */
-  private def query(spark: SparkSession, bare00: String): DataFrame = {
-    val (bare0, settings) = Transpiler.extractSettings(bare00)
-    applySettings(spark, queryInner(spark, bare0), settings)
-  }
-
-  private def queryInner(spark: SparkSession, bare0: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, row_number}
-    import org.apache.spark.sql.expressions.Window
-    // ClickHouse EXPLAIN kinds, each mapped to the Spark artifact with
-    // the same intent (one `explain` text row per line, like ClickHouse):
-    //   SYNTAX     -> the transpiled Spark SQL (CH returns the rewritten
-    //                 query; ours IS the dialect rewrite)
-    //   AST / QUERY TREE -> analyzed logical plan
-    //   PLAN (default)   -> optimized logical plan
-    //   PIPELINE   -> formatted physical plan (the execution pipeline —
-    //                 exactly what PLANS.md dumps)
-    //   ESTIMATE   -> Catalyst cost estimate (bytes + rows when known)
-    // The inner query runs through the FULL dialect path (ASOF, FINAL,
-    // SAMPLE, WITH FILL...), so what you explain is what executes.
-    val explainRe = ("(?is)^\\s*EXPLAIN" +
-      "(?:\\s+(SYNTAX|AST|PLAN|PIPELINE|ESTIMATE|QUERY\\s+TREE))?" +
-      "\\s+((?:SELECT|WITH)\\b.*)$").r
-    bare0 match {
-      case explainRe(kind0, inner) =>
-        val kind = Option(kind0).map(_.toUpperCase.replaceAll("\\s+", " "))
-          .getOrElse("PLAN")
-        val df = query(spark, inner)
-        import spark.implicits._
-        def asRows(text: String): DataFrame =
-          text.stripLineEnd.split("\n").toSeq.toDF("explain")
-        return kind match {
-          case "SYNTAX" => asRows(Transpiler.transpile(inner))
-          case "AST" | "QUERY TREE" =>
-            asRows(df.queryExecution.analyzed.treeString)
-          case "PIPELINE" => asRows(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-          case "ESTIMATE" =>
-            val st = df.queryExecution.optimizedPlan.stats
-            Seq((st.sizeInBytes.toString,
-              st.rowCount.map(_.toString).getOrElse("")))
-              .toDF("size_bytes", "rows")
-          case _ => asRows(df.queryExecution.optimizedPlan.treeString)
-        }
-      case _ => ()
-    }
-    val bare = rewriteAsofJoin(spark, rewriteAnyJoin(spark,
-      rewriteAliasReads(spark, rewriteFinal(spark,
-        rewriteSample(spark, rewriteMaterializedStar(spark,
-          Transpiler.expandStarModifiers(spark,
-            rewriteSystemParts(spark, bare0))))))))
-    Transpiler.withFillParts(bare) match {
-      case Some((inner, prefix, fillKey, from, to, step, interp)) =>
-        return graft.operators.WithFill(
-          query(spark, inner), prefix, fillKey, from, to, step, interp)
-      case None => ()
-    }
-    Transpiler.limitByParts(bare) match {
-      case None =>
-        try {
-          val sql = Transpiler.transpile(bare)
-          // analyze ONCE — Dataset creation runs the analyzer eagerly,
-          // and both plan-level rewrites below match on the already-
-          // analyzed plan. (Analyzing per-rewrite doubled parse+analysis
-          // on every query: a 134-column hits query paid it twice.)
-          val df = spark.sql(sql)
-          // plan-level rewrites, both fall-back-safe (a misfire must
-          // never break a query that would run): PROJECTION
-          // merge-aggregation over the materialized partials, then
-          // top-k lazy materialization (narrow key scan + pushdown-able
-          // point refetch)
-          scala.util.Try(Projections.maybeRewrite(df))
-            .toOption.flatten
-            .orElse(scala.util.Try(
-              graft.operators.LateMaterialize.rewrite(df))
-              .toOption.flatten)
-            .getOrElse(df)
-        }
-        catch {
-          // ClickHouse resolves select aliases in WHERE/HAVING; Spark
-          // does not. Retry once with the aliases inlined — only an
-          // already-failing query ever takes this path, so resolvable
-          // queries keep Spark semantics untouched.
-          case e: org.apache.spark.sql.AnalysisException
-              if Option(e.getCondition).exists(_.startsWith("UNRESOLVED_COLUMN")) =>
-            Transpiler.substituteSelectAliases(bare) match {
-              case Some(rew) => spark.sql(Transpiler.transpile(rew))
-              case None => throw e
-            }
-        }
-      case Some((inner, n, byCols, outerLimit)) =>
-        val orderItems =
-          "(?is)\\bORDER\\s+BY\\s+(.+)$".r.findFirstMatchIn(inner)
-            .map(_.group(1).split(",").map(_.trim).toSeq).getOrElse(Nil)
-        def sortCols(items: Seq[String]) = items.map { it =>
-          val m = "(?is)^(.*?)\\s+(ASC|DESC)$".r.findFirstMatchIn(it)
-          m match {
-            case Some(mm) if mm.group(2).equalsIgnoreCase("DESC") =>
-              expr(Transpiler.transpile(mm.group(1))).desc
-            case Some(mm) => expr(Transpiler.transpile(mm.group(1))).asc
-            case None => expr(Transpiler.transpile(it)).asc
-          }
-        }
-        val df = spark.sql(Transpiler.transpile(inner))
-        val w = Window
-          .partitionBy(byCols.map(c => expr(Transpiler.transpile(c))): _*)
-          .orderBy((if (orderItems.nonEmpty) sortCols(orderItems)
-                    else Seq(org.apache.spark.sql.functions.lit(1).asc)): _*)
-        var out = df.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= n).drop("__rn")
-        if (orderItems.nonEmpty) out = out.orderBy(sortCols(orderItems): _*)
-        outerLimit.foreach(m => out = out.limit(m))
-        out
-    }
-  }
-
-  /** Lands an INSERT … FORMAT payload, whichever way it arrived, under
-    * the same bookkeeping as [[execute]]: the header is what
-    * `system.query_log` and `system.processes` show. Values rows are
-    * SQL literals and go through the SQL INSERT; every other format
-    * parses through [[graft.formats.Formats.read]]. */
-  private[graft] def insert(spark: SparkSession, h: InsertHeader, payload: Array[Byte],
-                            user: String, queryId: Option[String]): DataFrame =
-    tracked(spark, h.statement, user, queryId) {
-      val format = h.format.get
-      if (graft.formats.Formats.canonical(format) == "Values") {
-        // reconstruct the column list — dropping it bound VALUES tuples
-        // to the wrong columns when the client listed a subset
-        val colList = h.cols.map(cs => s"(${cs.mkString(", ")}) ").getOrElse("")
-        Ddl.insert(spark, s"INSERT INTO ${h.table} ${colList}VALUES " +
-          new String(payload, java.nio.charset.StandardCharsets.UTF_8).trim)
-      } else {
-        val target = targetSchema(spark, h.table, h.cols)
-        graft.formats.Formats.read(spark, format, graft.formats.Formats.Payload(payload),
-          Some(target))(land(spark, h.table, _, Some(payload.length.toLong)))
-      }
-    }
-
-  /** Appends `df` to `table`: unprovided columns fill with their
-    * declared DEFAULT (else NULL), matched case-insensitively, and the
-    * columns are emitted in table order. `payloadBytes` is the length
-    * of the body `df` was parsed from, if any. */
-  private[graft] def land(spark: SparkSession, table: String, df: DataFrame,
-                          payloadBytes: Option[Long] = None): DataFrame = {
-    Ddl.appendAligned(spark, table, Ddl.fillInsertable(spark, table, df), payloadBytes)
-    spark.emptyDataFrame
-  }
-
-  /** INSERT target structure: the named columns, or every INSERTABLE
-    * column (physical minus the derived `_part` partition key minus
-    * MATERIALIZED columns). The single home for this rule — HTTP
-    * binary formats, Arrow, and the native streaming INSERT sample
-    * block must all agree on it. Naming a MATERIALIZED column
-    * explicitly refuses, like the SQL column-list forms. */
-  private[graft] def targetSchema(spark: SparkSession, table: String,
-                                  cols: Option[Seq[String]])
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.StructType
-    val full = spark.table(table.replace("`", "")).schema
-    cols match {
-      case Some(cs) =>
-        val mat = Ddl.materializedCols(spark, table)
-        cs.find(c => mat(c.toLowerCase)).foreach(c =>
-          throw new IllegalArgumentException(
-            s"cannot insert column $c of $table: it is a MATERIALIZED " +
-              "column (always computed, never inserted)"))
-        val aliases = Ddl.aliasDefs(spark, table)
-        cs.find(c => aliases.exists(_._1.equalsIgnoreCase(c))).foreach(c =>
-          throw new IllegalArgumentException(
-            s"cannot insert column $c of $table: it is an ALIAS column " +
-              "(computed at read, never stored)"))
-        // EPHEMERAL columns have no physical field — type from the
-        // declared CH type (they may be named in any insert list)
-        val ephs = Ddl.ephemeralDefs(spark, table)
-        StructType(cs.map { c =>
-          ephs.find(_._1.equalsIgnoreCase(c)) match {
-            case Some(e) => org.apache.spark.sql.types.StructField(e._1,
-              org.apache.spark.sql.types.DataType.fromDDL(
-                Transpiler.mapTypeNames(e._2)))
-            case None => full(full.fieldIndex(c))
-          }
-        })
-      case None => StructType(Ddl.insertableFields(spark, table, full))
-    }
-  }
-}
