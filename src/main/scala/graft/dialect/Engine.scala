@@ -1,10 +1,18 @@
 package graft.dialect
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ScheduledThreadPoolExecutor
+import java.util.concurrent.TimeUnit.MILLISECONDS
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.util.control.NonFatal
 
-/** Statement router: the single entry point servers/clients call with
-  * raw ClickHouse SQL (possibly `USE db; query` — the reference
-  * prefixes the database selection the same way, main.py:860-861). */
+/** Statement router and the one query lifecycle: every statement, from
+  * either wire or a library caller, runs through [[run]], which owns its
+  * query id, settings, deadline, KILL QUERY, WITH TOTALS row, extremes
+  * and log entries. Raw SQL may be several statements (`USE db; query`
+  * — the reference prefixes the database the same way, main.py:860-861). */
 object Engine {
   /** `INSERT INTO t [(cols)] [VALUES | FORMAT x]` through the end of
     * its line: the header of every bulk write. With a FORMAT, its rows
@@ -29,9 +37,10 @@ object Engine {
     }
 
   /** Bounded query log behind `system.query_log` (most-probed columns
-    * of ClickHouse's table). Durations cover the synchronous part of
-    * execution — DDL/DML fully; a SELECT's lazy tail materializes at
-    * the caller's sink and is not included. */
+    * of ClickHouse's table). A served statement's duration runs until
+    * its codec closes it after the last byte of its answer; a library
+    * statement's ends when [[execute]] returns, before the caller reads
+    * a SELECT's rows. */
   private case class LogEntry(eventTimeMs: Long, query: String,
                               durationMs: Long, qtype: String, user: String)
   private val queryLog =
@@ -52,51 +61,238 @@ object Engine {
       .toDF("event_time", "query", "query_duration_ms", "type", "user")
   }
 
-  /** Live registry behind `system.processes` and `KILL QUERY`. Every
-    * execute() tags its thread with a per-query job group
-    * (interruptOnCancel), so a KILL from another connection cancels the
-    * query's running/future Spark jobs — including the lazy tail of a
-    * SELECT that is still streaming to its client. Entries retire when
-    * the statement's synchronous part ends (DDL/DML) or when the server
-    * finishes streaming ([[finishQuery]]); a size cap bounds strays. */
-  private case class Running(groupId: String, startMs: Long, query: String,
-                             user: String, sc: org.apache.spark.SparkContext)
-  private val running =
-    scala.collection.concurrent.TrieMap.empty[String, Running]
-  private val maxRunning = 200
-  private val lastIdOnThread = new ThreadLocal[String]
+  /** One statement as a wire or a library caller hands it over.
+    * `queryId` keys `system.processes` and KILL QUERY; generated when
+    * empty. `settings` ride beside the SQL (URL parameters, QUERY-packet
+    * settings), over the session's `SET` and under the statement's
+    * `SETTINGS` clause. `database` is current for this statement alone;
+    * empty or `default` keeps the session's. `totals`: the codec has a
+    * totals slot, so `WITH TOTALS` runs as the protocol split. `rows`
+    * lands the rows the wire carries for an `INSERT … FORMAT` header. */
+  final case class Request(sql: String, user: String = "default",
+                           queryId: Option[String] = None,
+                           settings: Map[String, String] = Map.empty,
+                           database: String = "", totals: Boolean = false,
+                           rows: Option[SparkSession => Unit] = None)
 
-  private def beginQuery(spark: SparkSession, queryId: Option[String],
-                         query: String, user: String): String = {
-    val id = queryId.filter(_.nonEmpty)
-      .getOrElse(java.util.UUID.randomUUID().toString)
-    val gid = s"graft-qid-$id"
-    spark.sparkContext.setJobGroup(gid, query.take(200),
-      interruptOnCancel = true)
-    // one thread runs one query at a time: starting a new one retires
-    // the thread's previous entry (library callers never call
-    // finishQuery; without this a query loop would pool up to the cap)
-    Option(lastIdOnThread.get()).foreach(finishQuery)
-    lastIdOnThread.set(id)
-    if (running.size >= maxRunning) // bound strays (oldest first)
-      running.toSeq.sortBy(_._2.startMs).take(running.size - maxRunning + 1)
-        .foreach { case (k, _) => running.remove(k) }
-    running.put(id, Running(gid, System.currentTimeMillis(), query, user,
-      spark.sparkContext))
-    id
+  /** A started statement, the handle [[run]] returns. Its jobs run in
+    * the job group `graft-qid-<id>` (perfbench and the specs count jobs
+    * by that name) and carry a job tag of this run, which KILL QUERY,
+    * `max_execution_time` and [[cancel]] reach. */
+  final class Query private[Engine] (val id: String, val sql: String, val user: String,
+                                     private[Engine] val session: SparkSession, scoped: Boolean) {
+    private[Engine] val tag = s"graft-run-${runs.incrementAndGet()}"
+    private[Engine] val startMs = System.currentTimeMillis()
+    private[Engine] val isSelect = selectKindRe.findFirstIn(sql).isDefined
+    @volatile private[Engine] var cancelled: Option[String] = None
+    private[Engine] var starting = false
+    private[Engine] var totalsSql: Option[String] = None
+    private[Engine] var result: DataFrame = _
+    private var settings = Map.empty[String, String]
+    @volatile private var deadline: Option[java.util.concurrent.ScheduledFuture[_]] = None
+    private val closed, logged = new AtomicBoolean
+
+    /** The statement's rows; DDL and DML answer an empty frame. */
+    def frame: DataFrame = result
+
+    /** The WITH TOTALS row (none when HAVING drops it), if split. */
+    lazy val totals: Option[Seq[Row]] =
+      totalsSql.map(tq => executeInner(session, tq).limit(2).collect().toSeq)
+
+    /** (min row, max row) of the frame when the `extremes` setting is
+      * on: numeric, date and timestamp columns get their min and max,
+      * the others NULL. */
+    lazy val extremes: Option[(Row, Row)] =
+      if (!settings.get("extremes").exists(Set("1", "true")) || frame.schema.isEmpty) None
+      else {
+        import org.apache.spark.sql.functions.{col, lit, max, min}
+        import org.apache.spark.sql.types.{DateType, NumericType, TimestampType}
+        val aggs = frame.schema.fields.toSeq.flatMap(f => f.dataType match {
+          case _: NumericType | DateType | _: TimestampType =>
+            Seq(min(col(s"`${f.name}`")), max(col(s"`${f.name}`")))
+          case dt => Seq.fill(2)(lit(null).cast(dt))
+        })
+        val ext = frame.agg(aggs.head, aggs.tail: _*).head().toSeq.grouped(2).toSeq
+        Some((Row.fromSeq(ext.map(_.head)), Row.fromSeq(ext.map(_(1)))))
+      }
+
+    /** Cancels the running jobs; later ones fail as they start. The run
+      * leaves `system.processes` at once. */
+    def cancel(reason: String): Unit = {
+      cancelled = Some(reason)
+      session.sparkContext.cancelJobsWithTag(tag, reason)
+    }
+
+    /** Retires the run, once: ends its deadline and `database` session,
+      * leaves `system.processes`, logs `QueryFinish` unless it failed. A
+      * codec calls it after the answer's last byte, before the
+      * terminator, so a client holding the answer finds it logged. */
+    def close(): Unit = if (closed.compareAndSet(false, true)) {
+      deadline.foreach(_.cancel(false))
+      live.remove(tag)
+      if (current.get eq this) current.remove()
+      log(failed = false)
+      if (scoped) graft.Tables.forget(session)
+    }
+
+    private[Engine] def fail(): Unit = { log(failed = true); close() }
+
+    /** Logs the run once; the log never logs its own reads. */
+    private[Engine] def log(failed: Boolean): Unit = if (logged.compareAndSet(false, true)) {
+      if (failed) cFailed.incrementAndGet()
+      if (failed || !sql.toLowerCase.contains("system.query_log"))
+        record(LogEntry(startMs, sql, System.currentTimeMillis() - startMs,
+          if (failed) "ExceptionWhileProcessing" else "QueryFinish", user))
+    }
+
+    /** Merges `over` into the run's settings. A changed
+      * `max_execution_time` re-arms the deadline, which cancels the run
+      * that many seconds from now; 0 is no limit, as in ClickHouse. */
+    private[Engine] def settle(over: Map[String, String]): Map[String, String] = {
+      val before = settings.get("max_execution_time")
+      settings ++= over
+      if (settings.get("max_execution_time") != before) {
+        deadline.foreach(_.cancel(false))
+        deadline = settings.get("max_execution_time").map(s => (s, (s.toDouble * 1000).toLong))
+          .collect { case (s, ms) if ms > 0 && !closed.get => deadlines.schedule(
+            (() => cancel(s"max_execution_time = $s s exceeded")): Runnable, ms, MILLISECONDS) }
+      }
+      settings
+    }
   }
 
-  /** Retire a query from `system.processes` once its result has fully
-    * streamed. Servers call this from their response `finally`. */
-  def finishQuery(id: String): Unit = running.remove(id)
+  /** Open runs by job tag, read by `system.processes` (less the
+    * cancelled) and KILL QUERY. A run leaves when it closes, when its
+    * thread starts its next statement, or, oldest first, at a cap. */
+  private val live = scala.collection.concurrent.TrieMap.empty[String, Query]
+  private val maxRunning = 200
+  private val runs = new AtomicLong
+  /** This thread's open run: a statement it issues while the run
+    * starts (a CREATE … AS SELECT's SELECT) joins it. */
+  private val current = new ThreadLocal[Query]
+
+  private lazy val deadlines = new ScheduledThreadPoolExecutor(1, (r: Runnable) => {
+    val t = new Thread(r, "graft-deadline"); t.setDaemon(true); t }) { setRemoveOnCancelPolicy(true) }
+
+  /** Deadline timer tasks not yet run or cancelled. */
+  private[graft] def pendingDeadlines: Int = deadlines.getQueue.size
+
+  @volatile private var listening: SparkContext = _
+
+  /** One listener fails each job of a cancelled run as it starts:
+    * cancelling by tag reaches only the jobs running at the time, and
+    * Spark's `cancelJobGroupAndFutureJobs` would go on failing a later
+    * statement that reuses the query id. */
+  private def listenOn(sc: SparkContext): Unit = if (listening ne sc) synchronized {
+    if (listening ne sc) sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags"))).foreach(
+          _.split(",").iterator.flatMap(live.get).flatMap(_.cancelled).nextOption()
+            .foreach(sc.cancelJob(e.jobId, _)))
+    })
+    listening = sc
+  }
+
+  /** A wire's statement: `encode` writes the handle's outputs. The one
+    * catch site: a failure, starting or while the answer streams, is
+    * logged once and handed to `fail` to encode for the wire. */
+  def serve(spark: SparkSession, request: Request)(encode: Query => Unit,
+                                                   fail: Throwable => Unit): Unit = {
+    var q: Option[Query] = None
+    try { q = Some(run(spark, request)); encode(q.get) }
+    catch { case NonFatal(e) => q.foreach(_.fail()); fail(e) }
+    finally q.foreach(_.close())
+  }
+
+  def execute(spark: SparkSession, rawSql: String, user: String = "default",
+              queryId: Option[String] = None): DataFrame =
+    execute(spark, Request(rawSql, user, queryId))
+
+  /** The library entry: [[run]] with no codec. A statement issued while
+    * this thread's run starts is part of it. Otherwise the run is logged
+    * when this returns and DDL/DML retire; a SELECT's jobs run at the
+    * caller's sink, so it stays in reach of KILL QUERY and its deadline
+    * until the thread's next statement. */
+  def execute(spark: SparkSession, request: Request): DataFrame =
+    Option(current.get).filter(_.starting) match {
+      case Some(outer) => work(spark, request, outer)
+      case None =>
+        val q = run(spark, request)
+        if (q.isSelect) q.log(failed = false) else q.close()
+        q.frame
+    }
+
+  /** The lifecycle's entry: registers `request` as a run (id, session,
+    * job group and tag, settings, deadline, counters) and executes its
+    * synchronous part. The thread's previous run retires first (library
+    * callers never close). The caller closes the handle; a failure to
+    * start is logged, retires the run and is rethrown. */
+  def run(spark: SparkSession, request: Request): Query = {
+    Option(current.get).foreach(_.close())
+    val id = request.queryId.filter(_.nonEmpty).getOrElse(java.util.UUID.randomUUID().toString)
+    val text = insertHeader(request.sql)
+      .collect { case (h, _) if h.format.isDefined => h.statement }.getOrElse(request.sql)
+    // `database` runs on a derived session (same catalog, own current
+    // database, the base session's fixture views), like the
+    // reference's per-query `USE db;` (main.py:860-861): setting the
+    // shared session's would race concurrent requests
+    val session = request.database match {
+      case "" | "default" => spark
+      case db =>
+        val s = spark.newSession()
+        ChContext.shareViews(spark, s)
+        s.catalog.setCurrentDatabase(db)
+        s
+    }
+    val q = new Query(id, text, request.user, session, session ne spark)
+    val sc = spark.sparkContext
+    listenOn(sc)
+    sc.setJobGroup(s"graft-qid-$id", text.take(200), interruptOnCancel = true)
+    sc.removeJobTags(sc.getJobTags().filter(_.startsWith("graft-run-")))
+    sc.addJobTag(q.tag)
+    current.set(q)
+    if (live.size >= maxRunning)
+      live.values.toSeq.sortBy(_.startMs).take(live.size - maxRunning + 1)
+        .foreach(r => live.remove(r.tag))
+    live.put(q.tag, q)
+    cQuery.incrementAndGet()
+    if (q.isSelect) cSelect.incrementAndGet()
+    if (insertKindRe.findFirstIn(text).isDefined) cInsert.incrementAndGet()
+    try {
+      q.starting = true
+      q.settle(sessionSettingsOf(spark) ++ request.settings.map { case (k, v) => k.toLowerCase -> v })
+      ChFunctions.register(q.session)
+      // lazy durable-catalog restore: first statement of a fresh JVM
+      // re-registers persisted tables/dictionaries/projections
+      CatalogStore.ensureRestored(q.session)
+      val split = if (request.totals) Transpiler.splitTotals(request.sql) else None
+      q.totalsSql = split.map(_._2)
+      q.result = work(q.session, request.copy(sql = split.fold(request.sql)(_._1)), q)
+      q
+    } catch {
+      case NonFatal(e) => q.fail(); throw e
+    } finally q.starting = false
+  }
+
+  /** A statement's work under run `q`: a KILL QUERY, the rows of an
+    * INSERT … FORMAT (from the wire or inline), or the SQL. */
+  private def work(spark: SparkSession, request: Request, q: Query): DataFrame =
+    (killQueryRe.findFirstMatchIn(request.sql), request.rows, insertHeader(request.sql)) match {
+      case (Some(m), _, _) => killQuery(spark, m.group(1), q)
+      case (_, Some(land), _) => land(spark); spark.emptyDataFrame
+      case (_, _, Some((h, end))) if h.format.isDefined =>
+        insertRows(spark, h, request.sql.substring(end).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        spark.emptyDataFrame
+      case _ => executeInner(spark, request.sql)
+    }
 
   // cumulative profile counters behind system.events (ClickHouse's
   // own counter names); started-at stamp feeds the Uptime metric
   private val startedAtMs = System.currentTimeMillis()
-  private val cQuery = new java.util.concurrent.atomic.AtomicLong
-  private val cSelect = new java.util.concurrent.atomic.AtomicLong
-  private val cInsert = new java.util.concurrent.atomic.AtomicLong
-  private val cFailed = new java.util.concurrent.atomic.AtomicLong
+  private val cQuery = new AtomicLong
+  private val cSelect = new AtomicLong
+  private val cInsert = new AtomicLong
+  private val cFailed = new AtomicLong
 
   /** system.settings, live: defaults merged with the session's SET
     * overrides (`changed` = 1 exactly for overrides, like ClickHouse). */
@@ -104,20 +300,21 @@ object Engine {
     import spark.implicits._
     val base = Map("max_threads" -> "32", "session_timezone" -> "UTC",
       "readonly" -> "0")
-    val over = sessionSettings.synchronized {
-      sessionSettings.getOrElse(spark, Map.empty)
-    }
+    val over = sessionSettingsOf(spark)
     (base ++ over).toSeq.sortBy(_._1)
       .map { case (k, v) => (k, v, if (over.contains(k)) 1 else 0, "") }
       .toDF("name", "value", "changed", "description")
   }
+
+  private def listed: Seq[Query] =
+    live.values.filter(_.cancelled.isEmpty).toSeq.sortBy(_.startMs)
 
   /** system.metrics: point-in-time gauges (live, not a snapshot). */
   private[graft] def metricsSnapshot(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val rt = Runtime.getRuntime
     Seq(
-      ("Query", running.size.toLong, "Number of executing queries"),
+      ("Query", listed.size.toLong, "Number of executing queries"),
       ("MemoryTracking", rt.totalMemory() - rt.freeMemory(),
         "Total amount of memory allocated by the server"),
       ("Uptime", (System.currentTimeMillis() - startedAtMs) / 1000,
@@ -142,9 +339,7 @@ object Engine {
   private[graft] def processesSnapshot(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val now = System.currentTimeMillis()
-    running.toSeq.sortBy(_._2.startMs)
-      .map { case (id, r) =>
-        (id, r.user, (now - r.startMs) / 1000.0, r.query) }
+    listed.map(q => (q.id, q.user, (now - q.startMs) / 1000.0, q.sql))
       .toDF("query_id", "user", "elapsed", "query")
   }
 
@@ -153,84 +348,22 @@ object Engine {
 
   /** `KILL QUERY WHERE <cond> [SYNC|ASYNC|TEST]` — the predicate runs
     * over the system.processes frame (so any of its columns work),
-    * matched queries get their job group cancelled, and the ClickHouse
-    * result shape (kill_status, query_id, user, query) returns. */
-  private def killQuery(spark: SparkSession, cond: String): DataFrame = {
+    * every matched run but the KILL's own is cancelled, and the
+    * ClickHouse result shape (kill_status, query_id, user, query)
+    * returns. */
+  private def killQuery(spark: SparkSession, cond: String, self: Query): DataFrame = {
     import spark.implicits._
     val matched = processesSnapshot(spark)
       .filter(org.apache.spark.sql.functions.expr(Transpiler.transpile(cond)))
-      .select("query_id").collect().map(_.getString(0)).toSeq
-    val rows = matched.flatMap { id =>
-      running.remove(id).map { r =>
-        try r.sc.cancelJobGroup(r.groupId) catch { case _: Throwable => () }
-        ("finished", id, r.user, r.query)
-      }
-    }
-    rows.toDF("kill_status", "query_id", "user", "query")
-  }
-
-  def execute(spark: SparkSession, rawSql: String): DataFrame =
-    execute(spark, rawSql, "default")
-
-  def execute(spark: SparkSession, rawSql: String, user: String): DataFrame =
-    execute(spark, rawSql, user, None)
-
-  /** @param queryId client-supplied id (HTTP `query_id=` param /
-    *                native client info) keying `system.processes` and
-    *                `KILL QUERY`; generated when absent. */
-  def execute(spark: SparkSession, rawSql: String, user: String,
-              queryId: Option[String]): DataFrame = {
-    killQueryRe.findFirstMatchIn(rawSql) match {
-      case Some(m) => return killQuery(spark, m.group(1))
-      case None => ()
-    }
-    insertHeader(rawSql) match {
-      case Some((h, end)) if h.format.isDefined => insert(spark, h,
-        rawSql.substring(end).getBytes(java.nio.charset.StandardCharsets.UTF_8), user, queryId)
-      case _ => tracked(spark, rawSql, user, queryId)(executeInner(spark, rawSql))
-    }
+      .select("query_id").collect().map(_.getString(0)).toSet
+    listed.filter(q => (q ne self) && matched(q.id)).map { q =>
+      q.cancel(s"killed by KILL QUERY (query_id ${q.id})")
+      ("finished", q.id, q.user, q.sql)
+    }.toDF("kill_status", "query_id", "user", "query")
   }
 
   private val selectKindRe = "(?is)^\\s*(SELECT|WITH|EXPLAIN)\\b".r
   private val insertKindRe = "(?is)^\\s*INSERT\\b".r
-
-  /** Runs one statement under the query bookkeeping: query id and
-    * `graft-qid-*` job group, `system.processes`, `system.query_log`
-    * and the `system.events` counters. */
-  private[graft] def tracked(spark: SparkSession, sql: String, user: String,
-                             queryId: Option[String])(run: => DataFrame): DataFrame = {
-    val t0 = System.currentTimeMillis()
-    val id = beginQuery(spark, queryId, sql, user)
-    val isSelect = selectKindRe.findFirstIn(sql).isDefined
-    cQuery.incrementAndGet()
-    if (isSelect) cSelect.incrementAndGet()
-    if (insertKindRe.findFirstIn(sql).isDefined) cInsert.incrementAndGet()
-    try {
-      ChFunctions.register(spark)
-      // lazy durable-catalog restore: first statement of a fresh JVM
-      // re-registers persisted tables/dictionaries/projections
-      CatalogStore.ensureRestored(spark)
-      val out = run
-      // the log itself is queryable but never logs its own reads
-      if (!sql.toLowerCase.contains("system.query_log"))
-        record(LogEntry(t0, sql, System.currentTimeMillis() - t0,
-          "QueryFinish", user))
-      out
-    } catch {
-      case e: Throwable =>
-        record(LogEntry(t0, sql, System.currentTimeMillis() - t0,
-          "ExceptionWhileProcessing", user))
-        cFailed.incrementAndGet()
-        finishQuery(id)
-        throw e
-    } finally {
-      // DDL/DML ran synchronously — retire now. A SELECT's jobs run at
-      // the caller's sink; it stays listed until finishQuery (servers)
-      // or the size cap (library callers, where cancellation targets
-      // the caller's own thread anyway).
-      if (!isSelect) finishQuery(id)
-    }
-  }
 
   private def executeInner(spark: SparkSession, rawSql: String): DataFrame = {
     val statements = SqlScan(rawSql).split(';').map(_.trim).filter(_.nonEmpty)
@@ -459,11 +592,6 @@ object Engine {
     s
   }
 
-  private lazy val settingsTimer = {
-    val t = new java.util.Timer("graft-settings-timeout", true)
-    t
-  }
-
   private val viewCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** `alias.col` → col (plain identifiers only). */
@@ -640,21 +768,14 @@ object Engine {
     s
   }
 
-  /** Honor the useful subset of per-query SETTINGS instead of silently
-    * dropping them (reference relays all of them to chdb, main.py:190):
-    *   - `max_result_rows` with `result_overflow_mode=break` truncates
-    *     the result (the non-break default mode is `throw`, which would
-    *     need a count per query — still dropped);
-    *   - `max_execution_time` (seconds) cancels the query's job group
-    *     when the budget expires. Execution happens on the calling
-    *     thread in every production path (servers stream immediately),
-    *     so the thread-scoped group catches the right jobs.
-    * Unknown settings remain accepted and ignored. */
-  /** Session-scoped settings from `SET k = v` statements — merged under
-    * per-query `SETTINGS` (query wins), ClickHouse's precedence. Weak
-    * keys: an evicted per-credential session drops its settings. */
+  /** Session-scoped settings from `SET k = v` statements, the lowest
+    * layer of a run's settings. Weak keys: an evicted per-credential
+    * session drops its settings. */
   private val sessionSettings = scala.collection.mutable
     .WeakHashMap.empty[SparkSession, Map[String, String]]
+
+  private def sessionSettingsOf(spark: SparkSession): Map[String, String] =
+    sessionSettings.synchronized(sessionSettings.getOrElse(spark, Map.empty))
 
   private[graft] def setSessionSettings(spark: SparkSession,
                                         kv: Seq[(String, String)]): Unit =
@@ -667,36 +788,21 @@ object Engine {
       sessionSettings.put(spark, next)
     }
 
-  private def applySettings(spark: SparkSession, df: DataFrame,
-                            st0: Map[String, String]): DataFrame = {
-    val st = sessionSettings.synchronized {
-      sessionSettings.getOrElse(spark, Map.empty)
-    } ++ st0
-    if (st.isEmpty) return df
-    var out = df
-    if (st.contains("max_result_rows") &&
-        st.get("result_overflow_mode").contains("break"))
-      out = out.limit(st("max_result_rows").toInt)
-    st.get("max_execution_time").foreach { secs =>
-      val group = "graft-timeout-" + java.util.UUID.randomUUID()
-      spark.sparkContext.setJobGroup(group,
-        s"max_execution_time=$secs", interruptOnCancel = true)
-      val sc = spark.sparkContext
-      settingsTimer.schedule(new java.util.TimerTask {
-        override def run(): Unit =
-          try sc.cancelJobGroup(group) catch { case _: Throwable => () }
-      }, math.max(1L, (secs.toDouble * 1000).toLong))
-    }
-    out
-  }
-
   /** One SELECT statement, handling the ClickHouse-only `LIMIT n BY`
     * clause (SURVEY §2.6 O4) as a row_number window over the inner
     * query's ORDER BY, and `ORDER BY ... WITH FILL` via the
-    * gap-filling operator. */
+    * gap-filling operator. Its `SETTINGS` clause merges over the run's
+    * settings (the reference relays all of them to chdb, main.py:190),
+    * of which `max_execution_time`, `extremes` and `max_result_rows`
+    * with `result_overflow_mode=break` are honored; the others are
+    * accepted and ignored (`throw`, the default overflow mode, too). */
   private def query(spark: SparkSession, bare00: String): DataFrame = {
-    val (bare0, settings) = Transpiler.extractSettings(bare00)
-    applySettings(spark, queryInner(spark, bare0), settings)
+    val (bare0, clause) = Transpiler.extractSettings(bare00)
+    val st = current.get.settle(clause)
+    val df = queryInner(spark, bare0)
+    if (st.contains("max_result_rows") && st.get("result_overflow_mode").contains("break"))
+      df.limit(st("max_result_rows").toInt)
+    else df
   }
 
   private def queryInner(spark: SparkSession, bare0: String): DataFrame = {
@@ -809,26 +915,28 @@ object Engine {
     }
   }
 
-  /** Lands an INSERT … FORMAT payload, whichever way it arrived, under
-    * the same bookkeeping as [[execute]]: the header is what
-    * `system.query_log` and `system.processes` show. Values rows are
-    * SQL literals and go through the SQL INSERT; every other format
-    * parses through [[graft.formats.Formats.read]]. */
+  /** Lands an INSERT … FORMAT payload as one statement, like
+    * [[execute]]: the header is what `system.query_log` and
+    * `system.processes` show. */
   private[graft] def insert(spark: SparkSession, h: InsertHeader, payload: Array[Byte],
                             user: String, queryId: Option[String]): DataFrame =
-    tracked(spark, h.statement, user, queryId) {
-      val format = h.format.get
-      if (graft.formats.Formats.canonical(format) == "Values") {
-        // reconstruct the column list — dropping it bound VALUES tuples
-        // to the wrong columns when the client listed a subset
-        val colList = h.cols.map(cs => s"(${cs.mkString(", ")}) ").getOrElse("")
-        Ddl.insert(spark, s"INSERT INTO ${h.table} ${colList}VALUES " +
-          new String(payload, java.nio.charset.StandardCharsets.UTF_8).trim)
-      } else {
-        val target = targetSchema(spark, h.table, h.cols)
-        graft.formats.Formats.read(spark, format, graft.formats.Formats.Payload(payload),
-          Some(target))(land(spark, h.table, _, Some(payload.length.toLong)))
-      }
+    execute(spark, Request(h.statement, user, queryId, rows = Some(insertRows(_, h, payload))))
+
+  /** The rows of an INSERT … FORMAT, whichever way they arrived.
+    * Values rows are SQL literals and go through the SQL INSERT; every
+    * other format parses through [[graft.formats.Formats.read]]. */
+  private[graft] def insertRows(spark: SparkSession, h: InsertHeader,
+                                payload: Array[Byte]): Unit =
+    if (graft.formats.Formats.canonical(h.format.get) == "Values") {
+      // reconstruct the column list — dropping it bound VALUES tuples
+      // to the wrong columns when the client listed a subset
+      val colList = h.cols.map(cs => s"(${cs.mkString(", ")}) ").getOrElse("")
+      Ddl.insert(spark, s"INSERT INTO ${h.table} ${colList}VALUES " +
+        new String(payload, java.nio.charset.StandardCharsets.UTF_8).trim)
+    } else {
+      val target = targetSchema(spark, h.table, h.cols)
+      graft.formats.Formats.read(spark, h.format.get, graft.formats.Formats.Payload(payload),
+        Some(target))(land(spark, h.table, _, Some(payload.length.toLong)))
     }
 
   /** Appends `df` to `table`: unprovided columns fill with their

@@ -132,8 +132,6 @@ object SpecialEngines {
 
   private[dialect] def isNull(norm: String): Boolean =
     specOf(norm).exists(kindOf(_) == "Null")
-  private[dialect] def isSet(norm: String): Boolean =
-    specOf(norm).exists(kindOf(_) == "Set")
   private[dialect] def isMerge(norm: String): Boolean =
     specOf(norm).exists(kindOf(_) == "Merge")
 

@@ -54,10 +54,10 @@ object Transpiler {
   }
 
   /** `GROUP BY k WITH TOTALS` protocol split: (main query without the
-    * TOTALS modifier, totals-row-only query). Servers run the two parts
-    * and emit the totals row separately (native packet 7 / JSON
-    * `totals` member), while the dialect's inline GROUPING SETS rewrite
-    * stays the library-call behavior. The totals query keeps the
+    * TOTALS modifier, totals-row-only query). `Engine.run` runs both
+    * parts for a codec with a totals slot (native packet 7, JSON
+    * `totals` member); the dialect's inline GROUPING SETS rewrite stays
+    * the behavior everywhere else. The totals query keeps the
     * select-list analyzable via GROUPING SETS ((k), ()) and filters to
     * the empty grouping set with HAVING grouping(k)=1; an existing
     * HAVING is AND-folded (= totals_mode=after_having_exclusive; the
@@ -978,13 +978,12 @@ object ChContext {
 
   private val viewsMarker = "graft.views.dir"
 
-  /** The fixture views of `to`, a short-lived session derived from
-    * `from`, registered from the relations `from` already resolved: no
-    * footer is read and nothing is memoized for `to`. Falls back to
-    * [[setupViews]] when `from` holds no views of `dir`. */
-  def shareViews(from: SparkSession, to: SparkSession, dir: String): Unit =
-    if (!from.conf.getOption(viewsMarker).contains(dir)) setupViews(to, dir)
-    else {
+  /** The fixture views of `from`, if it has any, for `to`, a
+    * short-lived session derived from it: registered from the relations
+    * `from` already resolved, so no footer is read and nothing is
+    * memoized for `to`. */
+  def shareViews(from: SparkSession, to: SparkSession): Unit =
+    from.conf.getOption(viewsMarker).foreach { dir =>
       val (src, dst) = (from.sessionState.catalog, to.sessionState.catalog)
       (graft.Tables.names :+ "events").foreach { t =>
         src.getRawTempView(t).foreach(dst.createTempView(t, _, overrideIfExists = true))

@@ -51,21 +51,23 @@ object Formats {
   /** A resolved output format. */
   final class Writer private[Formats] (
       val contentType: String,
-      /** Renders a WITH TOTALS row in its ClickHouse layout (JSON
-        * `totals` member, TSV blank line + row). */
+      /** Renders a WITH TOTALS row and the extremes in their ClickHouse
+        * layout (JSON `totals` and `extremes` members, TSV blank-line
+        * separated rows). */
       val rendersTotals: Boolean,
       /** A second result may follow the first in one file (formats with
         * a footer may not). */
       val appendable: Boolean,
-      encode: (DataFrame, Option[Row], () => OutputStream) => Unit) {
+      encode: (DataFrame, Option[Row], Option[(Row, Row)], () => OutputStream) => Unit) {
     /** Streams `df` into the stream `open` returns, then closes it.
       * `open` runs once, when the first byte is ready: a Parquet/ORC
       * part is written before it, so a failed write leaves the stream
       * unopened. A failure while rows stream flushes what was rendered
       * but leaves the stream open, so an HTTP caller can cut the
-      * connection instead of ending the body. */
-    def apply(df: DataFrame, open: () => OutputStream,
-              totals: Option[Row] = None): Unit = encode(df, totals, open)
+      * connection instead of ending the body. `totals` and `extremes`
+      * (min row, max row) render where the format has a slot for them. */
+    def apply(df: DataFrame, open: () => OutputStream, totals: Option[Row] = None,
+              extremes: Option[(Row, Row)] = None): Unit = encode(df, totals, extremes, open)
   }
 
   /** The encoder of `format`; raises `unknown format: X` before any
@@ -83,23 +85,23 @@ object Formats {
     case text =>
       new Writer(if (text.startsWith("JSON")) "application/json" else "text/plain",
         Set("JSON", "JSONCompact", "TabSeparated")(text), appendable = true,
-        (df, totals, open) => {
+        (df, totals, extremes, open) => {
           val w = new BufferedWriter(new OutputStreamWriter(open(), UTF_8), 1 << 16)
           // on failure too, the rows rendered so far reach the stream
-          try ResultFormatter.write(df, text, w, totals) finally w.flush()
+          try ResultFormatter.write(df, text, w, totals, extremes) finally w.flush()
           w.close()
         })
   }
 
   private def binary(appendable: Boolean)(body: (OutputStream, DataFrame) => Unit) =
     new Writer("application/octet-stream", rendersTotals = false, appendable,
-      (df, _, open) => { val os = open(); body(os, df); os.close() })
+      (df, _, _, open) => { val os = open(); body(os, df); os.close() })
 
   /** Executors write one part file into a scratch dir (no driver row
     * serialization); the file then streams to the caller. */
   private def partFile(ext: String) =
     new Writer("application/octet-stream", rendersTotals = false, appendable = false,
-      (df, _, open) => {
+      (df, _, _, open) => {
         val tmp = Files.createTempDirectory("graft_" + ext)
         try {
           df.coalesce(1).write.mode("overwrite").format(ext).save(tmp.toString)

@@ -50,25 +50,29 @@ object ResultFormatter {
     * safe result boundary (a 100 TB SELECT streams through, it does
     * not `collect()` onto the driver). An optional WITH TOTALS row
     * renders per the format's ClickHouse layout (JSON `totals` member;
-    * TSV blank line + row); formats with no totals notion ignore it. */
+    * TSV blank line + row), and so do the optional extremes, a (min,
+    * max) row pair (JSON `extremes` member; TSV blank line + two rows);
+    * formats with no slot for them ignore both. */
   def write(df: DataFrame, format: String, out: Appendable,
-            totals: Option[Row] = None): Long = {
+            totals: Option[Row] = None, extremes: Option[(Row, Row)] = None): Long = {
     val t0 = System.nanoTime()
     writeRows(df.schema, rowsOf(df), format, out,
-      () => (System.nanoTime() - t0) / 1e9, totals)
+      () => (System.nanoTime() - t0) / 1e9, totals, extremes)
   }
 
   /** Iterator-driven core shared by [[write]] and the HTTP server. */
   def writeRows(schema: StructType, rows: Iterator[Row], format: String,
                 out: Appendable, elapsed: () => Double = () => 0d,
-                totals: Option[Row] = None): Long =
+                totals: Option[Row] = None,
+                extremes: Option[(Row, Row)] = None): Long =
     Formats.canonical(format) match {
       case "TabSeparated" =>
         val n = delimited(schema, rows, "\t", out, header = false)
-        // ClickHouse TSV totals layout: data rows, empty line, totals row
-        totals.foreach { t =>
+        // ClickHouse TSV layout: data rows, then an empty line before
+        // the totals row and one before the min and max rows
+        (totals.map(Seq(_)) ++ extremes.map { case (mn, mx) => Seq(mn, mx) }).foreach { block =>
           out.append('\n')
-          delimited(schema, Iterator(t), "\t", out, header = false)
+          delimited(schema, block.iterator, "\t", out, header = false)
         }
         n
       case f @ ("TabSeparatedWithNames" | "TabSeparatedWithNamesAndTypes" |
@@ -76,8 +80,8 @@ object ResultFormatter {
         val csv = f.startsWith("CSV")
         delimited(schema, rows, if (csv) "," else "\t", out, header = f.contains("Names"),
           csvQuote = csv, typesRow = f.endsWith("AndTypes"))
-      case "JSON" => jsonEnvelope(schema, rows, out, elapsed, compact = false, totals)
-      case "JSONCompact" => jsonEnvelope(schema, rows, out, elapsed, compact = true, totals)
+      case f @ ("JSON" | "JSONCompact") =>
+        jsonEnvelope(schema, rows, out, elapsed, compact = f == "JSONCompact", totals, extremes)
       case f @ ("JSONEachRow" | "JSONCompactEachRow") =>
         var n = 0L
         rows.foreach { r =>
@@ -318,7 +322,7 @@ object ResultFormatter {
   private def jsonEnvelope(schema: StructType, rows: Iterator[Row],
                            out: Appendable, elapsed: () => Double,
                            compact: Boolean,
-                           totals: Option[Row] = None): Long = {
+                           totals: Option[Row], extremes: Option[(Row, Row)]): Long = {
     val meta = schema.fields.map(f =>
       s"""{"name":${jsonString(f.name)},"type":${jsonString(ChTypeNames.fieldName(f))}}""")
       .mkString("[", ",", "]")
@@ -331,9 +335,13 @@ object ResultFormatter {
       n += 1
     }
     out.append("]")
-    // WITH TOTALS: the envelope's `totals` member, between data and
-    // rows (ClickHouse JSON layout)
+    // WITH TOTALS and extremes: the envelope's `totals` and `extremes`
+    // members, between data and rows (ClickHouse JSON layout)
     totals.foreach(t => out.append(",\"totals\":").append(rowJson(t)))
+    extremes.foreach { case (mn, mx) =>
+      out.append(",\"extremes\":{\"min\":").append(rowJson(mn))
+        .append(",\"max\":").append(rowJson(mx)).append('}')
+    }
     val stats = f"""{"elapsed":${elapsed()}%.6f,"rows_read":$n,"bytes_read":0}"""
     out.append(s""","rows":$n,"statistics":$stats}""")
     n

@@ -4,29 +4,30 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer => JdkHttpS
 import org.apache.spark.sql.SparkSession
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
-import graft.dialect.{ChFunctions, Transpiler}
+import graft.dialect.{Engine, Transpiler}
 import graft.formats.Formats
+import scala.util.control.NonFatal
 
 /** ClickHouse-compatible HTTP endpoint (reference behavior at
-  * /root/reference/main.py:849-917):
+  * /root/reference/main.py:849-917), a codec over the engine's one
+  * query lifecycle ([[graft.dialect.Engine.serve]]): it parses a
+  * request into an `Engine.Request` and encodes the handle it gets back.
   *
   *   - GET `/?query=...` and POST body queries (body + `query` param
   *     concatenated, param first — main.py:876-882)
   *   - `default_format` param, default TSV (main.py:853); in-query
   *     FORMAT clause wins (main.py:534-546 order)
-  *   - `database=...` -> `USE db` before execution (main.py:860-861)
+  *   - `database=...` -> the statement's current database (main.py:860-861)
+  *   - every other URL parameter except `query_id`, `user` and
+  *     `password` is a setting, as in ClickHouse
   *   - `/ping` -> `Ok\n` (main.py:911-913)
   *   - basic auth accepted but not enforced (main.py:816-821 accepts
   *     any credentials); per-user catalog isolation is a non-goal here
   *   - errors -> HTTP 400 with the engine message (main.py:863-868)
-  *
-  * Query execution = dialect transpile -> spark.sql. The server is a
-  * thin protocol shim; all heavy lifting stays distributed in Spark.
   */
 class HttpServer(spark: SparkSession, port: Int,
                  fixtureDir: Option[String] = None) {
 
-  ChFunctions.register(spark)
   private val server = JdkHttpServer.create(new InetSocketAddress(port), 0)
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(8,
     (r: Runnable) => new Thread(r, "graft-http-worker"))
@@ -45,10 +46,7 @@ class HttpServer(spark: SparkSession, port: Int,
     val fromHeaders = Option(ex.getRequestHeaders.getFirst("X-ClickHouse-User"))
       .map(named(_, Option(ex.getRequestHeaders.getFirst("X-ClickHouse-Key")).getOrElse("")))
     // Basic auth arrives base64-coded — decode to the same "user:pass"
-    // shape so the default-user check in sessionFor sees it (an
-    // undecoded "Basic ..." never matched, silently giving `curl -u
-    // default:` an isolated session while `?user=default` got the
-    // shared root one)
+    // shape, so `curl -u default:` gets the shared root session too
     val fromAuth = Option(ex.getRequestHeaders.getFirst("Authorization"))
       .map { h =>
         val basic = if (!h.startsWith("Basic ")) None
@@ -59,19 +57,10 @@ class HttpServer(spark: SparkSession, port: Int,
     fromParams.orElse(fromHeaders).orElse(fromAuth)
   }
 
-  /** The default user (or none) runs on the shared root session;
-    * anything else gets its per-credential session (catalog
-    * isolation). */
-  private def sessionFor(key: Option[String]): SparkSession = key match {
-    case Some(k) if k != "default" && !k.startsWith("default:") =>
-      UserSessions.forKey(spark, k, fixtureDir)
-    case _ => spark
-  }
-
   server.createContext("/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
       try route(ex)
-      catch { case t: Throwable => respond(ex, 500, t.getMessage + "\n") }
+      catch { case NonFatal(t) => respond(ex, 500, t.getMessage + "\n") }
   })
 
   private def route(ex: HttpExchange): Unit = {
@@ -99,7 +88,7 @@ class HttpServer(spark: SparkSession, port: Int,
         val end = if (nl < 0) bodyBytes.length else nl + 1
         (new String(bodyBytes, 0, end, UTF_8), end)
     }
-    val insert = graft.dialect.Engine.insertHeader(head).collect {
+    val insert = Engine.insertHeader(head).collect {
       case (h, end) if h.format.isDefined && head.substring(end).trim.isEmpty =>
         (h, java.util.Arrays.copyOfRange(bodyBytes, rowsFrom, bodyBytes.length))
     }
@@ -118,96 +107,66 @@ class HttpServer(spark: SparkSession, port: Int,
     }
 
     val credentials = credentialsOf(ex, params)
-    val baseSession = sessionFor(credentials.map(_._1))
-    val defaultFormat = params.getOrElse("default_format", "TSV")
-    // query_id keys system.processes / KILL QUERY; generated if absent
-    // so every request is addressable. Retired once the response has
-    // fully streamed (the finally below).
-    val queryId = params.get("query_id")
-      .filter(_.nonEmpty).getOrElse(java.util.UUID.randomUUID().toString)
-    var scoped: Option[SparkSession] = None
-    try {
-      // database= is request-scoped, like the reference's per-query
-      // `USE db;` prefix (main.py:860-861). Mutating the shared
-      // session's current database would race concurrent requests and
-      // leak into later ones, so such requests run on a derived session:
-      // same persistent catalog (DDL tables), own current-database and
-      // the base session's fixture views. The session ends with the
-      // request (the finally below drops anything it memoized).
-      val session = params.get("database") match {
-        case None => baseSession
-        case Some(db) =>
-          val s2 = baseSession.newSession()
-          scoped = Some(s2)
-          ChFunctions.register(s2)
-          fixtureDir.foreach(dir => graft.dialect.ChContext.shareViews(baseSession, s2, dir))
-          s2.catalog.setCurrentDatabase(db)
-          s2
-      }
-      // user identity for system.query_log; anonymous requests log
-      // as "default"
-      val user = credentials.map(_._2).filter(_.nonEmpty).getOrElse("default")
-      insert match {
-        case Some((h, payload)) =>
-          graft.dialect.Engine.insert(session, h, payload, user, Some(queryId))
-          respond(ex, 200, "")
-        case None => select(ex, session, query, defaultFormat, user, queryId)
-      }
-    } catch {
-      case t: Throwable =>
-        // error contract: non-empty message, status 400 (main.py:863-868).
-        // If streaming already started the headers are gone — close the
-        // connection to truncate the body (client sees a short read).
-        val msg = Option(t.getMessage).getOrElse(t.getClass.getSimpleName)
-        try respond(ex, 400, msg + "\n")
-        catch { case _: Throwable => ex.close() }
-    } finally {
-      graft.dialect.Engine.finishQuery(queryId)
-      scoped.foreach(graft.Tables.forget)
-    }
+    val session = credentials.fold(spark)(c => UserSessions.forKey(spark, c._1, fixtureDir))
+    // user identity for system.query_log; anonymous requests log as
+    // "default"
+    val request = Engine.Request(insert.fold(query)(_._1.statement),
+      credentials.map(_._2).filter(_.nonEmpty).getOrElse("default"),
+      params.get("query_id"), params -- HttpServer.Reserved, params.getOrElse("database", ""),
+      rows = insert.map { case (h, payload) => Engine.insertRows(_, h, payload) })
+    if (insert.isDefined)
+      Engine.serve(session, request)(q => { q.close(); respond(ex, 200, "") }, fail(ex, _))
+    else select(ex, session, request, params.getOrElse("default_format", "TSV"))
   }
 
   /** Runs a statement and streams its result in the requested format. */
-  private def select(ex: HttpExchange, session: SparkSession, query: String,
-                     defaultFormat: String, user: String, queryId: String): Unit = {
-    val (bare0, fmtClause) = Transpiler.extractFormat(query)
+  private def select(ex: HttpExchange, session: SparkSession, request: Engine.Request,
+                     defaultFormat: String): Unit = {
+    val (bare, fmtClause) = Transpiler.extractFormat(request.sql)
     val fmt = fmtClause.getOrElse(defaultFormat)
     // resolved BEFORE anything runs or body() commits the 200 headers —
     // an unknown FORMAT must be a 400 with a message, not an empty 200
-    val writer = Formats.write(fmt)
-    // WITH TOTALS over HTTP: for formats with a totals slot in their
+    val writer = try Formats.write(fmt) catch { case NonFatal(e) => return fail(ex, e) }
+    // WITH TOTALS over HTTP: formats with a totals slot in their
     // ClickHouse layout (JSON envelopes' `totals` member, TSV's
-    // blank-line-separated row), run the protocol split — grouped
-    // rows as data, the empty-grouping-set aggregate as the totals
-    // row. Other formats keep the dialect's inline GROUPING SETS row.
-    val split = if (writer.rendersTotals) Transpiler.splitTotals(bare0) else None
-    val bare = split.map(_._1).getOrElse(bare0)
-    val df = graft.dialect.Engine.execute(session, bare, user, Some(queryId))
-    // response headers ClickHouse clients read
-    ex.getResponseHeaders.set("X-ClickHouse-Format", fmt)
-    ex.getResponseHeaders.set("X-ClickHouse-Timezone", "UTC")
-    // The writer streams to the socket chunked (length 0), one
-    // partition at a time. Parse/analysis errors were already raised
-    // above (Spark analyzes eagerly), so the 400 contract holds; a
-    // mid-stream runtime failure truncates the body, the same visible
-    // behavior as ClickHouse's own streamed HTTP. gzip the stream when
-    // the client advertises it (ClickHouse's enable_http_compression).
-    val gzip = Option(ex.getRequestHeaders.getFirst("Accept-Encoding"))
-      .exists(_.toLowerCase.contains("gzip"))
-    def body(): java.io.OutputStream = {
-      ex.sendResponseHeaders(200, 0)
-      val raw = new java.io.BufferedOutputStream(ex.getResponseBody, 1 << 16)
-      if (gzip) new java.util.zip.GZIPOutputStream(raw, 1 << 16, true) else raw
-    }
-    if (gzip) ex.getResponseHeaders.set("Content-Encoding", "gzip")
-    ex.getResponseHeaders.set("Content-Type", writer.contentType)
-    // same queryId: the totals pass joins the main pass's job
-    // group, so one KILL QUERY cancels both aggregates
-    val totalsRow = split.flatMap { case (_, tq) =>
-      graft.dialect.Engine.execute(session, tq, user, Some(queryId))
-        .limit(2).collect().headOption
-    }
-    writer(df, () => body(), totalsRow)
+    // blank-line-separated row) get the protocol split. Other formats
+    // keep the dialect's inline GROUPING SETS row.
+    Engine.serve(session, request.copy(sql = bare, totals = writer.rendersTotals))(q => {
+      // response headers ClickHouse clients read
+      ex.getResponseHeaders.set("X-ClickHouse-Format", fmt)
+      ex.getResponseHeaders.set("X-ClickHouse-Timezone", "UTC")
+      // The writer streams to the socket chunked (length 0), one
+      // partition at a time. Parse/analysis errors were already raised
+      // (Spark analyzes eagerly), so the 400 contract holds; a
+      // mid-stream runtime failure truncates the body, the same visible
+      // behavior as ClickHouse's own streamed HTTP. gzip the stream when
+      // the client advertises it (ClickHouse's enable_http_compression).
+      val gzip = Option(ex.getRequestHeaders.getFirst("Accept-Encoding"))
+        .exists(_.toLowerCase.contains("gzip"))
+      def body(): java.io.OutputStream = {
+        ex.sendResponseHeaders(200, 0)
+        // the statement retires after its last byte, before the body's
+        // terminating chunk
+        val last = new java.io.FilterOutputStream(ex.getResponseBody) {
+          override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+          override def close(): Unit = { q.close(); super.close() }
+        }
+        val raw = new java.io.BufferedOutputStream(last, 1 << 16)
+        if (gzip) new java.util.zip.GZIPOutputStream(raw, 1 << 16, true) else raw
+      }
+      if (gzip) ex.getResponseHeaders.set("Content-Encoding", "gzip")
+      ex.getResponseHeaders.set("Content-Type", writer.contentType)
+      writer(q.frame, () => body(), q.totals.flatMap(_.headOption), q.extremes)
+    }, fail(ex, _))
+  }
+
+  /** The error contract: non-empty message, status 400 (main.py:863-868).
+    * If streaming already started the headers are gone — close the
+    * connection to truncate the body (client sees a short read). */
+  private def fail(ex: HttpExchange, t: Throwable): Unit = {
+    val msg = Option(t.getMessage).getOrElse(t.getClass.getSimpleName)
+    try respond(ex, 400, msg + "\n")
+    catch { case NonFatal(_) => ex.close() }
   }
 
   private def parseParams(raw: String): Map[String, String] =
@@ -283,11 +242,15 @@ object UserSessions {
     s"graft_user_$h"
   }
 
-  /** Map key = the full credentials string — a 32-bit hash key would
-    * merge colliding credentials into one session and leak one user's
-    * catalog to another. The SHA-256 hex only names the database. */
+  /** The session of `credentials` ("user:password"): the default user
+    * runs on the shared `root`, any other gets its own (catalog
+    * isolation). Map key = the full credentials string — a 32-bit hash
+    * key would merge colliding credentials into one session and leak
+    * one user's catalog to another. The SHA-256 hex only names the
+    * database. */
   def forKey(root: org.apache.spark.sql.SparkSession, credentials: String,
              fixtureDir: Option[String]): org.apache.spark.sql.SparkSession = {
+    if (credentials == "default" || credentials.startsWith("default:")) return root
     evictExpired()
     lastAccess.put(credentials, System.currentTimeMillis())
     sessions.getOrElseUpdate(credentials, {
@@ -315,7 +278,7 @@ object UserSessions {
         s.catalog.setCurrentDatabase("default")
         s.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
         graft.LocalFs.deleteTree(loc)
-      } catch { case _: Throwable => () } // shutdown path: best-effort
+      } catch { case NonFatal(_) => () } // shutdown path: best-effort
       graft.Tables.forget(s)
     }
     sessions.clear()
@@ -324,6 +287,10 @@ object UserSessions {
 }
 
 object HttpServer {
+  /** URL parameters that are not settings. */
+  private val Reserved =
+    Set("query", "database", "default_format", "query_id", "user", "password")
+
   /** Query UI served at /play — our own implementation of the contract
     * the reference's vendored ClickHouse Play page exercises
     * (main.py:907-917 serves it; it POSTs the query to `/` with

@@ -3,9 +3,11 @@ package graft.server
 import org.apache.spark.sql.SparkSession
 import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
 import java.net.{ServerSocket, Socket}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
-import graft.dialect.{ChFunctions, Engine, Transpiler}
+import graft.dialect.{Engine, Transpiler}
 import graft.formats.{ChCompression, NativeCodec, Wire}
+import scala.util.control.NonFatal
 
 /** ClickHouse native TCP protocol server (SURVEY.md §2.10 A7-A10;
   * reference behavior at /root/reference/main.py:219-814).
@@ -20,11 +22,12 @@ import graft.formats.{ChCompression, NativeCodec, Wire}
   *   the message on error (main.py:664-667); PING -> PONG; client DATA
   *   blocks (external tables terminator) are read and discarded.
   *
-  * Query execution routes through the same dialect Engine as HTTP.
-  * Compression: mode 1 is disambiguated on the wire — the reference's
-  * facade clients zlib-deflate the query text, real ClickHouse clients
-  * send plain text and negotiate LZ4-framed DATA blocks (both handled;
-  * see handleQuery).
+  * Like HTTP, a codec over the engine's one query lifecycle
+  * ([[graft.dialect.Engine.serve]]): HELLO's database and the QUERY
+  * packet's id, settings and text make an `Engine.Request`; the
+  * handle's frame, totals and extremes go out as DATA, TOTALS and
+  * EXTREMES. Compression mode 1 is disambiguated on the wire (see
+  * handleQuery).
   */
 class NativeServer(spark: SparkSession, port: Int,
                    fixtureDir: Option[String] = None,
@@ -33,7 +36,6 @@ class NativeServer(spark: SparkSession, port: Int,
 
   import NativeServer._
 
-  ChFunctions.register(spark)
   private val server = new ServerSocket(port)
   private val pool = Executors.newCachedThreadPool()
   @volatile private var running = false
@@ -49,8 +51,8 @@ class NativeServer(spark: SparkSession, port: Int,
           } catch {
             // transient accept failures (e.g. fd exhaustion) must not
             // kill the listener thread; only a stop() ends the loop
-            case _: Throwable if !running => ()
-            case t: Throwable =>
+            case NonFatal(_) if !running => ()
+            case NonFatal(t) =>
               System.err.println(s"native accept failed: ${t.getMessage}")
               Thread.sleep(100)
           }
@@ -75,6 +77,7 @@ class NativeServer(spark: SparkSession, port: Int,
     var clientRevision = 0L
     var session: SparkSession = spark
     var authUser: String = "default"
+    var database = ""
     var dataCompressed = false // last query negotiated LZ4 framing
     try {
       while (true) {
@@ -83,12 +86,11 @@ class NativeServer(spark: SparkSession, port: Int,
             readStr(in) // client name
             readVarint(in); readVarint(in) // version major/minor
             clientRevision = readVarint(in)
-            readStr(in) // database
+            database = readStr(in)
             val user = readStr(in); val password = readStr(in)
             // per-credential catalog isolation (main.py:140-173)
             authUser = if (user.nonEmpty) user else "default"
-            if (user.nonEmpty && user != "default")
-              session = UserSessions.forKey(spark, s"$user:$password", fixtureDir)
+            if (user.nonEmpty) session = UserSessions.forKey(spark, s"$user:$password", fixtureDir)
             val used = math.min(clientRevision, Revision)
             writeVarint(out, ServerHello)
             writeStr(out, ServerName)
@@ -108,7 +110,7 @@ class NativeServer(spark: SparkSession, port: Int,
 
           case ClientQuery =>
             dataCompressed =
-              handleQuery(in, out, clientRevision, session, authUser)
+              handleQuery(in, out, clientRevision, session, authUser, database)
 
           case ClientData =>
             // external-tables stream: table name + (BlockInfo + block).
@@ -136,10 +138,8 @@ class NativeServer(spark: SparkSession, port: Int,
     * caller applies it to subsequent client DATA packets). */
   private def handleQuery(in: InputStream, out: OutputStream,
                           clientRevision: Long, session: SparkSession,
-                          authUser: String): Boolean = {
-    val queryId0 = readStr(in) // query id (keys system.processes / KILL)
-    val queryId = if (queryId0.nonEmpty) queryId0
-      else java.util.UUID.randomUUID().toString
+                          authUser: String, database: String): Boolean = {
+    val queryId = readStr(in) // query id (keys system.processes / KILL)
     if (clientRevision >= 54032) {
       val kind = readByte(in)
       if (kind != 0) {
@@ -157,23 +157,18 @@ class NativeServer(spark: SparkSession, port: Int,
         // parse them as setting names and desync every real query
         if (clientRevision >= 54401) readVarint(in) // client version patch
         if (clientRevision >= 54442 && readByte(in) == 1) { // OpenTelemetry
-          readFixed(in, 16) // trace_id
-          readFixed(in, 8) // span_id
-          readStr(in) // tracestate
-          readByte(in) // trace_flags
+          readFixed(in, 16 + 8); readStr(in); readByte(in) // trace/span id, state, flags
         }
-        if (clientRevision >= 54453) {
-          readVarint(in) // collaborate_with_initiator
-          readVarint(in) // count_participating_replicas
-          readVarint(in) // number_of_current_replica
-        }
+        // collaborate_with_initiator, count_participating_replicas,
+        // number_of_current_replica
+        if (clientRevision >= 54453) { readVarint(in); readVarint(in); readVarint(in) }
       }
     }
-    // settings: (name, flags, value) until empty name. Kept: `extremes`
-    // gates the EXTREMES packet (type 8) like real ClickHouse.
-    val settings = scala.collection.mutable.Map[String, String]()
-    while ({ val name = readStr(in)
-             name.nonEmpty && { readByte(in); settings(name) = readStr(in); true } }) ()
+    // settings, then (past the text) parameters: (name, flags, value)
+    // until an empty name. Every setting goes to the request.
+    def readSettings() = Iterator.continually(readStr(in)).takeWhile(_.nonEmpty)
+      .map { name => readByte(in); name -> readStr(in) }.toMap
+    val settings = readSettings()
     if (clientRevision >= 54441) readStr(in) // inter-server secret
     readVarint(in) // query stage
     val compression = readVarint(in)
@@ -196,56 +191,37 @@ class NativeServer(spark: SparkSession, port: Int,
         text
       case _ => readZlibStr(in); readStr(in)
     }
-    if (clientRevision >= 54459)
-      while ({ val name = readStr(in); name.nonEmpty && { readByte(in); readStr(in); true } }) ()
+    if (clientRevision >= 54459) readSettings()
 
-    try {
-      // Streaming INSERT (the real clickhouse-driver bulk-write flow):
-      // an INSERT query carrying NO inline data means "send me the
-      // table structure, then I stream DATA blocks". Server answers
-      // with a zero-row sample block, reads client blocks until the
-      // empty terminator, lands them through the aligned append path.
-      Engine.insertHeader(query) match {
-        case Some((h, end)) if query.substring(end).trim.isEmpty =>
-          val serFlag = clientRevision >= 54454
-          // under the statement bookkeeping, like an HTTP INSERT … FORMAT
-          Engine.tracked(session, h.statement, authUser, Some(queryId)) {
-            handleStreamingInsert(in, out, session, h.table, h.cols, serFlag, lz4Responses)
-            session.emptyDataFrame
-          }
-          return lz4Responses
-        case _ => ()
-      }
-      val (bare0, _) = Transpiler.extractFormat(query) // native ignores FORMAT
-      // WITH TOTALS on the native protocol: the grouped rows go out as
-      // DATA and the all-rows aggregate as a separate TOTALS packet
-      // (type 7, reference constant main.py:61) — that is what populates
-      // clickhouse-driver's `.totals`. The dialect's inline GROUPING
-      // SETS rewrite (Transpiler) stays for HTTP; here the query is
-      // split instead: the main query drops WITH TOTALS, the totals
-      // query aggregates over the empty grouping set. Two aggregate
-      // passes, but each is the plain distributed plan — no driver
-      // materialization beyond the single totals row.
-      val split = Transpiler.splitTotals(bare0)
-      val totalsBare: Option[String] = split.map(_._2)
-      val bare = split.map(_._1).getOrElse(bare0)
-      val df = Engine.execute(session, bare, authUser, Some(queryId))
+    val serFlag = clientRevision >= 54454
+    // Streaming INSERT (the real clickhouse-driver bulk-write flow): an
+    // INSERT query carrying NO inline data means "send me the table
+    // structure, then I stream DATA blocks". Server answers with a
+    // zero-row sample block, reads client blocks until the empty
+    // terminator, lands them through the aligned append path.
+    val streamed = Engine.insertHeader(query)
+      .collect { case (h, end) if query.substring(end).trim.isEmpty => h }
+    // WITH TOTALS on the native protocol: the grouped rows go out as
+    // DATA and the all-rows aggregate as a separate TOTALS packet (type
+    // 7, reference constant main.py:61) — that is what populates
+    // clickhouse-driver's `.totals`. Native ignores FORMAT.
+    val request = Engine.Request(
+      streamed.fold(Transpiler.extractFormat(query)._1)(_.statement), authUser,
+      Some(queryId), settings, database, totals = true,
+      rows = streamed.map(h => handleStreamingInsert(in, out, _, h, serFlag, lz4Responses)))
+    Engine.serve(session, request)(q => {
+      val df = q.frame
       // a statement that returns rows (SELECT, SHOW, DESCRIBE, EXISTS,
       // EXPLAIN, …) has columns; DDL/DML answer with an empty frame
       if (df.schema.nonEmpty) {
         val t0 = System.nanoTime()
-        // Stream the result as bounded blocks through rowsOf —
-        // driver memory is one partition + one block, never the whole
-        // result (the scale-safe boundary; a collect() here is the
-        // 100 TB driver-OOM). A delta PROGRESS packet precedes each
-        // DATA block (additive: the reference defines the constant,
-        // main.py:57, but never emits one; field order/gates follow the
-        // public wire protocol; ClickHouse progress is incremental).
-        // Bytes are an estimate — a progress indicator, not an
-        // invariant; totals are 0 = unknown while streaming.
+        // Stream the result as bounded blocks through rowsOf: driver
+        // memory is one partition + one block, never the whole result.
+        // A delta PROGRESS packet precedes each DATA block (the
+        // reference defines the constant, main.py:57, but never emits
+        // one); bytes are an estimate, totals 0 = unknown.
         val used = math.min(clientRevision, Revision)
         val nCols = df.schema.fields.length
-        val serFlag = clientRevision >= 54454
         var nBlocks = 0L
         val nRows = NativeCodec.writeBlocks(out, df.schema,
           graft.formats.ResultFormatter.rowsOf(df), blockRows,
@@ -262,42 +238,16 @@ class NativeServer(spark: SparkSession, port: Int,
             if (used >= 54460) writeVarint(out, System.nanoTime() - t0) // elapsed_ns
           },
           body = writeBlockPacket(_, ServerData, "", _, lz4Responses))
-        // TOTALS packet (type 7): the empty-grouping-set aggregate, one
-        // row, encoded against the MAIN schema so both blocks announce
+        // TOTALS packet (type 7): the empty-grouping-set aggregate,
+        // encoded against the MAIN schema so both blocks announce
         // identical column types (null group keys encode as ClickHouse
         // defaults when the main column is non-Nullable).
-        totalsBare.foreach { tq =>
-          // same queryId: KILL QUERY cancels the totals pass too
-          val trows = Engine.execute(session, tq, authUser, Some(queryId))
-            .limit(2).collect()
-          writeBlockPacket(out, ServerTotals, "",
-            NativeCodec.encode(df.schema, trows, serFlag), lz4Responses)
-        }
-        // EXTREMES packet (type 8), gated on the `extremes` setting like
-        // real ClickHouse: min/max per numeric/date column over the
-        // result (non-numerics get defaults), one 2-row block.
-        if (settings.get("extremes").exists(v => v == "1" || v == "true")) {
-          import org.apache.spark.sql.functions.{col, lit, max, min}
-          import org.apache.spark.sql.types.{DateType, NumericType, TimestampType}
-          val fields = df.schema.fields
-          val aggs = fields.zipWithIndex.flatMap { case (f, i) =>
-            f.dataType match {
-              case _: NumericType | DateType | _: TimestampType =>
-                Seq(min(col(s"`${f.name}`")).as(s"__mn$i"),
-                    max(col(s"`${f.name}`")).as(s"__mx$i"))
-              case dt =>
-                Seq(max(lit(null).cast(dt)).as(s"__mn$i"),
-                    max(lit(null).cast(dt)).as(s"__mx$i"))
-            }
-          }
-          val ext = df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()(0)
-          val minRow = org.apache.spark.sql.Row.fromSeq(
-            fields.indices.map(i => ext.get(2 * i)))
-          val maxRow = org.apache.spark.sql.Row.fromSeq(
-            fields.indices.map(i => ext.get(2 * i + 1)))
-          writeBlockPacket(out, ServerExtremes, "",
-            NativeCodec.encode(df.schema, Array(minRow, maxRow), serFlag), lz4Responses)
-        }
+        q.totals.foreach(rows => writeBlockPacket(out, ServerTotals, "",
+          NativeCodec.encode(df.schema, rows.toArray, serFlag), lz4Responses))
+        // EXTREMES packet (type 8), when the `extremes` setting is on:
+        // one 2-row block, min then max
+        q.extremes.foreach { case (mn, mx) => writeBlockPacket(out, ServerExtremes, "",
+          NativeCodec.encode(df.schema, Array(mn, mx), serFlag), lz4Responses) }
         // PROFILE_INFO (type 6, reference constant main.py:60): rows,
         // blocks, bytes, applied_limit, rows_before_limit,
         // calculated_rows_before_limit — clickhouse-driver populates
@@ -310,22 +260,22 @@ class NativeServer(spark: SparkSession, port: Int,
         writeVarint(out, 0) // rows_before_limit
         out.write(0) // calculated_rows_before_limit: false
       }
+      q.close() // the statement retires before its END_OF_STREAM
       writeVarint(out, ServerEndOfStream)
       out.flush()
-    } catch {
-      case t: Throwable =>
-        // full exception wire structure (code Int32 + name + message +
-        // stack_trace + has_nested) — a bare message string made real
-        // clients parse its first bytes as the error code and desync
-        writeVarint(out, ServerException)
-        writeFixed(out, 4)(_.putInt(1002)) // UNKNOWN_EXCEPTION
-        writeStr(out, t.getClass.getSimpleName)
-        writeStr(out, Option(t.getMessage).getOrElse(t.getClass.getName))
-        writeStr(out, "") // stack trace (not leaked to clients)
-        out.write(0) // has_nested = false
-        writeVarint(out, ServerEndOfStream)
-        out.flush()
-    } finally Engine.finishQuery(queryId)
+    }, t => {
+      // full exception wire structure (code Int32 + name + message +
+      // stack_trace + has_nested) — a bare message string made real
+      // clients parse its first bytes as the error code and desync
+      writeVarint(out, ServerException)
+      writeFixed(out, 4)(_.putInt(1002)) // UNKNOWN_EXCEPTION
+      writeStr(out, t.getClass.getSimpleName)
+      writeStr(out, Option(t.getMessage).getOrElse(t.getClass.getName))
+      writeStr(out, "") // stack trace (not leaked to clients)
+      out.write(0) // has_nested = false
+      writeVarint(out, ServerEndOfStream)
+      out.flush()
+    })
     lz4Responses
   }
 
@@ -334,35 +284,29 @@ class NativeServer(spark: SparkSession, port: Int,
     * external-tables stream the client sends unconditionally after the
     * Query packet, answer with a zero-row sample block carrying the
     * target structure, read client DATA blocks until the empty
-    * terminator, land them through the aligned append path in bounded
-    * chunks, then END_OF_STREAM. */
-  private def handleStreamingInsert(in: InputStream, out: OutputStream,
-                                    session: SparkSession, table: String,
-                                    cols: Option[Seq[String]],
-                                    serFlag: Boolean,
+    * terminator, and land them through the aligned append path in
+    * bounded chunks. The answer's END_OF_STREAM follows. */
+  private def handleStreamingInsert(in: InputStream, out: OutputStream, session: SparkSession,
+                                    h: Engine.InsertHeader, serFlag: Boolean,
                                     compressed: Boolean): Unit = {
-    val bare = table.replace("`", "")
-    val target = Engine.targetSchema(session, bare, cols)
-    // External tables: every real client (clickhouse-driver
-    // send_external_tables) streams zero or more NAMED blocks plus an
-    // UNNAMED empty terminator block IMMEDIATELY after the query,
-    // before it waits for the sample. Treating that terminator as the
-    // insert-data terminator made a real-driver bulk INSERT a silent
-    // zero-row no-op — consume the ext stream first, like the real
-    // server's insert path does. The terminator is the block with an
-    // EMPTY table name: a named-but-empty external table must not end
-    // the stream (it would shift the real terminator into the insert
-    // loop and drop the client's data).
-    var extDone = false
-    while (!extDone) {
-      readVarint(in) match {
-        case ClientData => extDone = readData(in, compressed, serFlag)._1.isEmpty
-        case ClientPing => writeVarint(out, ServerPong); out.flush()
-        case ClientCancel => extDone = true
-        case other =>
-          throw new IllegalStateException(s"unexpected packet $other before INSERT data")
-      }
+    val bare = h.table.replace("`", "")
+    val target = Engine.targetSchema(session, bare, h.cols)
+    // the client's next DATA block; PINGs are answered, CANCEL ends the
+    // stream
+    @scala.annotation.tailrec
+    def nextBlock(): Option[(String, NativeCodec.Block)] = readVarint(in) match {
+      case ClientData => Some(readData(in, compressed, serFlag))
+      case ClientPing => writeVarint(out, ServerPong); out.flush(); nextBlock()
+      case ClientCancel => None
+      case other => throw new IllegalStateException(s"unexpected packet $other during INSERT")
     }
+    // External tables: every real client (clickhouse-driver
+    // send_external_tables) streams zero or more NAMED blocks, then an
+    // UNNAMED empty terminator, right after the query and before it
+    // waits for the sample. Consume them first, up to the block with
+    // an EMPTY table name (a named-but-empty external table does not
+    // end them), or the bulk INSERT would land zero rows.
+    while (nextBlock().exists(_._1.nonEmpty)) ()
     writeBlockPacket(out, ServerData, bare,
       NativeCodec.encode(target, Array.empty, serFlag), compressed)
     out.flush()
@@ -372,40 +316,24 @@ class NativeServer(spark: SparkSession, port: Int,
     // per-block visibility granularity the client chose.
     val FlushRows = 1 << 16
     var names: Seq[String] = Nil
-    var rows = Vector.newBuilder[Seq[Any]]
+    val rows = Vector.newBuilder[Seq[Any]]
     var buffered = 0
-    def flush(): Unit = {
-      val collected = rows.result()
-      if (collected.nonEmpty)
-        Engine.land(session, bare,
-          graft.formats.Formats.decodedFrame(session, target, names, collected))
-      rows = Vector.newBuilder[Seq[Any]]
+    def flush(): Unit = if (buffered > 0) {
+      Engine.land(session, bare,
+        graft.formats.Formats.decodedFrame(session, target, names, rows.result()))
+      rows.clear()
       buffered = 0
     }
-    var done = false
-    while (!done) {
-      readVarint(in) match {
-        case ClientData =>
-          val block = readData(in, compressed, serFlag)._2
-          val received = NativeCodec.rowsOf(block)
-          // a zero-row block (0 cols, or schema echo with 0 rows) is
-          // the stream terminator
-          if (received.isEmpty) done = true
-          else {
-            if (names.isEmpty) names = block.map(_._1)
-            rows ++= received
-            buffered += received.length
-            if (buffered >= FlushRows) flush()
-          }
-        case ClientPing => writeVarint(out, ServerPong); out.flush()
-        case ClientCancel => done = true
-        case other =>
-          throw new IllegalStateException(s"unexpected packet $other during INSERT")
+    // a zero-row block (0 cols, or schema echo with 0 rows) is the
+    // stream terminator
+    Iterator.continually(nextBlock().map { case (_, b) => (b, NativeCodec.rowsOf(b)) })
+      .takeWhile(_.exists(_._2.nonEmpty)).flatten.foreach { case (block, received) =>
+        if (names.isEmpty) names = block.map(_._1)
+        rows ++= received
+        buffered += received.length
+        if (buffered >= FlushRows) flush()
       }
-    }
     flush()
-    writeVarint(out, ServerEndOfStream)
-    out.flush()
   }
 
   /** varint-length zlib-deflated string (main.py:782-804 framing).
@@ -413,23 +341,9 @@ class NativeServer(spark: SparkSession, port: Int,
     * false, which is how real-client compression mode is detected. */
   private def readZlibStr(in: InputStream): (String, Boolean) = {
     val buf = readBytes(in)
-    if (buf.isEmpty) return ("", false)
-    val inflater = new java.util.zip.Inflater()
-    inflater.setInput(buf)
-    val out = new java.io.ByteArrayOutputStream()
-    val tmp = new Array[Byte](4096)
-    try {
-      while (!inflater.finished()) {
-        val k = inflater.inflate(tmp)
-        if (k == 0 && inflater.needsInput())
-          return (new String(buf, "UTF-8"), false)
-        out.write(tmp, 0, k)
-      }
-      (new String(out.toByteArray, "UTF-8"), true)
-    } catch {
-      case _: java.util.zip.DataFormatException =>
-        (new String(buf, "UTF-8"), false)
-    }
+    try (new String(new java.util.zip.InflaterInputStream(
+      new java.io.ByteArrayInputStream(buf)).readAllBytes(), UTF_8), true)
+    catch { case _: java.util.zip.ZipException | _: java.io.EOFException => (new String(buf, UTF_8), false) }
   }
 
   /** A block-carrying server packet (DATA, TOTALS, EXTREMES): type and

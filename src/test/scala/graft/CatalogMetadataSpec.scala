@@ -68,7 +68,6 @@ class CatalogMetadataSpec extends AnyFunSuite {
         val df = Engine.execute(spark, sql, "default", Some(qid))
         rows = df.collect()
         tsv = graft.formats.ResultFormatter.render(df, "TSV") // the servers' path
-        Engine.finishQuery(qid)
       }
       assert(groups.count(_ == s"graft-qid-$qid") === 0, sql)
       assert(tsv.count(_ == '\n') === rows.length, sql)
